@@ -74,15 +74,6 @@ def partition_fingerprints(labeled: DataFrame, id_col: str = "doc_id") -> dict:
     }
 
 
-def input_fingerprint(df: DataFrame, id_col: str = "doc_id") -> tuple[int, int]:
-    """Single-frame variant of partition_fingerprints (kept for tests/tools)."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"bit_xor(xxhash64({id_col}, n_tok, tokens))").alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"] if row["h"] is not None else 0)
-
-
 def _manifest_path(warehouse: str, run_id: str, part: int) -> str:
     return os.path.join(warehouse, "_manifests", run_id, f"part-{part}.json")
 

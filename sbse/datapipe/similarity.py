@@ -594,8 +594,6 @@ def cosine_neardup_pairs(
             # within-cell grids score each unordered pair from both
             # orientations with identical cos — dedupe locally
             return res.drop_duplicates() if within else res
-            return (pd.concat(parts, ignore_index=True).drop_duplicates()
-                    if parts else empty)
 
         out = rows.groupBy("pair_id").applyInPandas(
             score, "id_a bigint, id_b bigint"

@@ -4,8 +4,10 @@ blobs per (source, key) series.
 
 The reference stores rollup points uncompressed in TimescaleDB; the north
 rule adds Gorilla-compressed point storage inside Arrow-backed binary
-columns. Encode/decode run per-group via ``applyInPandas`` (Arrow batches;
-the bit-packing loop is per-point inside a batch, never per-row Python UDF).
+columns. Encode is one streamed ``mapInPandas`` pass over series-sorted
+partitions and decode one ``mapInPandas`` pass over blobs: Python is
+entered once per Arrow batch, never per series or per row, and the
+bit-packing loop is per point inside a batch.
 
 Layout per blob (big-endian bit stream):
   [n:32][t0:64 ms][first value:64 raw]
@@ -23,6 +25,7 @@ First delta is stored with the '1111' raw-64 branch for simplicity.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 from pyspark.sql import DataFrame
@@ -195,50 +198,89 @@ def decode_points(blob: bytes) -> tuple[list[int], list[float]]:
     return ts, vals
 
 
+_SERIES_KEYS = ("source", "key", "chunk_start")
+
+
+def _encode_series(batches, value_col: str):
+    """``mapInPandas`` body of ``encode_tier``: batches arrive clustered by
+    (source, key, chunk_start) and sorted by bucket_start within a series.
+    Every series that ends inside a batch is encoded at once; the batch's
+    last series stays open and continues into the next batch, so memory is
+    one batch plus one chunk of one series."""
+    import numpy as np
+    import pandas as pd
+
+    from sbse.gorilla import encode_points  # self-import: works on executors
+
+    open_key, open_ts, open_vals = None, [], []
+    out = {k: [] for k in (*_SERIES_KEYS, "n_points", "t_min", "t_max", "blob")}
+
+    def close():
+        ts = np.concatenate(open_ts).tolist()
+        for k, v in zip(_SERIES_KEYS, open_key):
+            out[k].append(v)
+        out["n_points"].append(len(ts))
+        out["t_min"].append(min(ts))
+        out["t_max"].append(max(ts))
+        out["blob"].append(encode_points(ts, np.concatenate(open_vals).tolist()))
+
+    for pdf in batches:
+        n = len(pdf)
+        if n == 0:
+            continue
+        ts = pdf["bucket_start"].to_numpy().astype("datetime64[ms]").astype("int64")
+        vals = pdf[value_col].astype("float64").to_numpy()
+        cols = [pdf[k].to_numpy() for k in _SERIES_KEYS]
+        opens = np.zeros(n, dtype=bool)
+        for c in cols:
+            isna = pd.isna(c)
+            opens[1:] |= ~((c[1:] == c[:-1]) | (isna[1:] & isna[:-1]))
+        opens[0] = open_key is None or any(
+            not (o == c[0] or (pd.isna(o) and pd.isna(c[0])))
+            for o, c in zip(open_key, cols))
+        starts = np.flatnonzero(opens)
+        cut = starts[0] if starts.size else n
+        open_ts.append(ts[:cut])
+        open_vals.append(vals[:cut])
+        for a, b in zip(starts, [*starts[1:], n]):
+            if open_key is not None:
+                close()
+            open_key = tuple(c[a] for c in cols)
+            open_ts, open_vals = [ts[a:b]], [vals[a:b]]
+        if out["blob"]:
+            yield pd.DataFrame(out)
+            out = {k: [] for k in out}
+    if open_key is not None:
+        close()
+        yield pd.DataFrame(out)
+
+
 def encode_tier(tier: DataFrame, value_col: str = "n_tok_sum",
                 chunk_unit: str = "month") -> DataFrame:
     """Compress a rollup tier into one Gorilla blob per
     (source, key, chunk_start) where chunk_start = date_trunc(chunk_unit).
 
-    Time-chunking bounds every ``applyInPandas`` group (and every later
+    One streamed ``mapInPandas`` pass: points are hash-partitioned on
+    (source, key, chunk_start) and sorted by series and bucket within each
+    partition, so a series is a contiguous run of rows that may straddle
+    Arrow batches. Time-chunking bounds every series (and every later
     decode of a blob) to one chunk of one key — a hot key's multi-year
     series never has to fit in a single executor's memory, and retention
     can drop whole chunks. ``chunk_unit=None`` restores one blob per key.
 
     Output: source, key, chunk_start, n_points, t_min, t_max, blob (binary).
     Points are (bucket_start ms, value_col as double), sorted by bucket."""
-
-    def enc(pdf):
-        import pandas as pd
-
-        from sbse.gorilla import encode_points  # self-import: works on executors
-
-        pdf = pdf.sort_values("bucket_start")
-        ts_ms = pdf["bucket_start"].to_numpy().astype("datetime64[ms]").astype("int64").tolist()
-        vals = pdf[value_col].astype("float64").tolist()
-        blob = encode_points(ts_ms, vals)
-        return pd.DataFrame(
-            {
-                "source": [pdf["source"].iloc[0]],
-                "key": [pdf["key"].iloc[0]],
-                "chunk_start": [pdf["chunk_start"].iloc[0]],
-                "n_points": [len(ts_ms)],
-                "t_min": [min(ts_ms)],
-                "t_max": [max(ts_ms)],
-                "blob": [blob],
-            }
-        )
-
     chunk = (
         F.date_trunc(chunk_unit, "bucket_start") if chunk_unit
         else F.to_timestamp(F.lit("1970-01-01 00:00:00"))
     )
     return (
-        tier.select("source", "key", "bucket_start", value_col)
-        .withColumn("chunk_start", chunk)
-        .groupBy("source", "key", "chunk_start")
-        .applyInPandas(
-            enc,
+        tier.select("source", "key", "bucket_start", value_col,
+                    chunk.alias("chunk_start"))
+        .repartition(*_SERIES_KEYS)
+        .sortWithinPartitions(*_SERIES_KEYS, "bucket_start")
+        .mapInPandas(
+            functools.partial(_encode_series, value_col=value_col),
             schema="source string, key bigint, chunk_start timestamp, "
                    "n_points int, t_min bigint, t_max bigint, blob binary",
         )

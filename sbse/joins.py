@@ -126,12 +126,10 @@ def asof_join(
             if tolerance_ms is not None else []
         ),
     )
-    out = filled.filter(F.col("_is_left") == 1)
-    for c in value_cols:
-        v = F.col(f"_f_{c}")
-        if tolerance_ms is not None:
-            v = F.when(
-                F.unix_millis("_ats") - F.unix_millis("_rts") <= tolerance_ms, v
-            )
-        out = out.withColumn(c, v)
-    return out.select(*l_cols, *value_cols)
+    in_tol = (
+        F.unix_millis("_ats") - F.unix_millis("_rts") <= tolerance_ms
+        if tolerance_ms is not None else F.lit(True)
+    )
+    return filled.filter(F.col("_is_left") == 1).select(
+        *l_cols, *[F.when(in_tol, F.col(f"_f_{c}")).alias(c) for c in value_cols]
+    )

@@ -366,9 +366,9 @@ def q18_recent_states(spark, sf_dir):
 def q19_gorilla_roundtrip(spark, sf_dir):
     """Gorilla codec THROUGH the real Spark plumbing, oracle-checked: the 1h
     tier is encoded into delta-of-delta/XOR blobs (per source/key/month
-    chunk, applyInPandas) and decoded back (mapInPandas); the oracle is the
-    plain SQL rollup — equality proves the codec round-trips every point
-    bit-exactly inside the engine, not just in unit tests."""
+    chunk, one mapInPandas pass) and decoded back (mapInPandas); the
+    oracle is the plain SQL rollup — equality proves the codec round-trips
+    every point bit-exactly inside the engine, not just in unit tests."""
     from sbse.gorilla import decode_tier, encode_tier
     from sbse.session import ensure_shipped
 

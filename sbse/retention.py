@@ -17,7 +17,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_HORIZON_DAYS = {"raw": 30, "1m": 30, "1h": 90, "1d": 90}
@@ -30,13 +30,6 @@ def retain(tier: DataFrame, now_ts: str, horizon_days: int,
     return tier.filter(
         F.col(bucket_col)
         >= F.to_timestamp(F.lit(now_ts)) - F.expr(f"interval {horizon_days} days")
-    )
-
-
-def horizon_filter(now_ts: str, horizon_days: int,
-                   bucket_col: str = "bucket_start") -> Column:
-    return F.col(bucket_col) >= (
-        F.to_timestamp(F.lit(now_ts)) - F.expr(f"interval {horizon_days} days")
     )
 
 
@@ -58,15 +51,3 @@ def expire_partitions(table_path: str, keep: callable) -> list[str]:
             shutil.rmtree(full)
             dropped.append(value)
     return dropped
-
-
-def archive_raw(decoded: DataFrame, path: str, codec: str = "zstd") -> None:
-    """Daily raw archive (logger daily files + gzip of closed days,
-    cmd/logger/main.go:122-231): date-partitioned, compressed at write."""
-    (
-        decoded.withColumn("log_date", F.date_format("ts", "yyyy-MM-dd"))
-        .write.mode("overwrite")
-        .partitionBy("log_date")
-        .option("compression", codec)
-        .parquet(path)
-    )

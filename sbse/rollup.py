@@ -36,11 +36,14 @@ def bucket_rollup(states: DataFrame, unit: str = "minute") -> DataFrame:
     array in arrival order (FIXTURES.md F4) — the token-stream identity the
     north star tracks through every tier.
     """
-    e = states.withColumn("ord", ord_col()).withColumn(
-        "bucket_start", F.date_trunc(unit, F.col("ts"))
+    e = states.select(
+        "source",
+        "key",
+        "n_tok",
+        ord_col().alias("ord"),
+        F.date_trunc(unit, F.col("ts")).alias("bucket_start"),
+        F.xxhash64(F.col("tokens")).alias("fp"),
     )
-    fp = F.xxhash64(F.col("tokens"))
-    e = e.withColumn("fp", fp)
     return e.groupBy("source", "key", "bucket_start").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("n_tok").cast("bigint").alias("n_tok_sum"),

@@ -17,13 +17,18 @@ Scale notes: the whole stage costs exactly ONE shuffle (hash partition by
 (source, key)); every window here shares that partitioning and sort, and the
 session rollup uses partial aggregation on top. Ordering is total and
 deterministic: (ts, seq) with seq a data-derived tiebreak (arrival order at
-the reference becomes explicit order here — SURVEY.md §7.4).
+the reference becomes explicit order here — SURVEY.md §7.4). Columns are
+built with one ``select`` per dependency level, never a ``withColumn``
+chain: Catalyst plans one ``Window`` operator per projection and window
+spec, so a chain of N window columns over one spec costs N sort-buffered
+window passes where one suffices (tests/test_plan_shape.py pins the count).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from sbse import GAP_MS_NORTH
 
@@ -59,6 +64,30 @@ def ord_col() -> Column:
     return F.struct(F.col("ts"), F.col("seq"))
 
 
+def session_id_col(start: Column, sidx: Column) -> Column:
+    """Deterministic session surrogate: sha256 of source|key|start ms|sidx."""
+    return F.sha2(
+        F.concat_ws(
+            "|",
+            F.col("source"),
+            F.col("key").cast("string"),
+            F.unix_millis(start).cast("string"),
+            sidx.cast("string"),
+        ),
+        256,
+    )
+
+
+def new_session_flag(w: WindowSpec, gap_ms: int) -> Column:
+    """1 on a row that opens a session under ``w``'s (ts, seq) order: the
+    first row, or one more than ``gap_ms`` after its predecessor; else 0."""
+    prev_ms = F.lag(F.unix_millis("ts")).over(w)
+    return F.when(
+        prev_ms.isNull() | (F.unix_millis("ts") - prev_ms > F.lit(gap_ms)),
+        F.lit(1),
+    ).otherwise(F.lit(0))
+
+
 def states_only(decoded: DataFrame) -> DataFrame:
     """Rows that produce aircraft-state analogs: parsed AND keyed
     (MSG types 1,2 carry no key — parser.go:103-110)."""
@@ -68,14 +97,16 @@ def states_only(decoded: DataFrame) -> DataFrame:
 def locf_merge(states: DataFrame) -> DataFrame:
     """W1 — per-key last-observation-carried-forward merge."""
     w = _w_run()
-    out = states
-    for c, zero in _MERGE_FIELDS:
-        merged = F.coalesce(
-            F.last(F.nullif(F.col(c), F.lit(zero)), ignorenulls=True).over(w),
-            F.lit(zero),
-        )
-        out = out.withColumn(f"{c}_m", merged)
-    return out
+    return states.select(
+        "*",
+        *[
+            F.coalesce(
+                F.last(F.nullif(F.col(c), F.lit(zero)), ignorenulls=True).over(w),
+                F.lit(zero),
+            ).alias(f"{c}_m")
+            for c, zero in _MERGE_FIELDS
+        ],
+    )
 
 
 def sessionize(
@@ -93,36 +124,20 @@ def sessionize(
     """
     w = _w_run()
     w_order = Window.partitionBy(*KEY_COLS).orderBy("ts", "seq")
-    prev_ms = F.lag(F.unix_millis("ts")).over(w_order)
-    new_sess = F.when(
-        prev_ms.isNull() | (F.unix_millis("ts") - prev_ms > F.lit(gap_ms)),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    df = merged.withColumn("new_sess", new_sess)
-    df = df.withColumn("sidx", F.sum("new_sess").over(w))
-    df = df.withColumn(
-        "s_start",
-        F.last(F.when(F.col("new_sess") == 1, F.col("ts")), ignorenulls=True).over(w),
+    df = merged.select("*", new_session_flag(w_order, gap_ms).alias("new_sess"))
+    df = df.select(
+        "*",
+        F.sum("new_sess").over(w).alias("sidx"),
+        F.last(F.when(F.col("new_sess") == 1, F.col("ts")),
+               ignorenulls=True).over(w).alias("s_start"),
     )
-    df = df.withColumn(
-        "session_id",
-        F.sha2(
-            F.concat_ws(
-                "|",
-                F.col("source"),
-                F.col("key").cast("string"),
-                F.unix_millis("s_start").cast("string"),
-                F.col("sidx").cast("string"),
-            ),
-            256,
-        ),
+    return df.select(
+        "*",
+        session_id_col(F.col("s_start"), F.col("sidx")).alias("session_id"),
+        (F.col("sidx") == F.max("sidx").over(Window.partitionBy(*KEY_COLS)))
+        .alias("is_trailing"),
+        F.lit(close_trailing).alias("close_trailing"),
     )
-    w_all = Window.partitionBy(*KEY_COLS)
-    df = df.withColumn(
-        "is_trailing", F.col("sidx") == F.max("sidx").over(w_all)
-    )
-    df = df.withColumn("close_trailing", F.lit(close_trailing))
-    return df
 
 
 def session_rollup(sess_events: DataFrame) -> DataFrame:
@@ -149,15 +164,14 @@ def session_rollup(sess_events: DataFrame) -> DataFrame:
         .orderBy("ts", "seq")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    e = sess_events.withColumn(
-        "_is_close", F.lead("new_sess", 1, 1).over(w_key) == 1
-    )
-    e = (
-        e.withColumn("_n_events", F.count(F.lit(1)).over(w_sess))
-        .withColumn("_first_lat", F.first("lat_m").over(w_sess))
-        .withColumn("_first_lon", F.first("lon_m").over(w_sess))
-        .withColumn("_max_alt", F.max("altitude_m").over(w_sess))
-        .withColumn("_max_gs", F.max("ground_speed_m").over(w_sess))
+    e = sess_events.select(
+        "*",
+        (F.lead("new_sess", 1, 1).over(w_key) == 1).alias("_is_close"),
+        F.count(F.lit(1)).over(w_sess).alias("_n_events"),
+        F.first("lat_m").over(w_sess).alias("_first_lat"),
+        F.first("lon_m").over(w_sess).alias("_first_lon"),
+        F.max("altitude_m").over(w_sess).alias("_max_alt"),
+        F.max("ground_speed_m").over(w_sess).alias("_max_gs"),
     )
     agg = e.filter(F.col("_is_close")).select(
         "source",
@@ -177,16 +191,7 @@ def session_rollup(sess_events: DataFrame) -> DataFrame:
         F.col("_max_gs").alias("max_ground_speed"),
     )
     return agg.select(
-        F.sha2(
-            F.concat_ws(
-                "|",
-                F.col("source"),
-                F.col("key").cast("string"),
-                F.unix_millis("started_at").cast("string"),
-                F.col("sidx").cast("string"),
-            ),
-            256,
-        ).alias("session_id"),
+        session_id_col(F.col("started_at"), F.col("sidx")).alias("session_id"),
         "source",
         "key",
         "started_at",

@@ -276,3 +276,74 @@ def test_read_blob_tier_chunk_unit_none(spark, tmp_path):
     assert got["cnt"] == 6 * 24
     assert got["lo"] == "2024-01-15 00:00:00"
     assert got["hi"] == "2024-01-20 23:00:00"
+
+
+@pytest.mark.parametrize("chunk_unit", ["hour", "month", None])
+def test_encode_tier_streams_across_batches(spark, chunk_unit):
+    """encode_tier is one streamed pass whose open series continues into
+    the next Arrow batch. With 7-row batches nearly every series straddles
+    a batch boundary; each blob must still equal encode_points over its
+    series alone, byte for byte, and decode_tier must round-trip the tier.
+    The input holds a one-point series and series of uneven lengths."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from sbse.gorilla import decode_tier, encode_points, encode_tier
+
+    t0 = 1704067200000  # 2024-01-01 UTC
+    pts = [
+        (f"s{key % 2}", key, t0 + i * step, float((i * 7919) % 13) / 3)
+        for key, n, step in ((1, 50, 600_000), (2, 1, 60_000),
+                             (3, 23, 2_700_000), (4, 40, 86_400_000))
+        for i in range(n)
+    ]
+    tier = spark.createDataFrame(
+        pts, "source string, key bigint, ms bigint, n_tok_sum double"
+    ).select("source", "key", F.timestamp_millis("ms").alias("bucket_start"),
+             "n_tok_sum")
+
+    def chunk_of(ms):
+        d = dt.datetime.fromtimestamp(ms / 1000, tz=dt.timezone.utc)
+        if chunk_unit is None:
+            return 0
+        d = d.replace(minute=0, second=0, microsecond=0)
+        if chunk_unit == "month":
+            d = d.replace(day=1, hour=0)
+        return int(d.timestamp() * 1000)
+
+    series = {}
+    for src, key, ms, v in pts:
+        series.setdefault((src, key, chunk_of(ms)), []).append((ms, v))
+    want = {}
+    for k, sp in series.items():
+        ts = [t for t, _ in sorted(sp)]
+        want[k] = (len(ts), ts[0], ts[-1],
+                   encode_points(ts, [v for _, v in sorted(sp)]))
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "7")
+    try:
+        blobs = encode_tier(tier, "n_tok_sum", chunk_unit=chunk_unit)
+        got = {
+            (r.source, r.key, r.chunk_ms): (r.n_points, r.t_min, r.t_max,
+                                            bytes(r.blob))
+            for r in blobs.select(
+                "*", F.unix_millis("chunk_start").alias("chunk_ms")
+            ).collect()
+        }
+        back = decode_tier(blobs, "n_tok_sum").select(
+            "source", "key", F.unix_millis("bucket_start").alias("ms"),
+            "n_tok_sum",
+        ).collect()
+        empty = encode_tier(tier.limit(0), "n_tok_sum", chunk_unit=chunk_unit)
+        assert empty.count() == 0
+        assert decode_tier(empty, "n_tok_sum").count() == 0
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert got == want
+    assert sorted(tuple(r) for r in back) == sorted(pts)
