@@ -10,13 +10,18 @@
   4x2; candidate pairs share a band bucket, then get exact-Jaccard verified.
   At scale the band join touches only same-bucket rows (banding defeats the
   quadratic blowup), and both joins shuffle on band/shingle keys.
-* ``simhash64`` — 64-bit SimHash over word xxhash64s, computed with
-  bit-arithmetic aggregates (no UDF); near-dup candidates = small Hamming
-  distance, via multi-probe on 16-bit bands.
+* ``simhash64`` — 64-bit SimHash over md5 word bits (Arrow pass, or a
+  pure-Catalyst twin); near-dups are pairs within a small Hamming radius.
+* ``simhash_candidates`` — plain banding, pigeonhole-complete below
+  ``n_bands``; its narrow keys suit small radii only.
+* ``simhash_pairs_smallcorpus`` — the broadcast all-pairs numpy sweep.
 * ``simhash_candidates_multiblock`` — radius-complete candidates with WIDE
   keys: C(n_blocks, comb) block-combination tables (Manku WWW'07 shape),
-  trading linear per-doc fan-out for the quadratic bucket blowup that
-  plain radius-7 banding's 8-bit keys hit at >= 1M docs.
+  paired per bucket in numpy, trading linear per-doc fan-out for the
+  quadratic bucket blowup of radius-7 banding's 8-bit keys.
+* ``simhash_candidates_adaptive`` — the radius pair set through one of two
+  routes chosen by doc count: the sweep up to ``SWEEP_MAX_DOCS``, the
+  multi-block tables above it.
 """
 
 from __future__ import annotations
@@ -481,6 +486,48 @@ def simhash_candidates(sims: DataFrame, max_hamming: int = 7,
     )
 
 
+# Doc-count ceiling of the all-pairs sweep route (a ~2 MB broadcast). On 4
+# cores, BENCH/datapipe_bench.synth_docs, sweep vs multi-block: 1.0 vs 4.8 s
+# at 2^13 docs, 2.8 vs 10.4 s at 2^15, 35.5 vs 38.7 s at 2^17.
+SWEEP_MAX_DOCS = 1 << 17
+
+
+def _popcount(x, t=None):
+    """SWAR popcount of a uint64 array, computed in place in ``x`` with the
+    same-shape scratch ``t`` (the sweep passes preallocated tiles)."""
+    import numpy as np
+
+    if t is None:
+        t = np.empty_like(x)
+    np.right_shift(x, 1, out=t)
+    t &= np.uint64(0x5555555555555555)
+    x -= t
+    np.right_shift(x, 2, out=t)
+    t &= np.uint64(0x3333333333333333)
+    x &= np.uint64(0x3333333333333333)
+    x += t
+    np.right_shift(x, 4, out=t)
+    x += t
+    x &= np.uint64(0x0F0F0F0F0F0F0F0F)
+    x *= np.uint64(0x0101010101010101)
+    np.right_shift(x, 56, out=x)
+    return x
+
+
+def _int_id_type(sims: DataFrame, op: str) -> str:
+    """The ``doc_id`` type name, kept in the radius routes' output; they
+    sort and compare ids as numpy integers, so other types are refused."""
+    from pyspark.sql import types as T
+
+    dt = sims.schema["doc_id"].dataType
+    if not isinstance(dt, T.IntegralType):
+        raise TypeError(
+            f"{op}: doc_id must be an integer column, got "
+            f"{dt.simpleString()}; map the ids to a long surrogate first"
+        )
+    return dt.simpleString()
+
+
 def simhash_pairs_smallcorpus(sims: DataFrame,
                               max_hamming: int = 7) -> DataFrame:
     """All-pairs radius search for corpora whose whole signature table fits
@@ -490,11 +537,11 @@ def simhash_pairs_smallcorpus(sims: DataFrame,
     broadcast-crossed with ~defaultParallelism single-row doc slices, and
     each task sweeps its slice against the full table with blocked numpy
     XOR + SWAR popcount (vectorized probes are ~40x cheaper than hash-join
-    probes, so below the router's doc threshold n^2 sweep beats any
-    banding's collision mass). Emits exactly the pairs with
-    hamming <= max_hamming, (doc_a < doc_b, hamming int) — the same set
-    every pigeonhole-complete banding returns. Numeric doc ids only
-    (callers route; the bandings handle the general case)."""
+    probes, so up to ``SWEEP_MAX_DOCS`` the n^2 sweep beats any banding's
+    collision mass). Emits exactly the pairs with hamming <= max_hamming,
+    (doc_a < doc_b, hamming int) — the same set every pigeonhole-complete
+    banding returns. Integer doc ids only; the output keeps their type."""
+    dt = _int_id_type(sims, "simhash_pairs_smallcorpus")
     spark = sims.sparkSession
     n_chunks = spark.sparkContext.defaultParallelism
     allr = sims.agg(F.collect_list("doc_id").alias("ids_all"),
@@ -525,21 +572,6 @@ def simhash_pairs_smallcorpus(sims: DataFrame,
         # + in-place it runs at near-perfect core scaling).
         BS, BA = 16, 4096
 
-        def popcount_inplace(x, t):
-            np.right_shift(x, 1, out=t)
-            t &= np.uint64(0x5555555555555555)
-            x -= t
-            np.right_shift(x, 2, out=t)
-            t &= np.uint64(0x3333333333333333)
-            x &= np.uint64(0x3333333333333333)
-            x += t
-            np.right_shift(x, 4, out=t)
-            x += t
-            x &= np.uint64(0x0F0F0F0F0F0F0F0F)
-            x *= np.uint64(0x0101010101010101)
-            np.right_shift(x, 56, out=x)
-            return x
-
         buf = np.empty(BS * BA, np.uint64)
         tmp = np.empty(BS * BA, np.uint64)
         for pdf in batches:
@@ -559,7 +591,7 @@ def simhash_pairs_smallcorpus(sims: DataFrame,
                         b = buf[:k].reshape(len(srow), len(acol))
                         t = tmp[:k].reshape(len(srow), len(acol))
                         np.bitwise_xor(srow[:, None], acol[None, :], out=b)
-                        h = popcount_inplace(b, t)
+                        h = _popcount(b, t)
                         m = h <= np.uint64(mh)
                         if not m.any():
                             continue
@@ -577,66 +609,39 @@ def simhash_pairs_smallcorpus(sims: DataFrame,
                     })
 
     return sliced.crossJoin(F.broadcast(allr)).mapInPandas(
-        sweep, schema="doc_a bigint, doc_b bigint, hamming int")
+        sweep, schema=f"doc_a {dt}, doc_b {dt}, hamming int")
 
 
 def simhash_candidates_adaptive(
-    sims: DataFrame, max_hamming: int = 7, n_bands: int = 8,
-    n_blocks: int = 10, comb: int = 3,
-    plain_pairs_max: int = 20_000_000,
+    sims: DataFrame, max_hamming: int = 7, n_blocks: int = 10, comb: int = 3,
 ) -> DataFrame:
-    """Radius-complete candidates with an ESTIMATE-DRIVEN plan choice
-    (round 6): both plain ``n_bands`` banding and multi-block banding
-    return exactly the pairs with hamming <= max_hamming (each is
-    pigeonhole-complete), so which one runs is purely a physical-plan
-    decision — and the right one flips with the corpus. Plain banding's
-    candidate volume is Sum |bucket|^2 over the narrow band keys
-    (measured: 5e6 pairs / ~1.0s at 5k docs, but 5.1e8 pairs / 111s at
-    50k docs); the multi-block tables trade a C(n_blocks, comb)-way
-    fan-out — a few seconds of fixed cost — for ~20-bit keys that keep
-    the bucket blowup quadratic-free (5.8s at 50k docs, plan-invariant).
-    One cheap histogram over the 8n plain-banded keys (fixed-width longs,
-    full map-side reduction) prices the plain path exactly; below
-    ``plain_pairs_max`` plain wins, above it multi-block does.
-
-    Small-corpus route (round 6, guide §3): below
-    ``SBSE_SIMHASH_BRUTE_MAX_DOCS`` docs (default 2^17) with numeric ids,
-    the whole signature table broadcasts (16 B/doc — ~2 MB at the cap) and
-    a blocked all-pairs numpy sweep beats any banding: vectorized XOR +
-    popcount probes are ~40x cheaper than hash-join probes, so n^2 sweep
-    undercuts the banding's collision mass + fan-out + exchange while
-    skipping the histogram job entirely. Identical output — every route
-    returns exactly the radius pair set."""
-    import os as _os
-    from pyspark.sql import types as T
-
+    """Exactly the pairs with hamming <= ``max_hamming``, through one of two
+    physical routes chosen by the doc count alone: up to ``SWEEP_MAX_DOCS``
+    docs the broadcast all-pairs sweep, above it the multi-block tables,
+    whose C(n_blocks, comb) fan-out is linear where the sweep is quadratic.
+    Both return the same rows. The signature table is checkpointed and
+    counted once; the multi-block body reuses that count. Integer
+    ``doc_id`` only (``TypeError`` otherwise); the output keeps its type."""
+    _int_id_type(sims, "simhash_candidates_adaptive")
+    _check_multiblock(max_hamming, n_blocks, comb)
     sims = sims.localCheckpoint(eager=False)
-    brute_max = int(_os.environ.get("SBSE_SIMHASH_BRUTE_MAX_DOCS",
-                                    str(1 << 17)))
-    if (isinstance(sims.schema["doc_id"].dataType,
-                   (T.LongType, T.IntegerType))
-            and sims.count() <= brute_max):
+    n_docs = sims.count()
+    if n_docs <= SWEEP_MAX_DOCS:
         return simhash_pairs_smallcorpus(sims, max_hamming=max_hamming)
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    banded = sims.select(
-        F.posexplode(F.array(*[
-            F.shiftrightunsigned(F.col("simhash"), b * width)
-            .bitwiseAND(F.lit(mask))
-            for b in range(n_bands)
-        ])).alias("band_id", "band"),
-    )
-    est = (
-        banded.groupBy("band_id", "band").agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("p"))
-        .collect()[0]["p"]
-    ) or 0.0
-    if est <= plain_pairs_max:
-        return simhash_candidates(sims, max_hamming=max_hamming,
-                                  n_bands=n_bands,
-                                  max_candidate_pairs=None)
-    return simhash_candidates_multiblock(sims, max_hamming=max_hamming,
-                                         n_blocks=n_blocks, comb=comb)
+    return _multiblock_pairs(sims, n_docs, max_hamming, n_blocks, comb,
+                             max_candidate_pairs=200_000_000)
+
+
+def _check_multiblock(max_hamming: int, n_blocks: int, comb: int) -> None:
+    if comb > n_blocks - max_hamming:
+        raise ValueError(
+            f"comb={comb} > n_blocks-max_hamming={n_blocks - max_hamming}: "
+            f"a radius-{max_hamming} pair is only guaranteed "
+            f"{n_blocks - max_hamming} agreeing blocks; lower comb or raise "
+            f"n_blocks"
+        )
+    if not (0 < n_blocks <= 64):
+        raise ValueError(f"n_blocks={n_blocks} must be in (0, 64]")
 
 
 def simhash_candidates_multiblock(
@@ -655,30 +660,26 @@ def simhash_candidates_multiblock(
     one of the enumerated tables, hence the pair collides there. Requires
     ``comb <= n_blocks - max_hamming`` (asserted).
 
-    Why it exists (VERDICT r4 "what's wrong" #2, closing the radius-7 gap
-    for real): plain banding ties key width to 64/(radius+1) — radius 7
-    forces 8-bit keys, measured ~3,906 docs/bucket => ~2e10 candidate
-    pairs at 1M docs, which `simhash_candidates` now refuses. The
-    (10, 3) default here keys on ~19-20 bits instead: uniform-occupancy
-    estimate ~1e8 pairs at 1M docs — inside the default guard — at the
-    cost of C(10,3) = 120 banded rows per doc (linear, one posexplode,
-    one shuffle on (table_id, key); fan-out is the scale-correct trade
-    against a quadratic bucket blowup). Same output as
-    `simhash_candidates(max_hamming=7, n_bands=8)` — BOTH are complete, so
-    both return exactly the pairs with hamming <= radius; the oracle for
-    this path is therefore the brute-force pair scan itself.
-    """
+    Why it exists: plain banding ties key width to 64/(radius+1), so
+    radius 7 gets 8-bit keys and ~2e10 candidate pairs at 1M docs. The
+    (10, 3) default keys on ~19-20 bits (~1e8 pairs at 1M docs) for 120
+    banded rows per doc: linear fan-out, one shuffle on (table_id, key).
+    The oracle is the brute-force pair scan. Integer ``doc_id`` only
+    (``TypeError`` otherwise); the output keeps its type."""
+    _int_id_type(sims, "simhash_candidates_multiblock")
+    _check_multiblock(max_hamming, n_blocks, comb)
+    sims = sims.localCheckpoint(eager=False)
+    return _multiblock_pairs(sims, sims.count(), max_hamming, n_blocks, comb,
+                             max_candidate_pairs)
+
+
+def _multiblock_pairs(sims: DataFrame, n_docs: int, max_hamming: int,
+                      n_blocks: int, comb: int,
+                      max_candidate_pairs: int | None) -> DataFrame:
+    """Multi-block body over a checkpointed table of ``n_docs`` rows; the
+    caller's one count serves the pair guard and the partition sizing."""
     from itertools import combinations
 
-    if comb > n_blocks - max_hamming:
-        raise ValueError(
-            f"comb={comb} > n_blocks-max_hamming={n_blocks - max_hamming}: "
-            f"a radius-{max_hamming} pair is only guaranteed "
-            f"{n_blocks - max_hamming} agreeing blocks; lower comb or raise "
-            f"n_blocks"
-        )
-    if not (0 < n_blocks <= 64):
-        raise ValueError(f"n_blocks={n_blocks} must be in (0, 64]")
     # Uneven split: 64 = n_blocks*base + rem; first `rem` blocks get base+1.
     base, rem = divmod(64, n_blocks)
     widths = [base + 1 if i < rem else base for i in range(n_blocks)]
@@ -705,11 +706,6 @@ def simhash_candidates_multiblock(
         keys.append(expr)
         key_widths.append(shift)
 
-    sims = sims.localCheckpoint(eager=False)
-    # ONE driver action (VERDICT r5 "what's wrong" #2 closed: the guard and
-    # the partition sizing used to fire two separate count() jobs): the
-    # count materializes the checkpoint once and both consumers reuse it.
-    n_docs = sims.count()
     if max_candidate_pairs is not None:
         est_uniform = sum(
             n_docs * n_docs / (1 << w) / 2 for w in key_widths
@@ -723,241 +719,128 @@ def simhash_candidates_multiblock(
                 f"{max_candidate_pairs:.0e}; raise comb/n_blocks for wider "
                 f"keys, or pass a larger/None cap."
             )
-    # Each banded entry carries two per-table constants used by the
-    # canonical-emission filter below: ``below`` = bitmask of all block
-    # indices under the table's HIGHEST block, ``low`` = the table's block
-    # mask minus that highest block. Carried as columns from the explode —
-    # a per-row element_at lookup into a 120-literal array re-built the
-    # array per joined row (measured: the join ran >40x slower).
-    def _consts(c):
-        m = sum(1 << i for i in c)
-        top = max(c)
-        return (1 << top) - 1, m - (1 << top)
-
-    # Path split happens BEFORE the banded projection: the vectorized
-    # pairing path looks below/low up from table_id inside the worker
-    # (len(combos)-element numpy tables in the closure), so its banded
-    # frame carries no struct columns at all — building and shipping the
-    # 120-struct array was measured at ~2x the cost of the whole keys-only
-    # projection + exchange. The JVM join path keeps the per-row constant
-    # columns (a join-condition element_at lookup re-built the literal
-    # array per joined row — measured >40x slower).
-    import os as _os
-    from pyspark.sql import types as T
-
-    doc_t = sims.schema["doc_id"].dataType
-    use_numpy = (
-        _os.environ.get("SBSE_MULTIBLOCK_JOIN", "numpy") != "jvm"
-        and isinstance(doc_t, (T.LongType, T.IntegerType))
+    # Canonical-table emission instead of a `.distinct()`: a surviving pair
+    # collides in one table per comb-subset of its agreeing blocks (~11x
+    # multiplicity measured at sf1.0), so each pair is kept ONLY in the
+    # table whose blocks are its `comb` LOWEST agreeing blocks — exactly one
+    # table per pair, no dedup exchange. With ``agree`` = bitmask of the
+    # blocks identical in both sketches, the table is canonical iff
+    # (agree & below) == low, where ``below`` masks every block under the
+    # table's highest block and ``low`` is the table's block mask minus that
+    # highest block. The workers look both up from table_id, so the banded
+    # frame carries keys only.
+    below_lut = [(1 << max(c)) - 1 for c in combos]
+    low_lut = [sum(1 << i for i in c) - (1 << max(c)) for c in combos]
+    banded = sims.select(
+        "doc_id", "simhash",
+        F.posexplode(F.array(*keys)).alias("table_id", "key"),
     )
-    if use_numpy:
-        banded = sims.select(
-            "doc_id", "simhash",
-            F.posexplode(F.array(*keys)).alias("table_id", "key"),
-        )
-    else:
-        banded = sims.select(
-            "doc_id",
-            "simhash",
-            F.posexplode(F.array(*[
-                F.struct(k.alias("key"),
-                         F.lit(_consts(c)[0]).alias("below"),
-                         F.lit(_consts(c)[1]).alias("low"))
-                for k, c in zip(keys, combos)
-            ])).alias("table_id", "_e"),
-        ).select("doc_id", "simhash", "table_id",
-                 F.col("_e.key").alias("key"), F.col("_e.below").alias("below"),
-                 F.col("_e.low").alias("low"))
-    # Pre-partition the banded frame on the join keys so (a) the exchange
-    # is written ONCE and read by both self-join sides, and (b) the
-    # SHUFFLE_HASH build side is bounded: each task's hash map holds
-    # ~n_docs*len(combos)/parts rows (~300k target). The hash-map join
-    # cannot spill its build side — with the default 32 shuffle partitions
-    # it held 3.75M rows per task and OOMed the 8g local heap — but the
-    # partition count is exactly the knob a cluster already scales; AQE
-    # does not coalesce an explicit repartition count.
-    # ~64k banded rows per partition: the SHUFFLE_HASH build map stays
-    # cache-resident per task (measured 6.3s -> 5.8s at sf1.0 vs the old
-    # 300k target), and smaller per-task builds only lower the memory
-    # bound that motivated the explicit sizing in the first place.
+    # Colocate each (table_id, key) bucket in one partition. ~64k banded
+    # rows per partition bounds each pairing task's concat, sort and index
+    # scratch (the target was measured for an earlier hash-join pairing, not
+    # yet for this one); AQE does not coalesce an explicit repartition count.
     n_banded = n_docs * len(combos)
     default_parts = int(
         sims.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     parts = max(default_parts, n_banded // 65_536 + 1)
     banded = banded.repartition(parts, "table_id", "key")
-    # Vectorized in-worker pairing (round 6, guide §4 'replace the per-row
-    # boundary with a batch one' + §2.4): the SHUFFLE_HASH self-join probed
-    # every bucket collision row-at-a-time in the JVM (~2e8 probes at 50k
-    # docs, each evaluating xor + bit_count + the 10-block agree chain).
-    # The repartition above already colocates each (table_id, key) bucket
-    # in one partition, so a single mapInPandas pass can sort the
-    # partition, find bucket runs, and evaluate ALL within-bucket pairs as
-    # numpy array ops (SWAR popcount + the identical canonical-table
-    # check). Same pair set by construction: positional i<j pairs within a
-    # bucket == the join's doc_a<doc_b condition after min/max
-    # normalization, and the canonical filter uses the same per-table
-    # below/low constants (pinned by test_multiblock_numpy_matches_join and
-    # the q36 brute-force oracle). The JVM join remains as the fallback for
-    # non-numeric doc ids (numpy pairing needs sortable fixed-width
-    # columns) or SBSE_MULTIBLOCK_JOIN=jvm.
-    if use_numpy:
-        widths_l, offsets_l, nb, mh = list(widths), list(offsets), n_blocks, max_hamming
-        below_lut = [_consts(c)[0] for c in combos]
-        low_lut = [_consts(c)[1] for c in combos]
+    # Vectorized in-worker pairing (guide §4 'replace the per-row boundary
+    # with a batch one'): one mapInPandas pass sorts the partition, finds
+    # bucket runs, and evaluates ALL within-bucket pairs as numpy array ops
+    # (SWAR popcount + the canonical-table check). Positional i<j pairs are
+    # min/max-normalized to doc_a < doc_b; pairs of rows that share a
+    # doc_id are dropped, as the sweep drops them.
+    nb, mh = n_blocks, max_hamming
 
-        def pair_batches(batches):
-            import numpy as np
-            import pandas as pd
+    def pair_batches(batches):
+        import numpy as np
+        import pandas as pd
 
-            parts_ = [p for p in batches if len(p)]
-            if not parts_:
+        parts_ = [p for p in batches if len(p)]
+        if not parts_:
+            return
+        pdf = parts_[0] if len(parts_) == 1 else pd.concat(
+            parts_, ignore_index=True)
+        # (table_id, key) order without packing both into one long: a comb
+        # key may use all 64 bits
+        key = pdf["key"].to_numpy(np.int64)
+        tid = pdf["table_id"].to_numpy(np.int64)
+        order = np.lexsort((key, tid))
+        key, tid = key[order], tid[order]
+        sim = pdf["simhash"].to_numpy(np.int64)[order].view(np.uint64)
+        below_c = np.asarray(below_lut, np.int64)[tid]
+        low_c = np.asarray(low_lut, np.int64)[tid]
+        docs = pdf["doc_id"].to_numpy()[order]
+
+        starts = np.flatnonzero(np.r_[True, (tid[1:] != tid[:-1])
+                                      | (key[1:] != key[:-1])])
+        ends = np.r_[starts[1:], len(key)]
+        sizes = ends - starts
+
+        out_a, out_b, out_h = [], [], []
+
+        def emit(I, J):
+            x = sim[I] ^ sim[J]
+            h = _popcount(x.copy())
+            m = (h <= np.uint64(mh)) & (docs[I] != docs[J])
+            if not m.any():
                 return
-            pdf = parts_[0] if len(parts_) == 1 else pd.concat(
-                parts_, ignore_index=True)
-            key = pdf["key"].to_numpy(np.int64)
-            tid = pdf["table_id"].to_numpy(np.int64)
-            # widest comb key is sum of the comb largest widths (< 22 bits
-            # at the (10, 3) default); pack (table_id, key) into one int64
-            gk = (tid << 42) | key
-            order = np.argsort(gk, kind="stable")
-            gk = gk[order]
-            sim = pdf["simhash"].to_numpy(np.int64)[order].view(np.uint64)
-            below_c = np.asarray(below_lut, np.int64)[tid[order]]
-            low_c = np.asarray(low_lut, np.int64)[tid[order]]
-            docs = pdf["doc_id"].to_numpy()[order]
+            I, J, x, h = I[m], J[m], x[m], h[m]
+            agree = np.zeros(len(x), np.int64)
+            for i in range(nb):
+                blk = (x >> np.uint64(offsets[i])) & np.uint64(
+                    (1 << widths[i]) - 1)
+                agree |= (blk == np.uint64(0)).astype(np.int64) << i
+            m2 = (agree & below_c[I]) == low_c[I]
+            if not m2.any():
+                return
+            I, J, h = I[m2], J[m2], h[m2]
+            da, db = docs[I], docs[J]
+            out_a.append(np.minimum(da, db))
+            out_b.append(np.maximum(da, db))
+            out_h.append(h)
 
-            starts = np.flatnonzero(np.r_[True, gk[1:] != gk[:-1]])
-            ends = np.r_[starts[1:], len(gk)]
-            sizes = ends - starts
+        # group runs by size so pair-index generation is one broadcast
+        # per distinct bucket size; block the run axis to bound scratch.
+        # Oversized buckets (skewed corpora) get a row-blocked loop so
+        # no single index allocation exceeds ~4M pairs.
+        BIG = 2048
+        for sz in np.unique(sizes):
+            if sz < 2:
+                continue
+            rs = starts[sizes == sz]
+            if sz <= BIG:
+                iu, ju = np.triu_indices(sz, k=1)
+                iu = iu.astype(np.int32); ju = ju.astype(np.int32)
+                ppr = len(iu)  # pairs per run
+                step = max(1, 4_000_000 // ppr)
+                for s in range(0, len(rs), step):
+                    blk = rs[s:s + step].astype(np.int32)
+                    emit((blk[:, None] + iu[None, :]).ravel(),
+                         (blk[:, None] + ju[None, :]).ravel())
+            else:
+                rblk = max(1, 4_000_000 // int(sz))
+                for r0 in rs:
+                    for i0 in range(0, sz - 1, rblk):
+                        ii = np.arange(r0 + i0,
+                                       r0 + min(i0 + rblk, sz - 1),
+                                       dtype=np.int32)
+                        jj = np.arange(r0 + i0 + 1, r0 + sz,
+                                       dtype=np.int32)
+                        I = np.repeat(ii, len(jj))
+                        J = np.tile(jj, len(ii))
+                        m = J > I
+                        emit(I[m], J[m])
 
-            def popcount(x):  # SWAR over uint64; wraps are intentional
-                x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
-                x = ((x & np.uint64(0x3333333333333333))
-                     + ((x >> np.uint64(2)) & np.uint64(0x3333333333333333)))
-                x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-                return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
+        if out_a:
+            yield pd.DataFrame({
+                "doc_a": np.concatenate(out_a),
+                "doc_b": np.concatenate(out_b),
+                "hamming": np.concatenate(out_h).astype(np.int32),
+            })
 
-            out_a, out_b, out_h = [], [], []
-
-            def emit(I, J):
-                x = sim[I] ^ sim[J]
-                h = popcount(x).astype(np.int64)
-                m = h <= mh
-                if not m.any():
-                    return
-                I, J, x, h = I[m], J[m], x[m], h[m]
-                agree = np.zeros(len(x), np.int64)
-                for i in range(nb):
-                    blk = (x >> np.uint64(offsets_l[i])) & np.uint64(
-                        (1 << widths_l[i]) - 1)
-                    agree |= (blk == np.uint64(0)).astype(np.int64) << i
-                m2 = (agree & below_c[I]) == low_c[I]
-                if not m2.any():
-                    return
-                I, J, h = I[m2], J[m2], h[m2]
-                da, db = docs[I], docs[J]
-                out_a.append(np.minimum(da, db))
-                out_b.append(np.maximum(da, db))
-                out_h.append(h)
-
-            # group runs by size so pair-index generation is one broadcast
-            # per distinct bucket size; block the run axis to bound scratch.
-            # Oversized buckets (skewed corpora) get a row-blocked loop so
-            # no single index allocation exceeds ~4M pairs.
-            BIG = 2048
-            for sz in np.unique(sizes):
-                if sz < 2:
-                    continue
-                rs = starts[sizes == sz]
-                if sz <= BIG:
-                    iu, ju = np.triu_indices(sz, k=1)
-                    iu = iu.astype(np.int32); ju = ju.astype(np.int32)
-                    ppr = len(iu)  # pairs per run
-                    step = max(1, 4_000_000 // ppr)
-                    for s in range(0, len(rs), step):
-                        blk = rs[s:s + step].astype(np.int32)
-                        emit((blk[:, None] + iu[None, :]).ravel(),
-                             (blk[:, None] + ju[None, :]).ravel())
-                else:
-                    rblk = max(1, 4_000_000 // int(sz))
-                    for r0 in rs:
-                        for i0 in range(0, sz - 1, rblk):
-                            ii = np.arange(r0 + i0,
-                                           r0 + min(i0 + rblk, sz - 1),
-                                           dtype=np.int32)
-                            jj = np.arange(r0 + i0 + 1, r0 + sz,
-                                           dtype=np.int32)
-                            I = np.repeat(ii, len(jj))
-                            J = np.tile(jj, len(ii))
-                            m = J > I
-                            emit(I[m], J[m])
-
-            if out_a:
-                yield pd.DataFrame({
-                    "doc_a": np.concatenate(out_a),
-                    "doc_b": np.concatenate(out_b),
-                    "hamming": np.concatenate(out_h).astype(np.int32),
-                })
-
-        dt = doc_t.simpleString()
-        return banded.mapInPandas(
-            pair_batches,
-            schema=f"doc_a {dt}, doc_b {dt}, hamming int",
-        )
-    # BOTH sides project the same columns from the repartitioned frame so
-    # the exchange subplans stay canonically identical and ReuseExchange
-    # fires (one exchange written, read twice).
-    a = banded.select(F.col("doc_id").alias("doc_a"),
-                      F.col("simhash").alias("sim_a"), "table_id", "key",
-                      "below", "low")
-    b_ = banded.select(F.col("doc_id").alias("doc_b"),
-                       F.col("simhash").alias("sim_b"),
-                       F.col("table_id").alias("table_id_b"),
-                       F.col("key").alias("key_b"),
-                       F.col("below").alias("below_b"),
-                       F.col("low").alias("low_b"))
-    # hamming filter FIRST (codegen per joined row, kills ~90% of bucket
-    # collisions at the bench corpus), then CANONICAL-TABLE emission
-    # (round 6) instead of a `.distinct()`: a surviving pair collides in
-    # one table per comb-subset of its agreeing blocks (~11x multiplicity
-    # measured at sf1.0 — 19.7M rows used to flow into the distinct
-    # exchange for 1.77M output pairs), so each pair is kept ONLY in the
-    # table whose blocks are its `comb` LOWEST agreeing blocks — exactly
-    # one table per pair, same output set, no dedup exchange at all
-    # (guide §2.4 'remove shuffles outright'). The check: this table is
-    # canonical iff every agreeing block below the table's highest block
-    # is one of the table's own lower blocks, i.e.
-    # (agree & below) == low with the per-table constants carried from
-    # the explode. ``agree`` (bit i set <=> block i identical in both
-    # sketches) is referenced exactly ONCE — an earlier lowest-bit-peeling
-    # formulation referenced it 2x per peel and Catalyst inlined the whole
-    # CASE chain exponentially into the join condition (measured >40x
-    # slower).
-    # SHUFFLE_HASH: the default SortMergeJoin sorts BOTH banded sides (the
-    # two biggest stages of the operator); hash lookup needs no order, the
-    # ~20-bit keys hash-distribute uniformly, and the per-partition build
-    # size is total/shuffle.partitions — the knob that already scales with
-    # the cluster.
-    xor = F.col("sim_a").bitwiseXOR(F.col("sim_b"))
-    agree = None
-    for i in range(n_blocks):
-        piece = F.when(
-            F.shiftrightunsigned(xor, offsets[i])
-            .bitwiseAND(F.lit((1 << widths[i]) - 1)) == 0,
-            F.lit(1 << i),
-        ).otherwise(F.lit(0))
-        agree = piece if agree is None else agree.bitwiseOR(piece)
-    return (
-        a.join(b_.hint("SHUFFLE_HASH"),
-               (F.col("table_id") == F.col("table_id_b"))
-               & (F.col("key") == F.col("key_b"))
-               & (F.col("doc_a") < F.col("doc_b")))
-        .select(
-            "doc_a", "doc_b",
-            F.bit_count(xor).cast("int").alias("hamming"),
-            "below", "low", "sim_a", "sim_b",
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .filter(agree.bitwiseAND(F.col("below")) == F.col("low"))
-        .select("doc_a", "doc_b", "hamming")
+    dt = sims.schema["doc_id"].dataType.simpleString()
+    return banded.mapInPandas(
+        pair_batches,
+        schema=f"doc_a {dt}, doc_b {dt}, hamming int",
     )

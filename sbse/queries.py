@@ -511,18 +511,15 @@ def q31_ann_ivf(spark, sf_dir):
 
 def q30_simhash_candidates(spark, sf_dir):
     # SimHash near-dup candidates at radius 7. The ORACLE is the plain
-    # 8x8-band SQL (pigeonhole-complete for hamming <= 7: any such pair
-    # shares a clean band, so the banding emits EXACTLY the radius-7 pair
-    # set). The ENGINE plan (round 6) is estimate-driven: plain banding's
-    # 8-bit keys make the self-join volume Sum |bucket|^2 — fine at small
-    # corpora (5e6 pairs / ~1.0s at sf0.1) but quadratic-blown at sf1.0
-    # (5.1e8 pairs, measured 111s) — so a cheap exact histogram prices it
-    # and routes large corpora through the identical-output multi-block
-    # tables (~5.8s at sf1.0; equivalence is what q36's brute-force oracle
-    # pins). Guide §2.5/§3: the join key width was the skew.
+    # 8x8-band SQL (pigeonhole-complete for hamming <= 7, so it returns
+    # EXACTLY the radius-7 pair set). The engine picks one of two routes
+    # with the same rows by doc count: the broadcast all-pairs sweep up to
+    # dd.SWEEP_MAX_DOCS, the multi-block tables above it (q36 pins those).
+    from sbse.session import ensure_shipped
+    ensure_shipped(spark)
     return dd.simhash_candidates_adaptive(
         dd.simhash64(_widen(_docs(spark, sf_dir))), max_hamming=7,
-        n_bands=8, n_blocks=10, comb=3)
+        n_blocks=10, comb=3)
 
 
 def q36_simhash_multiblock(spark, sf_dir):
@@ -533,6 +530,8 @@ def q36_simhash_multiblock(spark, sf_dir):
     guard). Both are pigeonhole-complete, so both return EXACTLY the pairs
     with hamming <= 7 — the oracle is the brute-force pair scan, which
     checks completeness directly rather than mirroring the banding."""
+    from sbse.session import ensure_shipped
+    ensure_shipped(spark)
     return dd.simhash_candidates_multiblock(
         dd.simhash64(_widen(_docs(spark, sf_dir))), max_hamming=7, n_blocks=10,
         comb=3)

@@ -2,7 +2,10 @@
 SimHash), similarity search (brute force + LSH recall), text analysis,
 multimodal plumbing — on planted fixtures with known answers."""
 
+import os
+
 import pytest
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 DOC_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -585,49 +588,128 @@ def test_simhash_multiblock_complete(spark):
     assert mb == brute
 
 
-def test_multiblock_numpy_matches_join(spark, monkeypatch):
-    """Round-6 vectorized pairing: the mapInPandas run-length pairing path
-    (default) emits EXACTLY the JVM self-join path's pair set — same
-    (doc_a, doc_b, hamming) rows, doc_a < doc_b — on real corpus data
-    including buckets with >2 members."""
+# the sf0.01 corpus (~500 docs) beside the configured test scale
+SF001_DOCS = os.path.join(os.path.dirname(SF_DIR), "sf0.01",
+                          "documents.parquet")
+
+
+def _brute_pairs(sims, radius):
+    """Every (doc_a < doc_b, hamming) within ``radius`` over the distinct
+    (doc_id, simhash) rows: all-pairs XOR, popcount by ``bin`` (independent
+    of the engine's SWAR popcount)."""
+    import numpy as np
+
+    rows = sorted({(r.doc_id, r.simhash) for r in sims.collect()})
+    ids = np.array([r[0] for r in rows], np.int64)
+    sig = np.array([r[1] for r in rows], np.int64).view(np.uint64)
+    x = sig[:, None] ^ sig[None, :]
+    h = np.array([[bin(int(v)).count("1") for v in row] for row in x])
+    ii, jj = np.nonzero(np.triu(h <= radius, k=1))
+    return {(int(ids[i]), int(ids[j]), int(h[i, j])) for i, j in zip(ii, jj)}
+
+
+def _rows(df):
+    return [(r.doc_a, r.doc_b, r.hamming) for r in df.collect()]
+
+
+def test_multiblock_matches_bruteforce(spark):
+    """The numpy bucket-run pairing emits EXACTLY the brute-force radius-7
+    set on the full sf0.01 corpus (buckets with >2 members included), one
+    row per pair."""
     from sbse.datapipe.dedup import simhash64, simhash_candidates_multiblock
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    sims = simhash64(docs).localCheckpoint()
-    monkeypatch.setenv("SBSE_MULTIBLOCK_JOIN", "jvm")
-    jvm = {(r.doc_a, r.doc_b): r.hamming
-           for r in simhash_candidates_multiblock(sims).collect()}
-    monkeypatch.setenv("SBSE_MULTIBLOCK_JOIN", "numpy")
-    np_ = {(r.doc_a, r.doc_b): r.hamming
-           for r in simhash_candidates_multiblock(sims).collect()}
-    assert np_ == jvm
-    assert len(np_) > 0
-    assert all(a < b for (a, b) in np_)
+    sims = simhash64(spark.read.parquet(SF001_DOCS)).localCheckpoint()
+    rows = _rows(simhash_candidates_multiblock(sims))
+    assert len(rows) == len(set(rows))
+    assert set(rows) == _brute_pairs(sims, 7)
+    assert len(rows) > 0
 
 
-def test_simhash_smallcorpus_sweep_matches_banding(spark, monkeypatch):
-    """Round-6 small-corpus route: the broadcast all-pairs sweep emits
-    EXACTLY the banding paths' radius pair set, and the adaptive router's
-    threshold env is honored (0 forces the banding routes)."""
+def test_multiblock_wide_keys_match_bruteforce(spark):
+    """A 48-bit comb key (8 blocks, comb 6) must not run into the table-id
+    bits: no bucket may merge across tables, so no duplicate or self-pair
+    rows, and exactly the brute-force radius-2 set."""
+    from sbse.datapipe.dedup import simhash64, simhash_candidates_multiblock
+
+    sims = simhash64(spark.read.parquet(SF001_DOCS)).localCheckpoint()
+    rows = _rows(simhash_candidates_multiblock(
+        sims, max_hamming=2, n_blocks=8, comb=6, max_candidate_pairs=None))
+    assert len(rows) == len(set(rows))
+    assert set(rows) == _brute_pairs(sims, 2)
+
+
+def test_simhash_routes_drop_duplicate_id_self_pairs(spark):
+    """Rows that share a doc_id never pair with each other: the sweep and
+    the multi-block pairing return the same rows on a corpus with 50
+    duplicated ids, none with doc_a == doc_b."""
+    from sbse.datapipe.dedup import (simhash64, simhash_candidates_multiblock,
+                                     simhash_pairs_smallcorpus)
+
+    sims = simhash64(spark.read.parquet(SF001_DOCS)).localCheckpoint()
+    dup = sims.unionByName(sims.limit(50)).localCheckpoint()
+    sweep = sorted(_rows(simhash_pairs_smallcorpus(dup)))
+    mb = sorted(_rows(simhash_candidates_multiblock(dup)))
+    assert mb == sweep
+    assert all(a != b for a, b, _ in mb)
+    assert set(mb) == _brute_pairs(sims, 7)
+
+
+def test_simhash_routes_keep_int_id_type(spark, monkeypatch):
+    """IntegerType ids come out as IntegerType on both routes, so the
+    router's output schema does not depend on the corpus size."""
+    from sbse.datapipe import dedup as dd
+
+    docs = (spark.read.parquet(SF001_DOCS).limit(120)
+            .withColumn("doc_id", F.col("doc_id").cast("int")))
+    sims = dd.simhash64(docs, mode="expr").localCheckpoint()
+    assert sims.schema["doc_id"].dataType.simpleString() == "int"
+    def types(df):
+        return [f.dataType.simpleString() for f in df.schema.fields]
+
+    sweep = dd.simhash_pairs_smallcorpus(sims)
+    mb = dd.simhash_candidates_multiblock(sims)
+    assert types(sweep) == types(mb) == ["int", "int", "int"]
+    assert types(dd.simhash_candidates_adaptive(sims)) == types(sweep)
+    monkeypatch.setattr(dd, "SWEEP_MAX_DOCS", 0)
+    routed_mb = dd.simhash_candidates_adaptive(sims)
+    assert types(routed_mb) == types(sweep)
+    assert sorted(_rows(sweep)) == sorted(_rows(mb)) == sorted(_rows(routed_mb))
+
+
+def test_simhash_routes_refuse_non_integer_ids(spark):
+    """Both radius routes and the router refuse non-integer ids by type,
+    before any job runs."""
     from sbse.datapipe.dedup import (simhash64, simhash_candidates_adaptive,
                                      simhash_candidates_multiblock,
                                      simhash_pairs_smallcorpus)
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    sims = simhash64(docs).localCheckpoint()
+    sims = simhash64(_docs(spark, [BASE, NEAR, OTHER])).withColumn(
+        "doc_id", F.col("doc_id").cast("string"))
+    for op in (simhash_pairs_smallcorpus, simhash_candidates_multiblock,
+               simhash_candidates_adaptive):
+        with pytest.raises(TypeError, match="got string"):
+            op(sims)
+
+
+def test_simhash_smallcorpus_sweep_matches_banding(spark, monkeypatch):
+    """Small-corpus route: the broadcast all-pairs sweep emits EXACTLY the
+    multi-block radius pair set, and the router gives the same answer on
+    either side of SWEEP_MAX_DOCS."""
+    from sbse.datapipe import dedup as dd
+
+    sims = dd.simhash64(spark.read.parquet(SF001_DOCS)).localCheckpoint()
     mb = {(r.doc_a, r.doc_b): r.hamming
-          for r in simhash_candidates_multiblock(sims).collect()}
+          for r in dd.simhash_candidates_multiblock(sims).collect()}
     sweep = {(r.doc_a, r.doc_b): r.hamming
-             for r in simhash_pairs_smallcorpus(sims).collect()}
+             for r in dd.simhash_pairs_smallcorpus(sims).collect()}
     assert sweep == mb and len(sweep) > 0
-    # adaptive: default routes the 500-doc corpus through the sweep;
-    # forcing the threshold to 0 must give the identical answer via banding
-    monkeypatch.setenv("SBSE_SIMHASH_BRUTE_MAX_DOCS", "0")
-    banded = {(r.doc_a, r.doc_b): r.hamming
-              for r in simhash_candidates_adaptive(sims).collect()}
-    monkeypatch.delenv("SBSE_SIMHASH_BRUTE_MAX_DOCS")
+    # the default routes the 500-doc corpus through the sweep; a zero
+    # ceiling must give the identical answer through the multi-block tables
     routed = {(r.doc_a, r.doc_b): r.hamming
-              for r in simhash_candidates_adaptive(sims).collect()}
+              for r in dd.simhash_candidates_adaptive(sims).collect()}
+    monkeypatch.setattr(dd, "SWEEP_MAX_DOCS", 0)
+    banded = {(r.doc_a, r.doc_b): r.hamming
+              for r in dd.simhash_candidates_adaptive(sims).collect()}
     assert routed == banded == mb
 
 
