@@ -47,10 +47,9 @@ def decode(df: DataFrame, mode: str = "expr") -> DataFrame:
 
 
 def _decode_expr(df: DataFrame) -> DataFrame:
-    spark = df.sparkSession
-    view = "sbse_tok_input"
-    df.createOrReplaceTempView(view)
-    return spark.sql(decode_sql(SPARK, view))
+    # a DataFrame argument gets a uniquely named view, dropped once the
+    # query is analysed: no shared session-global name for threads to race on
+    return df.sparkSession.sql(decode_sql(SPARK, "{tok}"), tok=df)
 
 
 def _decode_arrow(df: DataFrame) -> DataFrame:

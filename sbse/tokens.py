@@ -57,8 +57,7 @@ def token_table_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the 2 scan cores cost more than the widening saved; hashing a
         # unique deterministic key needs no sort and spreads perfectly.
         ev = ev.repartition(par, "event_id")
-    ev.createOrReplaceTempView("sbse_events_src")
-    return spark.sql(token_table_sql(SPARK, "sbse_events_src"))
+    return spark.sql(token_table_sql(SPARK, "{ev}"), ev=ev)
 
 
 def synth(spark: SparkSession, n_rows: int, n_keys: int = 100,

@@ -203,3 +203,114 @@ def test_cold_run_on_empty_input(spark, tmp_path):
         empty, lambda df: {"echo": df}, wh, run_id="r0", n_parts=3
     )
     assert again == {0: "skipped", 1: "skipped", 2: "skipped"}
+
+
+def _gate(df, run):
+    """``df`` through a one-task ``mapInPandas`` that calls ``run()`` before
+    passing its rows on (one task, so two gated writes need only two cores
+    to run side by side)."""
+    def passthrough(batches):
+        run()
+        yield from batches
+
+    return df.coalesce(1).mapInPandas(passthrough, df.schema)
+
+
+def test_partition_writes_overlap(spark, tmp_path):
+    """A partition's output writes run at the same time: each write's task
+    marks that it started and waits for the other's mark, so written one
+    after another, the first write times out and raises."""
+    from sbse.checkpoint import run_partitioned
+    from sbse.tokens import synth
+
+    marks = str(tmp_path / "marks")
+
+    def rendezvous(me, other):
+        def run():
+            import os
+            import time
+
+            os.makedirs(marks, exist_ok=True)
+            open(os.path.join(marks, me), "w").close()
+            deadline = time.monotonic() + 60
+            while not os.path.exists(os.path.join(marks, other)):
+                if time.monotonic() > deadline:
+                    raise TimeoutError(f"write {me} ran without write {other}")
+                time.sleep(0.05)
+        return run
+
+    def pipeline(subset):
+        ids = subset.select("doc_id")
+        return {"a": _gate(ids, rendezvous("a", "b")),
+                "b": _gate(ids, rendezvous("b", "a"))}
+
+    wh = str(tmp_path / "wh")
+    assert run_partitioned(synth(spark, 300), pipeline, wh, "o",
+                           n_parts=1) == {0: "computed"}
+    m = json.load(open(f"{wh}/_manifests/o/part-0.json"))
+    assert m["outputs"]["a"]["rows"] == m["outputs"]["b"]["rows"] == 300
+
+
+def test_write_failure_leaves_no_manifest(spark, tmp_path):
+    """One output's write fails in the third partition: run_partitioned
+    raises that error once the other writes have ended, writes no manifest
+    for the partition and leaves no job running; a rerun recomputes it and
+    the warehouse equals an uninterrupted run's."""
+    from sbse.checkpoint import run_partitioned
+    from sbse.tokens import synth
+
+    tok = synth(spark, 1500)
+    wh_ref = str(tmp_path / "ref")
+    wh = str(tmp_path / "failed")
+    run_partitioned(tok, _mini_pipeline, wh_ref, "run", n_parts=4)
+
+    def fail():
+        raise RuntimeError("simulated write failure")
+
+    calls = {"n": 0}
+
+    def failing(subset):
+        out = _mini_pipeline(subset)
+        calls["n"] += 1
+        if calls["n"] == 3:
+            out["rollup_1m"] = _gate(out["rollup_1m"], fail)
+        return out
+
+    with pytest.raises(Exception, match="simulated write failure"):
+        run_partitioned(tok, failing, wh, "run", n_parts=4)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    done = sorted(glob.glob(f"{wh}/_manifests/run/part-*.json"))
+    # partitions run in order: 0 and 1 completed, 2 failed, 3 never started
+    assert [d.rsplit("/", 1)[1] for d in done] == ["part-0.json", "part-1.json"]
+
+    s = run_partitioned(tok, _mini_pipeline, wh, "run", n_parts=4)
+    assert sorted(s.values()) == ["computed", "computed", "skipped", "skipped"]
+    for table in ("sessions", "rollup_1m"):
+        assert _read_all(spark, wh, table) == _read_all(spark, wh_ref, table)
+
+
+def test_write_jobs_keep_callers_job_group(spark, tmp_path):
+    """Every job of a cold run, the concurrent writes' included, carries
+    the caller's job group, so ``cancelJobGroup`` can stop a refresh."""
+    from sbse.checkpoint import run_partitioned
+    from sbse.tokens import synth
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def fence(group):  # the id of a one-job marker run in its own group
+        sc.setJobGroup(group, "")
+        spark.range(1).collect()
+        return max(tracker.getJobIdsForGroup(group))
+
+    tok = synth(spark, 800)
+    first = fence("probe-before")
+    sc.setJobGroup("probe", "cold checkpointed run")
+    try:
+        run_partitioned(tok, _mini_pipeline, str(tmp_path / "wh"), "g",
+                        n_parts=2)
+    finally:
+        last = fence("probe-after")
+    ran = set(range(first + 1, last))
+    assert ran and set(tracker.getJobIdsForGroup("probe")) == ran
+    assert not ran & set(tracker.getJobIdsForGroup(None))

@@ -120,3 +120,19 @@ def test_token_array_equality_invariant(spark):
         bad = j.filter(~(F.col("tokens") == F.col("tokens_out"))).count()
         assert bad == 0, f"{mode}: {bad} rows mutated tokens"
         assert j.count() == 2000
+
+
+def test_sources_and_decode_leave_no_temp_views(spark):
+    """Building a token table and decoding it registers no view in the
+    caller's catalog: a shared session-global view name would be raced on
+    by threads building pipelines, and would outlive the call."""
+    from sbse.decode import decode
+    from sbse.tokens import synth, token_table_from_events
+    from tests.conftest import SF_DIR
+
+    session = spark.newSession()  # temp views are per session
+    before = sorted(t.name for t in session.catalog.listTables())
+    assert decode(synth(session, 200), mode="expr").count() == 200
+    assert decode(token_table_from_events(session, SF_DIR),
+                  mode="expr").count() > 0
+    assert sorted(t.name for t in session.catalog.listTables()) == before
