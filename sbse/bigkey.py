@@ -31,14 +31,17 @@ gap can only straddle ADJACENT populated chunks' boundary rows (the stitch
 condition itself uses real timestamps, so non-adjacent populated chunks
 merge correctly too — relevant only at chunk_ms == gap_ms + epsilon).
 
-``monster_safe_sessions`` (the full chain, q34) does NOT compose the two
-twins: it fuses both column families into ONE bounded window pass + one
-summary + one broadcast join (the session lag columns depend only on
-(ts, seq), never on LOCF output), and prunes to the columns the rollup
-provably reads before the shuffle — the modular chain pays two full event
-exchanges/sorts/materializations for the same answer. The twins stay for
-modular use; the hypothesis property test pins the fused chain to the
-plain path.
+``locf_sessionize_chunked`` is the fused stage that production runs: it
+does NOT compose the two twins but computes both column families in ONE
+bounded window pass + one summary + one shuffle-hash join (the session lag
+columns depend only on (ts, seq), never on LOCF output). Two callers share
+it: ``monster_safe_sessions`` (q34) prunes to the columns the rollup
+provably reads and stays checkpoint-free (one consumer), and
+``run_pipeline(bigkey_chunk_ms=...)`` localCheckpoints its per-event frame
+once and derives the states, sessions, tier and metrics outputs from it.
+The modular twins stay for modular callers (and the benchmark's traced,
+layer-by-layer run); the hypothesis property test pins the fused stage to
+the plain path.
 """
 
 from __future__ import annotations
@@ -188,8 +191,9 @@ def sessionize_chunked(
                ignorenulls=True).over(wcr).alias("_lstart"),
     )
     # same ADVICE-r4 pattern as locf_merge_chunked: materialize the
-    # chunk-windowed frame once; broadcast the (source, key, chunk)-grain
-    # stitch table back onto it
+    # chunk-windowed frame once, then join the (source, key, chunk)-grain
+    # stitch table back onto it (a plain equi-join: the stitch table grows
+    # as keys x chunks, so no broadcast is forced)
     df = df.localCheckpoint(eager=False)
     summ = df.groupBy(*KEY_COLS, "_chunk").agg(
         F.min("ts").alias("_first_ts"),
@@ -273,13 +277,13 @@ def counter_increase_chunked(states: DataFrame, unit: str = "hour",
     keep = [*KEY_COLS, "ts", "seq", "n_tok"] + (
         ["_chunk"] if "_chunk" in states.columns else []
     )
-    e = _with_chunk(states.select(*keep), chunk_ms).withColumn(
-        "_ord", ord_col())
+    e = _with_chunk(states.select(*keep), chunk_ms)
     wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
-    e = e.withColumn("_prev_loc", F.lag("n_tok").over(wc))
+    e = e.select("*", ord_col().alias("_ord"),
+                 F.lag("n_tok").over(wc).alias("_prev_loc"))
     # no localCheckpoint: it resets outputPartitioning to Unknown (Spark
     # 4.1) and forces both consumers to re-exchange; ReuseExchange dedups
-    # the shared window exchange instead (see monster_safe_sessions).
+    # the shared window exchange instead (see locf_sessionize_chunked).
     summ = e.groupBy(*KEY_COLS, "_chunk").agg(
         F.expr("max_by(n_tok, _ord)").alias("_fin")
     )
@@ -291,11 +295,8 @@ def counter_increase_chunked(states: DataFrame, unit: str = "hour",
 
     j = e.join(carry.hint("SHUFFLE_HASH"), [*KEY_COLS, "_chunk"])
     inc, reset = counter_exprs(F.coalesce(F.col("_prev_loc"), F.col("_carry")))
-    j = (
-        j.withColumn("_inc", inc)
-        .withColumn("_reset", reset)
-        .withColumn("bucket_start", F.date_trunc(unit, F.col("ts")))
-    )
+    j = j.select("*", inc.alias("_inc"), reset.alias("_reset"),
+                 F.date_trunc(unit, F.col("ts")).alias("bucket_start"))
     return j.groupBy(*KEY_COLS, "bucket_start").agg(*counter_aggs())
 
 
@@ -340,43 +341,42 @@ def session_rollup_agg(sess_events: DataFrame) -> DataFrame:
     )
 
 
-def monster_safe_sessions(
+def locf_sessionize_chunked(
     states: DataFrame,
     gap_ms: int = GAP_MS_NORTH,
     chunk_ms: int = CHUNK_MS_DEFAULT,
     close_trailing: bool = True,
 ) -> DataFrame:
-    """The full monster-key-safe chain, FUSED: chunk-local LOCF and
-    chunk-local sessionization in ONE bounded window pass, one summary
-    groupBy carrying BOTH the LOCF carry state and the session stitch
-    fields, one broadcast join back, then the groupBy rollup. Output ==
-    session_rollup(sessionize(locf_merge(.))) — the hypothesis property
-    test pins it to the plain chain and the oracle checks it as q34.
+    """The FUSED chunked window stage: chunk-local LOCF and chunk-local
+    sessionization in ONE bounded window pass, one summary groupBy carrying
+    BOTH the LOCF carry state and the session stitch facts, one join back.
+
+    Returns one row per event: every column of ``states``, ``{c}_m`` for
+    each ``_MERGE_FIELDS`` field present in ``states`` (== ``locf_merge``'s),
+    and ``sidx``, ``is_trailing``, ``close_trailing`` (== ``sessionize``'s)
+    — everything ``session_rollup_agg`` and the tier cascade read.
 
     Why fused (round 5): the modular chain (locf_merge_chunked →
-    sessionize_chunked) costs TWO full event exchanges + sorts + checkpoint
-    materializations, because the sessionize step's self-join dedup
-    re-aliases the checkpointed scan and loses the phase-1 partitioning.
-    But the session lag columns depend only on (ts, seq) — never on LOCF
-    output — so both column families legally share one window pass. The
-    fusion halves the event-frame shuffle/sort/materialization count while
-    every window partition stays bounded to (source, key, chunk)."""
+    sessionize_chunked) costs TWO full event exchanges + sorts + summary
+    joins, because the sessionize step's self-join dedup re-aliases the
+    first step's output and loses its partitioning. But the session lag
+    columns depend only on (ts, seq) — never on LOCF output — so both
+    column families legally share one window pass while every window
+    partition stays bounded to (source, key, chunk).
+
+    No localCheckpoint inside: in Spark 4.1 it resets
+    outputPartitioning to Unknown, so BOTH consumers of the window frame
+    (the summary groupBy and the join probe) would re-exchange it. Both
+    hold the SAME plan object, so ReuseExchange dedups the window exchange
+    instead. A caller with several consumers of the RESULT (run_pipeline)
+    materializes it once itself."""
     if chunk_ms <= gap_ms:
         raise ValueError(
             f"chunk_ms={chunk_ms} must exceed gap_ms={gap_ms}: a chunk "
             f"shorter than the gap cannot bound the stitch to boundaries"
         )
-    # Column-prune BEFORE the window/checkpoint: the rollup reads only five
-    # of the LOCF families (callsign/lat/lon/altitude/ground_speed) and
-    # never the token arrays — carrying `tokens` (the widest column by far)
-    # through the shuffle, the checkpoint blocks, and the join would charge
-    # the chain ~2x for bytes its output provably cannot contain.
-    rollup_reads = {"callsign", "lat", "lon", "altitude", "ground_speed"}
-    fields = [(c, z) for c, z in _MERGE_FIELDS if c in rollup_reads]
-    e = _with_chunk(
-        states.select(*KEY_COLS, "ts", "seq", *[c for c, _ in fields]),
-        chunk_ms,
-    )
+    fields = [(c, z) for c, z in _MERGE_FIELDS if c in states.columns]
+    e = _with_chunk(states, chunk_ms)
     wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
     wcr = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     # LOCF locals (locf_merge_chunked phase 1) and the session opener flag
@@ -389,22 +389,9 @@ def monster_safe_sessions(
             for c, zero in fields
         ],
         new_session_flag(wc, gap_ms).alias("_lnew"),
-    )
-    e = e.select(
-        "*",
-        F.sum("_lnew").over(wcr).alias("_lsidx"),
-        F.last(F.when(F.col("_lnew") == 1, F.col("ts")),
-               ignorenulls=True).over(wcr).alias("_lstart"),
         ord_col().alias("_ord"),
     )
-    # NO localCheckpoint here (round 6): in Spark 4.1 a localCheckpoint
-    # resets outputPartitioning to Unknown, so BOTH consumers (the summary
-    # groupBy and the join probe) re-exchanged the event frame — two
-    # event-scale shuffles plus the checkpoint write. Both consumers hold
-    # the SAME plan object, so ReuseExchange dedups the window exchange at
-    # runtime (verified in the executed plan: one event exchange, the
-    # window recomputed per consumer for ~0.4s — measured 3.5s -> 2.7s at
-    # sf1.0).
+    e = e.select("*", F.sum("_lnew").over(wcr).alias("_lsidx"))
     # ONE summary groupBy: per-chunk LOCF carry state + session stitch facts
     summ = e.groupBy(*KEY_COLS, "_chunk").agg(
         *[
@@ -414,7 +401,6 @@ def monster_safe_sessions(
         F.min("ts").alias("_first_ts"),
         F.max("ts").alias("_last_ts"),
         F.max("_lsidx").alias("_nloc"),
-        F.expr("max_by(_lstart, struct(ts, seq))").alias("_last_lstart"),
     )
     ws = Window.partitionBy(*KEY_COLS).orderBy("_chunk")
     wsr = ws.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -435,11 +421,10 @@ def monster_safe_sessions(
     news = F.col("_nloc") - F.col("_merge")
     summ = summ.select("*", news.alias("_news"),
                        (F.sum(news).over(wsr) - news).alias("_off"))
-    # NOTE: no anchored-LOCF chain-start columns here (the modular
-    # sessionize_chunked needs them for s_start/session_id) — this fused
-    # path feeds session_rollup_agg, which re-derives the chain start from
-    # min(ts) per (source, key, sidx), so carrying _T/_prevT would be dead
-    # weight in the summary join (ADVICE r5).
+    # No anchored-LOCF chain-start columns (the modular sessionize_chunked
+    # needs them for s_start/session_id): session_rollup_agg re-derives the
+    # chain start from min(ts) per (source, key, sidx), which equals the
+    # chain's true start by construction.
     summ = summ.select(
         "*",
         F.max(F.col("_off") + F.col("_news"))
@@ -460,12 +445,9 @@ def monster_safe_sessions(
         ).hint("SHUFFLE_HASH"),
         [*KEY_COLS, "_chunk"],
     )
-    # the rollup needs only sidx + trailing flags from the session family
-    # (session_rollup_agg derives session_id from min(ts), which equals the
-    # chain's true start by construction)
     sidx = F.col("_off") + F.col("_lsidx") - F.col("_merge")
-    return session_rollup_agg(j.select(
-        "*",
+    return j.select(
+        *states.columns,
         *[
             F.coalesce(F.col(f"_loc_{c}"), F.col(f"_carry_{c}"), F.lit(zero))
             .alias(f"{c}_m")
@@ -474,4 +456,28 @@ def monster_safe_sessions(
         sidx.alias("sidx"),
         (sidx == F.col("_gmax")).alias("is_trailing"),
         F.lit(close_trailing).alias("close_trailing"),
-    ))
+    )
+
+
+def monster_safe_sessions(
+    states: DataFrame,
+    gap_ms: int = GAP_MS_NORTH,
+    chunk_ms: int = CHUNK_MS_DEFAULT,
+    close_trailing: bool = True,
+) -> DataFrame:
+    """The full monster-key-safe chain (q34): ``locf_sessionize_chunked``
+    then the groupBy rollup. Output ==
+    session_rollup(sessionize(locf_merge(.))) — the hypothesis property
+    test pins it to the plain chain and the oracle checks it as q34.
+
+    Column-pruned BEFORE the window: the rollup reads only five of the LOCF
+    families (callsign/lat/lon/altitude/ground_speed) and never the token
+    arrays — carrying `tokens` (the widest column by far) through the
+    shuffle and the join would charge the chain ~2x for bytes its output
+    provably cannot contain. No checkpoint: the rollup is the fused frame's
+    only consumer."""
+    rollup_reads = {"callsign", "lat", "lon", "altitude", "ground_speed"}
+    pruned = states.select(*KEY_COLS, "ts", "seq",
+                           *[c for c, _ in _MERGE_FIELDS if c in rollup_reads])
+    return session_rollup_agg(locf_sessionize_chunked(
+        pruned, gap_ms=gap_ms, chunk_ms=chunk_ms, close_trailing=close_trailing))

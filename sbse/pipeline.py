@@ -17,7 +17,8 @@ from sbse.decode import decode
 from sbse.gorilla import encode_tier
 from sbse.metrics import run_metrics
 from sbse.rollup import gapfill_locf, tier_tables
-from sbse.sessionize import locf_merge, session_rollup, sessionize, states_only
+from sbse.sessionize import (_MERGE_FIELDS, locf_merge, session_rollup,
+                             sessionize, states_only)
 
 
 def run_pipeline(
@@ -40,10 +41,13 @@ def run_pipeline(
     main_test.go:126-135).
 
     ``bigkey_chunk_ms``: when set, the window stage runs through the
-    monster-key-safe chunked twins (sbse.bigkey) — every window partition
-    bounded to (source, key, chunk) — instead of the plain per-key windows.
-    Outputs are row-identical either way (asserted in test_bigkey); choose
-    it when one key's event count can exceed a single task's comfort zone.
+    monster-key-safe fused chunked pass (``bigkey.locf_sessionize_chunked``,
+    the same pass q34 runs) — every window partition bounded to
+    (source, key, chunk of this many ms; must exceed ``gap_ms``) — instead
+    of the plain per-key windows. Its per-event frame is localCheckpointed
+    once and feeds the states, sessions, tier and metrics outputs. Outputs
+    are row-identical either way (asserted in test_bigkey); choose it when
+    one key's event count can exceed a single task's comfort zone.
     """
     from pyspark.sql import functions as F
 
@@ -55,14 +59,17 @@ def run_pipeline(
             F.coalesce(F.col("valid"), F.lit(default_valid))
         ).drop("valid")
     if bigkey_chunk_ms is not None:
-        from sbse.bigkey import (locf_merge_chunked, session_rollup_agg,
-                                 sessionize_chunked)
+        from sbse.bigkey import locf_sessionize_chunked, session_rollup_agg
 
-        merged = locf_merge_chunked(states, chunk_ms=bigkey_chunk_ms)
-        sess_events = sessionize_chunked(
-            merged, gap_ms=gap_ms, chunk_ms=bigkey_chunk_ms,
+        # every output reads the fused chunked frame: materialize it once,
+        # so the states, sessions and metrics sinks do not each re-run the
+        # window pass and the stitch join
+        sess_events = locf_sessionize_chunked(
+            states, gap_ms=gap_ms, chunk_ms=bigkey_chunk_ms,
             close_trailing=close_trailing,
-        )
+        ).localCheckpoint(eager=False)
+        merged = sess_events.select(
+            *states.columns, *[f"{c}_m" for c, _ in _MERGE_FIELDS])
         sessions = session_rollup_agg(sess_events)
     else:
         merged = locf_merge(states)

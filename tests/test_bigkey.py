@@ -84,13 +84,16 @@ def test_chunk_must_exceed_gap(spark):
 def test_full_chain_property_random_streams(spark):
     """Hypothesis property: monster_safe_sessions == plain chain for random
     per-key streams with random chunk sizes (boundary straddles, chains of
-    single-session chunks, duplicate timestamps)."""
+    single-session chunks, duplicate timestamps); and the fused stage's
+    per-event merged fields and session ordinals — the pipeline's states
+    output — equal locf_merge/sessionize across chunk boundaries."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from sbse.bigkey import monster_safe_sessions
+    from sbse.bigkey import locf_sessionize_chunked, monster_safe_sessions
     from sbse.decode import decode
-    from sbse.sessionize import locf_merge, session_rollup, sessionize, states_only
+    from sbse.sessionize import (_MERGE_FIELDS, KEY_COLS, locf_merge,
+                                 session_rollup, sessionize, states_only)
     from tests.test_sessionize import mk
 
     @settings(max_examples=5, deadline=None)
@@ -108,11 +111,19 @@ def test_full_chain_property_random_streams(spark):
         ]
         df = make_token_rows(spark, rows)
         st_df = states_only(decode(df, "expr")).localCheckpoint()
-        plain = session_rollup(
-            sessionize(locf_merge(st_df), gap_ms=30_000)
-        )
+        plain_events = sessionize(locf_merge(st_df), gap_ms=30_000)
+        plain = session_rollup(plain_events)
         chunked = monster_safe_sessions(st_df, gap_ms=30_000, chunk_ms=chunk_ms)
         assert _sym_diff(plain, chunked) == 0, (secs, chunk_ms)
+
+        merged = [f"{c}_m" for c, _ in _MERGE_FIELDS]
+        events = locf_sessionize_chunked(st_df, gap_ms=30_000,
+                                         chunk_ms=chunk_ms)
+        assert events.columns == [*st_df.columns, *merged, "sidx",
+                                  "is_trailing", "close_trailing"]
+        cols = [*KEY_COLS, "ts", "seq", *merged, "sidx", "is_trailing"]
+        assert _sym_diff(plain_events.select(cols),
+                         events.select(cols)) == 0, (secs, chunk_ms)
 
     check()
 
@@ -158,17 +169,45 @@ def test_monster_single_key_analytic(spark):
 
 
 def test_pipeline_bigkey_mode_equals_plain(spark):
-    """run_pipeline(bigkey_chunk_ms=...) must produce the same sessions and
-    tiers as the plain window path — the production switch for hot keys."""
+    """run_pipeline(bigkey_chunk_ms=...) must produce every output of the
+    plain window path — states, sessions, all tiers, gap-fill, metrics and
+    the Gorilla blobs — row for row: the production switch for hot keys."""
     from sbse.pipeline import run_pipeline
     from sbse.tokens import synth
 
     tok = synth(spark, 30_000).localCheckpoint()
-    plain = run_pipeline(tok, decode_mode="expr", with_gorilla=False)
-    big = run_pipeline(tok, decode_mode="expr", with_gorilla=False,
-                       bigkey_chunk_ms=120_000)
-    for table in ("sessions", "rollup_1m", "rollup_1d", "gapfill_1h"):
+    plain = run_pipeline(tok, decode_mode="expr")
+    big = run_pipeline(tok, decode_mode="expr", bigkey_chunk_ms=120_000)
+    assert sorted(big) == sorted(plain)
+    for table in ("states", "sessions", "rollup_1m", "rollup_1h", "rollup_1d",
+                  "gapfill_1h", "metrics", "gorilla_1m"):
         assert _sym_diff(plain[table], big[table]) == 0, table
+
+
+def test_pipeline_bigkey_checkpoints_once(spark, monkeypatch):
+    """The pipeline's monster-key branch materializes the fused chunked
+    frame exactly once (every output reads it); q34's chain, whose rollup
+    is the frame's only consumer, materializes nothing."""
+    from sbse.bigkey import monster_safe_sessions
+    from sbse.pipeline import run_pipeline
+    from sbse.tokens import synth
+
+    tok = synth(spark, 2_000).localCheckpoint()
+    states = _states(spark)
+    seen = []
+    frame_cls = type(tok)
+    checkpoint = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        seen.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    run_pipeline(tok, decode_mode="expr", bigkey_chunk_ms=120_000)
+    assert len(seen) == 1
+    seen.clear()
+    monster_safe_sessions(states, gap_ms=30_000, chunk_ms=120_000)
+    assert seen == []
 
 
 def test_counter_chunked_equals_plain_across_boundaries(spark):
