@@ -9,13 +9,9 @@ its predecessor with one word perturbed, so MinHash/SimHash banding has
 real positives to find. Then times:
 
 * simhash64 (arrow twin) over the corpus;
-* simhash_candidates at the SCALE configuration (max_hamming=3, n_bands=4,
-  16-bit bands): bucket economics are the whole point — expected candidate
-  pairs ~= n_bands * sum_bucket |bucket|^2 / 2. The q30 default (7, 8) has
-  8-bit bands = 256 buckets/band; at 1M docs that is ~4k docs per bucket
-  and ~10^10 candidate pairs — structurally infeasible at this scale, which
-  this bench DOCUMENTS rather than hides (radius >3 at web scale needs
-  Manku-style multi-block band combinations, not wider radii on 4 bands).
+* simhash_candidates_multiblock at radius 7 (C(10,3) ~19-bit combination
+  tables): plain banding would tie radius 7 to 8-bit band keys, ~4k docs
+  per bucket and ~10^10 candidate pairs at 1M docs.
 * minhash_lsh_pairs (k=8, 4 bands, df-capped shingles) — the text-side
   banding path.
 
@@ -121,9 +117,9 @@ def main() -> None:
     docs = spark.read.parquet(corpus_path)
 
     res["stages_out"] = {}
-    # --- simhash + banded candidates (scale config: radius 3, 16-bit bands)
+    # --- simhash + multi-block candidates
     need_sims = any(_stage_on(s) for s in (
-        "simhash64_arrow", "simhash_materialize", "simhash_candidates_h3_b4",
+        "simhash64_arrow", "simhash_materialize",
         "simhash_multiblock_h7_c10_3"))
     if need_sims:
         dd.simhash64(docs.limit(5000), mode="arrow").count()  # worker warm-up
@@ -131,48 +127,11 @@ def main() -> None:
         sims = dd.simhash64(docs, mode="arrow")
         timed("simhash64_arrow", lambda: sims.count())
     # materialize the checkpointed frame FIRST so the candidates stage times
-    # the banding join itself, not a second simhash pass hidden inside the
+    # the banding itself, not a second simhash pass hidden inside the
     # lazy checkpoint
     if need_sims:
         sims_m = dd.simhash64(docs, mode="arrow").localCheckpoint(eager=False)
         timed("simhash_materialize", lambda: sims_m.count())
-    if _stage_on("simhash_candidates_h3_b4"):
-        n_cand = timed(
-            "simhash_candidates_h3_b4",
-            lambda: dd.simhash_candidates(
-                sims_m, max_hamming=3, n_bands=4).count(),
-        )
-        res["stages_out"]["simhash_candidates_h3_b4_pairs"] = n_cand
-        # band-table economics: bucket population of the 4 x 16-bit band table
-        width = 16
-        banded = sims_m.select(
-            F.posexplode(
-                F.array(*[
-                    F.shiftrightunsigned(F.col("simhash"), b * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    for b in range(4)
-                ])
-            ).alias("band_id", "band")
-        )
-        bs = banded.groupBy("band_id", "band").count().agg(
-            F.max("count").alias("mx"), F.avg("count").alias("avg"),
-            F.count(F.lit(1)).alias("n_buckets"),
-        ).collect()[0]
-        res["band_stats"]["simhash_16bit"] = {
-            "max_bucket": int(bs["mx"]),
-            "avg_bucket": round(float(bs["avg"]), 2),
-            "n_buckets": int(bs["n_buckets"]),
-            "est_pairs_per_band": round(float(bs["avg"]) * int(bs["mx"]) / 2,
-                                        1),
-        }
-        # the INfeasible default at this scale, documented by arithmetic not
-        # by melting the host: 8-bit bands -> 256 buckets/band
-        res["band_stats"]["simhash_8bit_default_note"] = (
-            f"radius-7/8-band default would put ~{N_DOCS // 256} docs per "
-            f"8-bit bucket => ~{8 * 256 * (N_DOCS // 256) ** 2 // 2:.0e} "
-            f"candidate pairs — use radius<=3 with 16-bit bands (or Manku "
-            f"multi-block combos) at this scale"
-        )
     # --- the Manku multi-block path that keeps radius 7 FEASIBLE here:
     # C(10,3)=120 ~19-bit combination tables => ~5e5 buckets/table, so the
     # quadratic term stays bounded where 8-bit plain banding explodes.

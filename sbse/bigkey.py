@@ -4,44 +4,34 @@ The plain ``locf_merge``/``sessionize`` windows partition by (source, key):
 one key with more events than an executor comfortably sorts pins a single
 task (Spark's external sort spills rather than OOMs, but the stage becomes
 one serial task — the reference has the same defect as unbounded per-key
-maps, cmd/tracker/main.go:51-53). These twins bound EVERY window partition
-to (source, key, time-chunk) and stitch chunk boundaries through a tiny
-per-chunk summary table — the segmented-scan decomposition:
+maps, cmd/tracker/main.go:51-53). This module bounds EVERY window partition
+to (source, key, time-chunk) and stitches chunk boundaries through a tiny
+per-chunk summary table — the segmented-scan decomposition (Disco's partial
+window aggregates, merged at the boundary):
 
-* ``locf_merge_chunked`` — chunk-local LOCF, then each chunk's final carry
-  state (one row per populated chunk) is prefix-LOCF'd over chunks and
-  joined back as the carry-in; event value = coalesce(local LOCF, carry-in,
-  zero). Identical output to ``locf_merge`` (equality-tested, incl. a
-  hypothesis property test).
-* ``sessionize_chunked`` — chunk-local gap sessionization, then the summary
-  window decides which chunk-opening sessions merge backward
-  (first_ts - prev chunk last_ts <= gap), assigns global session ordinals
-  via per-chunk new-session offsets, and recovers each merged chain's true
-  start with an anchored LOCF. Identical output to ``sessionize``.
+* ``locf_sessionize_chunked`` — the one chunked LOCF + sessionize
+  implementation: one bounded window pass, one summary groupBy carrying
+  each chunk's final LOCF state and its session stitch facts, one join
+  back. Output == ``sessionize(locf_merge(.))`` column for column
+  (equality-tested, incl. a hypothesis property test). ``run_pipeline(
+  bigkey_chunk_ms=...)`` and q34 run it.
+* ``locf_merge_chunked`` / ``sessionize_chunked`` — column views of that
+  stage (== ``locf_merge`` / ``sessionize``), kept for the benchmark's
+  traced, layer-by-layer run; they own no window code.
+* ``counter_increase_chunked`` — the counter-increase twin (q43); its only
+  cross-chunk state is the last sample.
 * ``session_rollup_agg`` — the groupBy twin of ``session_rollup``: pure
   partial-aggregatable min_by/max_by/count/max on (source, key, sidx), so a
   10M-event session reduces map-side to one row per input partition instead
   of sorting in one task. Identical output (equality-tested).
 
-Scale shape: two shuffles per operator family (events hash to
-(source, key, chunk) for the bounded window; the summary join is an
-equi-join on the same keys against a table with one row per populated chunk
-— ~1e4-1e6x smaller than events). chunk_ms must exceed gap_ms so a session
-gap can only straddle ADJACENT populated chunks' boundary rows (the stitch
-condition itself uses real timestamps, so non-adjacent populated chunks
-merge correctly too — relevant only at chunk_ms == gap_ms + epsilon).
-
-``locf_sessionize_chunked`` is the fused stage that production runs: it
-does NOT compose the two twins but computes both column families in ONE
-bounded window pass + one summary + one shuffle-hash join (the session lag
-columns depend only on (ts, seq), never on LOCF output). Two callers share
-it: ``monster_safe_sessions`` (q34) prunes to the columns the rollup
-provably reads and stays checkpoint-free (one consumer), and
-``run_pipeline(bigkey_chunk_ms=...)`` localCheckpoints its per-event frame
-once and derives the states, sessions, tier and metrics outputs from it.
-The modular twins stay for modular callers (and the benchmark's traced,
-layer-by-layer run); the hypothesis property test pins the fused stage to
-the plain path.
+Scale shape: events hash to (source, key, chunk) for the bounded window;
+the summary join is an equi-join on the same keys against a table with one
+row per populated chunk — ~1e4-1e6x smaller than events. chunk_ms must
+exceed gap_ms so a session gap can only straddle ADJACENT populated chunks'
+boundary rows (the stitch condition itself uses real timestamps, so
+non-adjacent populated chunks merge correctly too — relevant only at
+chunk_ms == gap_ms + epsilon).
 """
 
 from __future__ import annotations
@@ -60,112 +50,40 @@ CHUNK_MS_DEFAULT = 3_600_000
 
 
 def _with_chunk(df: DataFrame, chunk_ms: int) -> DataFrame:
-    """Attach the time-chunk column — or reuse an existing ``_chunk``
-    WHOSE chunk size provably matches.
+    """Attach the time-chunk column ``_chunk`` = floor(ts ms / chunk_ms).
 
-    The reuse matters for the chained plan: a frame coming out of
-    ``locf_merge_chunked(keep_chunk=True)`` already carries the chunk
-    column aligned with its partitioning/sort; recomputing the floor()
-    creates a fresh attribute id Catalyst cannot prove equal, forcing a
-    second full exchange + sort of the event frame. Round 6 (ADVICE r5):
-    the reuse is no longer on trust — the column is stamped with its
-    chunk_ms in field metadata, and a pre-existing ``_chunk`` whose stamp
-    is absent or different raises instead of silently mis-chunking the
-    stitch (locf_merge_chunked(chunk_ms=A) chained into
-    sessionize_chunked(chunk_ms=B) with A != B used to produce wrong
-    sessions with no error)."""
+    A pre-existing ``_chunk`` is refused: nothing proves it was built with
+    this chunk size, and a mis-sized chunk silently mis-stitches."""
     if "_chunk" in df.columns:
-        meta = df.schema["_chunk"].metadata
-        if meta.get("chunk_ms") != chunk_ms:
-            raise ValueError(
-                f"pre-existing _chunk column was built with "
-                f"chunk_ms={meta.get('chunk_ms')!r} but this operator needs "
-                f"chunk_ms={chunk_ms}; drop the column or align the sizes"
-            )
-        return df
+        raise ValueError(
+            "input already has a _chunk column; drop it before chunking "
+            f"with chunk_ms={chunk_ms}"
+        )
     return df.select(
-        "*",
-        F.floor(F.unix_millis("ts") / F.lit(chunk_ms)).alias(
-            "_chunk", metadata={"chunk_ms": chunk_ms}),
-    )
+        "*", F.floor(F.unix_millis("ts") / F.lit(chunk_ms)).alias("_chunk"))
 
 
-def locf_merge_chunked(states: DataFrame,
-                       chunk_ms: int = CHUNK_MS_DEFAULT,
-                       keep_chunk: bool = False) -> DataFrame:
-    """W1 twin with bounded window partitions; output == ``locf_merge``.
-
-    Phase 1 (bounded window): running LOCF of each field within
-    (source, key, chunk). Phase 2 (summary): each chunk's FINAL carry value
-    per field (max_by over arrival order — partial-aggregatable groupBy),
-    prefix-LOCF'd across the key's chunks, shifted one chunk back = the
-    carry-in. Phase 3: join carry-ins back; merged = coalesce(local, carry,
-    zero).
-
-    Plan notes (round 5, ADVICE r4): the chunk-windowed frame is
-    localCheckpointed before the summary is derived from it — without that
-    the join's two branches recompute the dominant decode+window stage
-    twice unless ReuseExchange happens to fire. The carry table (one row
-    per populated (source, key, chunk)) is joined back SHUFFLE_HASH
-    (round 6, VERDICT r5 "what's wrong" #1: it grows as keys x time-chunks
-    — unbounded over retention — so the old forced broadcast would
-    eventually blow the 8 GB relation cap with no fallback); the event side
-    keeps the window's hash partitioning with no second exchange and no
-    sort, the carry side pays one small exchange + per-partition hash
-    build."""
-    e = _with_chunk(states, chunk_ms)
-    wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
-    wcr = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    e = e.select(
-        "*",
-        *[
-            F.last(F.nullif(F.col(c), F.lit(zero)), ignorenulls=True)
-            .over(wcr).alias(f"_loc_{c}")
-            for c, zero in _MERGE_FIELDS
-        ],
-        ord_col().alias("_ord"),
-    )
-    e = e.localCheckpoint(eager=False)
-    summ = e.groupBy(*KEY_COLS, "_chunk").agg(
-        *[
-            F.expr(f"max_by(_loc_{c}, _ord)").alias(f"_fin_{c}")
-            for c, _ in _MERGE_FIELDS
-        ]
-    )
-    ws = Window.partitionBy(*KEY_COLS).orderBy("_chunk")
-    w_prev = ws.rowsBetween(Window.unboundedPreceding, -1)
-    carry = summ.select(
-        *KEY_COLS,
-        "_chunk",
-        *[
-            F.last(f"_fin_{c}", ignorenulls=True).over(w_prev).alias(f"_carry_{c}")
-            for c, _ in _MERGE_FIELDS
-        ],
-    )
-    out = e.join(carry.hint("SHUFFLE_HASH"), [*KEY_COLS, "_chunk"])
-    drop = {"_ord", *([] if keep_chunk else ["_chunk"]),
-            *[f"_{p}_{c}" for c, _ in _MERGE_FIELDS for p in ("loc", "carry")]}
-    return out.select(
-        *[c for c in out.columns if c not in drop],
-        *[
-            F.coalesce(F.col(f"_loc_{c}"), F.col(f"_carry_{c}"), F.lit(zero))
-            .alias(f"{c}_m")
-            for c, zero in _MERGE_FIELDS
-        ],
-    )
-
-
-def sessionize_chunked(
-    merged: DataFrame,
+def locf_sessionize_chunked(
+    states: DataFrame,
     gap_ms: int = GAP_MS_NORTH,
     chunk_ms: int = CHUNK_MS_DEFAULT,
     close_trailing: bool = True,
 ) -> DataFrame:
-    """W2/W3 twin with bounded window partitions; output == ``sessionize``
-    (same columns: new_sess, sidx, s_start, session_id, is_trailing,
-    close_trailing).
+    """Chunk-local LOCF and chunk-local sessionization in ONE bounded window
+    pass, one summary groupBy carrying BOTH the LOCF carry state and the
+    session stitch facts, one join back.
+
+    Returns one row per event: every column of ``states``; ``{c}_m`` for
+    each ``_MERGE_FIELDS`` field in ``states`` whose ``{c}_m`` is not
+    already there (== ``locf_merge``'s), so an already merged frame gets
+    only the session columns; then ``new_sess``, ``sidx``, ``s_start``,
+    ``session_id``, ``is_trailing``, ``close_trailing`` (== ``sessionize``'s).
+    Catalyst prunes every column a caller does not read, down to the
+    window, aggregate and join expressions behind it.
 
     Stitch math per chunk c (summary window over the key's chunks):
+      carry-in      = last non-null final LOCF value of the prior chunks;
+                      merged = coalesce(local LOCF, carry-in, zero)
       merge_c       = first_ts(c) - last_ts(prev chunk) <= gap
       new_sessions  = n_local(c) - merge_c
       offset O_c    = cumulative new_sessions of prior chunks
@@ -174,67 +92,108 @@ def sessionize_chunked(
       chain start T = anchored LOCF: a chunk that is ONE session merging
                       backward contributes no anchor, so T carries the
                       chain's true start forward across any chain length.
-    """
+
+    One pass serves both families because the session lag columns depend
+    only on (ts, seq), never on LOCF output. No checkpoint inside: in
+    Spark 4.1 it resets outputPartitioning to Unknown, so the join probe
+    would re-exchange the frame. The summary groupBy and the join probe
+    are pruned to different columns, so ReuseExchange does not fire: the
+    executed plan (AQE on or off) holds two event-side
+    hashpartitioning(source, key, _chunk) exchanges, each with its own
+    window pass. A caller with several consumers of the RESULT
+    (run_pipeline) materializes it once itself."""
     if chunk_ms <= gap_ms:
         raise ValueError(
             f"chunk_ms={chunk_ms} must exceed gap_ms={gap_ms}: a chunk "
             f"shorter than the gap cannot bound the stitch to boundaries"
         )
-    df = _with_chunk(merged, chunk_ms)
+    fields = [(c, z) for c, z in _MERGE_FIELDS
+              if c in states.columns and f"{c}_m" not in states.columns]
+    e = _with_chunk(states, chunk_ms)
     wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
     wcr = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df = df.select("*", new_session_flag(wc, gap_ms).alias("_lnew"))
-    df = df.select(
+    # LOCF locals and the session opener flag (ts/seq only) share one pass
+    e = e.select(
+        "*",
+        *[
+            F.last(F.nullif(F.col(c), F.lit(zero)), ignorenulls=True)
+            .over(wcr).alias(f"_loc_{c}")
+            for c, zero in fields
+        ],
+        new_session_flag(wc, gap_ms).alias("_lnew"),
+        ord_col().alias("_ord"),
+    )
+    e = e.select(
         "*",
         F.sum("_lnew").over(wcr).alias("_lsidx"),
         F.last(F.when(F.col("_lnew") == 1, F.col("ts")),
                ignorenulls=True).over(wcr).alias("_lstart"),
     )
-    # same ADVICE-r4 pattern as locf_merge_chunked: materialize the
-    # chunk-windowed frame once, then join the (source, key, chunk)-grain
-    # stitch table back onto it (a plain equi-join: the stitch table grows
-    # as keys x chunks, so no broadcast is forced)
-    df = df.localCheckpoint(eager=False)
-    summ = df.groupBy(*KEY_COLS, "_chunk").agg(
+    # ONE summary groupBy: per-chunk LOCF carry state + session stitch facts
+    summ = e.groupBy(*KEY_COLS, "_chunk").agg(
+        *[
+            F.expr(f"max_by(_loc_{c}, _ord)").alias(f"_fin_{c}")
+            for c, _ in fields
+        ],
         F.min("ts").alias("_first_ts"),
         F.max("ts").alias("_last_ts"),
         F.max("_lsidx").alias("_nloc"),
-        F.expr("max_by(_lstart, struct(ts, seq))").alias("_last_lstart"),
+        F.expr("max_by(_lstart, _ord)").alias("_last_lstart"),
     )
     ws = Window.partitionBy(*KEY_COLS).orderBy("_chunk")
     wsr = ws.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w_prev = ws.rowsBetween(Window.unboundedPreceding, -1)
     prev_last = F.lag(F.unix_millis("_last_ts")).over(ws)
-    merge_c = F.when(
-        prev_last.isNotNull()
-        & (F.unix_millis("_first_ts") - prev_last <= F.lit(gap_ms)),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    summ = summ.select("*", merge_c.alias("_merge"))
+    summ = summ.select(
+        "*",
+        *[
+            F.last(f"_fin_{c}", ignorenulls=True).over(w_prev).alias(f"_carry_{c}")
+            for c, _ in fields
+        ],
+        F.when(
+            prev_last.isNotNull()
+            & (F.unix_millis("_first_ts") - prev_last <= F.lit(gap_ms)),
+            F.lit(1),
+        ).otherwise(F.lit(0)).alias("_merge"),
+    )
     news = F.col("_nloc") - F.col("_merge")
     anchor = F.when(
         ~((F.col("_nloc") == 1) & (F.col("_merge") == 1)), F.col("_last_lstart")
     )
     # _prevT (the previous chunk's T) = the anchored LOCF over prior chunks
+    summ = summ.select("*", news.alias("_news"),
+                       (F.sum(news).over(wsr) - news).alias("_off"),
+                       F.last(anchor, ignorenulls=True).over(w_prev).alias("_prevT"))
     summ = summ.select(
-        *KEY_COLS, "_chunk", "_merge",
-        news.alias("_news"),
-        (F.sum(news).over(wsr) - news).alias("_off"),
-        F.last(anchor, ignorenulls=True)
-        .over(ws.rowsBetween(Window.unboundedPreceding, -1)).alias("_prevT"),
-    )
-    summ = summ.select(
-        *KEY_COLS, "_chunk", "_merge", "_off", "_prevT",
+        "*",
         F.max(F.col("_off") + F.col("_news"))
         .over(Window.partitionBy(*KEY_COLS)).alias("_gmax"),
     )
-    j = df.join(summ, [*KEY_COLS, "_chunk"])
+    # SHUFFLE_HASH, not broadcast: the summary is one row per populated
+    # (source, key, chunk) — unbounded over retention when the whole corpus
+    # routes through this path (at the sf1.0 bench 2-minute chunks already
+    # make it ~94% of the event count), so a forced broadcast eventually
+    # exceeds the 8 GB relation cap and has no fallback. The event side
+    # reuses the window's (source, key, chunk) hash partitioning with no new
+    # exchange; the summary side pays one small exchange and a per-partition
+    # hash build.
+    j = e.join(
+        summ.select(
+            *KEY_COLS, "_chunk", "_merge", "_off", "_gmax", "_prevT",
+            *[f"_carry_{c}" for c, _ in fields],
+        ).hint("SHUFFLE_HASH"),
+        [*KEY_COLS, "_chunk"],
+    )
     backmerged = (F.col("_lsidx") == 1) & (F.col("_merge") == 1)
     sidx = F.col("_off") + F.col("_lsidx") - F.col("_merge")
     s_start = F.when(backmerged, F.col("_prevT")).otherwise(F.col("_lstart"))
-    drop = {"_chunk", "_lnew", "_lsidx", "_lstart", "_merge", "_off", "_prevT",
-            "_gmax"}
     return j.select(
-        *[c for c in j.columns if c not in drop],
+        *states.columns,
+        *[
+            F.coalesce(F.col(f"_loc_{c}"), F.col(f"_carry_{c}"), F.lit(zero))
+            .alias(f"{c}_m")
+            for c, zero in fields
+        ],
         F.when(F.col("_lnew") == 1, F.when(backmerged, 0).otherwise(1))
         .otherwise(0).alias("new_sess"),
         sidx.alias("sidx"),
@@ -243,6 +202,29 @@ def sessionize_chunked(
         (sidx == F.col("_gmax")).alias("is_trailing"),
         F.lit(close_trailing).alias("close_trailing"),
     )
+
+
+def locf_merge_chunked(states: DataFrame,
+                       chunk_ms: int = CHUNK_MS_DEFAULT) -> DataFrame:
+    """``locf_merge``'s output from ``locf_sessionize_chunked``: its merged
+    columns only. The gap is any value below ``chunk_ms``: Catalyst prunes
+    the session columns, so it never reaches the plan."""
+    fused = locf_sessionize_chunked(states, gap_ms=chunk_ms - 1,
+                                    chunk_ms=chunk_ms)
+    return fused.select(*states.columns,
+                        *[f"{c}_m" for c, _ in _MERGE_FIELDS])
+
+
+def sessionize_chunked(
+    merged: DataFrame,
+    gap_ms: int = GAP_MS_NORTH,
+    chunk_ms: int = CHUNK_MS_DEFAULT,
+    close_trailing: bool = True,
+) -> DataFrame:
+    """``sessionize``'s output from ``locf_sessionize_chunked``: over an
+    already merged frame the stage adds only the session columns."""
+    return locf_sessionize_chunked(merged, gap_ms=gap_ms, chunk_ms=chunk_ms,
+                                   close_trailing=close_trailing)
 
 
 def counter_increase_chunked(states: DataFrame, unit: str = "hour",
@@ -263,27 +245,20 @@ def counter_increase_chunked(states: DataFrame, unit: str = "hour",
 
     Plan notes (round 6): the output provably reads only
     (source, key, ts, seq, n_tok), so the frame is PRUNED to those before
-    the window/checkpoint — the localCheckpoint is a column-pruning
-    barrier, and without the explicit select the window exchange and the
-    checkpoint blocks carried every decoded column including the `tokens`
-    array (guide §2.3 'project before the exchange'; measured 15.1s ->
-    ~2s at sf1.0, where 2-minute chunks make the carry table ~94% of the
-    event count). The carry join is SHUFFLE_HASH, not broadcast (VERDICT
-    r5 'what's wrong' #1): the carry grows as keys x time-chunks —
-    unbounded over retention — so a forced broadcast would eventually blow
-    the 8 GB relation cap; the hash join's build side is per-partition and
-    the event side reuses the window's partitioning with no new exchange.
+    the window (guide §2.3 'project before the exchange'). The carry join
+    is SHUFFLE_HASH, not broadcast: the carry grows as keys x time-chunks
+    (~94% of the event count at sf1.0 with 2-minute chunks) — unbounded
+    over retention — so a forced broadcast would eventually blow the 8 GB
+    relation cap; the hash join's build side is per-partition and the
+    event side reuses the window's partitioning with no new exchange.
     """
-    keep = [*KEY_COLS, "ts", "seq", "n_tok"] + (
-        ["_chunk"] if "_chunk" in states.columns else []
-    )
-    e = _with_chunk(states.select(*keep), chunk_ms)
+    e = _with_chunk(states.select(*KEY_COLS, "ts", "seq", "n_tok"), chunk_ms)
     wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
     e = e.select("*", ord_col().alias("_ord"),
                  F.lag("n_tok").over(wc).alias("_prev_loc"))
-    # no localCheckpoint: it resets outputPartitioning to Unknown (Spark
-    # 4.1) and forces both consumers to re-exchange; ReuseExchange dedups
-    # the shared window exchange instead (see locf_sessionize_chunked).
+    # no checkpoint: it resets outputPartitioning to Unknown (Spark 4.1),
+    # so the join probe would re-exchange; as in locf_sessionize_chunked,
+    # the summary and the join probe each run their own window exchange.
     summ = e.groupBy(*KEY_COLS, "_chunk").agg(
         F.expr("max_by(n_tok, _ord)").alias("_fin")
     )
@@ -338,124 +313,6 @@ def session_rollup_agg(sess_events: DataFrame) -> DataFrame:
         "max_ground_speed",
         F.bround("max_ground_speed").cast("bigint").alias("max_ground_speed_i"),
         F.col("is_trailing").alias("is_open"),
-    )
-
-
-def locf_sessionize_chunked(
-    states: DataFrame,
-    gap_ms: int = GAP_MS_NORTH,
-    chunk_ms: int = CHUNK_MS_DEFAULT,
-    close_trailing: bool = True,
-) -> DataFrame:
-    """The FUSED chunked window stage: chunk-local LOCF and chunk-local
-    sessionization in ONE bounded window pass, one summary groupBy carrying
-    BOTH the LOCF carry state and the session stitch facts, one join back.
-
-    Returns one row per event: every column of ``states``, ``{c}_m`` for
-    each ``_MERGE_FIELDS`` field present in ``states`` (== ``locf_merge``'s),
-    and ``sidx``, ``is_trailing``, ``close_trailing`` (== ``sessionize``'s)
-    — everything ``session_rollup_agg`` and the tier cascade read.
-
-    Why fused (round 5): the modular chain (locf_merge_chunked →
-    sessionize_chunked) costs TWO full event exchanges + sorts + summary
-    joins, because the sessionize step's self-join dedup re-aliases the
-    first step's output and loses its partitioning. But the session lag
-    columns depend only on (ts, seq) — never on LOCF output — so both
-    column families legally share one window pass while every window
-    partition stays bounded to (source, key, chunk).
-
-    No localCheckpoint inside: in Spark 4.1 it resets
-    outputPartitioning to Unknown, so BOTH consumers of the window frame
-    (the summary groupBy and the join probe) would re-exchange it. Both
-    hold the SAME plan object, so ReuseExchange dedups the window exchange
-    instead. A caller with several consumers of the RESULT (run_pipeline)
-    materializes it once itself."""
-    if chunk_ms <= gap_ms:
-        raise ValueError(
-            f"chunk_ms={chunk_ms} must exceed gap_ms={gap_ms}: a chunk "
-            f"shorter than the gap cannot bound the stitch to boundaries"
-        )
-    fields = [(c, z) for c, z in _MERGE_FIELDS if c in states.columns]
-    e = _with_chunk(states, chunk_ms)
-    wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
-    wcr = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # LOCF locals (locf_merge_chunked phase 1) and the session opener flag
-    # (sessionize_chunked phase 1 — ts/seq only) share one window pass
-    e = e.select(
-        "*",
-        *[
-            F.last(F.nullif(F.col(c), F.lit(zero)), ignorenulls=True)
-            .over(wcr).alias(f"_loc_{c}")
-            for c, zero in fields
-        ],
-        new_session_flag(wc, gap_ms).alias("_lnew"),
-        ord_col().alias("_ord"),
-    )
-    e = e.select("*", F.sum("_lnew").over(wcr).alias("_lsidx"))
-    # ONE summary groupBy: per-chunk LOCF carry state + session stitch facts
-    summ = e.groupBy(*KEY_COLS, "_chunk").agg(
-        *[
-            F.expr(f"max_by(_loc_{c}, _ord)").alias(f"_fin_{c}")
-            for c, _ in fields
-        ],
-        F.min("ts").alias("_first_ts"),
-        F.max("ts").alias("_last_ts"),
-        F.max("_lsidx").alias("_nloc"),
-    )
-    ws = Window.partitionBy(*KEY_COLS).orderBy("_chunk")
-    wsr = ws.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_prev = ws.rowsBetween(Window.unboundedPreceding, -1)
-    prev_last = F.lag(F.unix_millis("_last_ts")).over(ws)
-    summ = summ.select(
-        "*",
-        *[
-            F.last(f"_fin_{c}", ignorenulls=True).over(w_prev).alias(f"_carry_{c}")
-            for c, _ in fields
-        ],
-        F.when(
-            prev_last.isNotNull()
-            & (F.unix_millis("_first_ts") - prev_last <= F.lit(gap_ms)),
-            F.lit(1),
-        ).otherwise(F.lit(0)).alias("_merge"),
-    )
-    news = F.col("_nloc") - F.col("_merge")
-    summ = summ.select("*", news.alias("_news"),
-                       (F.sum(news).over(wsr) - news).alias("_off"))
-    # No anchored-LOCF chain-start columns (the modular sessionize_chunked
-    # needs them for s_start/session_id): session_rollup_agg re-derives the
-    # chain start from min(ts) per (source, key, sidx), which equals the
-    # chain's true start by construction.
-    summ = summ.select(
-        "*",
-        F.max(F.col("_off") + F.col("_news"))
-        .over(Window.partitionBy(*KEY_COLS)).alias("_gmax"),
-    )
-    # SHUFFLE_HASH, not broadcast (VERDICT r5 "what's wrong" #1): the
-    # summary is one row per populated (source, key, chunk) — unbounded
-    # over retention when the whole corpus routes through this path (at the
-    # sf1.0 bench 2-minute chunks already make it ~94% of the event count),
-    # so a forced broadcast eventually exceeds the 8 GB relation cap and
-    # has no fallback. The event side reuses the window's
-    # (source, key, chunk) hash partitioning with no new exchange; the
-    # summary side pays one small exchange and a per-partition hash build.
-    j = e.join(
-        summ.select(
-            *KEY_COLS, "_chunk", "_merge", "_off", "_gmax",
-            *[f"_carry_{c}" for c, _ in fields],
-        ).hint("SHUFFLE_HASH"),
-        [*KEY_COLS, "_chunk"],
-    )
-    sidx = F.col("_off") + F.col("_lsidx") - F.col("_merge")
-    return j.select(
-        *states.columns,
-        *[
-            F.coalesce(F.col(f"_loc_{c}"), F.col(f"_carry_{c}"), F.lit(zero))
-            .alias(f"{c}_m")
-            for c, zero in fields
-        ],
-        sidx.alias("sidx"),
-        (sidx == F.col("_gmax")).alias("is_trailing"),
-        F.lit(close_trailing).alias("close_trailing"),
     )
 
 

@@ -12,8 +12,6 @@
   quadratic blowup), and both joins shuffle on band/shingle keys.
 * ``simhash64`` — 64-bit SimHash over md5 word bits (Arrow pass, or a
   pure-Catalyst twin); near-dups are pairs within a small Hamming radius.
-* ``simhash_candidates`` — plain banding, pigeonhole-complete below
-  ``n_bands``; its narrow keys suit small radii only.
 * ``simhash_pairs_smallcorpus`` — the broadcast all-pairs numpy sweep.
 * ``simhash_candidates_multiblock`` — radius-complete candidates with WIDE
   keys: C(n_blocks, comb) block-combination tables (Manku WWW'07 shape),
@@ -393,99 +391,6 @@ def _simhash64_arrow(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def simhash_candidates(sims: DataFrame, max_hamming: int = 7,
-                       n_bands: int = 8,
-                       max_candidate_pairs: int | None = 200_000_000
-                       ) -> DataFrame:
-    """Near-dup candidates via band collision (any identical 64/n_bands-bit
-    slice of the simhash) then exact Hamming filter via bit_count(xor).
-    Pigeonhole guarantee: every pair with hamming < n_bands shares a clean
-    band — the defaults (7, 8) keep the guarantee total over the requested
-    radius. Callers asking for max_hamming >= n_bands would get only
-    probabilistic recall in (n_bands-1, max_hamming]; that is refused loudly
-    rather than silently degraded — raise n_bands (any divisor of 64) to
-    cover the requested radius.
-
-    Scale guard (round 5; VERDICT r4 "what's wrong" #2): the band key is
-    only 64/n_bands bits wide, so the self-join's candidate volume is
-    Sum |bucket|^2 — at 1M docs the (7, 8) default's 8-bit keys measured
-    ~3,906 docs/bucket => ~2e10 pairs, a silent blowup. Before joining, the
-    expected pair count is estimated (first the free uniform-occupancy bound
-    n^2/2^width/2 per band; only if that trips, the real per-bucket
-    histogram) and the join is REFUSED above ``max_candidate_pairs`` with
-    concrete guidance: the exact-radius/key-width trade is pigeonhole-
-    inherent (radius r forces > r bands, i.e. <= 64/(r+1)-bit keys), so the
-    fix is a smaller radius with wider keys (max_hamming=3, n_bands=4:
-    16-bit keys, measured max bucket 84 at 1M docs —
-    BENCH/datapipe_runs.jsonl), more simhash bits upstream, or an explicit
-    larger/None cap from a caller who has the executors for it.
-    ``max_candidate_pairs=None`` disables the guard."""
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= n_bands={n_bands}: the pigeonhole "
-            f"guarantee only covers hamming < n_bands; raise n_bands (must "
-            f"divide 64) to cover the requested radius"
-        )
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    # The sims input is typically the mapInPandas simhash frame; without a
-    # checkpoint the band fan-out + self-join would re-execute it once per
-    # band per join side (~2*n_bands times — measured 2.8x slower at sf0.1).
-    # Checkpoint it once, then emit every band in ONE posexplode projection
-    # (the ann_topk_lsh pattern) instead of an n_bands-way union.
-    sims = sims.localCheckpoint(eager=False)
-    banded = sims.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(*[
-                F.shiftrightunsigned(F.col("simhash"), b * width)
-                .bitwiseAND(F.lit(mask))
-                for b in range(n_bands)
-            ])
-        ).alias("band_id", "band"),
-    )
-    if max_candidate_pairs is not None:
-        n_docs = sims.count()
-        est_uniform = n_docs * n_docs / (1 << width) / 2 * n_bands
-        if est_uniform > max_candidate_pairs:
-            est_real = banded.groupBy("band_id", "band").agg(
-                F.count(F.lit(1)).alias("c")
-            ).agg(
-                F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("p")
-            ).collect()[0]["p"] or 0.0
-            if est_real > max_candidate_pairs:
-                raise ValueError(
-                    f"simhash_candidates: ~{est_real:.2e} candidate pairs "
-                    f"from {n_docs} docs with {width}-bit band keys exceeds "
-                    f"max_candidate_pairs={max_candidate_pairs:.0e}. The "
-                    f"radius/key-width trade is pigeonhole-inherent "
-                    f"(radius {max_hamming} forces <= {width}-bit keys); "
-                    f"use a smaller radius with wider keys (e.g. "
-                    f"max_hamming=3, n_bands=4 -> 16-bit keys), or pass a "
-                    f"larger/None max_candidate_pairs if the cluster can "
-                    f"absorb the join."
-                )
-    a = banded.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"),
-                      "band_id", "band")
-    b_ = banded.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"),
-                       F.col("band_id").alias("band_id_b"), F.col("band").alias("band_b"))
-    # hamming BEFORE the cross-band dedup: the filter is codegen per joined
-    # row, so the distinct exchange carries only surviving (narrow) rows
-    # instead of every bucket collision with both 64-bit sketches attached
-    return (
-        a.join(b_, (F.col("band_id") == F.col("band_id_b")) & (F.col("band") == F.col("band_b"))
-               & (F.col("doc_a") < F.col("doc_b")))
-        .select(
-            "doc_a", "doc_b",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-            .cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
 # Doc-count ceiling of the all-pairs sweep route (a ~2 MB broadcast). On 4
 # cores, BENCH/datapipe_bench.synth_docs, sweep vs multi-block: 1.0 vs 4.8 s
 # at 2^13 docs, 2.8 vs 10.4 s at 2^15, 35.5 vs 38.7 s at 2^17.
@@ -653,12 +558,11 @@ def simhash_candidates_multiblock(
     ``n_blocks`` blocks and key each table on the concatenation of a
     ``comb``-subset of blocks, one table per C(n_blocks, comb) combination.
 
-    Completeness (pigeonhole, same argument as ``simhash_candidates`` one
-    level up): a pair within hamming ``max_hamming`` has differing bits in
-    at most ``max_hamming`` blocks, so at least ``n_blocks - max_hamming``
-    blocks agree entirely; any ``comb``-subset of those agreeing blocks is
-    one of the enumerated tables, hence the pair collides there. Requires
-    ``comb <= n_blocks - max_hamming`` (asserted).
+    Completeness (pigeonhole): a pair within hamming ``max_hamming`` has
+    differing bits in at most ``max_hamming`` blocks, so at least
+    ``n_blocks - max_hamming`` blocks agree entirely; any ``comb``-subset of
+    those agreeing blocks is one of the enumerated tables, hence the pair
+    collides there. Requires ``comb <= n_blocks - max_hamming`` (asserted).
 
     Why it exists: plain banding ties key width to 64/(radius+1), so
     radius 7 gets 8-bit keys and ~2e10 candidate pairs at 1M docs. The

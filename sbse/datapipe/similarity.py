@@ -9,8 +9,6 @@
   embeddings most cell pairs are pruned; on adversarially isotropic data it
   degrades to a blocked (still equi-join) pair enumeration, never a driver
   cartesian.
-* ``ann_topk_bruteforce`` — exact top-k baseline, kept for recall tests
-  only (O(n²); not exposed as a driver query).
 * ``ann_topk_lsh`` — the exposed ANN path: random-hyperplane LSH with
   md5-derived ±1 plane signs (portable — the DuckDB oracle reproduces the
   buckets bit-exactly), bucket equi-join, within-bucket brute force.
@@ -630,25 +628,6 @@ def cosine_neardup_pairs(
 # ---------------------------------------------------------------------------
 # ANN top-k
 # ---------------------------------------------------------------------------
-
-def ann_topk_bruteforce(embs: DataFrame, k: int = 5,
-                        queries: DataFrame | None = None) -> DataFrame:
-    """Exact top-k cosine neighbors — O(n²) recall baseline for tests only
-    (the exposed driver query is ``ann_topk_lsh``)."""
-    n = embs.select("vec_id", "embedding", _norm_col().alias("nrm"))
-    q = (queries or embs).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_e")
-    ).withColumn("q_n", _norm_col("q_e"))
-    pairs = q.join(n, F.col("q_id") != F.col("vec_id"))
-    cos = _dot(F.col("q_e"), F.col("embedding")) / (F.col("q_n") * F.col("nrm"))
-    scored = pairs.select("q_id", "vec_id", cos.alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
-    )
-
 
 def ann_topk_ivf(embs: DataFrame, k: int = 5, n_cells: int = 16,
                  nprobe: int = 2) -> DataFrame:

@@ -63,13 +63,15 @@ def run_pipeline(
 
         # every output reads the fused chunked frame: materialize it once,
         # so the states, sessions and metrics sinks do not each re-run the
-        # window pass and the stitch join
+        # window pass and the stitch join; only the columns they read, so
+        # no per-event session_id hash is computed or stored
+        merged_cols = [*states.columns, *[f"{c}_m" for c, _ in _MERGE_FIELDS]]
         sess_events = locf_sessionize_chunked(
             states, gap_ms=gap_ms, chunk_ms=bigkey_chunk_ms,
             close_trailing=close_trailing,
-        ).localCheckpoint(eager=False)
-        merged = sess_events.select(
-            *states.columns, *[f"{c}_m" for c, _ in _MERGE_FIELDS])
+        ).select(*merged_cols, "sidx", "is_trailing", "close_trailing"
+                 ).localCheckpoint(eager=False)
+        merged = sess_events.select(*merged_cols)
         sessions = session_rollup_agg(sess_events)
     else:
         merged = locf_merge(states)

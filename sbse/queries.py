@@ -33,11 +33,8 @@ def _widen(df: DataFrame) -> DataFrame:
     multi-file/bucketed table this is a no-op. Content-deterministic:
     every downstream operator keys on values, never on partition or row
     order."""
-    import os
-
     target = df.sparkSession.sparkContext.defaultParallelism
-    if (os.environ.get("SBSE_WIDEN_DOCS", "1") != "0"
-            and df.rdd.getNumPartitions() < min(target, 16)):
+    if df.rdd.getNumPartitions() < min(target, 16):
         # hash on the unique id, not round-robin: keyless repartition(n)
         # pays a local sort of the input (sortBeforeRepartition, guide
         # §2.5); hashing a unique key needs no sort and spreads evenly.
@@ -525,9 +522,9 @@ def q30_simhash_candidates(spark, sf_dir):
 def q36_simhash_multiblock(spark, sf_dir):
     """Radius-7 SimHash candidates through the MULTI-BLOCK banding tables
     (10 blocks, C(10,3)=120 3-block combination keys, ~19-bit): the
-    scale-correct twin of q30's plain 8x8 banding, which radius 7 forces
-    onto 8-bit keys (~2e10 candidate pairs at 1M docs, refused by the
-    guard). Both are pigeonhole-complete, so both return EXACTLY the pairs
+    scale-correct alternative to plain 8x8 banding (q30's oracle SQL),
+    which radius 7 forces onto 8-bit keys (~2e10 candidate pairs at 1M
+    docs). Both are pigeonhole-complete, so both return EXACTLY the pairs
     with hamming <= 7 — the oracle is the brute-force pair scan, which
     checks completeness directly rather than mirroring the banding."""
     from sbse.session import ensure_shipped

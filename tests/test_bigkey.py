@@ -1,7 +1,8 @@
-"""Monster-key chunked twins (sbse.bigkey) — SURVEY §4.3 item 3.
+"""Monster-key chunked windows (sbse.bigkey) — SURVEY §4.3 item 3.
 
-Equality contracts: chunked LOCF / chunked sessionize / groupBy rollup must
-equal the plain window versions row-for-row on any input, including streams
+Equality contracts: the chunked LOCF + sessionize stage (and its LOCF-only
+and sessionize-only views) and the groupBy rollup must equal the plain
+window versions row-for-row on any input, including streams
 whose sessions straddle many chunk boundaries; plus a single-hot-key run at
 millions of events with an ANALYTIC ground truth (the case that pins the
 plain path to one sort task — the reference's unbounded per-key map defect,
@@ -37,29 +38,39 @@ def test_locf_chunked_equals_plain(spark):
 
 
 def test_sessionize_chunked_equals_plain(spark):
-    """2-minute chunks against 30 s gaps on real harness data: plenty of
-    straddles and multi-chunk chains."""
+    """2-minute chunks against 30 s gaps, on real harness data and on a
+    dense stream whose sessions chain across many chunks (at 31 s chunks
+    most of them hold one session merging backward, so s_start and
+    session_id come from the anchored chain start)."""
     from sbse.bigkey import sessionize_chunked
-    from sbse.sessionize import locf_merge, sessionize
+    from sbse.decode import decode
+    from sbse.sessionize import locf_merge, sessionize, states_only
+    from tests.test_sessionize import mk
 
-    m = locf_merge(_states(spark)).localCheckpoint()
-    for chunk_ms in (120_000, 31_000):  # incl. chunk barely over the gap
-        a = sessionize(m, gap_ms=30_000)
-        b = sessionize_chunked(m, gap_ms=30_000, chunk_ms=chunk_ms)
-        assert _sym_diff(a, b) == 0, chunk_ms
+    # key 1: a 600 s session at 10 s steps, a gap, then a 60 s session;
+    # key 2: one session at 25 s steps
+    rows = [mk(i, 10 * i, key=1, alt=i % 3) for i in range(61)]
+    rows += [mk(100 + i, 700 + 20 * i, key=1) for i in range(4)]
+    rows += [mk(200 + i, 25 * i, key=2, lat=i % 2) for i in range(13)]
+    dense = states_only(decode(make_token_rows(spark, rows), "expr"))
+    for st in (_states(spark), dense):
+        m = locf_merge(st).localCheckpoint()
+        for chunk_ms in (120_000, 31_000):  # incl. chunk barely over the gap
+            a = sessionize(m, gap_ms=30_000)
+            b = sessionize_chunked(m, gap_ms=30_000, chunk_ms=chunk_ms)
+            assert _sym_diff(a, b) == 0, chunk_ms
 
 
-def test_modular_chain_keep_chunk(spark):
-    """locf_merge_chunked(keep_chunk=True) hands its _chunk column to
-    sessionize_chunked (which trusts a pre-attached _chunk instead of
-    recomputing the floor); the chain must still equal the plain path,
-    and the kept column must not leak into the sessionize output."""
+def test_modular_chain_equals_plain(spark):
+    """locf_merge_chunked chained into sessionize_chunked (the benchmark's
+    traced run) must equal the plain path, and the chunk column must not
+    leak into either output."""
     from sbse.bigkey import locf_merge_chunked, sessionize_chunked
     from sbse.sessionize import locf_merge, sessionize
 
     st = _states(spark)
-    m = locf_merge_chunked(st, chunk_ms=120_000, keep_chunk=True)
-    assert "_chunk" in m.columns
+    m = locf_merge_chunked(st, chunk_ms=120_000)
+    assert "_chunk" not in m.columns
     b = sessionize_chunked(m, gap_ms=30_000, chunk_ms=120_000)
     assert "_chunk" not in b.columns
     a = sessionize(locf_merge(st), gap_ms=30_000)
@@ -85,15 +96,15 @@ def test_full_chain_property_random_streams(spark):
     """Hypothesis property: monster_safe_sessions == plain chain for random
     per-key streams with random chunk sizes (boundary straddles, chains of
     single-session chunks, duplicate timestamps); and the fused stage's
-    per-event merged fields and session ordinals — the pipeline's states
-    output — equal locf_merge/sessionize across chunk boundaries."""
+    per-event output equals sessionize(locf_merge(.)) on every column, in
+    the same order, across chunk boundaries."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from sbse.bigkey import locf_sessionize_chunked, monster_safe_sessions
     from sbse.decode import decode
-    from sbse.sessionize import (_MERGE_FIELDS, KEY_COLS, locf_merge,
-                                 session_rollup, sessionize, states_only)
+    from sbse.sessionize import (locf_merge, session_rollup, sessionize,
+                                 states_only)
     from tests.test_sessionize import mk
 
     @settings(max_examples=5, deadline=None)
@@ -116,14 +127,10 @@ def test_full_chain_property_random_streams(spark):
         chunked = monster_safe_sessions(st_df, gap_ms=30_000, chunk_ms=chunk_ms)
         assert _sym_diff(plain, chunked) == 0, (secs, chunk_ms)
 
-        merged = [f"{c}_m" for c, _ in _MERGE_FIELDS]
         events = locf_sessionize_chunked(st_df, gap_ms=30_000,
                                          chunk_ms=chunk_ms)
-        assert events.columns == [*st_df.columns, *merged, "sidx",
-                                  "is_trailing", "close_trailing"]
-        cols = [*KEY_COLS, "ts", "seq", *merged, "sidx", "is_trailing"]
-        assert _sym_diff(plain_events.select(cols),
-                         events.select(cols)) == 0, (secs, chunk_ms)
+        assert events.columns == plain_events.columns
+        assert _sym_diff(plain_events, events) == 0, (secs, chunk_ms)
 
     check()
 
@@ -246,25 +253,28 @@ def test_counter_chunked_equals_plain_across_boundaries(spark):
     assert sum(r["n_resets"] for r in k2) == 1
 
 
-def test_with_chunk_refuses_mismatched_reuse(spark):
-    """ADVICE r5: a pre-existing _chunk built with a different chunk_ms is
-    refused instead of silently mis-chunking the stitch; matching reuse
-    still avoids the recompute."""
+def test_with_chunk_refuses_existing_chunk(spark):
+    """A pre-existing _chunk column is refused whatever chunk size it was
+    built with (nothing proves its size), by _with_chunk and by the
+    chunked stage; a frame without one gets floor(ts ms / chunk_ms)."""
     import pytest
     from pyspark.sql import functions as F
 
-    from sbse.bigkey import _with_chunk
+    from sbse.bigkey import _with_chunk, locf_sessionize_chunked
 
     df = spark.createDataFrame(
-        [("s", 1, "2024-01-01 00:00:01", 1)],
+        [("s", 1, "2024-01-01 00:02:01", 1)],
         "source string, key bigint, ts string, seq bigint",
     ).withColumn("ts", F.to_timestamp("ts"))
     c = _with_chunk(df, 120_000)
-    assert c.schema["_chunk"].metadata == {"chunk_ms": 120_000}
-    assert _with_chunk(c, 120_000) is c
-    with pytest.raises(ValueError, match="chunk_ms"):
-        _with_chunk(c, 60_000)
-    # a foreign _chunk with no stamp is refused too
+    assert c.columns == [*df.columns, "_chunk"]
+    assert c.first()["_chunk"] == 1704067321000 // 120_000
+    for chunk_ms in (120_000, 60_000):
+        with pytest.raises(ValueError, match="_chunk"):
+            _with_chunk(c, chunk_ms)
+    with pytest.raises(ValueError, match="_chunk"):
+        locf_sessionize_chunked(c, gap_ms=30_000, chunk_ms=120_000)
+    # a foreign _chunk is refused too
     fake = df.withColumn("_chunk", F.lit(0))
-    with pytest.raises(ValueError, match="chunk_ms"):
+    with pytest.raises(ValueError, match="_chunk"):
         _with_chunk(fake, 120_000)

@@ -52,23 +52,17 @@ def test_session_chain_window_count(states):
     assert _windows(session_rollup(sessionize(locf_merge(states)))) <= 6
 
 
-def test_locf_merge_chunked_one_window_before_checkpoint(states, monkeypatch):
-    """The chunk-local LOCF frame — the one localCheckpoint materializes —
-    computes all eight carry columns in one Window operator."""
-    from sbse.bigkey import locf_merge_chunked
+def test_chunked_stage_window_count(spark, states):
+    """The chunked LOCF + sessionize stage, with its full session contract,
+    plans 7 Window operators: each of its two readers of the window frame
+    (summary groupBy, join probe) runs the chunk-local LOCF and session
+    columns in two, plus three over the per-chunk summary. q34 runs the
+    same stage under its groupBy rollup."""
+    from sbse.bigkey import locf_sessionize_chunked
+    from sbse.queries import q34_sessions_bigkey
 
-    seen = []
-    frame_cls = type(states)
-    checkpoint = frame_cls.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        seen.append(self)
-        return checkpoint(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
-    locf_merge_chunked(states, chunk_ms=120_000)
-    assert len(seen) == 1
-    assert _windows(seen[0]) == 1
+    assert _windows(locf_sessionize_chunked(states, 30_000, 120_000)) == 7
+    assert _windows(q34_sessions_bigkey(spark, SF_DIR)) == 7
 
 
 def test_no_with_column_in_loops():

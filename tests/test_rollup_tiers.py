@@ -92,18 +92,6 @@ def test_retention_horizon(spark):
     assert r1d.count() == 2
 
 
-def test_expire_partitions(tmp_path, spark):
-    from sbse.retention import expire_partitions
-
-    base = tmp_path / "tbl"
-    for d in ("2023-01-01", "2023-01-02", "2023-02-01"):
-        (base / f"log_date={d}").mkdir(parents=True)
-        (base / f"log_date={d}" / "x.parquet").write_bytes(b"")
-    dropped = expire_partitions(str(base), keep=lambda v: v >= "2023-01-15")
-    assert dropped == ["2023-01-01", "2023-01-02"]
-    assert sorted(p.name for p in base.iterdir()) == ["log_date=2023-02-01"]
-
-
 import pytest
 
 
