@@ -8,7 +8,7 @@ words per doc from a 20k vocabulary; every 10th doc is a near-duplicate of
 its predecessor with one word perturbed, so MinHash/SimHash banding has
 real positives to find. Then times:
 
-* simhash64 (arrow twin) over the corpus;
+* simhash64 over the corpus;
 * simhash_candidates_multiblock at radius 7 (C(10,3) ~19-bit combination
   tables): plain banding would tie radius 7 to 8-bit band keys, ~4k docs
   per bucket and ~10^10 candidate pairs at 1M docs.
@@ -122,15 +122,15 @@ def main() -> None:
         "simhash64_arrow", "simhash_materialize",
         "simhash_multiblock_h7_c10_3"))
     if need_sims:
-        dd.simhash64(docs.limit(5000), mode="arrow").count()  # worker warm-up
+        dd.simhash64(docs.limit(5000)).count()  # worker warm-up
     if _stage_on("simhash64_arrow"):
-        sims = dd.simhash64(docs, mode="arrow")
+        sims = dd.simhash64(docs)
         timed("simhash64_arrow", lambda: sims.count())
     # materialize the checkpointed frame FIRST so the candidates stage times
     # the banding itself, not a second simhash pass hidden inside the
     # lazy checkpoint
     if need_sims:
-        sims_m = dd.simhash64(docs, mode="arrow").localCheckpoint(eager=False)
+        sims_m = dd.simhash64(docs).localCheckpoint(eager=False)
         timed("simhash_materialize", lambda: sims_m.count())
     # --- the Manku multi-block path that keeps radius 7 FEASIBLE here:
     # C(10,3)=120 ~19-bit combination tables => ~5e5 buckets/table, so the

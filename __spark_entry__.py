@@ -1,6 +1,6 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry`` runs the flagship end-to-end pipeline (token table -> Arrow decode
+``entry`` runs the flagship end-to-end pipeline (token table -> decode
 -> LOCF merge -> gap sessionization -> 1m rollup tier) on sf0.001.
 ``queries``/``oracle_sql`` expose every implemented operator with its DuckDB
 oracle (see sbse/oracle.py for the generated SQL).
@@ -27,7 +27,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     ensure_shipped(spark)
     tok = token_table_from_events(spark, "/root/testdata/sf0.001")
-    out = run_pipeline(tok, gap_ms=30_000, decode_mode="arrow", with_gorilla=False)
+    out = run_pipeline(tok, gap_ms=30_000, with_gorilla=False)
     return out["rollup_1m"]
 
 

@@ -10,8 +10,8 @@
   4x2; candidate pairs share a band bucket, then get exact-Jaccard verified.
   At scale the band join touches only same-bucket rows (banding defeats the
   quadratic blowup), and both joins shuffle on band/shingle keys.
-* ``simhash64`` — 64-bit SimHash over md5 word bits (Arrow pass, or a
-  pure-Catalyst twin); near-dups are pairs within a small Hamming radius.
+* ``simhash64`` — 64-bit SimHash over md5 word bits in one Arrow pass;
+  near-dups are pairs within a small Hamming radius.
 * ``simhash_pairs_smallcorpus`` — the broadcast all-pairs numpy sweep.
 * ``simhash_candidates_multiblock`` — radius-complete candidates with WIDE
   keys: C(n_blocks, comb) block-combination tables (Manku WWW'07 shape),
@@ -264,59 +264,21 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash64(docs: DataFrame, text_col: str = "text",
-              mode: str = "arrow") -> DataFrame:
+def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """64-bit SimHash. Word bits come from the first 16 hex digits of
     md5(word) (bit b = bit (b%4) of digit b//4), which is portable: the
     DuckDB oracle reproduces the exact same bits, so q23 is hash-checked.
     Bit b of the simhash is set when more words have it set than clear
     (2*sum(bit) > count).
 
-    Two equality-tested twins (the decode.py pattern):
-    * ``mode='expr'`` — pure Catalyst: 16 digit extractions + 64 bit-sum
-      aggregates + a 64-term assembly. Correct, but the expression tree is
-      too large for whole-stage codegen (0 codegen spans — the entire
-      stage runs interpreted, measured ~6x slower), kept as the
-      plan-transparent reference.
-    * ``mode='arrow'`` (default) — vectorized mapInPandas: per Arrow batch,
-      md5 once per UNIQUE word, a numpy (words × 64) bit matrix via uint64
-      shifts, np.add.at vote accumulation per doc. Embarrassingly parallel,
-      no shuffle at all (the expr twin shuffles once on doc_id).
-
-    NULL-text docs are dropped in BOTH twins (explicit filter): the expr
-    twin's explode would drop them silently anyway, and without the filter
-    the arrow twin would crash on None.split — the twins' contracts must
-    stay identical on every input class."""
+    One vectorized mapInPandas pass: per Arrow batch, md5 once per UNIQUE
+    word, a per-doc nibble histogram turned into 64 bit votes. Batch-local,
+    no shuffle. Bit-identical to the pure-Catalyst digit/bit-sum fold that
+    tests/test_datapipe.py keeps as the oracle (that plan is too large for
+    whole-stage codegen and ran ~6x slower). NULL-text docs are dropped;
+    ``doc_id`` keeps its input type."""
+    id_type = docs.schema["doc_id"].dataType.simpleString()
     docs = docs.filter(F.col(text_col).isNotNull())
-    if mode == "arrow":
-        return _simhash64_arrow(docs, text_col)
-    w = docs.select("doc_id", F.explode(F.split(F.col(text_col), " ")).alias("word"))
-    w = w.withColumn("m16", F.substring(F.md5("word"), 1, 16))
-    digits = [
-        F.expr(f"locate(substring(m16, {i + 1}, 1), '0123456789abcdef') - 1")
-        .alias(f"d{i}")
-        for i in range(16)
-    ]
-    w = w.select("doc_id", *digits)
-    aggs = [F.count(F.lit(1)).alias("nw")]
-    for b in range(64):
-        i, s = b // 4, b % 4
-        bit = F.floor(F.col(f"d{i}") / F.lit(1 << s)).cast("int") % 2
-        aggs.append(F.sum(bit).alias(f"s{b}"))
-    votes = w.groupBy("doc_id").agg(*aggs)
-    sim_expr = None
-    for b in range(64):
-        lb = (1 << b) if b < 63 else -(1 << 63)
-        term = F.when(
-            2 * F.col(f"s{b}") > F.col("nw"), F.lit(lb).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        sim_expr = term if sim_expr is None else sim_expr + term
-    return votes.select("doc_id", sim_expr.alias("simhash"))
-
-
-def _simhash64_arrow(docs: DataFrame, text_col: str) -> DataFrame:
-    """Vectorized SimHash twin: identical bits to the expr path (md5 hex
-    digit b//4, bit b%4), batch-local, no shuffle."""
 
     def batches(it):
         import hashlib
@@ -387,7 +349,7 @@ def _simhash64_arrow(docs: DataFrame, text_col: str) -> DataFrame:
             )
 
     return docs.select("doc_id", text_col).mapInPandas(
-        batches, schema="doc_id bigint, simhash bigint"
+        batches, schema=f"doc_id {id_type}, simhash bigint"
     )
 
 

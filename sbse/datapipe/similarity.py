@@ -2,7 +2,8 @@
 
 * ``cosine_neardup_pairs`` — EXACT cosine near-duplicate pairs with a
   scale-sane plan: an IVF-style spherical-cell blocking whose candidate
-  cell pairs are pruned by the spherical triangle inequality, so the result
+  cell pairs are pruned by the spherical triangle inequality (one driver
+  test over row blocks of the cell grid, never a C×C array), so the result
   is provably identical to brute force (the DuckDB oracle stays all-pairs)
   while the physical plan is an equi-join on cell ids — shuffled hash /
   sort-merge, never BroadcastNestedLoopJoin. At 100 TB with clustered
@@ -360,20 +361,19 @@ def _assign_cells(embs: DataFrame, cents) -> DataFrame:
     ).drop("_a")
 
 
-# Above this cell count the candidate-pair grid moves off the driver: the
-# C×C triangle-inequality test runs as a Spark join over the C-row cell
-# table instead of one driver-side ndarray (which at C=10⁵ would be 10¹⁰
-# doubles — driver OOM).
-_DRIVER_GRID_MAX_CELLS = 1024
+# Row-block height of the candidate cell-pair test: each block's scratch is
+# _GRID_BLOCK x C doubles (2 MB at C = 1,024), so the driver never holds the
+# C x C grid (10^10 doubles at C = 10^5).
+_GRID_BLOCK = 256
 
 
 def _candidate_cell_pairs(cell_stats: list, threshold: float, cents) -> list:
     """Complete candidate cell pairs: (i, j) survives iff two vectors in the
     caps of cells i and j could still have cosine >= threshold, by the
     spherical triangle inequality  angle(a,b) >= angle(ci,cj) - phi_i - phi_j
-    where phi = the cell's cap half-angle. Vectorized over the C×C grid —
-    driver-side control plane, used only when C <= _DRIVER_GRID_MAX_CELLS
-    (8 MB grid); larger C goes through _candidate_cell_pairs_spark."""
+    where phi = the cell's cap half-angle. Driver-side control plane,
+    vectorized over row blocks of the C x C test: scratch is
+    O(_GRID_BLOCK x C), the result O(surviving pairs)."""
     import numpy as np
 
     if not cell_stats:
@@ -381,63 +381,17 @@ def _candidate_cell_pairs(cell_stats: list, threshold: float, cents) -> list:
     ids = np.array([r[0] for r in cell_stats])
     caps = np.clip(np.array([r[1] for r in cell_stats]), -1.0, 1.0)
     sub = cents[:, ids]  # (dim, m) centroids of non-empty cells
-    theta = np.arccos(np.clip(sub.T @ sub, -1.0, 1.0))
     phi = np.arccos(caps)
     t_ang = math.acos(max(-1.0, min(1.0, threshold)))
-    ok = np.maximum(0.0, theta - phi[:, None] - phi[None, :]) <= t_ang + 1e-9
-    ii, jj = np.nonzero(ok)
-    return [(int(ids[i]), int(ids[j])) for i, j in zip(ii, jj)]
-
-
-def _candidate_cell_pairs_spark(spark, cell_stats: list, threshold: float,
-                                cents) -> list:
-    """Same predicate as _candidate_cell_pairs, evaluated on the DATA plane:
-    the C-row (cell, cap, centroid) table is self-joined in Spark and the
-    spherical-triangle-inequality test runs in a vectorized Arrow batch UDF,
-    so no C×C ndarray ever exists on the driver — driver memory stays O(C)
-    for the cell table plus O(surviving pairs) for the result (the same
-    payload the broadcast join needs anyway). The join is a broadcast nested
-    loop over C control-plane rows (NOT the N-row data tables — the q24 main
-    plan stays BNLJ-free; asserted in tests)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    if not cell_stats:
-        return []
-    t_ang = math.acos(max(-1.0, min(1.0, threshold)))
-
-    cells = spark.createDataFrame(
-        pd.DataFrame({
-            "cell": [int(r[0]) for r in cell_stats],
-            "cap": [float(r[1]) for r in cell_stats],
-            "cent": [cents[:, int(r[0])].tolist() for r in cell_stats],
-        }),
-        schema="cell int, cap double, cent array<double>",
-    )
-
-    @pandas_udf("boolean")
-    def survives(cent_a, cap_a, cent_b, cap_b):
-        import numpy as np
-
-        if len(cent_a) == 0:
-            return pd.Series([], dtype="bool")
-        ca = np.stack(cent_a.to_numpy())
-        cb = np.stack(cent_b.to_numpy())
-        theta = np.arccos(np.clip(np.einsum("ij,ij->i", ca, cb), -1.0, 1.0))
-        phi_a = np.arccos(np.clip(cap_a.to_numpy(), -1.0, 1.0))
-        phi_b = np.arccos(np.clip(cap_b.to_numpy(), -1.0, 1.0))
-        return pd.Series(
-            np.maximum(0.0, theta - phi_a - phi_b) <= t_ang + 1e-9
-        )
-
-    a = cells.select(F.col("cell").alias("ca"), F.col("cap").alias("pa"),
-                     F.col("cent").alias("ea"))
-    b = cells.select(F.col("cell").alias("cb"), F.col("cap").alias("pb"),
-                     F.col("cent").alias("eb"))
-    pairs = a.join(F.broadcast(b)).filter(
-        survives(F.col("ea"), F.col("pa"), F.col("eb"), F.col("pb"))
-    )
-    return [(int(r["ca"]), int(r["cb"])) for r in pairs.select("ca", "cb").collect()]
+    out = []
+    for r0 in range(0, len(ids), _GRID_BLOCK):
+        blk = slice(r0, r0 + _GRID_BLOCK)
+        theta = np.arccos(np.clip(sub[:, blk].T @ sub, -1.0, 1.0))
+        ok = (np.maximum(0.0, theta - phi[blk, None] - phi[None, :])
+              <= t_ang + 1e-9)
+        ii, jj = np.nonzero(ok)
+        out.extend(zip(ids[r0 + ii].tolist(), ids[jj].tolist()))
+    return out
 
 
 def _np_cos_prefilter():
@@ -476,11 +430,10 @@ def cosine_neardup_pairs(
 
     Scale path: centroid sampling is a top-K; assignment is one vectorized
     pass blocked over centroid columns (task memory independent of n_cells);
-    cell stats are C rows of control-plane state; above
-    _DRIVER_GRID_MAX_CELLS cells the candidate cell-pair pruning runs as a
-    Spark join on the C-row cell table (no C² ndarray on the driver); the
-    pair join shuffles on cell ids. At 10⁹ vectors raise ``n_cells`` so
-    cells stay bounded and persist the assigned table to a staging location
+    cell stats are C rows of control-plane state; the candidate cell-pair
+    pruning runs on the driver in row blocks (O(_GRID_BLOCK x C) scratch,
+    no C² ndarray); the pair join shuffles on cell ids. At 10⁹ vectors
+    raise ``n_cells`` so cells stay bounded and persist the assigned table to a staging location
     instead of localCheckpoint."""
     spark = embs.sparkSession
     cents = _sample_centroids(embs, n_cells)
@@ -494,10 +447,7 @@ def cosine_neardup_pairs(
     ).collect()
     stats = [(int(r["cell"]), float(r["mc"])) for r in cell_rows]
     sizes = {int(r["cell"]): int(r["n"]) for r in cell_rows}
-    if len(stats) <= _DRIVER_GRID_MAX_CELLS:
-        cp = _candidate_cell_pairs(stats, threshold, cents)
-    else:
-        cp = _candidate_cell_pairs_spark(spark, stats, threshold, cents)
+    cp = _candidate_cell_pairs(stats, threshold, cents)
     if not cp:
         return spark.createDataFrame([], "id_a bigint, id_b bigint")
     # Grouped cell-pair scoring (round 6, the _grouped_pair_scores data
@@ -723,23 +673,6 @@ def ann_topk_ivf(embs: DataFrame, k: int = 5, n_cells: int = 16,
     return _rank_topk(scored, k)
 
 
-def _band_bucket(e: str, signs_band: list[list[int]]):
-    """Hyperplane-sign bucket for ONE band from its ±1 plane rows.
-    The per-plane projection is an ordered fold over products — bit-exact in
-    DuckDB (list_transform + list_sum), so buckets match across engines."""
-    bits = None
-    for p, row in enumerate(signs_band):
-        s_arr = F.array(*[F.lit(float(s)) for s in row])
-        comp = F.aggregate(
-            F.zip_with(F.col(e), s_arr, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(comp > 0, F.lit(1 << p)).otherwise(0)
-        bits = bit if bits is None else bits + bit
-    return bits
-
-
 def band_plane_signs(n_planes: int, n_bands: int, dim: int) -> list[list[list[int]]]:
     """Per-band plane rows: band b uses global planes
     [b*n_planes, (b+1)*n_planes) of ``plane_signs`` — one shared generator
@@ -772,8 +705,8 @@ def ann_topk_lsh(embs: DataFrame, k: int = 5, n_planes: int = 6,
     (higher-order functions are CodegenFallback — the whole projection ran
     interpreted); buckets and the norm now come from ONE vectorized Arrow
     pass whose per-plane accumulation is the same ascending-dimension
-    add/mul sequence (bit-identical, asserted in test_datapipe;
-    ``_band_bucket`` stays as the plan-transparent reference twin)."""
+    add/mul sequence as the DuckDB oracle's per-plane ``list_sum``, so the
+    buckets match across engines (checked by oracle parity)."""
     bands = band_plane_signs(n_planes, n_bands, dim)
 
     from pyspark.sql.functions import pandas_udf

@@ -33,7 +33,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--checkpoint-parts", type=int, default=8)
     p.add_argument("--master", default=None)
     p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--decode-mode", default="expr", choices=["expr", "arrow"])
     args = p.parse_args(argv)
 
     from sbse.checkpoint import run_partitioned
@@ -52,8 +51,7 @@ def main(argv: list[str] | None = None) -> None:
         raise SystemExit("need --input or --synth-rows")
 
     def pipe(subset):
-        out = run_pipeline(subset, gap_ms=args.gap_ms,
-                           decode_mode=args.decode_mode)
+        out = run_pipeline(subset, gap_ms=args.gap_ms)
         # persist the analytic tables; 'decoded' stays an intermediate
         return {k: v for k, v in out.items() if k != "decoded"}
 

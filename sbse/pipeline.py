@@ -25,7 +25,7 @@ def run_pipeline(
     token_df: DataFrame,
     gap_ms: int = GAP_MS_NORTH,
     close_trailing: bool = True,
-    decode_mode: str = "arrow",
+    decode_mode: str = "expr",
     validation: DataFrame | None = None,
     default_valid: bool = True,
     with_gorilla: bool = True,
@@ -33,6 +33,9 @@ def run_pipeline(
     bigkey_chunk_ms: int | None = None,
 ) -> dict[str, DataFrame]:
     """Returns the pipeline's output tables as DataFrames (lazy).
+
+    ``decode_mode`` is passed to ``decode``, whose one implementation is
+    ``"expr"``; any other value raises ``ValueError``.
 
     ``validation``: optional (key, valid) dim, broadcast-joined as the
     validation gate (tracker main.go:118-123). ``default_valid`` controls

@@ -67,8 +67,8 @@ def _decoded(spark: SparkSession, sf_dir: str,
     #    counters, gates: 3-6 columns each).
     if cols is None:
         tok = token_table_from_events(spark, sf_dir).localCheckpoint(eager=False)
-        return decode(tok, mode="expr")
-    dec = decode(token_table_from_events(spark, sf_dir), mode="expr")
+        return decode(tok)
+    dec = decode(token_table_from_events(spark, sf_dir))
     return dec.select(*cols).localCheckpoint(eager=False)
 
 
@@ -96,7 +96,7 @@ def q01_decode(spark, sf_dir):
     # the fused token-projection -> decode runs as one codegen'd stage and
     # nothing is materialized (round 6; measured 3.5x faster than paying
     # the token-table checkpoint for one pass).
-    return decode(token_table_from_events(spark, sf_dir), mode="expr").drop("tokens")
+    return decode(token_table_from_events(spark, sf_dir)).drop("tokens")
 
 
 def q02_metrics(spark, sf_dir):

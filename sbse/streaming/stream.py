@@ -111,7 +111,7 @@ def read_token_stream_kafka(
 def streaming_sessions(token_stream: DataFrame, gap_ms: int = GAP_MS_NORTH,
                        watermark: str = "24 hours") -> DataFrame:
     """Session aggregates via native session_window + watermark."""
-    d = decode(token_stream, mode="expr")
+    d = decode(token_stream)
     st = d.filter(F.col("ok") & F.col("key").isNotNull()).withWatermark("ts", watermark)
     gap = f"{gap_ms // 1000} seconds"
     return st.groupBy(
@@ -128,7 +128,7 @@ def streaming_sessions(token_stream: DataFrame, gap_ms: int = GAP_MS_NORTH,
 
 def streaming_rollup_1m(token_stream: DataFrame,
                         watermark: str = "24 hours") -> DataFrame:
-    d = decode(token_stream, mode="expr")
+    d = decode(token_stream)
     st = d.filter(F.col("ok") & F.col("key").isNotNull()).withWatermark("ts", watermark)
     return st.groupBy(
         "source", "key", F.window("ts", "1 minute").alias("w")

@@ -77,17 +77,46 @@ def test_simhash(spark):
     assert (0, 2) in cands
 
 
+def simhash64_expr(docs, text_col="text"):
+    """Pure-Catalyst SimHash: the bit-exactness oracle for
+    ``dedup.simhash64``. 16 md5 hex-digit extractions, 64 bit-sum
+    aggregates per doc and a 64-term assembly; NULL-text docs are dropped,
+    as the engine drops them."""
+    docs = docs.filter(F.col(text_col).isNotNull())
+    w = docs.select("doc_id", F.explode(F.split(F.col(text_col), " ")).alias("word"))
+    w = w.withColumn("m16", F.substring(F.md5("word"), 1, 16))
+    digits = [
+        F.expr(f"locate(substring(m16, {i + 1}, 1), '0123456789abcdef') - 1")
+        .alias(f"d{i}")
+        for i in range(16)
+    ]
+    w = w.select("doc_id", *digits)
+    aggs = [F.count(F.lit(1)).alias("nw")]
+    for b in range(64):
+        i, s = b // 4, b % 4
+        bit = F.floor(F.col(f"d{i}") / F.lit(1 << s)).cast("int") % 2
+        aggs.append(F.sum(bit).alias(f"s{b}"))
+    votes = w.groupBy("doc_id").agg(*aggs)
+    sim_expr = None
+    for b in range(64):
+        lb = (1 << b) if b < 63 else -(1 << 63)
+        term = F.when(
+            2 * F.col(f"s{b}") > F.col("nw"), F.lit(lb).cast("long")
+        ).otherwise(F.lit(0).cast("long"))
+        sim_expr = term if sim_expr is None else sim_expr + term
+    return votes.select("doc_id", sim_expr.alias("simhash"))
+
+
 def test_simhash_twins_equal(spark):
-    """The vectorized Arrow simhash (default) is bit-identical to the pure
-    Catalyst expr twin on real corpus data — same guarantee the decode
-    twins carry."""
+    """The vectorized Arrow simhash is bit-identical to the pure Catalyst
+    oracle on real corpus data."""
     from sbse.datapipe.dedup import simhash64
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     expr = {r.doc_id: r.simhash
-            for r in simhash64(docs, mode="expr").collect()}
+            for r in simhash64_expr(docs).collect()}
     arrow = {r.doc_id: r.simhash
-             for r in simhash64(docs, mode="arrow").collect()}
+             for r in simhash64(docs).collect()}
     assert expr == arrow and len(expr) == 500
 
 
@@ -221,6 +250,23 @@ def test_ann_ivf_recall(spark):
     assert got == again
 
 
+def _band_bucket(e, signs_band):
+    """Hyperplane-sign bucket for ONE band from its ±1 plane rows, as
+    interpreted per-plane ordered folds: the reference for the bucket-size
+    assertion below."""
+    bits = None
+    for p, row in enumerate(signs_band):
+        s_arr = F.array(*[F.lit(float(s)) for s in row])
+        comp = F.aggregate(
+            F.zip_with(F.col(e), s_arr, lambda x, s: x.cast("double") * s),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        bit = F.when(comp > 0, F.lit(1 << p)).otherwise(0)
+        bits = bit if bits is None else bits + bit
+    return bits
+
+
 def test_ann_multiband_recall_at_10k(spark):
     """Multi-band LSH ANN at 10k vectors (the round-2 'bucket economics'
     fix): recall vs numpy brute-force top-k >= 0.9 with SHARP buckets
@@ -229,8 +275,7 @@ def test_ann_multiband_recall_at_10k(spark):
     per-bucket population demonstrably shrinks as planes rise."""
     import numpy as np
 
-    from sbse.datapipe.similarity import (_band_bucket, ann_topk_lsh,
-                                          band_plane_signs)
+    from sbse.datapipe.similarity import ann_topk_lsh, band_plane_signs
 
     rng = np.random.RandomState(11)
     centers = rng.standard_normal((200, 64))
@@ -275,11 +320,11 @@ def test_ann_multiband_recall_at_10k(spark):
     assert m10 < m6, (m6, m10)
 
 
-def test_cosine_neardup_empty_and_spark_grid(spark):
+def test_cosine_neardup_empty_and_blocked_grid(spark, monkeypatch):
     """ADVICE r2: empty inputs return an empty pair frame (no np.stack
-    crash); and the Spark cell-pair path (engaged when non-empty cells
-    exceed _DRIVER_GRID_MAX_CELLS) computes the identical pair set to the
-    driver-grid path — no C x C ndarray on the driver."""
+    crash); and the candidate cell-pair test gives the identical pair set
+    whether it runs as one block or in 7-row blocks of the cell grid (the
+    blocking that keeps driver scratch O(block x C), never C x C)."""
     import numpy as np
 
     from sbse.datapipe import similarity as sim
@@ -295,16 +340,14 @@ def test_cosine_neardup_empty_and_spark_grid(spark):
         [(i, [float(x) for x in pts[i]], int(i % 80)) for i in range(2000)],
         EMB_SCHEMA,
     )
-    want = {(r.id_a, r.id_b) for r in
-            sim.cosine_neardup_pairs(df, threshold=0.9, n_cells=256).collect()}
-    # force the distributed grid path for the same cell count
-    orig = sim._DRIVER_GRID_MAX_CELLS
-    sim._DRIVER_GRID_MAX_CELLS = 0
-    try:
-        got = {(r.id_a, r.id_b) for r in
-               sim.cosine_neardup_pairs(df, threshold=0.9, n_cells=256).collect()}
-    finally:
-        sim._DRIVER_GRID_MAX_CELLS = orig
+
+    def pairs(block):
+        monkeypatch.setattr(sim, "_GRID_BLOCK", block)
+        return {(r.id_a, r.id_b) for r in
+                sim.cosine_neardup_pairs(df, threshold=0.9, n_cells=256).collect()}
+
+    want = pairs(1 << 20)  # one block holds the whole grid
+    got = pairs(7)
     assert got == want and len(want) > 50
 
 
@@ -461,17 +504,17 @@ def test_multimodal_resize_and_frames(spark):
 
 
 def test_simhash_null_text_both_twins(spark):
-    """ADVICE r3 (low): NULL-text docs must be DROPPED identically by both
-    simhash twins (the arrow twin used to crash on None.split while the
-    expr twin silently dropped them)."""
+    """ADVICE r3 (low): NULL-text docs must be DROPPED by simhash64 exactly
+    as by the Catalyst oracle (the Arrow pass used to crash on None.split
+    while the Catalyst fold silently dropped them)."""
     from sbse.datapipe.dedup import simhash64
 
     d = spark.createDataFrame(
         [(0, BASE, "en", "s"), (1, None, "en", "s"), (2, OTHER, "en", "s")],
         "doc_id bigint, text string, lang string, source string",
     )
-    got_a = {r.doc_id: r.simhash for r in simhash64(d, mode="arrow").collect()}
-    got_e = {r.doc_id: r.simhash for r in simhash64(d, mode="expr").collect()}
+    got_a = {r.doc_id: r.simhash for r in simhash64(d).collect()}
+    got_e = {r.doc_id: r.simhash for r in simhash64_expr(d).collect()}
     assert got_a == got_e
     assert set(got_a) == {0, 2}
 
@@ -650,13 +693,13 @@ def test_simhash_routes_drop_duplicate_id_self_pairs(spark):
 
 
 def test_simhash_routes_keep_int_id_type(spark, monkeypatch):
-    """IntegerType ids come out as IntegerType on both routes, so the
-    router's output schema does not depend on the corpus size."""
+    """IntegerType ids stay IntegerType through simhash64 and both routes,
+    so the router's output schema does not depend on the corpus size."""
     from sbse.datapipe import dedup as dd
 
     docs = (spark.read.parquet(SF001_DOCS).limit(120)
             .withColumn("doc_id", F.col("doc_id").cast("int")))
-    sims = dd.simhash64(docs, mode="expr").localCheckpoint()
+    sims = dd.simhash64(docs).localCheckpoint()
     assert sims.schema["doc_id"].dataType.simpleString() == "int"
     def types(df):
         return [f.dataType.simpleString() for f in df.schema.fields]

@@ -1,7 +1,7 @@
 """F2 parser fixture vectors (port of reference parser_test.go:11-111,
 asserting the *actual* +1-shifted semantics per SURVEY.md §1.3) + a
-three-way cross-check (Catalyst expr / Arrow UDF / independent Python
-decoder) on synthetic data."""
+cross-check of the Catalyst decode against an independent Python decoder
+on synthetic data."""
 
 import pytest
 
@@ -69,7 +69,7 @@ CASES = [
 ]
 
 
-@pytest.mark.parametrize("mode", ["expr", "arrow"])
+@pytest.mark.parametrize("mode", ["expr"])
 def test_fixture_vectors(spark, mode):
     from sbse.decode import decode
 
@@ -82,9 +82,9 @@ def test_fixture_vectors(spark, mode):
             assert row[col] == val, f"{name}[{mode}].{col}: {row[col]!r} != {val!r}"
 
 
-@pytest.mark.parametrize("mode", ["expr", "arrow"])
+@pytest.mark.parametrize("mode", ["expr"])
 def test_against_independent_python_decoder(spark, mode):
-    """Three-way: engine decode vs a from-the-spec Python decoder, on the
+    """Engine decode vs a from-the-spec Python decoder, on the
     deterministic synthetic mix."""
     from sbse.decode import decode
     from sbse.tokens import synth
@@ -107,19 +107,18 @@ def test_against_independent_python_decoder(spark, mode):
 
 def test_token_array_equality_invariant(spark):
     """BASELINE.json input_hint: decode carries tokens through untouched —
-    per-row exact token-array equality vs the source table, both modes."""
+    per-row exact token-array equality vs the source table."""
     from pyspark.sql import functions as F
 
     from sbse.decode import decode
     from sbse.tokens import synth
 
     tok = synth(spark, 2000)
-    for mode in ("expr", "arrow"):
-        dec = decode(tok, mode).select("doc_id", F.col("tokens").alias("tokens_out"))
-        j = tok.join(dec, "doc_id")
-        bad = j.filter(~(F.col("tokens") == F.col("tokens_out"))).count()
-        assert bad == 0, f"{mode}: {bad} rows mutated tokens"
-        assert j.count() == 2000
+    dec = decode(tok).select("doc_id", F.col("tokens").alias("tokens_out"))
+    j = tok.join(dec, "doc_id")
+    bad = j.filter(~(F.col("tokens") == F.col("tokens_out"))).count()
+    assert bad == 0, f"{bad} rows mutated tokens"
+    assert j.count() == 2000
 
 
 def test_sources_and_decode_leave_no_temp_views(spark):
@@ -136,3 +135,17 @@ def test_sources_and_decode_leave_no_temp_views(spark):
     assert decode(token_table_from_events(session, SF_DIR),
                   mode="expr").count() > 0
     assert sorted(t.name for t in session.catalog.listTables()) == before
+
+
+def test_decode_refuses_unknown_mode(spark):
+    """``"expr"`` is the only decode; any other mode is refused by ``decode``
+    and by ``run_pipeline`` before a job runs, never silently mapped."""
+    from sbse.decode import decode
+    from sbse.pipeline import run_pipeline
+    from sbse.tokens import synth
+
+    tok = synth(spark, 10)
+    with pytest.raises(ValueError, match="arrow"):
+        decode(tok, "arrow")
+    with pytest.raises(ValueError, match="arrow"):
+        run_pipeline(tok, decode_mode="arrow")
