@@ -138,7 +138,8 @@ def main():
 
 
 def profile_q34(spark, sf_dir):
-    """Stage breakdown of monster_safe_sessions at sf_dir."""
+    """Stage breakdown of q34's chain (the chunked stage, then the
+    session rollup) at sf_dir."""
     from sbse.bigkey import CHUNK_MS_DEFAULT, KEY_COLS, _with_chunk
     from sbse.queries import _decoded
     from sbse.sessionize import _MERGE_FIELDS, ord_col, states_only
@@ -192,10 +193,11 @@ def profile_q34(spark, sf_dir):
         return summ
 
     t("q34.summ_agg", lambda: noop(build_summ(e)))
-    from sbse.bigkey import monster_safe_sessions
-    t("q34.full", lambda: noop(monster_safe_sessions(
+    from sbse.bigkey import locf_sessionize_chunked
+    from sbse.sessionize import session_rollup
+    t("q34.full", lambda: noop(session_rollup(locf_sessionize_chunked(
         states_only(_decoded(spark, sf_dir)), gap_ms=gap_ms,
-        chunk_ms=chunk_ms)))
+        chunk_ms=chunk_ms))))
 
 
 if __name__ == "__main__":

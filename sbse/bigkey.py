@@ -20,10 +20,10 @@ window aggregates, merged at the boundary):
   traced, layer-by-layer run; they own no window code.
 * ``counter_increase_chunked`` — the counter-increase twin (q43); its only
   cross-chunk state is the last sample.
-* ``session_rollup_agg`` — the groupBy twin of ``session_rollup``: pure
-  partial-aggregatable min_by/max_by/count/max on (source, key, sidx), so a
-  10M-event session reduces map-side to one row per input partition instead
-  of sorting in one task. Identical output (equality-tested).
+* ``session_rollup_agg`` — not a twin: another name for
+  ``sessionize.session_rollup``, the one session rollup, whose groupBy on
+  (source, key, sidx) already combines a monster session map-side. q34 is
+  ``session_rollup(locf_sessionize_chunked(.))``.
 
 Scale shape: events hash to (source, key, chunk) for the bounded window;
 the summary join is an equi-join on the same keys against a table with one
@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from sbse import GAP_MS_NORTH
 from sbse.sessionize import (_MERGE_FIELDS, KEY_COLS, new_session_flag, ord_col,
-                             session_id_col)
+                             session_id_col, session_rollup)
 
 # 1 hour of events per window partition by default: at the reference's
 # per-key message rates (~1/s) that is ~3.6k rows; even a 1000x-hot key
@@ -275,66 +275,5 @@ def counter_increase_chunked(states: DataFrame, unit: str = "hour",
     return j.groupBy(*KEY_COLS, "bucket_start").agg(*counter_aggs())
 
 
-def session_rollup_agg(sess_events: DataFrame) -> DataFrame:
-    """A1 twin of ``session_rollup`` as a pure groupBy — every aggregate is
-    partial-aggregatable (map-side combine), so a monster session reduces to
-    one row per input partition before the shuffle instead of sorting the
-    whole session in one window task. Output == ``session_rollup``."""
-    e = sess_events.withColumn("_ord", ord_col())
-    agg = e.groupBy("source", "key", "sidx").agg(
-        F.min("ts").alias("started_at"),
-        F.max("ts").alias("_last_ts"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.expr("max_by(callsign_m, _ord)").alias("callsign"),
-        F.expr("min_by(lat_m, _ord)").alias("first_lat"),
-        F.expr("min_by(lon_m, _ord)").alias("first_lon"),
-        F.expr("max_by(lat_m, _ord)").alias("last_lat"),
-        F.expr("max_by(lon_m, _ord)").alias("last_lon"),
-        F.max("altitude_m").alias("max_altitude"),
-        F.max("ground_speed_m").alias("max_ground_speed"),
-        F.any_value("is_trailing").alias("is_trailing"),
-        F.any_value("close_trailing").alias("close_trailing"),
-    )
-    return agg.select(
-        session_id_col(F.col("started_at"), F.col("sidx")).alias("session_id"),
-        "source",
-        "key",
-        "started_at",
-        F.when(
-            F.col("is_trailing") & ~F.col("close_trailing"), F.lit(None)
-        ).otherwise(F.col("_last_ts")).alias("ended_at"),
-        "n_events",
-        "callsign",
-        "first_lat",
-        "first_lon",
-        "last_lat",
-        "last_lon",
-        "max_altitude",
-        "max_ground_speed",
-        F.bround("max_ground_speed").cast("bigint").alias("max_ground_speed_i"),
-        F.col("is_trailing").alias("is_open"),
-    )
-
-
-def monster_safe_sessions(
-    states: DataFrame,
-    gap_ms: int = GAP_MS_NORTH,
-    chunk_ms: int = CHUNK_MS_DEFAULT,
-    close_trailing: bool = True,
-) -> DataFrame:
-    """The full monster-key-safe chain (q34): ``locf_sessionize_chunked``
-    then the groupBy rollup. Output ==
-    session_rollup(sessionize(locf_merge(.))) — the hypothesis property
-    test pins it to the plain chain and the oracle checks it as q34.
-
-    Column-pruned BEFORE the window: the rollup reads only five of the LOCF
-    families (callsign/lat/lon/altitude/ground_speed) and never the token
-    arrays — carrying `tokens` (the widest column by far) through the
-    shuffle and the join would charge the chain ~2x for bytes its output
-    provably cannot contain. No checkpoint: the rollup is the fused frame's
-    only consumer."""
-    rollup_reads = {"callsign", "lat", "lon", "altitude", "ground_speed"}
-    pruned = states.select(*KEY_COLS, "ts", "seq",
-                           *[c for c, _ in _MERGE_FIELDS if c in rollup_reads])
-    return session_rollup_agg(locf_sessionize_chunked(
-        pruned, gap_ms=gap_ms, chunk_ms=chunk_ms, close_trailing=close_trailing))
+# The benchmark's traced run imports the rollup under this name.
+session_rollup_agg = session_rollup

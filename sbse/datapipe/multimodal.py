@@ -1,10 +1,11 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads are ``binary`` columns with a metadata struct;
-decode/feature-extraction runs as Arrow-batched ``mapInPandas``. The actual
-media decode is STUBBED (no codec libs in this container) behind
-``decode_media`` — the Spark-side plumbing (schema, batching, partitioning,
-UDF signatures) is real and tested with deterministic fake features.
+feature extraction, resize and frame sampling run as Arrow-batched
+``mapInPandas`` passes. Real media codecs are not part of the package: the
+kernels are deterministic stand-ins over the payload bytes, so the
+Spark-side plumbing (schema, batching, partitioning, UDF signatures) is
+real and tested.
 """
 
 from __future__ import annotations
@@ -155,12 +156,4 @@ def sample_frames(media: DataFrame, n_frames: int = 4,
         frame_batches,
         schema="doc_id bigint, frame_idx bigint, n_frames_total bigint, "
                "frame binary",
-    )
-
-
-def decode_media(media: DataFrame, kind: str) -> DataFrame:
-    """Real media decode entry point — stubbed in this environment."""
-    raise NotImplementedError(
-        f"media decode for {kind!r} requires codec libraries not present in "
-        "this container; use extract_features for the plumbing path"
     )

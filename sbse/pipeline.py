@@ -3,9 +3,13 @@
 
 This is the batch re-expression of the reference's tracker lifecycle
 (SURVEY.md §3 E2). One lineage, two shuffles:
-  1. hash partition by (source, key) for the window stage (merge/sessionize),
+  1. hash partition by (source, key) for the window stage (merge/sessionize)
+     — the session rollup's groupBy on (source, key, sidx) reuses it,
   2. regroup to (source, key, bucket) for the tier cascade — which reuses
      partial aggregation and is tiny relative to raw.
+``bigkey_chunk_ms`` picks the window stage's route (plain per-key windows
+or the chunked monster-key pass); every sink downstream of it, the session
+rollup included, is the same for both routes.
 """
 
 from __future__ import annotations
@@ -62,7 +66,7 @@ def run_pipeline(
             F.coalesce(F.col("valid"), F.lit(default_valid))
         ).drop("valid")
     if bigkey_chunk_ms is not None:
-        from sbse.bigkey import locf_sessionize_chunked, session_rollup_agg
+        from sbse.bigkey import locf_sessionize_chunked
 
         # every output reads the fused chunked frame: materialize it once,
         # so the states, sessions and metrics sinks do not each re-run the
@@ -75,12 +79,11 @@ def run_pipeline(
         ).select(*merged_cols, "sidx", "is_trailing", "close_trailing"
                  ).localCheckpoint(eager=False)
         merged = sess_events.select(*merged_cols)
-        sessions = session_rollup_agg(sess_events)
     else:
         merged = locf_merge(states)
         sess_events = sessionize(merged, gap_ms=gap_ms,
                                  close_trailing=close_trailing)
-        sessions = session_rollup(sess_events)
+    sessions = session_rollup(sess_events)
     tiers = tier_tables(merged)
     if cache_tiers:
         # The cascade re-aggregates tiers (1m -> 1h -> 1d -> gapfill); the

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sbse.decode import decode
+from sbse.metrics import run_metrics
 from sbse.rollup import bucket_rollup, cascade, gapfill_locf
 from sbse.sessionize import locf_merge, ord_col, session_rollup, sessionize, states_only
 from sbse.tokens import token_table_from_events
@@ -100,29 +101,15 @@ def q01_decode(spark, sf_dir):
 
 
 def q02_metrics(spark, sf_dir):
-    """Run counters (stats.go:69-132): totals + per-msg-type histogram
-    (index = msg_type, only 0..9 — out-of-range silently dropped,
-    stats.go:89-93)."""
+    """Run counters (stats.go:69-132): ``run_metrics``'s totals with its
+    per-msg-type histogram (index = msg_type, only 0..9 — out-of-range
+    silently dropped, stats.go:89-93) expanded into h0..h9."""
     d = _decoded(spark, sf_dir, cols=["ok", "key", "msg_type", "source", "n_tok"])
-    aggs = [
-        F.count(F.lit(1)).alias("total_rows"),
-        F.sum(F.when(F.col("ok"), 1).otherwise(0)).cast("bigint").alias("parsed_rows"),
-        F.sum(F.when(~F.col("ok"), 1).otherwise(0)).cast("bigint").alias("failed_rows"),
-        F.sum(F.when(F.col("ok") & F.col("key").isNotNull(), 1).otherwise(0))
-        .cast("bigint").alias("stored_states"),
-        F.countDistinct(
-            F.when(
-                F.col("ok") & F.col("key").isNotNull(),
-                F.concat(F.col("source"), F.lit("|"), F.col("key").cast("string")),
-            )
-        ).cast("bigint").alias("active_keys"),
-    ]
-    aggs += [
-        F.sum(F.when(F.col("ok") & (F.col("msg_type") == i), 1).otherwise(0))
-        .cast("bigint").alias(f"h{i}")
-        for i in range(10)
-    ]
-    return d.agg(*aggs)
+    m = run_metrics(d)
+    return m.select(
+        *[c for c in m.columns if c != "msg_type_counts"],
+        *[F.col("msg_type_counts")[i].alias(f"h{i}") for i in range(10)],
+    )
 
 
 def q03_state_final(spark, sf_dir):
@@ -555,16 +542,16 @@ def q35_quantile_cascade(spark, sf_dir):
 
 
 def q34_sessions_bigkey(spark, sf_dir):
-    """The monster-key-safe session chain (chunked LOCF -> chunked
-    sessionize -> groupBy rollup, sbse.bigkey): every window partition is
-    bounded by (source, key, 2-minute chunk) and sessions are stitched
-    across chunk boundaries through the per-chunk summary. Must equal q04
-    exactly — the oracle IS q04's SQL."""
-    from sbse.bigkey import monster_safe_sessions
+    """The monster-key-safe session chain: the chunked LOCF + sessionize
+    stage (sbse.bigkey), every window partition bounded by (source, key,
+    2-minute chunk) and sessions stitched across chunk boundaries through
+    the per-chunk summary, then the one groupBy rollup. Must equal q04
+    exactly — the oracle IS q04's SQL. Catalyst prunes the stage to the
+    five fields the rollup reads."""
+    from sbse.bigkey import locf_sessionize_chunked
 
-    return monster_safe_sessions(
-        states_only(_decoded(spark, sf_dir)), gap_ms=30_000, chunk_ms=120_000
-    )
+    return session_rollup(locf_sessionize_chunked(
+        states_only(_decoded(spark, sf_dir)), gap_ms=30_000, chunk_ms=120_000))
 
 
 def q37_contamination(spark, sf_dir):

@@ -8,15 +8,13 @@ the horizon. The partition-level grain — O(1) directory drops on a
 date-partitioned warehouse table, the Spark analog of hypertable chunk
 drops (no data rewrite) — is ``catalog.expire_partitions``.
 
-Default horizons follow the reference: raw/1m 30 days, 1h/1d 90 days.
+Callers pass the horizon; the reference's are raw/1m 30 days, 1h/1d 90 days.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DEFAULT_HORIZON_DAYS = {"raw": 30, "1m": 30, "1h": 90, "1d": 90}
 
 
 def retain(tier: DataFrame, now_ts: str, horizon_days: int,

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from sbse.sessionize import ord_col
 
-TIER_UNITS = {"1m": "minute", "1h": "hour", "1d": "day"}
 _STEP_INTERVAL = {"minute": "interval 1 minute", "hour": "interval 1 hour",
                   "day": "interval 1 day"}
 
@@ -87,7 +86,8 @@ def counter_exprs(prev):
     chunked path (prev = coalesce(chunk-local lag, carried chunk-final
     value); bigkey.counter_increase_chunked, whose q43 contract is exact
     equality with q41), and transliterated in numpy by
-    streaming.stateful_counter_increase (fold-equality pytest-pinned)."""
+    streaming.stateful.stateful_counter_increase (fold-equality
+    pytest-pinned)."""
     inc = (
         F.when(prev.isNull(), F.lit(0))
         .when(F.col("n_tok") >= prev, F.col("n_tok") - prev)

@@ -1,7 +1,8 @@
 """LOCF state merge + gap-based sessionization + session rollups.
 
 Re-expresses the reference tracker's per-key in-memory state machine
-(cmd/tracker/main.go:96-263) as pure window functions over event time:
+(cmd/tracker/main.go:96-263) as window functions over event time plus one
+groupBy:
 
 * ``locf_merge`` — W1: mergeStates (tracker main.go:159-186). Each field is
   carried forward per key, updated only when the new value is non-zero
@@ -11,17 +12,21 @@ Re-expresses the reference tracker's per-key in-memory state machine
   session ids are deterministic sha256 surrogates (uuid.New at tracker
   main.go:204 is non-reproducible, incompatible with exactness checks).
 * ``session_rollup`` — A1: per-session first/last/max aggregates
-  (tracker main.go:189-263; flights DDL schema.sql:29-46).
+  (tracker main.go:189-263; flights DDL schema.sql:29-46) as one
+  partial-aggregatable groupBy on (source, key, sidx). It is the only
+  session rollup: the plain chain, the chunked monster-key chain
+  (``bigkey``) and q34 all end in it.
 
 Scale notes: the whole stage costs exactly ONE shuffle (hash partition by
 (source, key)); every window here shares that partitioning and sort, and the
-session rollup uses partial aggregation on top. Ordering is total and
-deterministic: (ts, seq) with seq a data-derived tiebreak (arrival order at
-the reference becomes explicit order here — SURVEY.md §7.4). Columns are
-built with one ``select`` per dependency level, never a ``withColumn``
-chain: Catalyst plans one ``Window`` operator per projection and window
-spec, so a chain of N window columns over one spec costs N sort-buffered
-window passes where one suffices (tests/test_plan_shape.py pins the count).
+session rollup's groupBy reuses it, with map-side partial aggregation on
+top. Ordering is total and deterministic: (ts, seq) with seq a data-derived
+tiebreak (arrival order at the reference becomes explicit order here —
+SURVEY.md §7.4). Columns are built with one ``select`` per dependency
+level, never a ``withColumn`` chain: Catalyst plans one ``Window`` operator
+per projection and window spec, so a chain of N window columns over one
+spec costs N sort-buffered window passes where one suffices
+(tests/test_plan_shape.py pins the count).
 """
 
 from __future__ import annotations
@@ -141,7 +146,7 @@ def sessionize(
 
 
 def session_rollup(sess_events: DataFrame) -> DataFrame:
-    """A1 — per-session rollup over LOCF-merged states.
+    """A1 — per-session rollup over LOCF-merged, sessionized states.
 
     first_*/last_* use the merged values at the session's first/last event
     (tracker main.go:208-209, 225-226); max_* over merged values (227-232);
@@ -151,44 +156,28 @@ def session_rollup(sess_events: DataFrame) -> DataFrame:
     reference never closes a session without a successor message —
     SURVEY.md §2.9).
 
-    Implementation is a single window pass, NOT a groupBy: running
-    per-session aggregates over a (source, key, sidx) window — which
-    Catalyst satisfies with the existing hash(source, key) exchange (subset
-    clustering), so no second shuffle — and each session is emitted at its
-    closing row (lead(new_sess) marks it). This mirrors the reference's
-    incremental per-message update + final UPDATE shape.
-    """
-    w_key = Window.partitionBy(*KEY_COLS).orderBy("ts", "seq")
-    w_sess = (
-        Window.partitionBy("source", "key", "sidx")
-        .orderBy("ts", "seq")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    e = sess_events.select(
-        "*",
-        (F.lead("new_sess", 1, 1).over(w_key) == 1).alias("_is_close"),
-        F.count(F.lit(1)).over(w_sess).alias("_n_events"),
-        F.first("lat_m").over(w_sess).alias("_first_lat"),
-        F.first("lon_m").over(w_sess).alias("_first_lon"),
-        F.max("altitude_m").over(w_sess).alias("_max_alt"),
-        F.max("ground_speed_m").over(w_sess).alias("_max_gs"),
-    )
-    agg = e.filter(F.col("_is_close")).select(
-        "source",
-        "key",
-        "sidx",
-        "is_trailing",
-        "close_trailing",
-        F.col("s_start").alias("started_at"),
-        F.col("ts").alias("_last_ts"),
-        F.col("_n_events").alias("n_events"),
-        F.col("callsign_m").alias("callsign"),
-        F.col("_first_lat").alias("first_lat"),
-        F.col("_first_lon").alias("first_lon"),
-        F.col("lat_m").alias("last_lat"),
-        F.col("lon_m").alias("last_lon"),
-        F.col("_max_alt").alias("max_altitude"),
-        F.col("_max_gs").alias("max_ground_speed"),
+    One groupBy on (source, key, sidx) whose every aggregate is
+    partial-aggregatable, so a monster session combines map-side to one row
+    per input partition instead of sorting in one window task (Disco's
+    merge of partial aggregates). Over ``sessionize``'s output the
+    hash(source, key) exchange already satisfies the grouping (subset
+    clustering): no second shuffle. first/last by arrival order are
+    min_by/max_by over ``ord_col()``; while that is a struct the aggregate
+    plans as SortAggregate, not HashAggregate (ROADMAP direction 3)."""
+    e = sess_events.withColumn("_ord", ord_col())
+    agg = e.groupBy("source", "key", "sidx").agg(
+        F.min("ts").alias("started_at"),
+        F.max("ts").alias("_last_ts"),
+        F.count(F.lit(1)).alias("n_events"),
+        F.expr("max_by(callsign_m, _ord)").alias("callsign"),
+        F.expr("min_by(lat_m, _ord)").alias("first_lat"),
+        F.expr("min_by(lon_m, _ord)").alias("first_lon"),
+        F.expr("max_by(lat_m, _ord)").alias("last_lat"),
+        F.expr("max_by(lon_m, _ord)").alias("last_lon"),
+        F.max("altitude_m").alias("max_altitude"),
+        F.max("ground_speed_m").alias("max_ground_speed"),
+        F.any_value("is_trailing").alias("is_trailing"),
+        F.any_value("close_trailing").alias("close_trailing"),
     )
     return agg.select(
         session_id_col(F.col("started_at"), F.col("sidx")).alias("session_id"),

@@ -34,31 +34,13 @@ def encode_bus_tokens(tok: DataFrame) -> DataFrame:
     (the reference's ``PublishSBSMessage`` JSON marshal,
     internal/nats/client.go:55-67): token rows become Kafka-shaped frames
     (``key``: doc_id bytes for stable partition routing, ``value``: binary
-    JSON). ``decode_bus_tokens(encode_bus_tokens(t))`` round-trips exactly
+    JSON), ready for ``writeStream.format("kafka")``.
+    ``decode_bus_tokens(encode_bus_tokens(t))`` round-trips exactly
     (asserted in tests/test_streaming.py)."""
     return tok.select(
         F.col("doc_id").cast("binary").alias("key"),
         F.to_json(F.struct("doc_id", "tokens", "n_tok", "source"))
         .cast("binary").alias("value"),
-    )
-
-
-def write_token_stream_kafka(
-    token_stream: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    ckpt: str,
-):
-    """Publish a token stream to Kafka (S4's bus sink). Same connector
-    requirement as the reader; the wire projection is the broker-free
-    testable part (encode_bus_tokens). Returns the StreamingQuery."""
-    return (
-        encode_bus_tokens(token_stream)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", ckpt)
-        .start()
     )
 
 
@@ -137,17 +119,3 @@ def streaming_rollup_1m(token_stream: DataFrame,
         F.sum("n_tok").cast("bigint").alias("n_tok_sum"),
     ).select("source", "key", F.col("w.start").alias("bucket_start"),
              "cnt", "n_tok_sum")
-
-
-def run_available_now(stream_df: DataFrame, out_path: str, ckpt: str,
-                      output_mode: str = "append") -> None:
-    """Drain everything currently available (batch-equivalent semantics)."""
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -1,9 +1,10 @@
 """Monster-key chunked windows (sbse.bigkey) — SURVEY §4.3 item 3.
 
 Equality contracts: the chunked LOCF + sessionize stage (and its LOCF-only
-and sessionize-only views) and the groupBy rollup must equal the plain
-window versions row-for-row on any input, including streams
-whose sessions straddle many chunk boundaries; plus a single-hot-key run at
+and sessionize-only views) must equal the plain window versions
+row-for-row on any input, and so must the session rollup over it,
+including streams whose sessions straddle many chunk boundaries; plus a
+single-hot-key run at
 millions of events with an ANALYTIC ground truth (the case that pins the
 plain path to one sort task — the reference's unbounded per-key map defect,
 cmd/tracker/main.go:51-53)."""
@@ -77,14 +78,6 @@ def test_modular_chain_equals_plain(spark):
     assert _sym_diff(a, b) == 0
 
 
-def test_rollup_agg_equals_window(spark):
-    from sbse.bigkey import session_rollup_agg
-    from sbse.sessionize import locf_merge, session_rollup, sessionize
-
-    s = sessionize(locf_merge(_states(spark)), gap_ms=30_000)
-    assert _sym_diff(session_rollup(s), session_rollup_agg(s)) == 0
-
-
 def test_chunk_must_exceed_gap(spark):
     from sbse.bigkey import sessionize_chunked
 
@@ -93,7 +86,8 @@ def test_chunk_must_exceed_gap(spark):
 
 
 def test_full_chain_property_random_streams(spark):
-    """Hypothesis property: monster_safe_sessions == plain chain for random
+    """Hypothesis property: the session rollup over the chunked stage ==
+    the plain chain's for random
     per-key streams with random chunk sizes (boundary straddles, chains of
     single-session chunks, duplicate timestamps); and the fused stage's
     per-event output equals sessionize(locf_merge(.)) on every column, in
@@ -101,7 +95,7 @@ def test_full_chain_property_random_streams(spark):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from sbse.bigkey import locf_sessionize_chunked, monster_safe_sessions
+    from sbse.bigkey import locf_sessionize_chunked
     from sbse.decode import decode
     from sbse.sessionize import (locf_merge, session_rollup, sessionize,
                                  states_only)
@@ -123,12 +117,12 @@ def test_full_chain_property_random_streams(spark):
         df = make_token_rows(spark, rows)
         st_df = states_only(decode(df, "expr")).localCheckpoint()
         plain_events = sessionize(locf_merge(st_df), gap_ms=30_000)
-        plain = session_rollup(plain_events)
-        chunked = monster_safe_sessions(st_df, gap_ms=30_000, chunk_ms=chunk_ms)
-        assert _sym_diff(plain, chunked) == 0, (secs, chunk_ms)
-
         events = locf_sessionize_chunked(st_df, gap_ms=30_000,
                                          chunk_ms=chunk_ms)
+        plain = session_rollup(plain_events)
+        chunked = session_rollup(events)
+        assert _sym_diff(plain, chunked) == 0, (secs, chunk_ms)
+
         assert events.columns == plain_events.columns
         assert _sym_diff(plain_events, events) == 0, (secs, chunk_ms)
 
@@ -141,7 +135,8 @@ def test_monster_single_key_analytic(spark):
     The plain path would sort all 2M rows in ONE window task; the chunked
     path bounds every partition to a 1-hour chunk (3.6k rows) and still
     produces the exact session set."""
-    from sbse.bigkey import monster_safe_sessions
+    from sbse.bigkey import locf_sessionize_chunked
+    from sbse.sessionize import session_rollup
 
     n, per, gap_jump_s = 2_000_000, 50_000, 60
     ev = spark.range(n).select(
@@ -160,7 +155,8 @@ def test_monster_single_key_analytic(spark):
         F.lit(0).alias("vertical_rate"), F.lit("7700").alias("squawk"),
         F.lit(False).alias("on_ground"), F.lit(3).alias("n_tok"),
     )
-    out = monster_safe_sessions(ev, gap_ms=30_000, chunk_ms=3_600_000)
+    out = session_rollup(locf_sessionize_chunked(ev, gap_ms=30_000,
+                                                 chunk_ms=3_600_000))
     rows = out.orderBy("started_at").collect()
     assert len(rows) == n // per
     assert all(r.n_events == per for r in rows)
@@ -195,8 +191,9 @@ def test_pipeline_bigkey_checkpoints_once(spark, monkeypatch):
     """The pipeline's monster-key branch materializes the fused chunked
     frame exactly once (every output reads it); q34's chain, whose rollup
     is the frame's only consumer, materializes nothing."""
-    from sbse.bigkey import monster_safe_sessions
+    from sbse.bigkey import locf_sessionize_chunked
     from sbse.pipeline import run_pipeline
+    from sbse.sessionize import session_rollup
     from sbse.tokens import synth
 
     tok = synth(spark, 2_000).localCheckpoint()
@@ -213,7 +210,8 @@ def test_pipeline_bigkey_checkpoints_once(spark, monkeypatch):
     run_pipeline(tok, decode_mode="expr", bigkey_chunk_ms=120_000)
     assert len(seen) == 1
     seen.clear()
-    monster_safe_sessions(states, gap_ms=30_000, chunk_ms=120_000)
+    session_rollup(locf_sessionize_chunked(states, gap_ms=30_000,
+                                           chunk_ms=120_000))
     assert seen == []
 
 

@@ -165,21 +165,46 @@ def test_cosine_neardup_pairs(spark):
     assert not any(a < 5 <= b for a, b in pairs)  # no cross-cluster pairs
 
 
-def test_cosine_neardup_exact_at_10k_and_scale_sane_plan(spark):
-    """The IVF cell-blocked near-dup join is COMPLETE (identical pair set to
-    numpy brute force at 10k vectors) and its physical plan contains no
-    BroadcastNestedLoopJoin/CartesianProduct — the round-1 all-pairs defect."""
+def _clustered_embs(spark, n):
+    """The first ``n`` of 10k 64-dim vectors around 200 unit centers."""
     import numpy as np
 
     rng = np.random.RandomState(7)
     centers = rng.standard_normal((200, 64))
     centers /= np.linalg.norm(centers, axis=1, keepdims=True)
     pts = (centers[np.arange(10_000) % 200]
-           + 0.03 * rng.standard_normal((10_000, 64)))
+           + 0.03 * rng.standard_normal((10_000, 64)))[:n]
     df = spark.createDataFrame(
-        [(i, [float(x) for x in pts[i]], int(i % 200)) for i in range(10_000)],
+        [(i, [float(x) for x in pts[i]], int(i % 200)) for i in range(n)],
         EMB_SCHEMA,
     )
+    return pts, df
+
+
+def _assert_brute_force_pairs(pts, got, threshold):
+    """``got`` is numpy brute force's pair set at ``threshold``."""
+    import numpy as np
+
+    nrm = np.linalg.norm(pts, axis=1)
+    cos = (pts @ pts.T) / np.outer(nrm, nrm)
+    iu = np.triu_indices(len(pts), k=1)
+    hits = cos[iu] >= threshold
+    truth = set(zip(iu[0][hits].tolist(), iu[1][hits].tolist()))
+    # strict equality away from the threshold boundary; at the boundary the
+    # engine's ordered fold is authoritative (numpy sums pairwise)
+    boundary = {(a, b) for (a, b) in truth ^ got
+                if abs(cos[a, b] - threshold) < 1e-9}
+    assert truth - got <= boundary and got - truth <= boundary, (
+        f"missing={list(truth - got)[:5]} extra={list(got - truth)[:5]}"
+    )
+    assert len(truth) > 100  # the fixture actually exercises near-dups
+
+
+def test_cosine_neardup_exact_at_10k_and_scale_sane_plan(spark):
+    """The IVF cell-blocked near-dup join is COMPLETE (identical pair set to
+    numpy brute force at 10k vectors) and its physical plan contains no
+    BroadcastNestedLoopJoin/CartesianProduct — the round-1 all-pairs defect."""
+    pts, df = _clustered_embs(spark, 10_000)
     from sbse.datapipe.similarity import cosine_neardup_pairs
 
     # n_cells ~ n/10: data-sampled centroids cover every cluster, caps stay
@@ -188,21 +213,35 @@ def test_cosine_neardup_exact_at_10k_and_scale_sane_plan(spark):
     out = cosine_neardup_pairs(df, threshold=0.9, n_cells=1024)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoop" not in plan and "Cartesian" not in plan, plan
-    got = {(r.id_a, r.id_b) for r in out.collect()}
+    _assert_brute_force_pairs(pts, {(r.id_a, r.id_b) for r in out.collect()},
+                              0.9)
 
-    nrm = np.linalg.norm(pts, axis=1)
-    cos = (pts @ pts.T) / np.outer(nrm, nrm)
-    iu = np.triu_indices(10_000, k=1)
-    hits = cos[iu] >= 0.9
-    truth = set(zip(iu[0][hits].tolist(), iu[1][hits].tolist()))
-    # strict equality away from the threshold boundary; at the boundary the
-    # engine's ordered fold is authoritative (numpy sums pairwise)
-    boundary = {(a, b) for (a, b) in truth ^ got
-                if abs(cos[a, b] - 0.9) < 1e-9}
-    assert truth - got <= boundary and got - truth <= boundary, (
-        f"missing={list(truth - got)[:5]} extra={list(got - truth)[:5]}"
-    )
-    assert len(truth) > 100  # the fixture actually exercises near-dups
+
+def test_cosine_neardup_oversized_pairs_take_pair_join(spark, monkeypatch):
+    """Cell pairs whose combined size exceeds _GROUP_ROWS_MAX are scored by
+    the pair join (numpy prefilter, then the ordered fold) instead of one
+    applyInPandas group. With the cap at 0 every pair takes it, at 16 the
+    routes mix; both give the grouped path's pair set, and that set is
+    numpy brute force's."""
+    from sbse.datapipe import similarity as sim
+
+    pts, df = _clustered_embs(spark, 2_000)
+
+    def run(cap):
+        monkeypatch.setattr(sim, "_GROUP_ROWS_MAX", cap)
+        out = sim.cosine_neardup_pairs(df, threshold=0.9, n_cells=256)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        routes = ("FlatMapGroupsInPandas" in plan, "ArrowEvalPython" in plan)
+        return routes, {(r.id_a, r.id_b) for r in out.collect()}
+
+    grouped_routes, grouped = run(100_000)
+    joined_routes, joined = run(0)
+    mixed_routes, mixed = run(16)
+    assert grouped_routes == (True, False)
+    assert joined_routes == (False, True)
+    assert mixed_routes == (True, True)
+    assert joined == grouped and mixed == grouped
+    _assert_brute_force_pairs(pts, grouped, 0.9)
 
 
 def test_ann_topk_lsh_plan_has_no_nested_loop(spark):
@@ -451,8 +490,7 @@ def test_doc_fingerprint_property(spark):
 
 
 def test_multimodal_plumbing(spark):
-    from sbse.datapipe.multimodal import (decode_media, extract_features,
-                                          to_binary_payload)
+    from sbse.datapipe.multimodal import extract_features, to_binary_payload
 
     d = _docs(spark, [BASE, OTHER])
     media = to_binary_payload(d)
@@ -463,8 +501,6 @@ def test_multimodal_plumbing(spark):
     assert feats[0].n_bytes == len(BASE.encode())
     assert feats[0].byte_sum == sum(BASE.encode())
     assert feats[0].fake_feature == sum(BASE.encode()) % 997
-    with pytest.raises(NotImplementedError):
-        decode_media(media, "image")
 
 
 def test_multimodal_resize_and_frames(spark):

@@ -3,11 +3,16 @@ a local replica of the driver's correctness gate (row count + schema names +
 order-insensitive values)."""
 
 import math
+import os
 
 import pandas as pd
 import pytest
 
 from tests.conftest import SF_DIR
+
+# the second oracle scale for the session rollup: sf0.01 beside SF_DIR
+SF2_DIR = os.environ.get(
+    "SBSE_TEST_SF2_DIR", os.path.join(os.path.dirname(SF_DIR), "sf0.01"))
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -35,12 +40,11 @@ def _pairs():
     return sorted(o)
 
 
-@pytest.mark.parametrize("name", _pairs())
-def test_query_matches_oracle(spark, duck, name):
+def _assert_matches_oracle(spark, duck, name, sf_dir):
     from sbse.oracle import oracles
     from sbse.queries import all_queries
 
-    got = all_queries()[name](spark, SF_DIR).toPandas()
+    got = all_queries()[name](spark, sf_dir).toPandas()
     want = duck.execute(oracles()[name]).df()
     assert sorted(got.columns) == sorted(want.columns), (
         f"{name}: columns {sorted(got.columns)} != {sorted(want.columns)}"
@@ -49,6 +53,31 @@ def test_query_matches_oracle(spark, duck, name):
     g, w = _normalize(got), _normalize(want)
     pd.testing.assert_frame_equal(g, w, check_dtype=False, check_exact=False,
                                   rtol=1e-9, atol=1e-12, obj=name)
+
+
+@pytest.mark.parametrize("name", _pairs())
+def test_query_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(spark, duck, name, SF_DIR)
+
+
+@pytest.fixture(scope="module")
+def duck_sf2():
+    import duckdb
+
+    con = duckdb.connect()
+    path = f"{SF2_DIR}/events.parquet"
+    assert os.path.exists(path), f"second-scale fixture missing: {path}"
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "name", ["q04_sessions_gap30", "q05_sessions_gap300", "q34_sessions_bigkey"])
+def test_session_rollup_matches_oracle_second_scale(spark, duck_sf2, name):
+    """The one session rollup, over the plain chain at both gaps and over
+    the chunked chain, against the DuckDB oracle at a second, 10x scale."""
+    _assert_matches_oracle(spark, duck_sf2, name, SF2_DIR)
 
 
 def test_all_queries_run(spark):
