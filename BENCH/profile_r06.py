@@ -36,7 +36,7 @@ def t(label, fn, runs=2):
 
 def counter_chunked_variant(states, unit, chunk_ms, mode):
     from sbse.bigkey import KEY_COLS, _with_chunk
-    from sbse.rollup import counter_aggs, counter_exprs
+    from sbse.rollup import counter_tier
     from sbse.sessionize import ord_col
 
     e = _with_chunk(states, chunk_ms).withColumn("_ord", ord_col())
@@ -55,13 +55,7 @@ def counter_chunked_variant(states, unit, chunk_ms, mode):
     elif mode == "shuffle_hash":
         carry = carry.hint("SHUFFLE_HASH")
     j = e.join(carry, [*KEY_COLS, "_chunk"])
-    inc, reset = counter_exprs(F.coalesce(F.col("_prev_loc"), F.col("_carry")))
-    j = (
-        j.withColumn("_inc", inc)
-        .withColumn("_reset", reset)
-        .withColumn("bucket_start", F.date_trunc(unit, F.col("ts")))
-    )
-    return j.groupBy(*KEY_COLS, "bucket_start").agg(*counter_aggs())
+    return counter_tier(j, F.coalesce(F.col("_prev_loc"), F.col("_carry")), unit)
 
 
 def main():

@@ -1,29 +1,28 @@
 """Monster-key (hot single-key) window handling — SURVEY §4.3 item 3.
 
-The plain ``locf_merge``/``sessionize`` windows partition by (source, key):
-one key with more events than an executor comfortably sorts pins a single
-task (Spark's external sort spills rather than OOMs, but the stage becomes
-one serial task — the reference has the same defect as unbounded per-key
-maps, cmd/tracker/main.go:51-53). This module bounds EVERY window partition
-to (source, key, time-chunk) and stitches chunk boundaries through a tiny
-per-chunk summary table — the segmented-scan decomposition (Disco's partial
-window aggregates, merged at the boundary):
+The plain stage (``sessionize.locf_sessionize``) partitions its window
+pass by (source, key): one key with more events than an executor
+comfortably sorts pins a single task (Spark's external sort spills rather
+than OOMs, but the stage becomes one serial task — the reference has the
+same defect as unbounded per-key maps, cmd/tracker/main.go:51-53). This
+module runs the SAME window passes (``sessionize.local_pass``,
+``rollup.counter_lag``) over (source, key, time-chunk) and stitches chunk
+boundaries through a tiny per-chunk summary table — Disco's local slice
+aggregates, merged at the slice boundary; the plain stage is this one
+with a single slice per key and nothing to stitch:
 
-* ``locf_sessionize_chunked`` — the one chunked LOCF + sessionize
-  implementation: one bounded window pass, one summary groupBy carrying
-  each chunk's final LOCF state and its session stitch facts, one join
-  back. Output == ``sessionize(locf_merge(.))`` column for column
-  (equality-tested, incl. a hypothesis property test). ``run_pipeline(
+* ``locf_sessionize_chunked`` — the chunked LOCF + sessionize stage: the
+  local pass, one summary groupBy carrying each chunk's final LOCF state
+  and its session stitch facts, one join back. Output ==
+  ``locf_sessionize``'s column for column. ``run_pipeline(
   bigkey_chunk_ms=...)`` and q34 run it.
 * ``locf_merge_chunked`` / ``sessionize_chunked`` — column views of that
-  stage (== ``locf_merge`` / ``sessionize``), kept for the benchmark's
-  traced, layer-by-layer run; they own no window code.
-* ``counter_increase_chunked`` — the counter-increase twin (q43); its only
-  cross-chunk state is the last sample.
-* ``session_rollup_agg`` — not a twin: another name for
-  ``sessionize.session_rollup``, the one session rollup, whose groupBy on
-  (source, key, sidx) already combines a monster session map-side. q34 is
-  ``session_rollup(locf_sessionize_chunked(.))``.
+  stage, kept for the benchmark's traced, layer-by-layer run.
+* ``counter_increase_chunked`` — the chunked counter increase (q43); its
+  only cross-chunk state is the last sample.
+* ``session_rollup_agg`` — another name for ``sessionize.session_rollup``,
+  the one session rollup, whose groupBy on (source, key, sidx) already
+  combines a monster session map-side.
 
 Scale shape: events hash to (source, key, chunk) for the bounded window;
 the summary join is an equi-join on the same keys against a table with one
@@ -40,7 +39,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sbse import GAP_MS_NORTH
-from sbse.sessionize import (_MERGE_FIELDS, KEY_COLS, new_session_flag, ord_col,
+from sbse.rollup import counter_lag, counter_tier
+from sbse.sessionize import (_MERGE_FIELDS, KEY_COLS, local_pass, ord_col,
                              session_id_col, session_rollup)
 
 # 1 hour of events per window partition by default: at the reference's
@@ -69,17 +69,11 @@ def locf_sessionize_chunked(
     chunk_ms: int = CHUNK_MS_DEFAULT,
     close_trailing: bool = True,
 ) -> DataFrame:
-    """Chunk-local LOCF and chunk-local sessionization in ONE bounded window
-    pass, one summary groupBy carrying BOTH the LOCF carry state and the
-    session stitch facts, one join back.
-
-    Returns one row per event: every column of ``states``; ``{c}_m`` for
-    each ``_MERGE_FIELDS`` field in ``states`` whose ``{c}_m`` is not
-    already there (== ``locf_merge``'s), so an already merged frame gets
-    only the session columns; then ``new_sess``, ``sidx``, ``s_start``,
-    ``session_id``, ``is_trailing``, ``close_trailing`` (== ``sessionize``'s).
-    Catalyst prunes every column a caller does not read, down to the
-    window, aggregate and join expressions behind it.
+    """``sessionize.local_pass`` over (source, key, _chunk), one summary
+    groupBy carrying BOTH the LOCF carry state and the session stitch
+    facts, one join back. Returns ``locf_sessionize``'s columns: an already
+    merged frame gets only the session columns, and Catalyst prunes every
+    column a caller does not read.
 
     Stitch math per chunk c (summary window over the key's chunks):
       carry-in      = last non-null final LOCF value of the prior chunks;
@@ -93,42 +87,22 @@ def locf_sessionize_chunked(
                       backward contributes no anchor, so T carries the
                       chain's true start forward across any chain length.
 
-    One pass serves both families because the session lag columns depend
-    only on (ts, seq), never on LOCF output. No checkpoint inside: in
-    Spark 4.1 it resets outputPartitioning to Unknown, so the join probe
-    would re-exchange the frame. The summary groupBy and the join probe
-    are pruned to different columns, so ReuseExchange does not fire: the
-    executed plan (AQE on or off) holds two event-side
-    hashpartitioning(source, key, _chunk) exchanges, each with its own
-    window pass. A caller with several consumers of the RESULT
-    (run_pipeline) materializes it once itself."""
+    No checkpoint inside: in Spark 4.1 it resets outputPartitioning to
+    Unknown, so the join probe would re-exchange the frame. The summary
+    groupBy and the join probe are pruned to different columns, so
+    ReuseExchange does not fire: the executed plan (AQE on or off) holds
+    two event-side hashpartitioning(source, key, _chunk) exchanges, each
+    with its own window pass; ``_ord`` is built above the window, so
+    neither exchange carries the struct. A caller with several consumers
+    of the RESULT (run_pipeline) materializes it once itself."""
     if chunk_ms <= gap_ms:
         raise ValueError(
             f"chunk_ms={chunk_ms} must exceed gap_ms={gap_ms}: a chunk "
             f"shorter than the gap cannot bound the stitch to boundaries"
         )
-    fields = [(c, z) for c, z in _MERGE_FIELDS
-              if c in states.columns and f"{c}_m" not in states.columns]
-    e = _with_chunk(states, chunk_ms)
-    wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
-    wcr = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # LOCF locals and the session opener flag (ts/seq only) share one pass
-    e = e.select(
-        "*",
-        *[
-            F.last(F.nullif(F.col(c), F.lit(zero)), ignorenulls=True)
-            .over(wcr).alias(f"_loc_{c}")
-            for c, zero in fields
-        ],
-        new_session_flag(wc, gap_ms).alias("_lnew"),
-        ord_col().alias("_ord"),
-    )
-    e = e.select(
-        "*",
-        F.sum("_lnew").over(wcr).alias("_lsidx"),
-        F.last(F.when(F.col("_lnew") == 1, F.col("ts")),
-               ignorenulls=True).over(wcr).alias("_lstart"),
-    )
+    e, fields = local_pass(_with_chunk(states, chunk_ms),
+                           (*KEY_COLS, "_chunk"), gap_ms)
+    e = e.select("*", ord_col().alias("_ord"))
     # ONE summary groupBy: per-chunk LOCF carry state + session stitch facts
     summ = e.groupBy(*KEY_COLS, "_chunk").agg(
         *[
@@ -229,50 +203,40 @@ def sessionize_chunked(
 
 def counter_increase_chunked(states: DataFrame, unit: str = "hour",
                              chunk_ms: int = CHUNK_MS_DEFAULT) -> DataFrame:
-    """Monster-key twin of rollup.counter_increase; output is exactly equal
-    (oracle-checked as q43 against q41's SQL).
+    """``rollup.counter_increase`` with every window partition bounded to
+    (source, key, chunk); output is exactly equal (oracle-checked as q43
+    against q41's SQL).
 
     A counter's only cross-chunk state is the LAST sample value, so the
-    stitch is the lightest of the chunked twins: Phase 1 lags n_tok within
-    the bounded (source, key, chunk) window; Phase 2 summarizes each
-    populated chunk's final n_tok (max_by over arrival order) and lags it
-    one populated chunk back — the carry-in; Phase 3 joins the carry table
-    back on the window's own (source, key, chunk) partitioning, and each
-    chunk's first sample uses coalesce(local lag, carry) as its baseline
-    (null for the key's first chunk -> contributes 0, same as the plain
-    path). Then the identical reset-aware increase math and one partial-agg
-    groupBy.
+    stitch is the lightest of the chunked stages: ``counter_lag`` over
+    (source, key, _chunk); a summary of each populated chunk's final n_tok
+    (max_by over arrival order), lagged one populated chunk back — the
+    carry-in; a join back on the window's own (source, key, _chunk)
+    partitioning; then ``counter_tier`` with coalesce(local lag, carry) as
+    the baseline (null for the key's first chunk -> contributes 0, same as
+    the plain route).
 
-    Plan notes (round 6): the output provably reads only
-    (source, key, ts, seq, n_tok), so the frame is PRUNED to those before
-    the window (guide §2.3 'project before the exchange'). The carry join
-    is SHUFFLE_HASH, not broadcast: the carry grows as keys x time-chunks
+    Plan notes: the output reads only (source, key, ts, seq, n_tok), so the
+    frame is PRUNED to those before the window. The carry join is
+    SHUFFLE_HASH, not broadcast: the carry grows as keys x time-chunks
     (~94% of the event count at sf1.0 with 2-minute chunks) — unbounded
     over retention — so a forced broadcast would eventually blow the 8 GB
     relation cap; the hash join's build side is per-partition and the
     event side reuses the window's partitioning with no new exchange.
     """
-    e = _with_chunk(states.select(*KEY_COLS, "ts", "seq", "n_tok"), chunk_ms)
-    wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
-    e = e.select("*", ord_col().alias("_ord"),
-                 F.lag("n_tok").over(wc).alias("_prev_loc"))
+    e = counter_lag(_with_chunk(states.select(*KEY_COLS, "ts", "seq", "n_tok"),
+                                chunk_ms), (*KEY_COLS, "_chunk"))
     # no checkpoint: it resets outputPartitioning to Unknown (Spark 4.1),
     # so the join probe would re-exchange; as in locf_sessionize_chunked,
     # the summary and the join probe each run their own window exchange.
-    summ = e.groupBy(*KEY_COLS, "_chunk").agg(
-        F.expr("max_by(n_tok, _ord)").alias("_fin")
-    )
+    summ = e.select("*", ord_col().alias("_ord")).groupBy(
+        *KEY_COLS, "_chunk").agg(F.expr("max_by(n_tok, _ord)").alias("_fin"))
     ws = Window.partitionBy(*KEY_COLS).orderBy("_chunk")
     carry = summ.select(
         *KEY_COLS, "_chunk", F.lag("_fin").over(ws).alias("_carry")
     )
-    from sbse.rollup import counter_aggs, counter_exprs
-
     j = e.join(carry.hint("SHUFFLE_HASH"), [*KEY_COLS, "_chunk"])
-    inc, reset = counter_exprs(F.coalesce(F.col("_prev_loc"), F.col("_carry")))
-    j = j.select("*", inc.alias("_inc"), reset.alias("_reset"),
-                 F.date_trunc(unit, F.col("ts")).alias("bucket_start"))
-    return j.groupBy(*KEY_COLS, "bucket_start").agg(*counter_aggs())
+    return counter_tier(j, F.coalesce(F.col("_prev"), F.col("_carry")), unit)
 
 
 # The benchmark's traced run imports the rollup under this name.

@@ -8,9 +8,9 @@ per-partition row counts and time-column min/max — Iceberg-style metadata
 that lets planners answer "what is the newest bucket" and "which partitions
 can this range scan touch" WITHOUT scanning data:
 
-* ``write_partitioned``  — partitionBy(log_date) write + snapshot manifest
-  (one small groupBy(log_date) stats job; tier tables are ~1e3-1e5x smaller
-  than raw so this is control-plane-grade).
+* ``write_partitioned``  — partitionBy(log_date) zstd overwrite + snapshot
+  manifest (one small groupBy(log_date) stats job; tier tables are
+  ~1e3-1e5x smaller than raw so this is control-plane-grade).
 * ``read_partitioned``   — date-range read whose filter lands in the scan's
   PartitionFilters (verified by test_catalog plan check): a 240 h retention
   scan over years of history touches only the surviving date dirs.
@@ -116,11 +116,9 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     date_col: str = "bucket_start",
-    mode: str = "overwrite",
-    codec: str = "zstd",
 ) -> dict:
-    """Write ``df`` date-partitioned under ``path`` and append a snapshot
-    manifest. Returns the snapshot."""
+    """Overwrite ``path`` with ``df`` date-partitioned (zstd parquet) and
+    append a snapshot manifest. Returns the snapshot."""
     # one computation of df for BOTH the stats job and the write (round 6:
     # the stats job used to recompute the whole upstream chain — for q14
     # that was a second full decode+LOCF pass); the checkpoint also keeps
@@ -130,26 +128,12 @@ def write_partitioned(
     stats = _partition_stats(df, date_col)
     (
         df.withColumn(LOG_DATE, F.date_format(date_col, "yyyy-MM-dd"))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy(LOG_DATE)
-        .option("compression", codec)
+        .option("compression", "zstd")
         .parquet(path)
     )
-    if mode == "append":
-        prev = current_snapshot(path)
-        if prev:
-            merged = dict(prev["partitions"])
-            for d, s in stats.items():
-                if d in merged:
-                    merged[d] = {
-                        "rows": merged[d]["rows"] + s["rows"],
-                        "ts_min": min(merged[d]["ts_min"], s["ts_min"]),
-                        "ts_max": max(merged[d]["ts_max"], s["ts_max"]),
-                    }
-                else:
-                    merged[d] = s
-            stats = merged
-    return _write_snapshot(path, stats, op=mode)
+    return _write_snapshot(path, stats, op="overwrite")
 
 
 def read_partitioned(

@@ -70,7 +70,6 @@ def asof_join(
     left_ts: str = "ts",
     right_ts: str = "ts",
     value_cols: list[str] | None = None,
-    tolerance_ms: int | None = None,
 ) -> DataFrame:
     """As-of join: for every left row, the latest right row with
     right_ts <= left_ts on the same keys.
@@ -115,21 +114,11 @@ def asof_join(
     filled = u.select(
         *l_cols,
         "_is_left",
-        "_ats",
         *[
             F.last(f"_v_{c}", ignorenulls=True).over(w).alias(f"_f_{c}")
             for c in value_cols
         ],
-        *(
-            [F.last(F.when(F.col("_is_left") == 0, F.col("_ats")),
-                    ignorenulls=True).over(w).alias("_rts")]
-            if tolerance_ms is not None else []
-        ),
-    )
-    in_tol = (
-        F.unix_millis("_ats") - F.unix_millis("_rts") <= tolerance_ms
-        if tolerance_ms is not None else F.lit(True)
     )
     return filled.filter(F.col("_is_left") == 1).select(
-        *l_cols, *[F.when(in_tol, F.col(f"_f_{c}")).alias(c) for c in value_cols]
+        *l_cols, *[F.col(f"_f_{c}").alias(c) for c in value_cols]
     )

@@ -3,13 +3,15 @@
 
 This is the batch re-expression of the reference's tracker lifecycle
 (SURVEY.md §3 E2). One lineage, two shuffles:
-  1. hash partition by (source, key) for the window stage (merge/sessionize)
-     — the session rollup's groupBy on (source, key, sidx) reuses it,
+  1. hash partition by (source, key) for the window stage
+     (``locf_sessionize``: LOCF and sessionization in one window pass) —
+     the session rollup's groupBy on (source, key, sidx) reuses it,
   2. regroup to (source, key, bucket) for the tier cascade — which reuses
      partial aggregation and is tiny relative to raw.
-``bigkey_chunk_ms`` picks the window stage's route (plain per-key windows
-or the chunked monster-key pass); every sink downstream of it, the session
-rollup included, is the same for both routes.
+``bigkey_chunk_ms`` picks the window stage's route: the same window pass
+over (source, key), or over (source, key, chunk) plus the chunk stitch.
+Every sink downstream of it, the session rollup included, is the same for
+both routes.
 """
 
 from __future__ import annotations
@@ -21,8 +23,8 @@ from sbse.decode import decode
 from sbse.gorilla import encode_tier
 from sbse.metrics import run_metrics
 from sbse.rollup import gapfill_locf, tier_tables
-from sbse.sessionize import (_MERGE_FIELDS, locf_merge, session_rollup,
-                             sessionize, states_only)
+from sbse.sessionize import (_MERGE_FIELDS, locf_sessionize, session_rollup,
+                             states_only)
 
 
 def run_pipeline(
@@ -51,7 +53,7 @@ def run_pipeline(
     monster-key-safe fused chunked pass (``bigkey.locf_sessionize_chunked``,
     the same pass q34 runs) — every window partition bounded to
     (source, key, chunk of this many ms; must exceed ``gap_ms``) — instead
-    of the plain per-key windows. Its per-event frame is localCheckpointed
+    of the plain ``locf_sessionize``. Its per-event frame is localCheckpointed
     once and feeds the states, sessions, tier and metrics outputs. Outputs
     are row-identical either way (asserted in test_bigkey); choose it when
     one key's event count can exceed a single task's comfort zone.
@@ -65,24 +67,23 @@ def run_pipeline(
         states = gated.filter(
             F.coalesce(F.col("valid"), F.lit(default_valid))
         ).drop("valid")
-    if bigkey_chunk_ms is not None:
+    merged_cols = [*states.columns, *[f"{c}_m" for c, _ in _MERGE_FIELDS]]
+    if bigkey_chunk_ms is None:
+        sess_events = locf_sessionize(states, gap_ms=gap_ms,
+                                      close_trailing=close_trailing)
+    else:
         from sbse.bigkey import locf_sessionize_chunked
 
         # every output reads the fused chunked frame: materialize it once,
         # so the states, sessions and metrics sinks do not each re-run the
         # window pass and the stitch join; only the columns they read, so
         # no per-event session_id hash is computed or stored
-        merged_cols = [*states.columns, *[f"{c}_m" for c, _ in _MERGE_FIELDS]]
         sess_events = locf_sessionize_chunked(
             states, gap_ms=gap_ms, chunk_ms=bigkey_chunk_ms,
             close_trailing=close_trailing,
         ).select(*merged_cols, "sidx", "is_trailing", "close_trailing"
                  ).localCheckpoint(eager=False)
-        merged = sess_events.select(*merged_cols)
-    else:
-        merged = locf_merge(states)
-        sess_events = sessionize(merged, gap_ms=gap_ms,
-                                 close_trailing=close_trailing)
+    merged = sess_events.select(*merged_cols)
     sessions = session_rollup(sess_events)
     tiers = tier_tables(merged)
     if cache_tiers:

@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 from sbse.decode import decode
 from sbse.metrics import run_metrics
 from sbse.rollup import bucket_rollup, cascade, gapfill_locf
-from sbse.sessionize import locf_merge, ord_col, session_rollup, sessionize, states_only
+from sbse.sessionize import (locf_merge, locf_sessionize, ord_col, session_rollup,
+                             states_only)
 from sbse.tokens import token_table_from_events
 from sbse.datapipe import dedup as dd
 from sbse.datapipe import similarity as sim
@@ -130,8 +131,8 @@ def q03_state_final(spark, sf_dir):
 
 
 def _sessions(spark, sf_dir, gap_ms):
-    s = sessionize(_merged(spark, sf_dir), gap_ms=gap_ms, close_trailing=True)
-    return session_rollup(s)
+    return session_rollup(locf_sessionize(
+        states_only(_decoded(spark, sf_dir)), gap_ms=gap_ms))
 
 
 def q04_sessions_gap30(spark, sf_dir):
@@ -227,7 +228,8 @@ def q11_validation_gate(spark, sf_dir):
 
 
 def q12_active_sessions(spark, sf_dir):
-    s = sessionize(_merged(spark, sf_dir), gap_ms=30_000, close_trailing=False)
+    s = locf_sessionize(states_only(_decoded(spark, sf_dir)), gap_ms=30_000,
+                        close_trailing=False)
     return (
         s.filter(F.col("is_trailing"))
         .groupBy("session_id", "source", "key")
@@ -251,14 +253,13 @@ def q15_interval_join(spark, sf_dir):
     computing the same join in SQL)."""
     from sbse.joins import attribute_events_to_sessions
 
-    m = _merged(spark, sf_dir)
-    s = sessionize(m, gap_ms=30_000, close_trailing=True)
-    sessions = session_rollup(s)
+    st = states_only(_decoded(spark, sf_dir))
+    sessions = session_rollup(locf_sessionize(st, gap_ms=30_000))
     # gap sessions are disjoint per key, so the as-of form is exact
     # (round 6: the generic interval join paired every same-key
     # event x session combination — ~110M filtered pairs at sf1.0)
     attributed = attribute_events_to_sessions(
-        m.select("source", "key", "ts", "seq"), sessions,
+        st.select("source", "key", "ts", "seq"), sessions,
         assume_disjoint=True,
     )
     return attributed.groupBy("session_id").agg(
@@ -271,14 +272,13 @@ def q16_asof_join(spark, sf_dir):
     session open at-or-before its ts."""
     from sbse.joins import asof_join
 
-    m = _merged(spark, sf_dir)
-    s = sessionize(m, gap_ms=30_000, close_trailing=True)
+    st = states_only(_decoded(spark, sf_dir))
     opens = (
-        session_rollup(s)
+        session_rollup(locf_sessionize(st, gap_ms=30_000))
         .select("source", "key", F.col("started_at").alias("open_ts"))
     )
     j = asof_join(
-        m.select("doc_id", "source", "key", "ts"),
+        st.select("doc_id", "source", "key", "ts"),
         opens.withColumnRenamed("open_ts", "ts").select(
             "source", "key", "ts", F.col("ts").alias("asof_session_start")
         ),

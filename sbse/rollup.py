@@ -5,7 +5,9 @@ Mirrors the reference's TimescaleDB continuous aggregates
 (internal/db/migrations/002_retention_policies.go:13-37 —
 ``aircraft_states_hourly`` COUNT rollup, ``system_stats_daily`` SUM rollup)
 plus the north-star additions: a 1-minute tier, first/last token
-fingerprints per bucket, and ``time_bucket_gapfill``+``locf`` analogs.
+fingerprints per bucket, ``time_bucket_gapfill``+``locf`` analogs, and the
+reset-aware counter increase — one lag pass (``counter_lag``) and one
+finish (``counter_tier``), shared with the chunked route in ``bigkey``.
 
 Scale notes:
 * each tier aggregates the PREVIOUS tier (1h from 1m, 1d from 1h) — the
@@ -19,7 +21,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sbse.sessionize import ord_col
@@ -79,61 +81,48 @@ def cascade(tier: DataFrame, unit: str) -> DataFrame:
     )
 
 
-def counter_exprs(prev):
-    """Reset-aware (increase, is_reset) expressions given the previous-value
-    Column — the single source of truth for counter semantics, shared by the
-    plain path (prev = lag over the global per-key window), the monster-key
-    chunked path (prev = coalesce(chunk-local lag, carried chunk-final
-    value); bigkey.counter_increase_chunked, whose q43 contract is exact
-    equality with q41), and transliterated in numpy by
-    streaming.stateful.stateful_counter_increase (fold-equality
-    pytest-pinned)."""
-    inc = (
-        F.when(prev.isNull(), F.lit(0))
-        .when(F.col("n_tok") >= prev, F.col("n_tok") - prev)
-        .otherwise(F.col("n_tok"))
-    )
-    reset = F.when(prev.isNotNull() & (F.col("n_tok") < prev), 1).otherwise(0)
-    return inc, reset
+def counter_lag(states: DataFrame, part_cols) -> DataFrame:
+    """The one counter window pass: ``_prev``, the previous sample's n_tok
+    per ``part_cols`` in (ts, seq) arrival order (null on the first) —
+    over (source, key) for ``counter_increase``, over (source, key,
+    _chunk) for ``bigkey.counter_increase_chunked``."""
+    w = Window.partitionBy(*part_cols).orderBy("ts", "seq")
+    return states.select("*", F.lag("n_tok").over(w).alias("_prev"))
 
 
-def counter_aggs():
-    """The (n_samples, tok_increase, n_resets) agg triple over _inc/_reset
-    columns — shared by both batch counter paths."""
-    return [
+def counter_tier(frame: DataFrame, prev: Column, unit: str) -> DataFrame:
+    """Reset-aware increase given the previous-value Column, summed per
+    (source, key, bucket) in one partial-agg groupBy — the single source of
+    truth for counter semantics, shared by both batch routes and
+    transliterated in numpy by streaming.stateful.stateful_counter_increase
+    (fold-equality pytest-pinned). A sample contributes ``n_tok - prev``
+    when non-negative, ``n_tok`` after a reset, 0 with no baseline."""
+    n = F.col("n_tok")
+    inc = F.when(prev.isNull(), F.lit(0)).when(n >= prev, n - prev).otherwise(n)
+    reset = F.when(prev.isNotNull() & (n < prev), 1).otherwise(0)
+    return frame.groupBy(
+        "source", "key", F.date_trunc(unit, F.col("ts")).alias("bucket_start")
+    ).agg(
         F.count(F.lit(1)).alias("n_samples"),
-        F.sum("_inc").cast("bigint").alias("tok_increase"),
-        F.sum("_reset").cast("bigint").alias("n_resets"),
-    ]
+        F.sum(inc).cast("bigint").alias("tok_increase"),
+        F.sum(reset).cast("bigint").alias("n_resets"),
+    )
 
 
 def counter_increase(states: DataFrame, unit: str = "hour") -> DataFrame:
     """Reset-aware counter increase per (source, key, bucket) — the
     PromQL ``increase()`` / TimescaleDB ``counter_agg`` analog over the
-    n_tok stream.
+    n_tok stream: ``counter_lag`` over (source, key), then ``counter_tier``.
 
-    Per key in arrival order (ord_col — same (ts, seq) order as every other
-    operator): a sample's contribution is ``n_tok - lag(n_tok)`` when
-    non-negative, or ``n_tok`` after a counter reset (the counter restarted
-    from 0, so its current value is the visible increase); a key's first
-    sample contributes 0 (no baseline). The lag chain is GLOBAL per key —
-    it crosses bucket boundaries — which is exactly what makes the
-    per-bucket sums mergeable: increase(1d) == sum of its hours'
-    increase(1h), the invariant counter_cascade relies on and q42's oracle
-    checks against a direct day-grain computation from raw.
-
-    100 TB: one window per (source, key) (the monster-key insurance for a
-    pathological key is the sbse.bigkey chunked-window pattern), then one
-    partial-agg groupBy.
+    The lag chain is GLOBAL per key — it crosses bucket boundaries — which
+    is exactly what makes the per-bucket sums mergeable: increase(1d) ==
+    sum of its hours' increase(1h), the invariant counter_cascade relies on
+    and q42's oracle checks against a direct day-grain computation from
+    raw. A pathological key takes the chunked route
+    (bigkey.counter_increase_chunked), the same lag with a carry stitch.
     """
-    w = Window.partitionBy("source", "key").orderBy("ord")
-    e = states.withColumn("ord", ord_col())
-    e = e.withColumn("_prev", F.lag("n_tok").over(w)).withColumn(
-        "bucket_start", F.date_trunc(unit, F.col("ts"))
-    )
-    inc, reset = counter_exprs(F.col("_prev"))
-    e = e.withColumn("_inc", inc).withColumn("_reset", reset)
-    return e.groupBy("source", "key", "bucket_start").agg(*counter_aggs())
+    return counter_tier(counter_lag(states, ("source", "key")),
+                        F.col("_prev"), unit)
 
 
 def counter_cascade(tier: DataFrame, unit: str) -> DataFrame:

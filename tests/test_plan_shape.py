@@ -47,7 +47,7 @@ def test_locf_merge_one_window(states):
 
 
 def test_session_chain_window_count(states):
-    """The plain chain plans 4 Window operators: LOCF, then the session
+    """The modular chain plans 4 Window operators: LOCF, then the session
     columns in three dependency levels. The rollup is a groupBy and adds
     none, so a window-pass rollup reintroduced here fails; the chunked
     chain's benchmark alias is the same function."""
@@ -56,6 +56,22 @@ def test_session_chain_window_count(states):
 
     assert _windows(session_rollup(sessionize(locf_merge(states)))) == 4
     assert bigkey.session_rollup_agg is session_rollup
+
+
+def test_plain_stage_window_count(spark, states):
+    """The plain stage runs LOCF and the session opener in one window pass:
+    3 Window operators (LOCF + opener, ordinal + start, per-key max sidx),
+    and so do q04 and q05. q15 reads no ``is_open``, and its literal
+    close_trailing folds ``ended_at`` off ``is_trailing``: the opener, the
+    ordinal and the as-of join's LOCF."""
+    from sbse.queries import (q04_sessions_gap30, q05_sessions_gap300,
+                              q15_interval_join)
+    from sbse.sessionize import locf_sessionize, session_rollup
+
+    assert _windows(session_rollup(locf_sessionize(states))) == 3
+    assert _windows(q04_sessions_gap30(spark, SF_DIR)) == 3
+    assert _windows(q05_sessions_gap300(spark, SF_DIR)) == 3
+    assert _windows(q15_interval_join(spark, SF_DIR)) == 3
 
 
 def test_chunked_stage_window_count(spark, states):
@@ -89,3 +105,33 @@ def test_no_with_column_in_loops():
                         and node.func.attr == "withColumn"):
                     hits.append(f"{path.relative_to(SBSE.parent)}:{node.lineno}")
     assert not hits, sorted(set(hits))
+
+
+def _calls(attr: str) -> set:
+    """(file, enclosing top-level function) of every ``.attr(...)`` call in
+    ``sbse/`` — for orderBy, only those ordering by ("ts", "seq")."""
+    hits = set()
+    for path in sorted(SBSE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for fn in tree.body:
+            for node in ast.walk(fn):
+                if not (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == attr):
+                    continue
+                args = [a.value for a in node.args
+                        if isinstance(a, ast.Constant)]
+                if attr != "orderBy" or args == ["ts", "seq"]:
+                    hits.add((path.relative_to(SBSE).as_posix(),
+                              getattr(fn, "name", None)))
+    return hits
+
+
+def test_one_event_order_pass_per_family():
+    """Each per-key event-order window family has one implementation that
+    the plain and chunked routes share: the (ts, seq) order is built only
+    in the session pass and the counter lag, and the LOCF ``nullif`` only
+    in the session pass."""
+    assert _calls("orderBy") == {("sessionize.py", "local_pass"),
+                                 ("rollup.py", "counter_lag")}
+    assert _calls("nullif") == {("sessionize.py", "local_pass")}

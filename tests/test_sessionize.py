@@ -175,37 +175,71 @@ def test_max_ground_speed_rounds_half_even(spark):
 
 def test_sessionize_property_random_streams(spark):
     """Property: for random per-key event-time streams (duplicates and
-    bursts included), gap sessionization + rollup equals an independent
-    Python reference — session count, boundaries, and per-session event
-    counts."""
-    from hypothesis import given, settings
+    bursts included) whose events carry a random zero or non-zero altitude,
+    the plain stage and the chunked stage (2-minute chunks, which the
+    streams cross) both equal an independent Python reference: per-event
+    LOCF ``altitude_m``, and per-session boundaries, event counts and
+    ``max_altitude``. The reference shares no code with the window pass
+    that both stages run."""
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
-    @settings(max_examples=6, deadline=None)
-    @given(st.lists(st.integers(min_value=0, max_value=3600),
-                    min_size=1, max_size=40))
-    def check(secs):
-        gap_s = 30
-        rows = [mk(i, s, key=1) for i, s in enumerate(sorted(secs))]
-        sess = _run(spark, rows, gap_ms=gap_s * 1000)
-        got = sorted(
-            (int(r.started_at.timestamp()), int(r.ended_at.timestamp()),
-             r.n_events)
-            for r in sess.collect()
-        )
+    from sbse.bigkey import locf_sessionize_chunked
+    from sbse.decode import decode
+    from sbse.sessionize import locf_sessionize, session_rollup, states_only
 
-        # independent reference: split the sorted times on gap > 30 s
-        want = []
-        run = [sorted(secs)[0]]
-        for s in sorted(secs)[1:]:
-            if s - run[-1] > gap_s:
-                want.append(run)
-                run = [s]
+    gap_s = 30
+    stages = {
+        "plain": lambda d: locf_sessionize(d, gap_ms=gap_s * 1000),
+        "chunked": lambda d: locf_sessionize_chunked(
+            d, gap_ms=gap_s * 1000, chunk_ms=120_000),
+    }
+
+    @settings(max_examples=6, deadline=None)
+    @given(st.lists(
+        st.tuples(st.integers(min_value=0, max_value=3600),
+                  st.one_of(st.just(0), st.integers(min_value=1,
+                                                    max_value=45_000))),
+        min_size=1, max_size=40))
+    # sessions and LOCF runs straddling the 120 s and 240 s chunk edges,
+    # with gaps of exactly 30 s (same session) and 31 s (a new one)
+    @example([(100, 0), (110, 500), (125, 0), (155, 0), (186, 0), (239, 700),
+              (241, 0), (241, 0), (271, 0), (400, 0), (480, 900)])
+    def check(events):
+        # stable sort: equal seconds keep list order, which is seq order
+        events = sorted(events, key=lambda e: e[0])
+        rows = [mk(i, s, key=1, alt=a) for i, (s, a) in enumerate(events)]
+        st_df = states_only(
+            decode(make_token_rows(spark, rows), "expr")).localCheckpoint()
+
+        # independent reference: LOCF in arrival order (a zero altitude is
+        # missing), and the sorted times split on gap > 30 s
+        want_alt, last = {}, 0
+        for i, (_, a) in enumerate(events):
+            last = a or last
+            want_alt[f"d{i:012d}"] = last
+        runs = [[0]]
+        for i in range(1, len(events)):
+            if events[i][0] - events[runs[-1][-1]][0] > gap_s:
+                runs.append([i])
             else:
-                run.append(s)
-        want.append(run)
-        base = got[0][0] - want[0][0] if got else 0  # epoch offset of mk()
-        expect = sorted((r[0] + base, r[-1] + base, len(r)) for r in want)
-        assert got == expect, (secs, got, expect)
+                runs[-1].append(i)
+        want = sorted(
+            (events[r[0]][0], events[r[-1]][0], len(r),
+             max(want_alt[f"d{i:012d}"] for i in r))
+            for r in runs)
+
+        for name, stage in stages.items():
+            ev = stage(st_df)
+            got_alt = {r.doc_id: r.altitude_m
+                       for r in ev.select("doc_id", "altitude_m").collect()}
+            assert got_alt == want_alt, (name, events)
+            got = sorted(
+                (int(r.started_at.timestamp()), int(r.ended_at.timestamp()),
+                 r.n_events, r.max_altitude)
+                for r in session_rollup(ev).collect())
+            base = got[0][0] - want[0][0]  # epoch offset of mk()
+            expect = [(a + base, b + base, n, m) for a, b, n, m in want]
+            assert got == expect, (name, events, got, expect)
 
     check()
