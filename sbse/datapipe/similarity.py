@@ -10,13 +10,18 @@
   embeddings most cell pairs are pruned; on adversarially isotropic data it
   degrades to a blocked (still equi-join) pair enumeration, never a driver
   cartesian.
+* ``ann_topk_ivf`` — IVF probe ANN with portable centroids and cells.
 * ``ann_topk_lsh`` — the exposed ANN path: random-hyperplane LSH with
   md5-derived ±1 plane signs (portable — the DuckDB oracle reproduces the
   buckets bit-exactly), bucket equi-join, within-bucket brute force.
 
-Dot products are strict left-to-right folds (``F.aggregate`` over
-``F.zip_with``) so IEEE results are reproducible and match DuckDB's ordered
-``list_sum``.
+Every dot product and norm is one ascending-dimension multiply-add fold:
+``_fold`` in numpy, ``_dot`` (``F.aggregate`` over ``F.zip_with``) in
+Catalyst. Both do one IEEE double multiply and add per dimension in the
+same order, so they are bit-identical to each other and to the DuckDB
+oracle's ordered ``list_sum``. Both cell-blocked operators take their
+centroids from ``_sample_centroids``, and every group too big for one
+Python worker is scored by ``_pair_join_scores``.
 """
 
 from __future__ import annotations
@@ -28,45 +33,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType, DoubleType
 
-# Seed namespace for the deterministic IVF centroids (engine-side only; the
-# final exact-cosine filter makes centroid choice correctness-neutral).
-_IVF_SEED = 0x5B5E
 
-
-def _norm_col(e: str = "embedding"):
-    return F.sqrt(
-        F.aggregate(
-            F.col(e),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
-
-
-def _ordered_fold_np(mat, vec):
-    """sum_j mat[:, j] * vec[j], accumulated in ascending-j order — the
-    numpy twin of the interpreted ``F.aggregate`` fold (one IEEE double
-    multiply + add per element, same sequence), hence bit-identical to it
-    and to the DuckDB oracle's ordered list_sum. The per-dimension loop is
-    deliberate: a matmul would reassociate the additions (pairwise/SIMD)
-    and change last-ulp results."""
+def _fold(a, b):
+    """sum_j a[..., j] * b[..., j] in ascending j, leading axes broadcast —
+    the numpy twin of ``_dot``: the same IEEE multiply and add per
+    dimension in the same sequence, hence bit-identical to it (asserted in
+    tests). The per-dimension loop is deliberate: a matmul would
+    reassociate the additions (pairwise/SIMD) and change last-ulp results.
+    ``tmp`` and ``acc`` are preallocated and updated in place, so a
+    block-sized accumulator stays in cache across the passes instead of
+    allocating fresh temporaries per dimension."""
     import numpy as np
 
-    acc = np.zeros(mat.shape[0], dtype=np.float64)
-    for j in range(mat.shape[1]):
-        acc = acc + mat[:, j] * vec[j]
+    shape = np.broadcast_shapes(a.shape[:-1], b.shape[:-1])
+    acc = np.zeros(shape)
+    tmp = np.empty(shape)
+    for j in range(a.shape[-1]):
+        np.multiply(a[..., j], b[..., j], out=tmp)
+        np.add(acc, tmp, out=acc)
     return acc
-
-
-def _ordered_nrm_np(mat):
-    """sqrt of the ascending-dimension fold of x*x — the numpy twin of
-    ``_norm_col`` (bit-identical, asserted in tests)."""
-    import numpy as np
-
-    acc = np.zeros(mat.shape[0], dtype=np.float64)
-    for j in range(mat.shape[1]):
-        acc = acc + mat[:, j] * mat[:, j]
-    return np.sqrt(acc)
 
 
 def _dot(a, b):
@@ -77,29 +62,29 @@ def _dot(a, b):
     )
 
 
-# _grouped_pair_scores group-size cap: an applyInPandas group ships whole
-# to one Python worker, so a skewed (band, bucket) / hot IVF cell must not
-# be unbounded (ADVICE r4: a degenerate bucket — e.g. all-zero embeddings —
-# would OOM the worker where the old pair-join spilled through Spark).
-# Groups above the cap take the pair-JOIN fold path instead: same
-# bit-identical ordered accumulation, spills through Spark's operators.
+# Group-size cap of the applyInPandas scorers: a group ships whole to one
+# Python worker, so a skewed (band, bucket), a hot IVF cell or a big cell
+# pair must not be unbounded (a degenerate bucket — e.g. all-zero
+# embeddings — would OOM the worker). Groups above the cap are scored by
+# _pair_join_scores instead: same bit-identical fold, spills through
+# Spark's operators.
 _GROUP_ROWS_MAX = 100_000
-# q-row block width inside score(): bounds the numpy scratch matrix to
-# _SCORE_BLOCK x |group| doubles instead of |q| x |h|, and (round 6) keeps
-# the accumulator resident in cache across the 64 per-dimension passes —
-# at 2048 the acc/tmp pair spilled to RAM every pass and the scorer was
-# memory-bandwidth-bound (measured: q31's 16-cell scorer ~9s; blocked +
-# in-place it is ~1s).
+# q-row block width of the numpy grids: bounds the scratch to
+# _SCORE_BLOCK x |group| doubles instead of |q| x |h|, and keeps _fold's
+# accumulator resident in cache across the per-dimension passes (at 2048
+# the acc/tmp pair spilled to RAM every pass; measured: q31's 16-cell
+# scorer ~9s, blocked + in-place ~1s).
 _SCORE_BLOCK = 256
 
 
 def _pair_join_scores(rows: DataFrame, keys: list[str],
                       symmetric: bool) -> DataFrame:
-    """Fallback scorer for groups above _GROUP_ROWS_MAX: a plain equi-join
-    on the group keys + the interpreted ordered fold. Bit-identical cosines
-    (same left-to-right accumulation); ships each vector once per pair, but
-    spills through Spark's join/shuffle machinery instead of one worker's
-    heap — the right trade ONLY for degenerate hot groups."""
+    """The scorer for groups above _GROUP_ROWS_MAX: a plain equi-join on
+    the group keys + the Catalyst fold ``_dot``. Bit-identical cosines to
+    ``_fold``; ships each vector once per pair, but spills through Spark's
+    join/shuffle machinery instead of one worker's heap — the right trade
+    ONLY for degenerate hot groups. ``rows`` as in ``_grouped_pair_scores``;
+    returns (q_id, vec_id, cos) without self-pairs."""
     if symmetric:
         q = rows.select(*keys, F.col("vec_id").alias("q_id"),
                         F.col("embedding").alias("q_e"),
@@ -118,48 +103,32 @@ def _pair_join_scores(rows: DataFrame, keys: list[str],
 
 def _grouped_pair_scores(rows: DataFrame, keys: list[str],
                          symmetric: bool = False,
-                         max_group_rows: int = _GROUP_ROWS_MAX,
                          topk: int | None = None) -> DataFrame:
     """Per-group pair scoring WITHOUT the array-duplicating pair join: one
     ``applyInPandas`` per group ships every vector ONCE (not once per
-    candidate pair) and scores all (query, neighbor) pairs with a strict
-    left-to-right column accumulation — 64 vectorized adds in ascending
-    dimension order, BIT-IDENTICAL to the ``F.aggregate`` fold and hence to
-    the DuckDB oracle's ordered list_sum (asserted in test_datapipe).
-
-    Round-4 measurement note: three per-pair scorers were tried on 500k
-    candidates — interpreted fold 3.2s, unrolled 64-term expression 7.0s
-    (falls out of codegen), per-pair Arrow numpy 9.1s (array transfer
-    dominates). The group-shaped scorer wins by changing the data movement,
-    not the arithmetic: arrays cross to Python once per group member, the
-    pair matrix lives only as numpy scratch (O(|q|x|h|) doubles, bounded by
-    the banding/cell caps), and only (q_id, vec_id, cos) rows come back.
+    candidate pair) and scores its (query, neighbor) grid with ``_fold``
+    in _SCORE_BLOCK query rows at a time, so the cosines are BIT-identical
+    to ``_dot`` and the DuckDB oracle. Only (q_id, vec_id, cos) rows come
+    back. (Measured on 500k candidates: interpreted fold 3.2s, unrolled
+    64-term expression 7.0s, per-pair Arrow numpy 9.1s — the group shape
+    wins by moving each array once, not by its arithmetic.)
 
     ``rows``: (keys..., role, vec_id, embedding, nrm); role 0 = candidate
     neighbor ("home"), role 1 = query. ``symmetric=True`` treats every row
     as both (LSH buckets). Self-pairs are dropped.
 
-    Scale caps (round 5, ADVICE r4): group size is ENFORCED, not assumed —
-    a cheap (keys)->count aggregation finds groups above ``max_group_rows``
-    (control-plane collect: at most total_rows/max_group_rows key tuples);
-    their rows are routed to the pair-join fold path (bit-identical cos,
-    spills through Spark operators) while every bounded group keeps the
-    fast one-worker matmul. Inside score(), the scratch matrix is blocked
-    over q rows (_SCORE_BLOCK), so worker scratch is O(block x group), not
-    O(|q| x |h|).
+    Group size is ENFORCED, not assumed: a (keys)->count aggregation finds
+    the groups above _GROUP_ROWS_MAX (a control-plane collect of at most
+    total_rows/_GROUP_ROWS_MAX key tuples), and their rows are scored by
+    ``_pair_join_scores``.
 
-    ``topk`` (round 6, guide §2.3 'aggregate before you shuffle'): when
-    set, each group emits only every query's top-``topk`` neighbors by the
-    SAME total order downstream ranking uses (cos desc, NaN first,
-    vec_id asc). Provably lossless for a final per-query top-k over the
+    ``topk``: when set, each group emits only every query's top-``topk``
+    neighbors by the SAME total order downstream ranking uses (cos desc,
+    NaN first, vec_id asc). Lossless for a final per-query top-k over the
     union of groups: a pair's rank within one group (a subset of the
     query's candidates) is <= its global rank, so every global top-k pair
-    survives its group cut. Without it, q31's 16-cell scorer shipped ~50M
-    (q_id, vec_id, cos) rows out of Python into a 50M-row rank window —
-    the measured wall of the operator (~9s of 10.7s at sf1.0); with it,
-    <= n_queries x groups_per_query x topk rows cross (~200k). Groups on
-    the fallback pair-join path emit all their pairs (more rows, same
-    final rank)."""
+    survives its group cut (q31 at sf1.0: ~50M rows out of Python -> ~200k).
+    Oversized groups emit all their pairs (more rows, same final rank)."""
 
     def score(pdf):
         import numpy as np
@@ -190,20 +159,9 @@ def _grouped_pair_scores(rows: DataFrame, keys: list[str],
             Ab = A[i0:i0 + _SCORE_BLOCK]
             nb = Ab.shape[0]
             qb = q["vec_id"].to_numpy()[i0:i0 + nb]
-            acc = np.zeros((nb, len(h)))
-            tmp = np.empty((nb, len(h)))
-            for j in range(A.shape[1]):  # ascending dims: the fold's order
-                # in-place outer-product accumulate: identical IEEE
-                # multiply/add sequence as `acc + np.multiply.outer(...)`
-                # (bit-identical), but no fresh (nb x h) temporaries per
-                # dimension — with _SCORE_BLOCK sized so acc/tmp stay in
-                # cache, the 64 passes stop being RAM-bandwidth-bound.
-                np.multiply(Ab[:, j][:, None], B[:, j][None, :], out=tmp)
-                np.add(acc, tmp, out=acc)
-            den = np.multiply.outer(
+            cos = _fold(Ab[:, None, :], B[None, :, :]) / np.multiply.outer(
                 q["nrm"].to_numpy()[i0:i0 + nb], hn
             )
-            cos = acc / den
             if topk is not None:
                 # ascending sort key = -cos with NaN mapped to -inf (Spark
                 # desc sorts NaN greatest -> first); self-pairs pushed last
@@ -232,27 +190,17 @@ def _grouped_pair_scores(rows: DataFrame, keys: list[str],
     rows = rows.localCheckpoint(eager=False)
     big = (
         rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_group_rows).select(*keys).collect()
+        .filter(F.col("_n") > _GROUP_ROWS_MAX).select(*keys).collect()
     )
-    grouped = rows
-    if big:
-        bigdf = F.broadcast(
-            rows.sparkSession.createDataFrame(big, rows.select(*keys).schema)
-        )
-        grouped = rows.join(bigdf, keys, "left_anti")
-    scored = grouped.groupBy(*keys).applyInPandas(
-        score, "q_id bigint, vec_id bigint, cos double"
-    )
-    if big:
-        over = rows.join(
-            F.broadcast(
-                rows.sparkSession.createDataFrame(
-                    big, rows.select(*keys).schema)
-            ),
-            keys, "left_semi",
-        )
-        scored = scored.unionByName(_pair_join_scores(over, keys, symmetric))
-    return scored
+    if not big:
+        return rows.groupBy(*keys).applyInPandas(
+            score, "q_id bigint, vec_id bigint, cos double")
+    bigdf = F.broadcast(
+        rows.sparkSession.createDataFrame(big, rows.select(*keys).schema))
+    scored = rows.join(bigdf, keys, "left_anti").groupBy(*keys).applyInPandas(
+        score, "q_id bigint, vec_id bigint, cos double")
+    over = rows.join(bigdf, keys, "left_semi")
+    return scored.unionByName(_pair_join_scores(over, keys, symmetric))
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -278,33 +226,31 @@ def plane_signs(n_planes: int, dim: int) -> list[list[int]]:
     return out
 
 
-# ---------------------------------------------------------------------------
-# Exact near-duplicate pairs via IVF cell blocking (complete by construction)
-# ---------------------------------------------------------------------------
-
 def _sample_centroids(embs: DataFrame, n_cells: int):
-    """Deterministic data-sampled centroids: the n_cells vectors with the
-    smallest xxhash64(vec_id) (TakeOrdered — top-K tree aggregation, no full
-    sort), L2-normalized. Sampling from the data (instead of random
-    directions) makes the cell caps tight on clustered embeddings, which is
-    what makes the triangle-inequality pruning bite. Control-plane payload:
-    n_cells × dim doubles. Returns None on an empty input (callers produce
-    an empty result instead of crashing on np.stack([]))."""
+    """The centroid sample of both IVF operators: the ``n_cells`` vectors
+    with the smallest (md5(vec_id), vec_id), as a (C, dim) float64 array in
+    that order (cell id = row). The order is portable — the DuckDB oracle
+    of q31 samples with ORDER BY/LIMIT on the same key — and Spark plans it
+    as TakeOrdered (top-K tree aggregation, no full sort). Sampling from
+    the data (instead of random directions) makes the cell caps tight on
+    clustered embeddings. Returns None on an empty input."""
     import numpy as np
 
     rows = (
         embs.select("vec_id", "embedding")
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(n_cells)
         .collect()
     )
     if not rows:
         return None
-    mat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    nrm = np.linalg.norm(mat, axis=1)
-    nrm[nrm == 0.0] = 1.0
-    return (mat / nrm[:, None]).T  # (dim, C)
+    return np.stack([np.asarray(r["embedding"], dtype=np.float64)
+                     for r in rows])
 
+
+# ---------------------------------------------------------------------------
+# Exact near-duplicate pairs via IVF cell blocking (complete by construction)
+# ---------------------------------------------------------------------------
 
 # Centroid-block width for the assignment matmul: bounds the (batch × block)
 # scratch at 64k-row Arrow batches to 64k × 1024 doubles = 512 MB worst case
@@ -313,11 +259,10 @@ _ASSIGN_BLOCK = 1024
 
 
 def _assign_cells(embs: DataFrame, cents) -> DataFrame:
-    """Add (cell, cap_cos, nrm): nearest centroid, the vector's cosine to
-    it, and the ordered-fold L2 norm (the ``_norm_col`` twin — computed in
-    the same Arrow pass so callers skip a whole interpreted-fold projection,
-    round 6 guide §4.2). Vectorized Arrow batch matmul, blocked over
-    centroid columns so scratch memory is O(batch × _ASSIGN_BLOCK), not
+    """Add (cell, cap_cos, nrm): nearest unit centroid (``cents`` is
+    (dim, C)), the vector's cosine to it, and its ``_fold`` L2 norm, in
+    one vectorized Arrow pass. The nearest-centroid matmul is blocked over
+    centroid columns, so scratch memory is O(batch × _ASSIGN_BLOCK), not
     O(batch × C)."""
     from pyspark.sql.functions import pandas_udf
 
@@ -347,13 +292,11 @@ def _assign_cells(embs: DataFrame, cents) -> DataFrame:
             upd = bm > best  # strict: keeps the FIRST argmax, like np.argmax
             cell[upd] = ba[upd]
             best[upd] = bm[upd]
-        nrm = np.linalg.norm(mat, axis=1)
+        nrm = np.sqrt(_fold(mat, mat))
         zero = nrm == 0.0
-        nrm[zero] = 1.0
-        cap = best / nrm
-        cap[zero] = -1.0  # zero vectors: full cap, never pruned
-        return pd.DataFrame({"cell": cell, "cap_cos": cap,
-                             "nrm": _ordered_nrm_np(mat)})
+        # zero vectors: full cap, never pruned
+        cap = np.where(zero, -1.0, best / np.where(zero, 1.0, nrm))
+        return pd.DataFrame({"cell": cell, "cap_cos": cap, "nrm": nrm})
 
     return embs.withColumn("_a", assign(F.col("embedding"))).select(
         "*", F.col("_a.cell").alias("cell"), F.col("_a.cap_cos").alias("cap_cos"),
@@ -394,51 +337,40 @@ def _candidate_cell_pairs(cell_stats: list, threshold: float, cents) -> list:
     return out
 
 
-def _np_cos_prefilter():
-    """Arrow-vectorized numpy cosine over candidate pairs — the cheap first
-    pass. NOT authoritative (numpy sums pairwise, the ordered fold doesn't);
-    callers keep a 1e-9 slack and re-check survivors with the exact fold."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def np_cos(ea, eb):
-        import numpy as np
-        import pandas as pd
-
-        if len(ea) == 0:
-            return pd.Series([], dtype="float64")
-        a = np.stack(ea.to_numpy()).astype(np.float64)
-        b = np.stack(eb.to_numpy()).astype(np.float64)
-        na = np.linalg.norm(a, axis=1)
-        nb = np.linalg.norm(b, axis=1)
-        d = na * nb
-        d[d == 0.0] = 1.0
-        return pd.Series(np.einsum("ij,ij->i", a, b) / d)
-
-    return np_cos
-
-
 def cosine_neardup_pairs(
     embs: DataFrame, threshold: float = 0.999, n_cells: int = 32
 ) -> DataFrame:
     """Exact pairs with cosine >= threshold; identical output to brute force
-    (equality-tested at 10k vectors), but candidates come from an equi-join
-    on pruned IVF cell pairs instead of an all-pairs nested loop, and the
-    candidate verification is two-tier: a vectorized numpy cosine with 1e-9
-    slack first, then the authoritative ordered fold (bit-identical to the
-    DuckDB oracle) on the survivors only.
+    (equality-tested at 10k vectors), but candidates come from pruned IVF
+    cell pairs instead of an all-pairs nested loop.
+
+    Centroids are ``_sample_centroids``, L2-normalized here; the output
+    cannot depend on which centroids come back, because the pruning is
+    complete and the final cosine filter is exact. Every candidate cell
+    pair whose cells together hold at most _GROUP_ROWS_MAX rows is one
+    applyInPandas group: each vector ships ONCE per candidate cell pair, a
+    blocked numpy matmul prefilters the |ci| x |cj| grid with 1e-9 slack
+    (NOT authoritative — pairwise summation), survivors get the exact
+    ``_fold`` cosine (bit-identical to ``_dot`` / the DuckDB oracle), and
+    only (id_a, id_b) rows return. Larger cell pairs go through
+    ``_pair_join_scores``.
 
     Scale path: centroid sampling is a top-K; assignment is one vectorized
     pass blocked over centroid columns (task memory independent of n_cells);
     cell stats are C rows of control-plane state; the candidate cell-pair
     pruning runs on the driver in row blocks (O(_GRID_BLOCK x C) scratch,
-    no C² ndarray); the pair join shuffles on cell ids. At 10⁹ vectors
-    raise ``n_cells`` so cells stay bounded and persist the assigned table to a staging location
-    instead of localCheckpoint."""
+    no C² ndarray); the groups shuffle on cell-pair ids. At 10⁹ vectors
+    raise ``n_cells`` so cells stay bounded and persist the assigned table
+    to a staging location instead of localCheckpoint."""
+    import numpy as np
+
     spark = embs.sparkSession
-    cents = _sample_centroids(embs, n_cells)
-    if cents is None:  # empty input
+    sample = _sample_centroids(embs, n_cells)
+    if sample is None:  # empty input
         return spark.createDataFrame([], "id_a bigint, id_b bigint")
+    c_nrm = np.sqrt(_fold(sample, sample))
+    c_nrm[c_nrm == 0.0] = 1.0
+    cents = (sample / c_nrm[:, None]).T  # (dim, C) unit centroids
     assigned = _assign_cells(
         embs.select("vec_id", "embedding"), cents
     ).localCheckpoint(eager=False)
@@ -450,24 +382,12 @@ def cosine_neardup_pairs(
     cp = _candidate_cell_pairs(stats, threshold, cents)
     if not cp:
         return spark.createDataFrame([], "id_a bigint, id_b bigint")
-    # Grouped cell-pair scoring (round 6, the _grouped_pair_scores data
-    # movement applied here): the old plan joined candidate rows into
-    # per-PAIR rows carrying BOTH embedding arrays through an Arrow
-    # prefilter — ~200M array pairs at sf1.0 (threshold 0.4 prunes few
-    # cell pairs), measured ~100s. Now each vector ships ONCE per
-    # candidate cell pair into one applyInPandas group; inside the worker
-    # a blocked numpy matmul scores the |ci| x |cj| grid (NOT
-    # authoritative — pairwise summation), survivors within the 1e-9
-    # slack get the exact ascending-dimension fold (bit-identical to
-    # _dot / the DuckDB oracle), and only (id_a, id_b) rows return.
-    # Oversized pairs (combined cells above _GROUP_ROWS_MAX) keep the old
-    # pair-join two-tier path — spills through Spark instead of one
-    # worker's heap.
     upairs = sorted({(min(i, j), max(i, j)) for i, j in cp})
     small = [p for p in upairs
              if sizes.get(p[0], 0) + sizes.get(p[1], 0) <= _GROUP_ROWS_MAX]
     big = [p for p in upairs
            if sizes.get(p[0], 0) + sizes.get(p[1], 0) > _GROUP_ROWS_MAX]
+    thr = float(threshold)
     out = None
     if small:
         members = []
@@ -479,7 +399,6 @@ def cosine_neardup_pairs(
             members, "cell int, pair_id int, side int"))
         rows = assigned.join(mdf, "cell").select(
             "pair_id", "side", "vec_id", "embedding", "nrm")
-        thr = float(threshold)
 
         def score(pdf):
             import numpy as np
@@ -500,33 +419,22 @@ def cosine_neardup_pairs(
             nb = b["nrm"].to_numpy()
             aid = a["vec_id"].to_numpy()
             bid = b["vec_id"].to_numpy()
-            dena = na.copy()
-            dena[dena == 0.0] = 1.0  # mirror _np_cos_prefilter's 0-norm guard
-            denb = nb.copy()
-            denb[denb == 0.0] = 1.0
+            # zero norms divide by 1 so the prefilter never computes 0/0
+            dena = np.where(na == 0.0, 1.0, na)
+            denb = np.where(nb == 0.0, 1.0, nb)
             parts = []
             for i0 in range(0, len(a), _SCORE_BLOCK):
                 Ab = A[i0:i0 + _SCORE_BLOCK]
                 approx = (Ab @ B.T) / np.multiply.outer(
                     dena[i0:i0 + _SCORE_BLOCK], denb)
-                mask = approx >= thr - 1e-9
-                ia, ib = np.nonzero(mask)
-                if len(ia) == 0:
-                    continue
-                ia = ia + i0
-                # exact ordered fold on survivors only (ascending dims —
-                # bit-identical to the F.aggregate fold / DuckDB
-                # list_sum); sub-blocked so a dense low-threshold group
-                # cannot gather block x |B| embedding rows at once
+                ia, ib = np.nonzero(approx >= thr - 1e-9)
+                # exact fold on survivors only; sub-blocked so a dense
+                # low-threshold group cannot gather block x |B| embedding
+                # rows at once
                 for s0 in range(0, len(ia), 1 << 18):
-                    sa = ia[s0:s0 + (1 << 18)]
+                    sa = i0 + ia[s0:s0 + (1 << 18)]
                     sb = ib[s0:s0 + (1 << 18)]
-                    SA = A[sa]
-                    SB = B[sb]
-                    acc = np.zeros(len(sa), dtype=np.float64)
-                    for d in range(A.shape[1]):
-                        acc = acc + SA[:, d] * SB[:, d]
-                    cos = acc / (na[sa] * nb[sb])
+                    cos = _fold(A[sa], B[sb]) / (na[sa] * nb[sb])
                     ida = aid[sa]
                     idb = bid[sb]
                     keep = (cos >= thr) & (ida != idb)
@@ -547,29 +455,20 @@ def cosine_neardup_pairs(
             score, "id_a bigint, id_b bigint"
         ).select("id_a", "id_b")
     if big:
-        both = {(i, j) for i, j in big} | {(j, i) for i, j in big}
-        cpdf = F.broadcast(spark.createDataFrame(
-            sorted(both), "cell_a int, cp_cell_b int"))
-        a = assigned.select(
-            F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"),
-            F.col("nrm").alias("n_a"), F.col("cell").alias("cell_a"),
-        )
-        b = assigned.select(
-            F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"),
-            F.col("nrm").alias("n_b"), F.col("cell").alias("cell_b"),
-        )
-        pairs = a.join(cpdf, "cell_a").join(
-            b, (F.col("cp_cell_b") == F.col("cell_b"))
-            & (F.col("id_a") < F.col("id_b"))
-        )
-        np_cos = _np_cos_prefilter()
-        pre = pairs.filter(
-            np_cos(F.col("e_a"), F.col("e_b")) >= threshold - 1e-9)
-        cos = _dot(F.col("e_a"), F.col("e_b")) / (F.col("n_a") * F.col("n_b"))
+        # role-split groups, one per ORIENTED cell pair: both orientations
+        # of each oversized pair, as a set, so a within-cell pair (i, i) is
+        # one group; q_id < vec_id then keeps each vector pair once
+        oriented = sorted({(i, j) for i, j in big} | {(j, i) for i, j in big})
+        members = [m for pid, (i, j) in enumerate(oriented)
+                   for m in ((i, pid, 1), (j, pid, 0))]
+        mdf = F.broadcast(spark.createDataFrame(
+            members, "cell int, pair_id int, role int"))
+        rows = assigned.join(mdf, "cell").select(
+            "pair_id", "role", "vec_id", "embedding", "nrm")
         fb = (
-            pre.withColumn("cos", cos)
-            .filter(F.col("cos") >= threshold)
-            .select("id_a", "id_b")
+            _pair_join_scores(rows, ["pair_id"], symmetric=False)
+            .filter((F.col("cos") >= thr) & (F.col("q_id") < F.col("vec_id")))
+            .select(F.col("q_id").alias("id_a"), F.col("vec_id").alias("id_b"))
         )
         out = fb if out is None else out.unionByName(fb)
     return out
@@ -584,44 +483,25 @@ def ann_topk_ivf(embs: DataFrame, k: int = 5, n_cells: int = 16,
     """IVF probe ANN — the inverted-file companion to the LSH path, fully
     PORTABLE so the DuckDB oracle reproduces it bit-for-bit:
 
-    * centroids = the ``n_cells`` vectors with the smallest
-      (md5(vec_id), vec_id) — deterministic data sampling both engines can
-      compute (TakeOrdered in Spark; ORDER BY/LIMIT in SQL);
-    * every vector's cell = argmax ordered-fold cosine to the centroids
-      (ties -> lowest cell id) — the assignment ranking is a window over the
-      N×C broadcast cross product, which IS the canonical O(N·C) IVF
-      assignment cost;
-    * each query probes its ``nprobe`` nearest cells and brute-forces only
-      the vectors homed there; exact ordered-fold cosine + row_number rank.
+    * centroids = ``_sample_centroids`` (cell id = sample order);
+    * every vector probes the ``nprobe`` cells with the largest fold cosine
+      (ties -> lowest cell id) and is homed in the first;
+    * each query brute-forces only the vectors homed in its probed cells;
+      exact fold cosine + row_number rank.
 
-    Scale notes: the centroid table is control-plane (C rows, the
-    _sample_centroids convention); assignment is ONE vectorized Arrow pass
-    per vector computing the ordered-fold cosine to every centroid and
-    ranking the nprobe probes in-batch — bit-identical to the historical
-    N×C crossJoin + interpreted fold + row_number window (the fold twin the
-    oracle mirrors), but with no N×C row materialization, no window
-    shuffle of N×C embedding copies, and no interpreted expression path
-    (round 6, guide §4.1/§4.2: measured 10.0s -> ~1s at sf1.0). The
-    candidate join is an equi-join on cell."""
-    rows = (
-        embs.select("vec_id", "embedding")
-        .withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id").limit(n_cells).collect()
-    )
-    if not rows:
+    Assignment is ONE vectorized Arrow pass: a single (batch, C) ``_fold``
+    gives the cosine to every centroid, and the probes are ranked
+    in-batch — bit-identical to an N×C crossJoin + interpreted fold +
+    row_number window (what the oracle runs), with no N×C rows (measured
+    10.0s -> ~1s at sf1.0). The candidate join is an equi-join on cell."""
+    import numpy as np
+
+    cents = _sample_centroids(embs, n_cells)
+    if cents is None:
         return embs.sparkSession.createDataFrame(
             [], "q_id bigint, neighbor_id bigint, rank int")
-    # cell id = rank in (h, vec_id) order; c_n = the same ascending-dim
-    # fold _norm_col computes (python float IS IEEE double, so the scalar
-    # loop is the same add/mul sequence).
-    cent_vecs = [[float(x) for x in r["embedding"]] for r in rows]
-    cent_nrms = []
-    for v in cent_vecs:
-        acc = 0.0
-        for x in v:
-            acc = acc + x * x
-        cent_nrms.append(math.sqrt(acc))
-    n_probe = min(nprobe, len(cent_vecs))
+    c_nrm = np.sqrt(_fold(cents, cents))
+    n_probe = min(nprobe, len(cents))
 
     from pyspark.sql.functions import pandas_udf
 
@@ -634,12 +514,9 @@ def ann_topk_ivf(embs: DataFrame, k: int = 5, n_cells: int = 16,
             return pd.DataFrame({"nrm": pd.Series([], dtype="float64"),
                                  "cells": pd.Series([], dtype="object")})
         mat = np.stack(ecol.to_numpy()).astype(np.float64)
-        nrm = _ordered_nrm_np(mat)
-        C = len(cent_vecs)
-        cos = np.empty((mat.shape[0], C), dtype=np.float64)
-        for c in range(C):
-            cos[:, c] = _ordered_fold_np(mat, cent_vecs[c]) / (
-                nrm * cent_nrms[c])
+        nrm = np.sqrt(_fold(mat, mat))
+        cos = _fold(mat[:, None, :], cents[None, :, :]) / np.multiply.outer(
+            nrm, c_nrm)
         # rank = (cellcos desc, cell asc), NaN FIRST like Spark's desc
         # ordering (NaN sorts greatest): ascending key -cos with NaN
         # mapped to -inf.
@@ -669,7 +546,7 @@ def ann_topk_ivf(embs: DataFrame, k: int = 5, n_cells: int = 16,
         "cell", F.lit(1).alias("role"), "vec_id", "embedding", "nrm"
     )
     scored = _grouped_pair_scores(home.unionByName(probe), ["cell"],
-                              topk=k)
+                                  topk=k)
     return _rank_topk(scored, k)
 
 
@@ -687,27 +564,28 @@ def ann_topk_lsh(embs: DataFrame, k: int = 5, n_planes: int = 6,
     shape applied to ANN): ``n_bands`` independent plane-sets of
     ``n_planes`` planes each; candidates are pairs sharing ANY band's bucket
     (OR across bands — per-band equi-join, distinct); survivors get exact
-    ordered-fold cosines and a per-query rank.
+    fold cosines and a per-query rank.
 
     Scale economics: per-band cost is O(Σ|bucket|²) with 2^n_planes buckets
     — raise ``n_planes`` so buckets stay executor-sized (candidate count
     drops ~2× per plane) and raise ``n_bands`` to recover the recall that
-    sharper buckets lose (recall ≈ 1-(1-s^P)^B for pair similarity s). The
-    within-bucket wall round 2 flagged is gone: unlike a single wide-bucket
-    band, bands-of-sharp-buckets keeps BOTH population and recall bounded.
+    sharper buckets lose (recall ≈ 1-(1-s^P)^B for pair similarity s).
 
     Output keeps (rank) and drops the raw cosine: ranking order is
     bit-identical across engines (ordered folds), which is what the oracle
     checks; the float itself stays out of hashed results.
 
-    Plan (round 6, guide §4.1/§4.2): the per-band bucket used to be
-    n_bands × n_planes interpreted ``F.aggregate`` folds per row
-    (higher-order functions are CodegenFallback — the whole projection ran
-    interpreted); buckets and the norm now come from ONE vectorized Arrow
-    pass whose per-plane accumulation is the same ascending-dimension
-    add/mul sequence as the DuckDB oracle's per-plane ``list_sum``, so the
-    buckets match across engines (checked by oracle parity)."""
-    bands = band_plane_signs(n_planes, n_bands, dim)
+    Buckets and the norm come from ONE vectorized Arrow pass: one
+    (batch, n_bands × n_planes) ``_fold`` against the ±1 planes, the same
+    ascending-dimension sequence as the DuckDB oracle's per-plane
+    ``list_sum``, so the buckets match across engines (checked by oracle
+    parity). Per-row ``F.aggregate`` folds would run the whole projection
+    interpreted (higher-order functions are CodegenFallback)."""
+    import numpy as np
+
+    planes = np.array(band_plane_signs(n_planes, n_bands, dim),
+                      dtype=np.float64).reshape(n_bands * n_planes, dim)
+    weights = 1 << np.arange(n_planes)
 
     from pyspark.sql.functions import pandas_udf
 
@@ -720,16 +598,10 @@ def ann_topk_lsh(embs: DataFrame, k: int = 5, n_planes: int = 6,
             return pd.DataFrame({"nrm": pd.Series([], dtype="float64"),
                                  "buckets": pd.Series([], dtype="object")})
         mat = np.stack(ecol.to_numpy()).astype(np.float64)
-        nrm = _ordered_nrm_np(mat)
-        out = np.zeros((mat.shape[0], len(bands)), dtype=np.int32)
-        for b, planes in enumerate(bands):
-            bits = np.zeros(mat.shape[0], dtype=np.int32)
-            for p, row in enumerate(planes):
-                comp = _ordered_fold_np(mat, [float(s) for s in row])
-                bits = bits + np.where(comp > 0, np.int32(1 << p),
-                                       np.int32(0))
-            out[:, b] = bits
-        return pd.DataFrame({"nrm": nrm, "buckets": list(out)})
+        nrm = np.sqrt(_fold(mat, mat))
+        up = _fold(mat[:, None, :], planes[None, :, :]) > 0
+        bits = (up.reshape(len(mat), n_bands, n_planes) * weights).sum(axis=2)
+        return pd.DataFrame({"nrm": nrm, "buckets": list(bits.astype(np.int32))})
 
     n = (
         embs.select("vec_id", "embedding")
@@ -749,6 +621,6 @@ def ann_topk_lsh(embs: DataFrame, k: int = 5, n_planes: int = 6,
     # (same ordered accumulation), so the cross-band dedupe is a plain
     # groupBy min (any value is THE value).
     scored = _grouped_pair_scores(long, ["band_id", "bucket"],
-                              symmetric=True, topk=k)
+                                  symmetric=True, topk=k)
     dedup = scored.groupBy("q_id", "vec_id").agg(F.min("cos").alias("cos"))
     return _rank_topk(dedup, k)

@@ -165,15 +165,12 @@ def decode_points(blob: bytes) -> tuple[list[int], list[float]]:
         if r.read(1) == 0:
             delta = prev_delta
         else:
-            if r.read(1) == 0:
-                dod = r.read(7) - 63
-                delta = prev_delta + dod
-            elif r.read(1) == 0:
-                dod = r.read(9) - 255
-                delta = prev_delta + dod
-            elif r.read(1) == 0:
-                dod = r.read(12) - 2047
-                delta = prev_delta + dod
+            # the prefixes are unary after the leading 1: each further 1
+            # steps to the next branch, a 0 selects it; four 1s = raw delta
+            for _, _, payload, lo, _ in _TS_BRANCHES:
+                if r.read(1) == 0:
+                    delta = prev_delta + r.read(payload) + lo
+                    break
             else:
                 delta = r.read(64)
                 if delta >= 1 << 63:

@@ -148,50 +148,41 @@ def gapfill_locf(tier: DataFrame, unit: str = "minute") -> DataFrame:
     spine; missing buckets get cnt=0/n_tok_sum=0, is_gap=true, and
     last_ntok carried forward (LOCF).
 
-    Spine generation is two-level for sub-day units (round 5, VERDICT r4
-    "what's wrong" #3): one ``sequence()`` per (key, day) first, then the
-    unit buckets within each day — a multi-year key at minute grain used to
-    build its whole spine as ONE array row (525,600 elements/year, a
-    per-row memory spike heading for Spark's array ceiling at 100x); now no
-    single array exceeds 1,440 elements (minutes/day) regardless of key
-    span, and day-grain arrays are one element per day. Output identical
-    (asserted against the single-sequence shape in tests).
+    Spine generation is two-level: one ``sequence()`` per (key, day)
+    first, then the unit buckets within each day — a multi-year key at
+    minute grain used to build its whole spine as ONE array row (525,600
+    elements/year, a per-row memory spike heading for Spark's array ceiling
+    at 100x); now no single array exceeds 1,440 elements (minutes/day)
+    regardless of key span. At day grain the inner sequence is the one
+    bucket of its day. Output identical (asserted against the
+    single-sequence shape in tests).
     """
     step = _STEP_INTERVAL[unit]
     ends = tier.groupBy("source", "key").agg(
         F.min("bucket_start").alias("b0"), F.max("bucket_start").alias("b1")
     )
-    if unit == "day":
-        spine = ends.select(
-            "source",
-            "key",
-            F.explode(
-                F.sequence(F.col("b0"), F.col("b1"), F.expr(step))
-            ).alias("bucket_start"),
-        )
-    else:
-        days = ends.select(
-            "source", "key", "b0", "b1",
-            F.explode(
-                F.sequence(
-                    F.date_trunc("DAY", F.col("b0")),
-                    F.date_trunc("DAY", F.col("b1")),
-                    F.expr("interval 1 day"),
-                )
-            ).alias("d"),
-        )
-        day_end = F.col("d") + F.expr("interval 1 day") - F.expr(step)
-        spine = days.select(
-            "source",
-            "key",
-            F.explode(
-                F.sequence(
-                    F.greatest(F.col("d"), F.col("b0")),
-                    F.least(day_end, F.col("b1")),
-                    F.expr(step),
-                )
-            ).alias("bucket_start"),
-        )
+    days = ends.select(
+        "source", "key", "b0", "b1",
+        F.explode(
+            F.sequence(
+                F.date_trunc("DAY", F.col("b0")),
+                F.date_trunc("DAY", F.col("b1")),
+                F.expr("interval 1 day"),
+            )
+        ).alias("d"),
+    )
+    day_end = F.col("d") + F.expr("interval 1 day") - F.expr(step)
+    spine = days.select(
+        "source",
+        "key",
+        F.explode(
+            F.sequence(
+                F.greatest(F.col("d"), F.col("b0")),
+                F.least(day_end, F.col("b1")),
+                F.expr(step),
+            )
+        ).alias("bucket_start"),
+    )
     j = spine.join(tier, ["source", "key", "bucket_start"], "left")
     w = (
         Window.partitionBy("source", "key")

@@ -5,13 +5,14 @@ keys live for a TTL and expire when a key goes quiet; tracker
 main.go:234-252: a session closes when its key is silent for the gap).
 
 The group state carries the OPEN session's accumulator (ordinal, start,
-last-seen, counters); each microbatch folds its rows into it, emitting every
-session the batch closes, and arms an EVENT-TIME timeout at last_seen + gap
-— when the watermark (fed by other keys' traffic) passes that point, the
-quiet key's trailing session is emitted and its state dropped, exactly the
-Redis-TTL lifecycle. Event-time (not processing-time) timeouts keep the
-operator deterministic AND let availableNow drain-and-stop (a
-processing-time timeout keeps the microbatch loop alive forever).
+last-seen, counters, last seq); each microbatch folds its rows into it,
+emitting every session the batch closes, and arms an EVENT-TIME timeout
+at last_seen + gap — when the watermark (fed by other keys' traffic)
+passes that point, the quiet key's trailing session is emitted and its
+state dropped, exactly the Redis-TTL lifecycle. Event-time (not
+processing-time) timeouts keep the operator deterministic AND let
+availableNow drain-and-stop (a processing-time timeout keeps the
+microbatch loop alive forever).
 
 Within a batch the sessionization is vectorized (numpy diff/reduceat over
 the sorted rows — no per-row Python); only the state handoff at the batch
@@ -19,10 +20,11 @@ boundary is scalar. Session ids are the same sha256 surrogates the batch
 engine derives, so outputs are comparable row-for-row
 (test_streaming_stateful asserts equality with batch session_rollup).
 
-Assumes per-key event-time order across microbatches (the file/NATS replay
-shape) — and ENFORCES it: a batch row older than the carried session's end
-raises instead of silently mis-placing a boundary; the batch engine remains
-the authority for out-of-order reprocessing.
+Both operators assume per-key (ts, seq) order across microbatches (the
+file/NATS replay shape) and ENFORCE it with ``_refuse_replay``: a batch that
+does not start strictly after the key's stored (ts, seq) raises instead of
+silently mis-placing a boundary or counting a re-delivered row twice; the
+batch engine remains the authority for out-of-order reprocessing.
 """
 
 from __future__ import annotations
@@ -38,7 +40,23 @@ OUT_SCHEMA = ("session_id string, source string, key bigint, "
               "started_at timestamp, ended_at timestamp, n_events bigint, "
               "max_altitude bigint")
 STATE_SCHEMA = ("sidx bigint, s_start_ms bigint, last_ts_ms bigint, "
-                "n_events bigint, max_altitude bigint")
+                "n_events bigint, max_altitude bigint, last_seq bigint")
+
+
+def _refuse_replay(source, k, ts0: int, seq0: int, last_ms: int,
+                   last_seq: int, rerun: str) -> None:
+    """Raise unless a key's batch starts STRICTLY after its stored
+    (ts, seq). A same-millisecond row is in order only if its seq is newer
+    (a bare ts check lets ms-tied rows split across batches in inverted seq
+    order through), and the comparison is <= so an exactly re-delivered
+    last row (at-least-once replay of the last file) is refused instead of
+    being counted twice."""
+    if (ts0, seq0) <= (last_ms, last_seq):
+        raise ValueError(
+            f"out-of-order replay for key ({source}, {k}): batch starts at "
+            f"({ts0} ms, seq {seq0}) but state is at ({last_ms} ms, seq "
+            f"{last_seq}); re-run through the batch {rerun}"
+        )
 
 
 def stateful_sessions(states: DataFrame, gap_ms: int = GAP_MS_NORTH,
@@ -75,7 +93,7 @@ def stateful_sessions(states: DataFrame, gap_ms: int = GAP_MS_NORTH,
             # emit the held session, drop the state.
             closed = []
             if state.exists:
-                sidx, s_start, last, n, mx = state.get
+                sidx, s_start, last, n, mx, _ = state.get
                 closed.append((sid(s_start, sidx), source, k, s_start, last,
                                n, mx))
                 state.remove()
@@ -83,6 +101,7 @@ def stateful_sessions(states: DataFrame, gap_ms: int = GAP_MS_NORTH,
 
         pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(["ts", "seq"])
         ts = pdf["ts"].to_numpy().astype("datetime64[ms]").astype("int64")
+        seq = pdf["seq"].to_numpy().astype("int64")
         alt = pdf["altitude_m"].to_numpy().astype("int64")
 
         # vectorized within-batch split: segment starts where gap exceeded
@@ -95,24 +114,15 @@ def stateful_sessions(states: DataFrame, gap_ms: int = GAP_MS_NORTH,
         seg_max = np.maximum.reduceat(alt, starts)
 
         if state.exists:
-            sidx, s_start, last, n, mx = state.get
+            sidx, s_start, last, n, mx, last_seq = state.get
         else:
             sidx, s_start, last, n, mx = 0, None, None, 0, None
 
         closed = []
         i0 = 0
         if s_start is not None:
-            if int(ts[0]) < last:
-                # The operator assumes per-key event-time order ACROSS
-                # microbatches (file/NATS replay shape). A row older than
-                # the carried session's end would silently mis-place the
-                # session boundary — fail the query loudly instead; the
-                # batch engine is the authority for out-of-order replays.
-                raise ValueError(
-                    f"out-of-order replay for key ({source}, {k}): batch "
-                    f"starts at {int(ts[0])} ms but carried session ends at "
-                    f"{last} ms; re-run through the batch sessionizer"
-                )
+            _refuse_replay(source, k, int(ts[0]), int(seq[0]), last,
+                           last_seq, "sessionizer")
             if int(ts[0]) - last <= gap_ms:
                 # first segment continues the carried session
                 last = int(seg_end[0])
@@ -130,7 +140,7 @@ def stateful_sessions(states: DataFrame, gap_ms: int = GAP_MS_NORTH,
             sidx += 1
             s_start, last = int(seg_start[i]), int(seg_end[i])
             n, mx = int(seg_n[i]), int(seg_max[i])
-        state.update((sidx, s_start, last, n, mx))
+        state.update((sidx, s_start, last, n, mx, int(seq[-1])))
         # TTL re-armed on every touch; must stay ahead of the watermark
         state.setTimeoutTimestamp(
             max(last + gap_ms, state.getCurrentWatermarkMs() + 1)
@@ -171,8 +181,8 @@ def stateful_counter_increase(states: DataFrame, unit: str = "hour",
     re-summation counter_cascade uses; test_streaming_stateful asserts
     row-for-row equality with rollup.counter_increase after that fold.
 
-    Like stateful_sessions, per-key event-time order across microbatches is
-    assumed (file/NATS replay shape) and ENFORCED — an older row raises.
+    Like stateful_sessions, per-key (ts, seq) order across microbatches is
+    assumed (file/NATS replay shape) and ENFORCED by ``_refuse_replay``.
     State never expires (NoTimeout): a counter baseline must survive idle
     periods, because expiring it would turn the key's next sample into a
     fresh start (contributing 0 instead of the true delta) — the Redis-TTL
@@ -196,21 +206,8 @@ def stateful_counter_increase(states: DataFrame, unit: str = "hour",
 
         if state.exists:
             last_tok, last_ms, last_seq = state.get
-            # tuple guard: a same-millisecond row is only in order if its
-            # seq is newer — a bare ts check would let ms-tied rows split
-            # across batches in inverted seq order slip through and compute
-            # deltas the batch (ts, seq)-ordered path never sees. The
-            # comparison is <= (round 6, ADVICE r5): a batch must start
-            # STRICTLY after the stored (ts, seq) — an exactly re-delivered
-            # last row (at-least-once replay of the last file) would
-            # otherwise pass silently and double-count its increase
-            if (int(ts[0]), int(seq[0])) <= (last_ms, last_seq):
-                raise ValueError(
-                    f"out-of-order replay for key ({source}, {k}): batch "
-                    f"starts at ({int(ts[0])} ms, seq {int(seq[0])}) but "
-                    f"state is at ({last_ms} ms, seq {last_seq}); re-run "
-                    f"through the batch counter_increase"
-                )
+            _refuse_replay(source, k, int(ts[0]), int(seq[0]), last_ms,
+                           last_seq, "counter_increase")
             prev = np.concatenate(([last_tok], tok[:-1]))
             inc = np.where(tok >= prev, tok - prev, tok)
             resets = (tok < prev).astype("int64")

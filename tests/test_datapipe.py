@@ -136,13 +136,26 @@ def _embs(spark):
     return spark.createDataFrame(rows, EMB_SCHEMA)
 
 
+def _norm_col(e: str = "embedding"):
+    """L2 norm as the interpreted ascending-dimension fold: the Catalyst
+    twin of ``sqrt(similarity._fold(m, m))`` and of the oracle's ordered
+    list_sum."""
+    return F.sqrt(
+        F.aggregate(
+            F.col(e),
+            F.lit(0.0),
+            lambda acc, x: acc + x.cast("double") * x.cast("double"),
+        )
+    )
+
+
 def ann_topk_bruteforce(embs, k):
     """Exact top-k cosine neighbors, O(n^2): the recall oracle for the ANN
     routes. Same ordered-fold dot product and norm as the engine, ties
     broken by neighbor id."""
     from pyspark.sql import Window
 
-    from sbse.datapipe.similarity import _dot, _norm_col
+    from sbse.datapipe.similarity import _dot
 
     n = embs.select("vec_id", "embedding", _norm_col().alias("nrm"))
     q = embs.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_e"),
@@ -219,10 +232,11 @@ def test_cosine_neardup_exact_at_10k_and_scale_sane_plan(spark):
 
 def test_cosine_neardup_oversized_pairs_take_pair_join(spark, monkeypatch):
     """Cell pairs whose combined size exceeds _GROUP_ROWS_MAX are scored by
-    the pair join (numpy prefilter, then the ordered fold) instead of one
-    applyInPandas group. With the cap at 0 every pair takes it, at 16 the
-    routes mix; both give the grouped path's pair set, and that set is
-    numpy brute force's."""
+    _pair_join_scores (an equi-join and the Catalyst fold ``_dot``, whose
+    ``zip_with`` marks the route in the plan) instead of one applyInPandas
+    group. With the cap at 0 every pair takes it, at 16 the routes mix;
+    both give the grouped path's pair set, and that set is numpy brute
+    force's."""
     from sbse.datapipe import similarity as sim
 
     pts, df = _clustered_embs(spark, 2_000)
@@ -231,7 +245,7 @@ def test_cosine_neardup_oversized_pairs_take_pair_join(spark, monkeypatch):
         monkeypatch.setattr(sim, "_GROUP_ROWS_MAX", cap)
         out = sim.cosine_neardup_pairs(df, threshold=0.9, n_cells=256)
         plan = out._jdf.queryExecution().executedPlan().toString()
-        routes = ("FlatMapGroupsInPandas" in plan, "ArrowEvalPython" in plan)
+        routes = ("FlatMapGroupsInPandas" in plan, "zip_with" in plan)
         return routes, {(r.id_a, r.id_b) for r in out.collect()}
 
     grouped_routes, grouped = run(100_000)
@@ -562,8 +576,7 @@ def test_grouped_scorer_bit_equal_to_fold(spark):
     import random
     import struct as st
 
-    from sbse.datapipe.similarity import (_dot, _grouped_pair_scores,
-                                          _norm_col)
+    from sbse.datapipe.similarity import _dot, _grouped_pair_scores
 
     rng = random.Random(42)
     rows = [
@@ -591,15 +604,15 @@ def test_grouped_scorer_bit_equal_to_fold(spark):
         assert st.pack(">d", got[pair]) == st.pack(">d", v), (pair, got[pair], v)
 
 
-def test_grouped_scorer_group_cap_fallback(spark):
-    """Groups above max_group_rows must route through the pair-join fold
-    fallback (ADVICE r4: unbounded applyInPandas groups OOM one worker) and
-    produce BIT-identical output to the uncapped scorer — both for the
-    symmetric (LSH-bucket) and the role-split (IVF-cell) shape."""
+def test_grouped_scorer_group_cap_fallback(spark, monkeypatch):
+    """Groups above _GROUP_ROWS_MAX must route through the pair-join fold
+    fallback (unbounded applyInPandas groups OOM one worker) and produce
+    BIT-identical output to the uncapped scorer — both for the symmetric
+    (LSH-bucket) and the role-split (IVF-cell) shape."""
     import random
     import struct as st
 
-    from sbse.datapipe.similarity import _grouped_pair_scores, _norm_col
+    from sbse.datapipe import similarity as sim
 
     rng = random.Random(7)
     rows = [
@@ -611,19 +624,19 @@ def test_grouped_scorer_group_cap_fallback(spark):
     )
     n = df.select("g", "role", "vec_id", "embedding", _norm_col().alias("nrm"))
 
-    for symmetric in (True, False):
-        uncapped = {
+    def scores(cap, symmetric):
+        monkeypatch.setattr(sim, "_GROUP_ROWS_MAX", cap)
+        return {
             (r.q_id, r.vec_id): r.cos
-            for r in _grouped_pair_scores(n, ["g"], symmetric=symmetric)
+            for r in sim._grouped_pair_scores(n, ["g"], symmetric=symmetric)
             .collect()
         }
+
+    for symmetric in (True, False):
+        uncapped = scores(100_000, symmetric)
         # cap of 10 makes EVERY group (30 rows each) oversized -> all rows
         # take the fallback join path
-        capped = {
-            (r.q_id, r.vec_id): r.cos
-            for r in _grouped_pair_scores(n, ["g"], symmetric=symmetric,
-                                          max_group_rows=10).collect()
-        }
+        capped = scores(10, symmetric)
         assert set(capped) == set(uncapped) and len(uncapped) > 100
         for pair, v in uncapped.items():
             assert st.pack(">d", capped[pair]) == st.pack(">d", v), (
@@ -632,11 +645,7 @@ def test_grouped_scorer_group_cap_fallback(spark):
         # constructible here since groups are equal-sized; instead cap at 29
         # so all fall back — then at 31 so none do — both must agree)
         for cap in (29, 31):
-            mixed = {
-                (r.q_id, r.vec_id): r.cos
-                for r in _grouped_pair_scores(n, ["g"], symmetric=symmetric,
-                                              max_group_rows=cap).collect()
-            }
+            mixed = scores(cap, symmetric)
             assert mixed == capped or mixed == uncapped
             assert set(mixed) == set(uncapped)
 
@@ -804,15 +813,14 @@ def test_simhash_multiblock_params(spark):
 
 
 def test_ordered_fold_np_bit_identical_to_catalyst_fold(spark):
-    """Round-6 fast twins: the numpy ascending-dimension accumulation
-    (_ordered_fold_np / _ordered_nrm_np, used by ann_topk_lsh buckets, the
-    IVF assignment, and _assign_cells' nrm) must be BIT-identical to the
-    interpreted F.aggregate folds (_dot / _norm_col) the oracle mirrors —
-    exact ==, no tolerance."""
+    """The numpy fold ``_fold`` must be BIT-identical to the interpreted
+    F.aggregate folds (_dot / _norm_col) the oracle mirrors — exact ==, no
+    tolerance — in every shape the engine calls it with: vector (rows
+    against a plane), norm, block grid (rows x rows, broadcast) and
+    gathered row pairs."""
     import numpy as np
 
-    from sbse.datapipe.similarity import (_dot, _norm_col, _ordered_fold_np,
-                                          _ordered_nrm_np)
+    from sbse.datapipe.similarity import _dot, _fold
 
     rng = np.random.RandomState(7)
     # mixed magnitudes so accumulation order actually matters at the ulp
@@ -827,8 +835,24 @@ def test_ordered_fold_np_bit_identical_to_catalyst_fold(spark):
     ).collect()
     mat = np.stack([np.asarray(v, dtype=np.float32) for _, v in vecs]).astype(
         np.float64)
-    nrm = _ordered_nrm_np(mat)
-    dot = _ordered_fold_np(mat, plane)
+    nrm = np.sqrt(_fold(mat, mat))
+    dot = _fold(mat[:, None, :], np.asarray([plane])[None, :, :])[:, 0]
     for r in got_rows:
         assert nrm[r.vec_id] == r.n, (r.vec_id, nrm[r.vec_id], r.n)
         assert dot[r.vec_id] == r.d, (r.vec_id, dot[r.vec_id], r.d)
+
+    # block grid and gathered pairs against the Catalyst pair fold
+    a = df.filter(F.col("vec_id") < 40).select(
+        F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
+    b = df.filter(F.col("vec_id") >= 260).select(
+        F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
+    want = {(r.ia, r.ib): r.d for r in a.crossJoin(b).select(
+        "ia", "ib", _dot(F.col("ea"), F.col("eb")).alias("d")).collect()}
+    grid = _fold(mat[:40, None, :], mat[None, 260:, :])
+    ia, ib = (np.array(x) for x in zip(*sorted(want)))
+    gathered = _fold(mat[ia], mat[ib])
+    assert len(want) == 40 * 40
+    for (i, j), d in want.items():
+        assert grid[i, j - 260] == d, (i, j, grid[i, j - 260], d)
+    for i, j, g in zip(ia, ib, gathered):
+        assert g == want[(i, j)], (i, j, g, want[(i, j)])

@@ -135,3 +135,37 @@ def test_one_event_order_pass_per_family():
     assert _calls("orderBy") == {("sessionize.py", "local_pass"),
                                  ("rollup.py", "counter_lag")}
     assert _calls("nullif") == {("sessionize.py", "local_pass")}
+
+
+def _is_accumulate(node) -> bool:
+    """``acc = acc + <product>``, ``acc += <product>`` or an in-place
+    ``np.add(..., out=...)``: one step of a multiply-add fold."""
+    def product(e):
+        return (isinstance(e, ast.BinOp) and isinstance(e.op, ast.Mult))
+
+    if isinstance(node, ast.AugAssign):
+        return isinstance(node.op, ast.Add) and product(node.value)
+    if isinstance(node, ast.BinOp) and isinstance(node.op, ast.Add):
+        return product(node.left) or product(node.right)
+    return (isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "add"
+            and any(k.arg == "out" for k in node.keywords))
+
+
+def test_one_ordered_fold_loop():
+    """The ascending-dimension multiply-add fold that keeps the embedding
+    cosines bit-identical to the oracle's ordered list_sum has one numpy
+    implementation: a loop that accumulates a product exists in
+    ``similarity.py`` only inside ``_fold``."""
+    path = SBSE / "datapipe" / "similarity.py"
+    tree = ast.parse(path.read_text(), filename=str(path))
+    hits = set()
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.Lambda)):
+            continue
+        for loop in ast.walk(fn):
+            if (isinstance(loop, (ast.For, ast.While))
+                    and any(_is_accumulate(n) for n in ast.walk(loop))):
+                hits.add(getattr(fn, "name", "<lambda>"))
+    assert hits == {"_fold"}, sorted(hits)

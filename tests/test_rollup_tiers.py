@@ -77,6 +77,19 @@ def test_gapfill_locf(spark):
     assert filled[2].last_ntok_locf == filled[1].last_ntok_locf == 23
     assert [r.n_tok_sum for r in filled] == [23, 23, 0, 0, 23]
 
+    # day grain: the same spine yields exactly one bucket per day
+    day = 86_400
+    rows = [mk(0, 10, key=1), mk(1, day + 70, key=1, alt=5),
+            mk(2, day + 80, key=1), mk(3, 4 * day + 250, key=1)]
+    r1d = bucket_rollup(
+        states_only(decode(make_token_rows(spark, rows), "expr")), "day")
+    filled = gapfill_locf(r1d, "day").orderBy("bucket_start").collect()
+    assert [r.bucket_start.day for r in filled] == [1, 2, 3, 4, 5]
+    assert len({r.bucket_start.time() for r in filled}) == 1
+    assert [r.cnt for r in filled] == [1, 2, 0, 0, 1]
+    assert [r.is_gap for r in filled] == [False, False, True, True, False]
+    assert filled[3].last_ntok_locf == filled[1].last_ntok_locf == 23
+
 
 def test_retention_horizon(spark):
     from sbse.retention import retain

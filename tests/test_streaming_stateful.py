@@ -4,6 +4,7 @@ the batch engine's session_rollup on the same input — ids included."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import make_token_rows
@@ -142,15 +143,14 @@ def test_stateful_sessions_batch_boundary_merge(spark, tmp_path):
         "2024-01-01 00:10:00", 1)
 
 
-def _write_files(spark, src_dir, chunks, start=0):
+def _write_files(spark, src_dir, chunks, start=0, value="altitude_m int"):
     import os as _os
 
     for i, chunk in enumerate(chunks, start=start):
         df = spark.createDataFrame(
-            chunk, "source string, key bigint, ts string, seq bigint, "
-                   "altitude_m int"
+            chunk, f"source string, key bigint, ts string, seq bigint, {value}"
         ).select("source", "key", F.to_timestamp("ts").alias("ts"), "seq",
-                 "altitude_m")
+                 value.split()[0])
         p = str(src_dir / f"f{i:02d}")
         df.coalesce(1).write.parquet(p)
         for root, _, files in _os.walk(p):
@@ -326,3 +326,48 @@ def test_stateful_counter_increase_partials_fold_to_batch(spark, tmp_path):
     # the partials are non-trivial: at least one bucket spans microbatches
     n_partials = spark.sql("SELECT count(*) FROM stateful_counter").first()[0]
     assert n_partials > len(want) or len(quarters) == 1
+
+
+def _expect_replay_refused(spark, src_dir, ddl, operator, name):
+    """Drain ``operator`` over the files in ``src_dir``; the query must fail
+    on the replayed row."""
+    from pyspark.errors import StreamingQueryException
+
+    stream = (
+        spark.readStream.schema(ddl)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src_dir))
+    )
+    q = (operator(stream).writeStream.format("memory").queryName(name)
+         .outputMode("append").trigger(availableNow=True).start())
+    with pytest.raises(StreamingQueryException, match="out-of-order replay"):
+        q.awaitTermination()
+
+
+def test_stateful_sessions_refuse_replayed_last_row(spark, tmp_path):
+    """An exact re-delivery of the previous microbatch's last row (an
+    at-least-once replay of the last file) must fail the query: continuing
+    the open session would count that row twice in n_events."""
+    from sbse.streaming.stateful import stateful_sessions
+
+    f0 = [("s0", 1, "2024-01-01 00:00:00", 0, 100),
+          ("s0", 1, "2024-01-01 00:00:10", 1, 200)]
+    _write_files(spark, tmp_path, [f0, f0[-1:]])
+    _expect_replay_refused(
+        spark, tmp_path, STATE_DDL,
+        lambda s: stateful_sessions(s, gap_ms=30_000), "replay_sess")
+
+
+def test_stateful_counter_refuses_replayed_last_row(spark, tmp_path):
+    """Same replay for the counter operator: the re-delivered last sample
+    would add its increase a second time."""
+    from sbse.streaming.stateful import stateful_counter_increase
+
+    f0 = [("s0", 1, "2024-01-01 00:00:00", 0, 10),
+          ("s0", 1, "2024-01-01 00:00:10", 1, 15)]
+    _write_files(spark, tmp_path, [f0, f0[-1:]], value="n_tok bigint")
+    _expect_replay_refused(
+        spark, tmp_path,
+        "source string, key bigint, ts timestamp, seq bigint, n_tok bigint",
+        lambda s: stateful_counter_increase(s, unit="minute"), "replay_ctr")
