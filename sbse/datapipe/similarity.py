@@ -383,10 +383,12 @@ def cosine_neardup_pairs(
     if not cp:
         return spark.createDataFrame([], "id_a bigint, id_b bigint")
     upairs = sorted({(min(i, j), max(i, j)) for i, j in cp})
-    small = [p for p in upairs
-             if sizes.get(p[0], 0) + sizes.get(p[1], 0) <= _GROUP_ROWS_MAX]
-    big = [p for p in upairs
-           if sizes.get(p[0], 0) + sizes.get(p[1], 0) > _GROUP_ROWS_MAX]
+
+    def group_rows(p):  # a within-cell group ships its cell's rows once
+        return sizes.get(p[0], 0) + (sizes.get(p[1], 0) if p[1] != p[0] else 0)
+
+    small = [p for p in upairs if group_rows(p) <= _GROUP_ROWS_MAX]
+    big = [p for p in upairs if group_rows(p) > _GROUP_ROWS_MAX]
     thr = float(threshold)
     out = None
     if small:

@@ -28,32 +28,34 @@ def clamp_read(col):
     return F.greatest(col.cast("bigint"), F.lit(0))
 
 
+def _count_if(cond: str) -> str:
+    return f"CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT)"
+
+
+# The aggregate lists are SQL text: one JVM call per expression, so a
+# run_metrics build makes ~100 py4j round trips instead of ~1,300 through
+# the Column API (one per expression node).
+_KEYED = "ok AND `key` IS NOT NULL"
+_RUN_AGGS = [
+    "count(1) AS total_rows",
+    f"{_count_if('ok')} AS parsed_rows",
+    f"{_count_if('NOT ok')} AS failed_rows",
+    f"{_count_if(_KEYED)} AS stored_states",
+    f"count(DISTINCT CASE WHEN {_KEYED} THEN "
+    "concat_ws('|', source, CAST(`key` AS STRING)) END) AS active_keys",
+    "array(" + ", ".join(_count_if(f"ok AND msg_type = {i}") for i in range(10))
+    + ") AS msg_type_counts",
+]
+_SESSION_AGGS = [
+    "count(1) AS created_sessions",
+    f"{_count_if('ended_at IS NOT NULL')} AS ended_sessions",
+    f"{_count_if('is_open')} AS active_sessions",
+]
+
+
 def run_metrics(decoded: DataFrame, sessions: DataFrame | None = None,
                 proc_ms: int | None = None) -> DataFrame:
-    hist = F.array(
-        *[
-            F.sum(
-                F.when(F.col("ok") & (F.col("msg_type") == i), 1).otherwise(0)
-            ).cast("bigint")
-            for i in range(10)
-        ]
-    ).alias("msg_type_counts")
-    aggs = [
-        F.count(F.lit(1)).alias("total_rows"),
-        F.sum(F.when(F.col("ok"), 1).otherwise(0)).cast("bigint").alias("parsed_rows"),
-        F.sum(F.when(~F.col("ok"), 1).otherwise(0)).cast("bigint").alias("failed_rows"),
-        F.sum(F.when(F.col("ok") & F.col("key").isNotNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("stored_states"),
-        F.countDistinct(
-            F.when(
-                F.col("ok") & F.col("key").isNotNull(),
-                F.concat_ws("|", "source", F.col("key").cast("string")),
-            )
-        ).alias("active_keys"),
-        hist,
-    ]
-    m = decoded.agg(*aggs)
+    m = decoded.agg(*[F.expr(e) for e in _RUN_AGGS])
     if proc_ms is not None:
         # A5 processing-time counter (stats.go:128-132; persisted via the
         # same u64 clamp as every counter, db/client.go:131-139). Callers
@@ -63,14 +65,6 @@ def run_metrics(decoded: DataFrame, sessions: DataFrame | None = None,
         m = m.withColumn("proc_time_ms",
                          clamp_u64(F.lit(str(proc_ms)).cast("decimal(38,0)")))
     if sessions is not None:
-        s = sessions.agg(
-            F.count(F.lit(1)).alias("created_sessions"),
-            F.sum(F.when(F.col("ended_at").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("ended_sessions"),
-            F.sum(F.when(F.col("is_open"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("active_sessions"),
-        )
+        s = sessions.agg(*[F.expr(e) for e in _SESSION_AGGS])
         m = m.crossJoin(s)
     return m

@@ -258,6 +258,47 @@ def test_cosine_neardup_oversized_pairs_take_pair_join(spark, monkeypatch):
     _assert_brute_force_pairs(pts, grouped, 0.9)
 
 
+def test_cosine_neardup_within_cell_group_sized_once(spark, monkeypatch):
+    """A within-cell candidate pair (i, i) ships cell i's rows once, so a
+    cell of 100 rows fits a 126-row worker cap and stays one applyInPandas
+    group (it was sized 200 and sent to the pair join). 400 random 16-dim
+    vectors in four tight clusters of 100; the cluster labels follow the
+    md5 sampling order, so each cell holds one cluster and the candidate
+    pruning keeps only the four within-cell pairs."""
+    import hashlib
+
+    import numpy as np
+
+    from sbse.datapipe import similarity as sim
+
+    rng = np.random.RandomState(0)
+    centers = rng.standard_normal((4, 16))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    order = sorted(range(400),
+                   key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
+    label = np.empty(400, dtype=int)
+    label[order] = np.arange(400) % 4  # the 4 sampled centroids: 4 clusters
+    pts = centers[label] + 0.05 * rng.standard_normal((400, 16))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in pts[i]], int(label[i])) for i in range(400)],
+        EMB_SCHEMA,
+    )
+    monkeypatch.setattr(sim, "_GROUP_ROWS_MAX", 126)
+    out = sim.cosine_neardup_pairs(df, threshold=0.99, n_cells=4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan and "zip_with" not in plan, plan
+    got = {(r.id_a, r.id_b) for r in out.collect()}
+    pts32 = pts.astype(np.float32).astype(np.float64)  # the stored floats
+    nrm = np.linalg.norm(pts32, axis=1)
+    cos = (pts32 @ pts32.T) / np.outer(nrm, nrm)
+    iu = np.triu_indices(400, k=1)
+    hits = cos[iu] >= 0.99
+    truth = set(zip(iu[0][hits].tolist(), iu[1][hits].tolist()))
+    # the engine's ordered fold decides pairs within 1e-9 of the threshold
+    assert all(abs(cos[a, b] - 0.99) < 1e-9 for a, b in got ^ truth)
+    assert len(truth) > 20
+
+
 def test_ann_topk_lsh_plan_has_no_nested_loop(spark):
     from sbse.datapipe.similarity import ann_topk_lsh
 

@@ -103,3 +103,69 @@ def test_distinct_scale_twin_accuracy(spark):
     ).collect()[0]
     assert row.exact > 0
     assert abs(row.approx - row.exact) <= max(3, 0.05 * row.exact), row
+
+
+def _column_form_metrics(decoded, sessions):
+    """The Column-API build of ``run_metrics`` (one py4j call per node),
+    kept as the reference the SQL-text build must equal."""
+    hist = F.array(*[
+        F.sum(F.when(F.col("ok") & (F.col("msg_type") == i), 1).otherwise(0))
+        .cast("bigint") for i in range(10)
+    ]).alias("msg_type_counts")
+    keyed = F.col("ok") & F.col("key").isNotNull()
+    m = decoded.agg(
+        F.count(F.lit(1)).alias("total_rows"),
+        F.sum(F.when(F.col("ok"), 1).otherwise(0)).cast("bigint").alias("parsed_rows"),
+        F.sum(F.when(~F.col("ok"), 1).otherwise(0)).cast("bigint").alias("failed_rows"),
+        F.sum(F.when(keyed, 1).otherwise(0)).cast("bigint").alias("stored_states"),
+        F.countDistinct(F.when(
+            keyed, F.concat_ws("|", "source", F.col("key").cast("string"))
+        )).alias("active_keys"),
+        hist,
+    )
+    s = sessions.agg(
+        F.count(F.lit(1)).alias("created_sessions"),
+        F.sum(F.when(F.col("ended_at").isNotNull(), 1).otherwise(0))
+        .cast("bigint").alias("ended_sessions"),
+        F.sum(F.when(F.col("is_open"), 1).otherwise(0))
+        .cast("bigint").alias("active_sessions"),
+    )
+    return m.crossJoin(s)
+
+
+def test_sql_text_metrics_equal_column_form(spark):
+    """Same names, types, values and executed plan (up to expression ids)
+    as the Column form, on rows with failed decodes (ok false or null),
+    MSG 1/2 rows without a key, and msg types outside 0..9."""
+    import re
+
+    from sbse.metrics import run_metrics
+
+    decoded = spark.createDataFrame(
+        [(True, 3, 7, "a"), (True, 3, 7, "a"), (True, 3, 8, "b"),
+         (True, 1, None, "a"), (True, 2, None, "b"), (False, None, None, "a"),
+         (False, 5, 9, "b"), (None, 4, 4, "a"), (True, 11, 12, "a"),
+         (True, -1, 13, "b"), (True, 0, 7, "b"), (True, 9, 14, None)],
+        "ok boolean, msg_type int, key bigint, source string",
+    )
+    sessions = spark.createDataFrame(
+        [(1, True), (None, True), (2, False), (None, None)],
+        "ended_at long, is_open boolean",
+    )
+    want = _column_form_metrics(decoded, sessions)
+    got = run_metrics(decoded, sessions)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    row = got.collect()[0]
+    assert (row.total_rows, row.parsed_rows, row.failed_rows,
+            row.stored_states, row.active_keys) == (12, 9, 2, 7, 6)
+    assert list(row.msg_type_counts) == [1, 1, 1, 3, 0, 0, 0, 0, 0, 1]
+    assert (row.created_sessions, row.ended_sessions,
+            row.active_sessions) == (4, 2, 2)
+
+    def plan(df):  # expression, stage and codegen ids vary per build
+        text = df._jdf.queryExecution().executedPlan().toString()
+        return re.sub(r"#\d+L?|(?<=QueryStage )\d+|(?<=plan_id=)\d+|"
+                      r"(?<=\*\()\d+(?=\))", "", text)
+
+    assert plan(got) == plan(want)
