@@ -31,17 +31,27 @@ exceed gap_ms so a session gap can only straddle ADJACENT populated chunks'
 boundary rows (the stitch condition itself uses real timestamps, so
 non-adjacent populated chunks merge correctly too — relevant only at
 chunk_ms == gap_ms + epsilon).
+
+The chunked LOCF + sessionize stage is SQL text, generated once per column
+set from ``sessionize._MERGE_FIELDS``: two ``session.frame_sql``
+statements (the local pass, then the summary with its window levels and
+the stitch join) cost ~10 py4j round trips where the Column API made
+~1,000. The chunked counter increase (q43 only) keeps the Column API.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sbse import GAP_MS_NORTH
 from sbse.rollup import counter_lag, counter_tier
-from sbse.sessionize import (_MERGE_FIELDS, KEY_COLS, local_pass, ord_col,
-                             session_id_col, session_rollup)
+from sbse.session import frame_sql
+from sbse.sessionize import (_MERGE_FIELDS, KEY_COLS, ORD_SQL, ROWS_TO_HERE,
+                             cols_sql, local_pass, ord_col, project,
+                             session_id_sql, session_rollup, sql_lit)
 
 # 1 hour of events per window partition by default: at the reference's
 # per-key message rates (~1/s) that is ~3.6k rows; even a 1000x-hot key
@@ -49,18 +59,79 @@ from sbse.sessionize import (_MERGE_FIELDS, KEY_COLS, local_pass, ord_col,
 CHUNK_MS_DEFAULT = 3_600_000
 
 
-def _with_chunk(df: DataFrame, chunk_ms: int) -> DataFrame:
-    """Attach the time-chunk column ``_chunk`` = floor(ts ms / chunk_ms).
+def _chunk_sql(columns, chunk_ms: int) -> str:
+    """The time-chunk column ``_chunk`` = floor(ts ms / chunk_ms), as SQL.
 
     A pre-existing ``_chunk`` is refused: nothing proves it was built with
     this chunk size, and a mis-sized chunk silently mis-stitches."""
-    if "_chunk" in df.columns:
+    if "_chunk" in columns:
         raise ValueError(
             "input already has a _chunk column; drop it before chunking "
             f"with chunk_ms={chunk_ms}"
         )
-    return df.select(
-        "*", F.floor(F.unix_millis("ts") / F.lit(chunk_ms)).alias("_chunk"))
+    return f"floor(unix_millis(ts) / {chunk_ms}) AS _chunk"
+
+
+def _with_chunk(df: DataFrame, chunk_ms: int) -> DataFrame:
+    """``df`` with its time-chunk column ``_chunk`` (``_chunk_sql``)."""
+    return df.selectExpr("*", _chunk_sql(df.columns, chunk_ms))
+
+
+@functools.lru_cache(maxsize=None)
+def _chunked_sql(columns: tuple, gap_ms: int, chunk_ms: int,
+                 close_trailing: bool) -> tuple[str, str]:
+    """The chunked stage's two statements; see ``locf_sessionize_chunked``.
+    The first, over the view ``{states}``, chunks and runs the local pass
+    and adds the arrival order ``_ord``. The second reads that frame as
+    ``{e}`` twice: the summary groupBy under its three window levels, and
+    the stitch join. Every level is a nested select: a frame built with
+    common table expressions keeps its ``WithCTE`` node, and each later
+    select over it analyses ~4x slower."""
+    lp, fields = local_pass((*columns, "_chunk"), (*KEY_COLS, "_chunk"), gap_ms,
+                            f"(SELECT *, {_chunk_sql(columns, chunk_ms)} "
+                            "FROM {states}) _c")
+    ws = f"PARTITION BY {cols_sql(KEY_COLS)} ORDER BY _chunk"
+    wsr = f"{ws} {ROWS_TO_HERE}"
+    w_prev = f"{ws} ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+    prev_last = f"lag(unix_millis(_last_ts)) OVER ({ws})"
+    news = "(_nloc - _merge)"
+    backmerged = "(_lsidx = 1 AND _merge = 1)"
+    sidx = "(_off + _lsidx - _merge)"
+    s_start = f"CASE WHEN {backmerged} THEN _prevT ELSE _lstart END"
+    fin = "".join(f"max_by(_loc_{c}, _ord) AS _fin_{c}, " for c, _ in fields)
+    carry = "".join(f"last(_fin_{c}, true) OVER ({w_prev}) AS _carry_{c}, "
+                    for c, _ in fields)
+    merged = "".join(f"coalesce(_loc_{c}, _carry_{c}, {sql_lit(z)}) AS `{c}_m`, "
+                     for c, z in fields)
+    carried = "".join(f", _carry_{c}" for c, _ in fields)
+    # SHUFFLE_HASH, not broadcast: the summary is one row per populated
+    # (source, key, chunk) — unbounded over retention when the whole corpus
+    # routes through this path (at the sf1.0 bench 2-minute chunks already
+    # make it ~94% of the event count), so a forced broadcast eventually
+    # exceeds the 8 GB relation cap and has no fallback. The event side
+    # reuses the window's (source, key, chunk) hash partitioning with no
+    # new exchange; the summary side pays one small exchange and a
+    # per-partition hash build.
+    stitch = f"""SELECT /*+ SHUFFLE_HASH(_s) */ {cols_sql(columns)}, {merged}
+  CASE WHEN _lnew = 1 THEN CASE WHEN {backmerged} THEN 0 ELSE 1 END
+    ELSE 0 END AS new_sess,
+  {sidx} AS sidx, {s_start} AS s_start,
+  {session_id_sql(s_start, sidx)} AS session_id,
+  {sidx} = _gmax AS is_trailing, {str(close_trailing).lower()} AS close_trailing
+FROM {{e}} JOIN (
+  SELECT source, `key`, _chunk, _merge, _off, _gmax, _prevT{carried} FROM (
+  SELECT *, max(_off + _news) OVER (PARTITION BY {cols_sql(KEY_COLS)}) AS _gmax FROM (
+  SELECT *, {news} AS _news, sum({news}) OVER ({wsr}) - {news} AS _off,
+    last(CASE WHEN NOT (_nloc = 1 AND _merge = 1) THEN _last_lstart END, true)
+      OVER ({w_prev}) AS _prevT FROM (
+  SELECT *, {carry}CASE WHEN {prev_last} IS NOT NULL
+    AND unix_millis(_first_ts) - {prev_last} <= {gap_ms} THEN 1 ELSE 0 END
+    AS _merge FROM (
+  SELECT source, `key`, _chunk, {fin}min(ts) AS _first_ts, max(ts) AS _last_ts,
+    max(_lsidx) AS _nloc, max_by(_lstart, _ord) AS _last_lstart
+  FROM {{e}} GROUP BY source, `key`, _chunk) _s0) _s1) _s2) _s3) _s
+USING (source, `key`, _chunk)"""
+    return f"SELECT *, {ORD_SQL} AS _ord FROM {lp}", stitch
 
 
 def locf_sessionize_chunked(
@@ -71,9 +142,10 @@ def locf_sessionize_chunked(
 ) -> DataFrame:
     """``sessionize.local_pass`` over (source, key, _chunk), one summary
     groupBy carrying BOTH the LOCF carry state and the session stitch
-    facts, one join back. Returns ``locf_sessionize``'s columns: an already
-    merged frame gets only the session columns, and Catalyst prunes every
-    column a caller does not read.
+    facts, one join back — two ``frame_sql`` statements. Returns
+    ``locf_sessionize``'s columns: an already merged frame gets only the
+    session columns, and Catalyst prunes every column a caller does not
+    read.
 
     Stitch math per chunk c (summary window over the key's chunks):
       carry-in      = last non-null final LOCF value of the prior chunks;
@@ -100,82 +172,9 @@ def locf_sessionize_chunked(
             f"chunk_ms={chunk_ms} must exceed gap_ms={gap_ms}: a chunk "
             f"shorter than the gap cannot bound the stitch to boundaries"
         )
-    e, fields = local_pass(_with_chunk(states, chunk_ms),
-                           (*KEY_COLS, "_chunk"), gap_ms)
-    e = e.select("*", ord_col().alias("_ord"))
-    # ONE summary groupBy: per-chunk LOCF carry state + session stitch facts
-    summ = e.groupBy(*KEY_COLS, "_chunk").agg(
-        *[
-            F.expr(f"max_by(_loc_{c}, _ord)").alias(f"_fin_{c}")
-            for c, _ in fields
-        ],
-        F.min("ts").alias("_first_ts"),
-        F.max("ts").alias("_last_ts"),
-        F.max("_lsidx").alias("_nloc"),
-        F.expr("max_by(_lstart, _ord)").alias("_last_lstart"),
-    )
-    ws = Window.partitionBy(*KEY_COLS).orderBy("_chunk")
-    wsr = ws.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_prev = ws.rowsBetween(Window.unboundedPreceding, -1)
-    prev_last = F.lag(F.unix_millis("_last_ts")).over(ws)
-    summ = summ.select(
-        "*",
-        *[
-            F.last(f"_fin_{c}", ignorenulls=True).over(w_prev).alias(f"_carry_{c}")
-            for c, _ in fields
-        ],
-        F.when(
-            prev_last.isNotNull()
-            & (F.unix_millis("_first_ts") - prev_last <= F.lit(gap_ms)),
-            F.lit(1),
-        ).otherwise(F.lit(0)).alias("_merge"),
-    )
-    news = F.col("_nloc") - F.col("_merge")
-    anchor = F.when(
-        ~((F.col("_nloc") == 1) & (F.col("_merge") == 1)), F.col("_last_lstart")
-    )
-    # _prevT (the previous chunk's T) = the anchored LOCF over prior chunks
-    summ = summ.select("*", news.alias("_news"),
-                       (F.sum(news).over(wsr) - news).alias("_off"),
-                       F.last(anchor, ignorenulls=True).over(w_prev).alias("_prevT"))
-    summ = summ.select(
-        "*",
-        F.max(F.col("_off") + F.col("_news"))
-        .over(Window.partitionBy(*KEY_COLS)).alias("_gmax"),
-    )
-    # SHUFFLE_HASH, not broadcast: the summary is one row per populated
-    # (source, key, chunk) — unbounded over retention when the whole corpus
-    # routes through this path (at the sf1.0 bench 2-minute chunks already
-    # make it ~94% of the event count), so a forced broadcast eventually
-    # exceeds the 8 GB relation cap and has no fallback. The event side
-    # reuses the window's (source, key, chunk) hash partitioning with no new
-    # exchange; the summary side pays one small exchange and a per-partition
-    # hash build.
-    j = e.join(
-        summ.select(
-            *KEY_COLS, "_chunk", "_merge", "_off", "_gmax", "_prevT",
-            *[f"_carry_{c}" for c, _ in fields],
-        ).hint("SHUFFLE_HASH"),
-        [*KEY_COLS, "_chunk"],
-    )
-    backmerged = (F.col("_lsidx") == 1) & (F.col("_merge") == 1)
-    sidx = F.col("_off") + F.col("_lsidx") - F.col("_merge")
-    s_start = F.when(backmerged, F.col("_prevT")).otherwise(F.col("_lstart"))
-    return j.select(
-        *states.columns,
-        *[
-            F.coalesce(F.col(f"_loc_{c}"), F.col(f"_carry_{c}"), F.lit(zero))
-            .alias(f"{c}_m")
-            for c, zero in fields
-        ],
-        F.when(F.col("_lnew") == 1, F.when(backmerged, 0).otherwise(1))
-        .otherwise(0).alias("new_sess"),
-        sidx.alias("sidx"),
-        s_start.alias("s_start"),
-        session_id_col(s_start, sidx).alias("session_id"),
-        (sidx == F.col("_gmax")).alias("is_trailing"),
-        F.lit(close_trailing).alias("close_trailing"),
-    )
+    local, stitch = _chunked_sql(tuple(states.columns), gap_ms, chunk_ms,
+                                 close_trailing)
+    return frame_sql(stitch, e=frame_sql(local, states=states))
 
 
 def locf_merge_chunked(states: DataFrame,
@@ -185,8 +184,7 @@ def locf_merge_chunked(states: DataFrame,
     the session columns, so it never reaches the plan."""
     fused = locf_sessionize_chunked(states, gap_ms=chunk_ms - 1,
                                     chunk_ms=chunk_ms)
-    return fused.select(*states.columns,
-                        *[f"{c}_m" for c, _ in _MERGE_FIELDS])
+    return project(fused, [*states.columns, *[f"{c}_m" for c, _ in _MERGE_FIELDS]])
 
 
 def sessionize_chunked(

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from sbse.dialect import SPARK, decode_sql
+from sbse.session import frame_sql
 
 
 def decode(df: DataFrame, mode: str = "expr") -> DataFrame:
@@ -22,4 +23,4 @@ def decode(df: DataFrame, mode: str = "expr") -> DataFrame:
         raise ValueError(f"unknown decode mode: {mode}")
     # a DataFrame argument gets a uniquely named view, dropped once the
     # query is analysed: no shared session-global name for threads to race on
-    return df.sparkSession.sql(decode_sql(SPARK, "{tok}"), tok=df)
+    return frame_sql(decode_sql(SPARK, "{tok}"), tok=df)

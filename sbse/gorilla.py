@@ -31,6 +31,8 @@ import struct
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sbse.session import frame_sql
+
 
 class _BitWriter:
     __slots__ = ("buf", "acc", "nbits")
@@ -267,20 +269,19 @@ def encode_tier(tier: DataFrame, value_col: str = "n_tok_sum",
 
     Output: source, key, chunk_start, n_points, t_min, t_max, blob (binary).
     Points are (bucket_start ms, value_col as double), sorted by bucket."""
-    chunk = (
-        F.date_trunc(chunk_unit, "bucket_start") if chunk_unit
-        else F.to_timestamp(F.lit("1970-01-01 00:00:00"))
-    )
-    return (
-        tier.select("source", "key", "bucket_start", value_col,
-                    chunk.alias("chunk_start"))
-        .repartition(*_SERIES_KEYS)
-        .sortWithinPartitions(*_SERIES_KEYS, "bucket_start")
-        .mapInPandas(
-            functools.partial(_encode_series, value_col=value_col),
-            schema="source string, key bigint, chunk_start timestamp, "
-                   "n_points int, t_min bigint, t_max bigint, blob binary",
-        )
+    chunk = (f"date_trunc('{chunk_unit}', bucket_start)" if chunk_unit
+             else "to_timestamp('1970-01-01 00:00:00')")
+    keys = ", ".join(f"`{k}`" for k in _SERIES_KEYS)
+    # the repartition and the within-partition sort as DISTRIBUTE BY and
+    # SORT BY: the whole frame below the Python stage is one JVM call
+    points = frame_sql(
+        f"SELECT source, `key`, bucket_start, `{value_col}`, {chunk} AS "
+        f"chunk_start FROM {{tier}} DISTRIBUTE BY {keys} "
+        f"SORT BY {keys}, bucket_start", tier=tier)
+    return points.mapInPandas(
+        functools.partial(_encode_series, value_col=value_col),
+        schema="source string, key bigint, chunk_start timestamp, "
+               "n_points int, t_min bigint, t_max bigint, blob binary",
     )
 
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sbse.session import frame_sql
+
 I64_MAX = (1 << 63) - 1
 
 
@@ -32,9 +34,9 @@ def _count_if(cond: str) -> str:
     return f"CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT)"
 
 
-# The aggregate lists are SQL text: one JVM call per expression, so a
-# run_metrics build makes ~100 py4j round trips instead of ~1,300 through
-# the Column API (one per expression node).
+# The aggregate lists are SQL text and the whole build is one statement:
+# a run_metrics build makes a few py4j round trips instead of ~1,300
+# through the Column API (one per expression node).
 _KEYED = "ok AND `key` IS NOT NULL"
 _RUN_AGGS = [
     "count(1) AS total_rows",
@@ -51,20 +53,25 @@ _SESSION_AGGS = [
     f"{_count_if('ended_at IS NOT NULL')} AS ended_sessions",
     f"{_count_if('is_open')} AS active_sessions",
 ]
+_DEC = "DECIMAL(38,0)"
 
 
 def run_metrics(decoded: DataFrame, sessions: DataFrame | None = None,
                 proc_ms: int | None = None) -> DataFrame:
-    m = decoded.agg(*[F.expr(e) for e in _RUN_AGGS])
+    sql = f"SELECT {', '.join(_RUN_AGGS)} FROM {{decoded}}"
+    frames = {"decoded": decoded}
     if proc_ms is not None:
         # A5 processing-time counter (stats.go:128-132; persisted via the
         # same u64 clamp as every counter, db/client.go:131-139). Callers
         # pass measured wall time — nondeterministic, so this column stays
         # out of oracle-checked outputs (checkpoint manifests carry it too).
-        # lit(str) -> decimal: a uint64-scale literal overflows a LongType lit
-        m = m.withColumn("proc_time_ms",
-                         clamp_u64(F.lit(str(proc_ms)).cast("decimal(38,0)")))
+        # A string literal cast to decimal: a uint64-scale literal
+        # overflows a BIGINT one. clamp_u64 in SQL text.
+        proc = f"CAST(CAST('{int(proc_ms)}' AS {_DEC}) AS {_DEC})"
+        sql = (f"SELECT *, CAST(least({proc}, CAST({I64_MAX} AS {_DEC})) "
+               f"AS BIGINT) AS proc_time_ms FROM ({sql})")
     if sessions is not None:
-        s = sessions.agg(*[F.expr(e) for e in _SESSION_AGGS])
-        m = m.crossJoin(s)
-    return m
+        sql = (f"SELECT * FROM ({sql}) CROSS JOIN "
+               f"(SELECT {', '.join(_SESSION_AGGS)} FROM {{sessions}})")
+        frames["sessions"] = sessions
+    return frame_sql(sql, **frames)

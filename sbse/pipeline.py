@@ -12,6 +12,11 @@ This is the batch re-expression of the reference's tracker lifecycle
 over (source, key), or over (source, key, chunk) plus the chunk stitch.
 Every sink downstream of it, the session rollup included, is the same for
 both routes.
+
+Every stage is built as SQL text, one or two ``session.frame_sql``
+statements each (the stage modules' docstrings), and so are the column
+prunings and the validation gate here: a build makes ~100 py4j round trips
+where the Column API made 4-6k, one per expression node.
 """
 
 from __future__ import annotations
@@ -22,9 +27,10 @@ from sbse import GAP_MS_NORTH
 from sbse.decode import decode
 from sbse.gorilla import encode_tier
 from sbse.metrics import run_metrics
-from sbse.rollup import gapfill_locf, tier_tables
-from sbse.sessionize import (_MERGE_FIELDS, locf_sessionize, session_rollup,
-                             states_only)
+from sbse.rollup import bucket_rollup, cascade, gapfill_locf, tier_tables
+from sbse.session import frame_sql
+from sbse.sessionize import (_MERGE_FIELDS, cols_sql, locf_sessionize, project,
+                             session_rollup, states_only)
 
 
 def run_pipeline(
@@ -58,15 +64,17 @@ def run_pipeline(
     are row-identical either way (asserted in test_bigkey); choose it when
     one key's event count can exceed a single task's comfort zone.
     """
-    from pyspark.sql import functions as F
-
     decoded = decode(token_df, mode=decode_mode)
     states = states_only(decoded)
     if validation is not None:
-        gated = states.join(F.broadcast(validation), "key", "left")
-        states = gated.filter(
-            F.coalesce(F.col("valid"), F.lit(default_valid))
-        ).drop("valid")
+        # USING (key) puts key first; every other column but valid follows
+        cols = ["key", *[c for c in [*states.columns, *validation.columns]
+                         if c not in ("key", "valid")]]
+        states = frame_sql(
+            f"SELECT /*+ BROADCAST(_v) */ {cols_sql(cols)} FROM {{states}} "
+            f"LEFT JOIN {{validation}} _v USING (`key`) "
+            f"WHERE coalesce(valid, {str(default_valid).lower()})",
+            states=states, validation=validation)
     merged_cols = [*states.columns, *[f"{c}_m" for c, _ in _MERGE_FIELDS]]
     if bigkey_chunk_ms is None:
         sess_events = locf_sessionize(states, gap_ms=gap_ms,
@@ -78,24 +86,23 @@ def run_pipeline(
         # so the states, sessions and metrics sinks do not each re-run the
         # window pass and the stitch join; only the columns they read, so
         # no per-event session_id hash is computed or stored
-        sess_events = locf_sessionize_chunked(
+        sess_events = project(locf_sessionize_chunked(
             states, gap_ms=gap_ms, chunk_ms=bigkey_chunk_ms,
             close_trailing=close_trailing,
-        ).select(*merged_cols, "sidx", "is_trailing", "close_trailing"
-                 ).localCheckpoint(eager=False)
-    merged = sess_events.select(*merged_cols)
+        ), [*merged_cols, "sidx", "is_trailing", "close_trailing"]
+        ).localCheckpoint(eager=False)
+    merged = project(sess_events, merged_cols)
     sessions = session_rollup(sess_events)
-    tiers = tier_tables(merged)
     if cache_tiers:
         # The cascade re-aggregates tiers (1m -> 1h -> 1d -> gapfill); the
         # tier tables are ~1e3-1e5x smaller than raw, so caching them (NOT
         # the wide per-event states — measured slower) collapses four
         # actions into one scan of the raw data plus trivia.
-        tiers["1m"] = tiers["1m"].persist()
-        from sbse.rollup import cascade
-
-        tiers["1h"] = cascade(tiers["1m"], "hour").persist()
-        tiers["1d"] = cascade(tiers["1h"], "day")
+        r1m = bucket_rollup(merged, "minute").persist()
+        r1h = cascade(r1m, "hour").persist()
+        tiers = {"1m": r1m, "1h": r1h, "1d": cascade(r1h, "day")}
+    else:
+        tiers = tier_tables(merged)
     out: dict[str, DataFrame] = {
         "decoded": decoded,
         "states": merged,

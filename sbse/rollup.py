@@ -17,6 +17,12 @@ Scale notes:
 * the gap-fill spine is generated per (source, key) from min/max bucket —
   explode(sequence(...)) — and joined back; the LOCF pass shares the
   (source, key) partitioning.
+
+``bucket_rollup``, ``cascade`` and ``gapfill_locf`` — the tiers the
+pipeline builds — are SQL text: one ``session.frame_sql`` statement each,
+with a nested select per level, so building one costs a few py4j round
+trips instead of one per expression node. The counter and quantile tiers,
+which no pipeline output reads, keep the Column API.
 """
 
 from __future__ import annotations
@@ -24,10 +30,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from sbse.sessionize import ord_col
+from sbse.session import frame_sql
+from sbse.sessionize import ORD_SQL
 
 _STEP_INTERVAL = {"minute": "interval 1 minute", "hour": "interval 1 hour",
                   "day": "interval 1 day"}
+
+
+_BUCKET_SQL = """SELECT source, `key`, bucket_start, count(1) AS cnt,
+  CAST(sum(n_tok) AS BIGINT) AS n_tok_sum, min(n_tok) AS n_tok_min,
+  max(n_tok) AS n_tok_max, min_by(n_tok, ord) AS first_ntok,
+  max_by(n_tok, ord) AS last_ntok, min_by(fp, ord) AS first_fp,
+  max_by(fp, ord) AS last_fp
+FROM (SELECT source, `key`, n_tok, {ord} AS ord,
+  date_trunc('{unit}', ts) AS bucket_start, xxhash64(tokens) AS fp
+  FROM {{states}})
+GROUP BY source, `key`, bucket_start"""
 
 
 def bucket_rollup(states: DataFrame, unit: str = "minute") -> DataFrame:
@@ -37,24 +55,20 @@ def bucket_rollup(states: DataFrame, unit: str = "minute") -> DataFrame:
     array in arrival order (FIXTURES.md F4) — the token-stream identity the
     north star tracks through every tier.
     """
-    e = states.select(
-        "source",
-        "key",
-        "n_tok",
-        ord_col().alias("ord"),
-        F.date_trunc(unit, F.col("ts")).alias("bucket_start"),
-        F.xxhash64(F.col("tokens")).alias("fp"),
-    )
-    return e.groupBy("source", "key", "bucket_start").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("n_tok").cast("bigint").alias("n_tok_sum"),
-        F.min("n_tok").alias("n_tok_min"),
-        F.max("n_tok").alias("n_tok_max"),
-        F.expr("min_by(n_tok, ord)").alias("first_ntok"),
-        F.expr("max_by(n_tok, ord)").alias("last_ntok"),
-        F.expr("min_by(fp, ord)").alias("first_fp"),
-        F.expr("max_by(fp, ord)").alias("last_fp"),
-    )
+    return frame_sql(_BUCKET_SQL.format(unit=unit, ord=ORD_SQL), states=states)
+
+
+_CASCADE_SQL = """SELECT source, `key`, parent AS bucket_start, cnt, n_tok_sum,
+  n_tok_min, n_tok_max, first_ntok, last_ntok, first_fp, last_fp
+FROM (SELECT source, `key`, parent, CAST(sum(cnt) AS BIGINT) AS cnt,
+  CAST(sum(n_tok_sum) AS BIGINT) AS n_tok_sum, min(n_tok_min) AS n_tok_min,
+  max(n_tok_max) AS n_tok_max,
+  min_by(first_ntok, bucket_start) AS first_ntok,
+  max_by(last_ntok, bucket_start) AS last_ntok,
+  min_by(first_fp, bucket_start) AS first_fp,
+  max_by(last_fp, bucket_start) AS last_fp
+  FROM (SELECT *, date_trunc('{unit}', bucket_start) AS parent FROM {{tier}})
+  GROUP BY source, `key`, parent)"""
 
 
 def cascade(tier: DataFrame, unit: str) -> DataFrame:
@@ -64,21 +78,7 @@ def cascade(tier: DataFrame, unit: str) -> DataFrame:
     earliest/latest child bucket's values — exactly re-aggregation of the
     finer tier, so tier(raw) == cascade(tier_finer) (cascade invariant,
     FIXTURES.md F4)."""
-    return (
-        tier.withColumn("parent", F.date_trunc(unit, F.col("bucket_start")))
-        .groupBy("source", "key", "parent")
-        .agg(
-            F.sum("cnt").cast("bigint").alias("cnt"),
-            F.sum("n_tok_sum").cast("bigint").alias("n_tok_sum"),
-            F.min("n_tok_min").alias("n_tok_min"),
-            F.max("n_tok_max").alias("n_tok_max"),
-            F.expr("min_by(first_ntok, bucket_start)").alias("first_ntok"),
-            F.expr("max_by(last_ntok, bucket_start)").alias("last_ntok"),
-            F.expr("min_by(first_fp, bucket_start)").alias("first_fp"),
-            F.expr("max_by(last_fp, bucket_start)").alias("last_fp"),
-        )
-        .withColumnRenamed("parent", "bucket_start")
-    )
+    return frame_sql(_CASCADE_SQL.format(unit=unit), tier=tier)
 
 
 def counter_lag(states: DataFrame, part_cols) -> DataFrame:
@@ -141,6 +141,22 @@ def counter_cascade(tier: DataFrame, unit: str) -> DataFrame:
     )
 
 
+_GAPFILL_SQL = """SELECT source, `key`, bucket_start, coalesce(cnt, 0) AS cnt,
+  coalesce(n_tok_sum, 0) AS n_tok_sum, cnt IS NULL AS is_gap,
+  last(last_ntok, true) OVER (PARTITION BY source, `key` ORDER BY bucket_start
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_ntok_locf
+FROM (
+  SELECT source, `key`, explode(sequence(greatest(d, b0),
+    least(d + interval 1 day - {step}, b1), {step})) AS bucket_start
+  FROM (
+    SELECT source, `key`, b0, b1, explode(sequence(date_trunc('DAY', b0),
+      date_trunc('DAY', b1), interval 1 day)) AS d
+    FROM (
+      SELECT source, `key`, min(bucket_start) AS b0, max(bucket_start) AS b1
+      FROM {{tier}} GROUP BY source, `key`) _ends) _days) _spine
+LEFT JOIN {{tier}} USING (source, `key`, bucket_start)"""
+
+
 def gapfill_locf(tier: DataFrame, unit: str = "minute") -> DataFrame:
     """time_bucket_gapfill + locf analog (TimescaleDB; SURVEY.md §2.5 W5).
 
@@ -157,47 +173,8 @@ def gapfill_locf(tier: DataFrame, unit: str = "minute") -> DataFrame:
     bucket of its day. Output identical (asserted against the
     single-sequence shape in tests).
     """
-    step = _STEP_INTERVAL[unit]
-    ends = tier.groupBy("source", "key").agg(
-        F.min("bucket_start").alias("b0"), F.max("bucket_start").alias("b1")
-    )
-    days = ends.select(
-        "source", "key", "b0", "b1",
-        F.explode(
-            F.sequence(
-                F.date_trunc("DAY", F.col("b0")),
-                F.date_trunc("DAY", F.col("b1")),
-                F.expr("interval 1 day"),
-            )
-        ).alias("d"),
-    )
-    day_end = F.col("d") + F.expr("interval 1 day") - F.expr(step)
-    spine = days.select(
-        "source",
-        "key",
-        F.explode(
-            F.sequence(
-                F.greatest(F.col("d"), F.col("b0")),
-                F.least(day_end, F.col("b1")),
-                F.expr(step),
-            )
-        ).alias("bucket_start"),
-    )
-    j = spine.join(tier, ["source", "key", "bucket_start"], "left")
-    w = (
-        Window.partitionBy("source", "key")
-        .orderBy("bucket_start")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return j.select(
-        "source",
-        "key",
-        "bucket_start",
-        F.coalesce("cnt", F.lit(0)).alias("cnt"),
-        F.coalesce("n_tok_sum", F.lit(0)).alias("n_tok_sum"),
-        F.col("cnt").isNull().alias("is_gap"),
-        F.last("last_ntok", ignorenulls=True).over(w).alias("last_ntok_locf"),
-    )
+    return frame_sql(
+        _GAPFILL_SQL.format(step=_STEP_INTERVAL[unit]), tier=tier)
 
 
 def tier_tables(states: DataFrame) -> dict[str, DataFrame]:

@@ -18,18 +18,29 @@ batches) while remaining correct on local[N]:
   only when both declare the same ``__version__``. The decision and its
   inputs are recorded in the informational
   ``spark.sbse.pythonWorkerPyspark`` conf entry
-  (``"<installed|zip> zip=<version> installed=<version>"``).
+  (``"<installed|zip> zip=<version> installed=<version>"``),
+- PySpark's per-Column call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled``): with it on, every
+  ``F.*`` call and Column operator makes ~6 py4j round trips to record the
+  Python line that built it, which multiplied plan building several times
+  over. The cost: a runtime error's "DataFrame query context" no longer
+  names the Python line that built the failing expression.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import sys
+import tempfile
+import uuid
 import zipfile
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from sbse import pydaemon
 
@@ -63,6 +74,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SBSE_DRIVER_MEM", "8g"))
     )
     # Only a JVM launched here (now, or by an earlier call in this process)
@@ -78,6 +90,33 @@ def get_spark(
         SparkContext._gateway._sbse_launched = True
     ensure_shipped(spark)
     return spark
+
+
+def frame_sql(template: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql(template, **frames)`` for DataFrame arguments: each
+    ``{name}`` in ``template`` reads ``frames[name]`` through a uniquely
+    named temporary view, dropped once the statement is analysed. It costs
+    two py4j round trips per frame plus one.
+
+    PySpark's own formatter drops its views through ``Catalog.dropTempView``,
+    which re-analyses the view's plan (~8 ms a view) and uncaches every
+    cached plan with the view's result: a stage built over a persisted
+    frame (the pipeline's cached tiers) would unpersist its input. The
+    views here are private, never cached by name, so they are dropped from
+    the session catalog directly."""
+    spark = next(iter(frames.values())).sparkSession
+    names = {k: f"_sbse_{uuid.uuid4().hex}" for k in frames}
+    for k, df in frames.items():
+        df._jdf.createOrReplaceTempView(names[k])
+    try:
+        return DataFrame(spark._jsparkSession.sql(template.format(**names)), spark)
+    finally:
+        catalog = getattr(spark, "_sbse_catalog", None)
+        if catalog is None:
+            catalog = spark._sbse_catalog = (
+                spark._jsparkSession.sessionState().catalog())
+        for n in names.values():
+            catalog.dropTempView(n)
 
 
 def worker_daemon_conf(master: str) -> dict[str, str]:
@@ -103,22 +142,15 @@ def ensure_shipped(spark: SparkSession) -> None:
     """Ship the sbse package to executors (the --py-files story).
 
     Safe to call on sessions we did not create (e.g. the driver's): zips the
-    package once and registers it via ``addPyFile`` so Arrow UDFs that
-    reference sbse by module resolve on workers.
+    package once per process and registers it via ``addPyFile`` so Arrow
+    UDFs that reference sbse by module resolve on workers. The zip lives in
+    a private temporary directory removed at interpreter exit, not right
+    after ``addPyFile``: in local mode the file server keeps serving it.
     """
     sc = spark.sparkContext
     if getattr(sc, "_sbse_shipped", False):
         return
-    pkg_dir = os.path.join(_REPO_ROOT, "sbse")
-    zpath = os.path.join("/tmp", f"sbse_pkg_{os.getpid()}.zip")
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.relpath(full, _REPO_ROOT)
-                        zf.write(full, rel)
+    zpath = _package_zip()
     try:
         sc.addPyFile(zpath)
     except Exception:  # pragma: no cover - already added in this session
@@ -126,3 +158,19 @@ def ensure_shipped(spark: SparkSession) -> None:
     if _REPO_ROOT not in sys.path:
         sys.path.insert(0, _REPO_ROOT)
     sc._sbse_shipped = True
+
+
+@functools.lru_cache(maxsize=None)
+def _package_zip() -> str:
+    """This process's zip of the sbse package, written on first use."""
+    tmp = tempfile.mkdtemp(prefix="sbse_pkg_")
+    atexit.register(shutil.rmtree, tmp, True)
+    zpath = os.path.join(tmp, "sbse_pkg.zip")
+    pkg_dir = os.path.join(_REPO_ROOT, "sbse")
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    zf.write(full, os.path.relpath(full, _REPO_ROOT))
+    return zpath

@@ -27,19 +27,31 @@ Scale notes: the plain stage costs exactly ONE shuffle (hash partition by
 session rollup's groupBy reuses it, with map-side partial aggregation on
 top. Ordering is total and deterministic: (ts, seq) with seq a data-derived
 tiebreak (arrival order at the reference becomes explicit order here —
-SURVEY.md §7.4). Columns are built with one ``select`` per dependency
-level, never a ``withColumn`` chain: Catalyst plans one ``Window`` operator
-per projection and window spec, so a chain of N window columns over one
-spec costs N sort-buffered window passes where one suffices
+SURVEY.md §7.4).
+
+Each stage is built as SQL text: one statement (``session.frame_sql``),
+its input a ``{name}`` view argument as in ``decode``, with one nested
+select per dependency level, generated once per column set from
+``_MERGE_FIELDS``. Building it costs a few py4j round trips and one
+analysis, where the Column API paid one round trip per expression node.
+The levels nest as derived tables, not common table expressions: a frame
+built with CTEs keeps its ``WithCTE`` node, and every later select over it
+analyses ~4x slower. Each level is one projection, never a ``withColumn``
+chain: Catalyst plans one ``Window`` operator per projection and window
+spec, so a chain of N window columns over one spec costs N sort-buffered
+window passes where one suffices
 (tests/test_plan_shape.py pins the count).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sbse import GAP_MS_NORTH
+from sbse.session import frame_sql
 
 KEY_COLS = ("source", "key")
 
@@ -56,67 +68,86 @@ _MERGE_FIELDS = [
     ("squawk", ""),
 ]
 
+ROWS_TO_HERE = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+
+
+def cols_sql(cols) -> str:
+    """A quoted SQL column list."""
+    return ", ".join(f"`{c}`" for c in cols)
+
+
+def sql_lit(v) -> str:
+    """The SQL literal ``F.lit(v)`` builds for a ``_MERGE_FIELDS`` zero."""
+    if isinstance(v, str):
+        return "'" + v.replace("'", "''") + "'"
+    return f"{v!r}D" if isinstance(v, float) else str(v)
+
+
+def project(df: DataFrame, cols) -> DataFrame:
+    """``df.select(*cols)`` for column names, as one SQL statement."""
+    return frame_sql(f"SELECT {cols_sql(cols)} FROM {{df}}", df=df)
+
 
 def ord_col() -> Column:
     """Arrival-order key for engine-side min_by/max_by: a (ts, seq) struct
-    (lexicographic struct comparison). The DuckDB oracle uses the equivalent
-    zero-padded string (dialect.ord_expr) because DuckDB 1.0's max_by cannot
-    order by a row value — the two orderings are identical."""
+    (lexicographic struct comparison); ``ORD_SQL`` in SQL text. The DuckDB
+    oracle uses the equivalent zero-padded string (dialect.ord_expr)
+    because DuckDB 1.0's max_by cannot order by a row value — the two
+    orderings are identical."""
     return F.struct(F.col("ts"), F.col("seq"))
 
 
-def session_id_col(start: Column, sidx: Column) -> Column:
+ORD_SQL = "struct(ts, seq)"
+
+
+def session_id_sql(start: str, sidx: str) -> str:
     """Deterministic session surrogate: sha256 of source|key|start ms|sidx."""
-    return F.sha2(
-        F.concat_ws(
-            "|",
-            F.col("source"),
-            F.col("key").cast("string"),
-            F.unix_millis(start).cast("string"),
-            sidx.cast("string"),
-        ),
-        256,
-    )
+    return (f"sha2(concat_ws('|', source, CAST(`key` AS STRING), "
+            f"CAST(unix_millis({start}) AS STRING), CAST({sidx} AS STRING)), 256)")
 
 
 def states_only(decoded: DataFrame) -> DataFrame:
     """Rows that produce aircraft-state analogs: parsed AND keyed
     (MSG types 1,2 carry no key — parser.go:103-110)."""
-    return decoded.filter(F.col("ok") & F.col("key").isNotNull())
+    return decoded.filter("ok AND `key` IS NOT NULL")
 
 
-def local_pass(states: DataFrame, part_cols, gap_ms: int):
+def local_pass(columns, part_cols, gap_ms: int, src: str):
     """The one per-key event-order window pass over ``part_cols`` in
-    (ts, seq) order, one ``select`` per dependency level. Adds ``_loc_{c}``,
-    the last non-zero value so far (null before the first), for each
-    ``_MERGE_FIELDS`` field of ``states`` whose ``{c}_m`` is not already
-    there; ``_lnew``, 1 on a row that opens a session (the first row, or
-    one more than ``gap_ms`` after its predecessor); ``_lsidx``, the running
-    session ordinal; ``_lstart``, the session's first ts. The session
-    columns depend only on (ts, seq), so both families share each level.
-    Returns the frame and the merged (field, zero) pairs."""
+    (ts, seq) order, as the text of a derived table ``_lp`` over the
+    relation ``src`` (which has ``columns``), one nested select per
+    dependency level. Adds ``_loc_{c}``, the last non-zero value so far
+    (null before the first), for each ``_MERGE_FIELDS`` field whose
+    ``{c}_m`` is not already there; ``_lnew``, 1 on a row that opens a
+    session (the first row, or one more than ``gap_ms`` after its
+    predecessor); ``_lsidx``, the running session ordinal; ``_lstart``, the
+    session's first ts. The session columns depend only on (ts, seq), so
+    both families share each level. Returns the text and the merged
+    (field, zero) pairs."""
     fields = [(c, z) for c, z in _MERGE_FIELDS
-              if c in states.columns and f"{c}_m" not in states.columns]
-    w = Window.partitionBy(*part_cols).orderBy("ts", "seq")
-    wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prev_ms = F.lag(F.unix_millis("ts")).over(w)
-    e = states.select(
-        "*",
-        *[
-            F.last(F.nullif(F.col(c), F.lit(zero)), ignorenulls=True)
-            .over(wr).alias(f"_loc_{c}")
-            for c, zero in fields
-        ],
-        F.when(prev_ms.isNull() | (F.unix_millis("ts") - prev_ms > F.lit(gap_ms)),
-               F.lit(1)).otherwise(F.lit(0)).alias("_lnew"),
-    )
-    e = e.select(
-        "*",
-        F.sum("_lnew").over(wr).alias("_lsidx"),
-        F.last(F.when(F.col("_lnew") == 1, F.col("ts")),
-               ignorenulls=True).over(wr).alias("_lstart"),
-    )
-    return e, fields
+              if c in columns and f"{c}_m" not in columns]
+    w = f"PARTITION BY {cols_sql(part_cols)} ORDER BY ts, seq"
+    wr = f"{w} {ROWS_TO_HERE}"
+    prev_ms = f"lag(unix_millis(ts)) OVER ({w})"
+    locf = "".join(f"last(nullif(`{c}`, {sql_lit(z)}), true) OVER ({wr}) "
+                   f"AS _loc_{c}, " for c, z in fields)
+    return f"""(SELECT *, sum(_lnew) OVER ({wr}) AS _lsidx,
+    last(CASE WHEN _lnew = 1 THEN ts END, true) OVER ({wr}) AS _lstart
+  FROM (SELECT *, {locf}CASE WHEN {prev_ms} IS NULL
+      OR unix_millis(ts) - {prev_ms} > {gap_ms} THEN 1 ELSE 0 END AS _lnew
+    FROM {src}) _l1) _lp""", fields
+
+
+@functools.lru_cache(maxsize=None)
+def _plain_sql(columns: tuple, gap_ms: int, close_trailing: bool) -> str:
+    lp, fields = local_pass(columns, KEY_COLS, gap_ms, "{states}")
+    merged = "".join(f"coalesce(_loc_{c}, {sql_lit(z)}) AS `{c}_m`, "
+                     for c, z in fields)
+    return f"""SELECT {cols_sql(columns)}, {merged}_lnew AS new_sess, _lsidx AS sidx,
+  _lstart AS s_start, {session_id_sql('_lstart', '_lsidx')} AS session_id,
+  _lsidx = max(_lsidx) OVER (PARTITION BY {cols_sql(KEY_COLS)}) AS is_trailing,
+  {str(close_trailing).lower()} AS close_trailing
+FROM {lp}"""
 
 
 def locf_sessionize(
@@ -135,27 +166,15 @@ def locf_sessionize(
     flights.ended_at IS NULL analog, db/client.go:38) and
     ``close_trailing``. Catalyst prunes every column a caller does not
     read, down to the window expressions behind it."""
-    e, fields = local_pass(states, KEY_COLS, gap_ms)
-    sidx = F.col("_lsidx")
-    return e.select(
-        *states.columns,
-        *[F.coalesce(F.col(f"_loc_{c}"), F.lit(zero)).alias(f"{c}_m")
-          for c, zero in fields],
-        F.col("_lnew").alias("new_sess"),
-        sidx.alias("sidx"),
-        F.col("_lstart").alias("s_start"),
-        session_id_col(F.col("_lstart"), sidx).alias("session_id"),
-        (sidx == F.max(sidx).over(Window.partitionBy(*KEY_COLS)))
-        .alias("is_trailing"),
-        F.lit(close_trailing).alias("close_trailing"),
-    )
+    return frame_sql(
+        _plain_sql(tuple(states.columns), gap_ms, close_trailing), states=states)
 
 
 def locf_merge(states: DataFrame) -> DataFrame:
     """W1 — per-key LOCF merge: ``locf_sessionize``'s merged columns. The
     gap never reaches the plan: Catalyst prunes the session columns."""
-    return locf_sessionize(states).select(
-        *states.columns, *[f"{c}_m" for c, _ in _MERGE_FIELDS])
+    return project(locf_sessionize(states),
+                   [*states.columns, *[f"{c}_m" for c, _ in _MERGE_FIELDS]])
 
 
 def sessionize(
@@ -167,6 +186,28 @@ def sessionize(
     adds only the session columns."""
     return locf_sessionize(merged, gap_ms=gap_ms,
                            close_trailing=close_trailing)
+
+
+# a literal close_trailing folds the CASE in ended_at away, and with it the
+# per-key max(sidx) window behind is_trailing. max_ground_speed_i keeps the
+# lossy DB coercion: flights.max_ground_speed INTEGER (schema.sql:40) — Go
+# float64 -> Postgres INTEGER rounds half-to-even, so bround (not round:
+# half-away diverges at .5); the oracle mirrors with DuckDB round_even.
+_ROLLUP_SQL = f"""SELECT {session_id_sql('started_at', 'sidx')} AS session_id,
+  source, `key`, started_at, ended_at, n_events, callsign, first_lat,
+  first_lon, last_lat, last_lon, max_altitude, max_ground_speed,
+  CAST(bround(max_ground_speed) AS BIGINT) AS max_ground_speed_i,
+  is_trailing AS is_open
+FROM (SELECT source, `key`, sidx, min(ts) AS started_at,
+    max(CASE WHEN (NOT is_trailing) OR close_trailing THEN ts END) AS ended_at,
+    count(1) AS n_events,
+    max_by(callsign_m, _ord) AS callsign,
+    min_by(lat_m, _ord) AS first_lat, min_by(lon_m, _ord) AS first_lon,
+    max_by(lat_m, _ord) AS last_lat, max_by(lon_m, _ord) AS last_lon,
+    max(altitude_m) AS max_altitude, max(ground_speed_m) AS max_ground_speed,
+    any_value(is_trailing) AS is_trailing
+  FROM (SELECT *, {ORD_SQL} AS _ord FROM {{e}}) _e
+  GROUP BY source, `key`, sidx) _r"""
 
 
 def session_rollup(sess_events: DataFrame) -> DataFrame:
@@ -188,41 +229,4 @@ def session_rollup(sess_events: DataFrame) -> DataFrame:
     clustering): no second shuffle. first/last by arrival order are
     min_by/max_by over ``ord_col()``; while that is a struct the aggregate
     plans as SortAggregate, not HashAggregate (ROADMAP direction 3)."""
-    e = sess_events.withColumn("_ord", ord_col())
-    agg = e.groupBy("source", "key", "sidx").agg(
-        F.min("ts").alias("started_at"),
-        # a literal close_trailing folds the when away, and with it the
-        # per-key max(sidx) window behind is_trailing
-        F.max(F.when(~F.col("is_trailing") | F.col("close_trailing"),
-                     F.col("ts"))).alias("ended_at"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.expr("max_by(callsign_m, _ord)").alias("callsign"),
-        F.expr("min_by(lat_m, _ord)").alias("first_lat"),
-        F.expr("min_by(lon_m, _ord)").alias("first_lon"),
-        F.expr("max_by(lat_m, _ord)").alias("last_lat"),
-        F.expr("max_by(lon_m, _ord)").alias("last_lon"),
-        F.max("altitude_m").alias("max_altitude"),
-        F.max("ground_speed_m").alias("max_ground_speed"),
-        F.any_value("is_trailing").alias("is_trailing"),
-    )
-    return agg.select(
-        session_id_col(F.col("started_at"), F.col("sidx")).alias("session_id"),
-        "source",
-        "key",
-        "started_at",
-        "ended_at",
-        "n_events",
-        "callsign",
-        "first_lat",
-        "first_lon",
-        "last_lat",
-        "last_lon",
-        "max_altitude",
-        "max_ground_speed",
-        # lossy DB coercion preserved: flights.max_ground_speed INTEGER
-        # (schema.sql:40) — Go float64 -> Postgres INTEGER rounds
-        # half-to-even, so bround (not round: half-away diverges at .5);
-        # the oracle mirrors with DuckDB round_even.
-        F.bround("max_ground_speed").cast("bigint").alias("max_ground_speed_i"),
-        F.col("is_trailing").alias("is_open"),
-    )
+    return frame_sql(_ROLLUP_SQL, e=sess_events)

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sbse import EPOCH0_S
 from sbse.dialect import SPARK, token_table_sql
+from sbse.session import frame_sql
 
 TOKEN_SCHEMA_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -55,7 +56,7 @@ def token_table_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the 2 scan cores cost more than the widening saved; hashing a
         # unique deterministic key needs no sort and spreads perfectly.
         ev = ev.repartition(par, "event_id")
-    return spark.sql(token_table_sql(SPARK, "{ev}"), ev=ev)
+    return frame_sql(token_table_sql(SPARK, "{ev}"), ev=ev)
 
 
 def synth(spark: SparkSession, n_rows: int, n_keys: int = 100,

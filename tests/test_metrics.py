@@ -105,9 +105,11 @@ def test_distinct_scale_twin_accuracy(spark):
     assert abs(row.approx - row.exact) <= max(3, 0.05 * row.exact), row
 
 
-def _column_form_metrics(decoded, sessions):
+def _column_form_metrics(decoded, sessions, proc_ms=None):
     """The Column-API build of ``run_metrics`` (one py4j call per node),
     kept as the reference the SQL-text build must equal."""
+    from sbse.metrics import clamp_u64
+
     hist = F.array(*[
         F.sum(F.when(F.col("ok") & (F.col("msg_type") == i), 1).otherwise(0))
         .cast("bigint") for i in range(10)
@@ -123,6 +125,9 @@ def _column_form_metrics(decoded, sessions):
         )).alias("active_keys"),
         hist,
     )
+    if proc_ms is not None:
+        m = m.withColumn("proc_time_ms",
+                         clamp_u64(F.lit(str(proc_ms)).cast("decimal(38,0)")))
     s = sessions.agg(
         F.count(F.lit(1)).alias("created_sessions"),
         F.sum(F.when(F.col("ended_at").isNotNull(), 1).otherwise(0))
@@ -169,3 +174,9 @@ def test_sql_text_metrics_equal_column_form(spark):
                       r"(?<=\*\()\d+(?=\))", "", text)
 
     assert plan(got) == plan(want)
+    for proc_ms in (12345, (1 << 64) - 1):
+        got = run_metrics(decoded, sessions, proc_ms=proc_ms)
+        want = _column_form_metrics(decoded, sessions, proc_ms)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        assert plan(got) == plan(want)

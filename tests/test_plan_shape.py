@@ -7,7 +7,8 @@ builders therefore add each dependency level's columns in one ``select``;
 these tests count ``Window`` operators in executed plans (AQE off, so the
 plan is final) so that a reintroduced chain fails here instead of quietly
 costing run time, and reject a ``withColumn`` call inside a loop anywhere
-in ``sbse/``."""
+in ``sbse/``. Plan building is priced too: a ``run_pipeline`` build stays
+within a py4j round-trip budget."""
 
 import ast
 import pathlib
@@ -87,6 +88,41 @@ def test_chunked_stage_window_count(spark, states):
     assert _windows(q34_sessions_bigkey(spark, SF_DIR)) == 7
 
 
+def test_dataframe_debugging_off(spark):
+    """``get_spark`` turns PySpark's per-Column call-site capture off; with
+    it on, every Column call makes ~6 extra py4j round trips."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+@pytest.mark.parametrize("kw", [{}, {"bigkey_chunk_ms": 120_000, "cache_tiers": True}],
+                         ids=["plain", "bigkey"])
+def test_pipeline_build_round_trips(spark, monkeypatch, kw):
+    """Building ``run_pipeline``'s plans costs O(stages) py4j round trips,
+    not one per expression node: each stage is SQL text, one JVM call to
+    analyse. The count covers every ``send_command`` while the outputs are
+    built (proxy deletes from py4j's finalizer thread included), and the
+    chunked route's one ``localCheckpoint`` call but not the jobs it runs
+    inside the JVM. The Column-API build took ~4k (plain) and ~6k (bigkey)."""
+    from sbse.pipeline import run_pipeline
+    from sbse.tokens import synth
+
+    tok = synth(spark, 5_000)
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    out = run_pipeline(tok, gap_ms=30_000, **kw)
+    monkeypatch.undo()
+    for df in out.values():
+        if df.is_cached:
+            df.unpersist()
+    assert len(calls) <= 1_000, len(calls)
+
+
 def test_no_with_column_in_loops():
     """A ``withColumn`` inside a ``for``/``while`` loop (comprehensions
     included) builds one projection per iteration; build the columns as a
@@ -107,34 +143,81 @@ def test_no_with_column_in_loops():
     assert not hits, sorted(set(hits))
 
 
-def _calls(attr: str) -> set:
-    """(file, enclosing top-level function) of every ``.attr(...)`` call in
-    ``sbse/`` — for orderBy, only those ordering by ("ts", "seq")."""
+# The (ts, seq) window order and the LOCF nullif as SQL text. The DuckDB
+# oracle (oracle.py) is the independent reference the engine is checked
+# against, so its SQL is not an engine route and its text is not scanned.
+_TS_SEQ_ORDER = re.compile(r"ORDER\s+BY\s+`?ts`?\s*(?:ASC\s*)?,\s*`?seq`?\b",
+                           re.IGNORECASE)
+_NULLIF = re.compile(r"\bnullif\s*\(", re.IGNORECASE)
+
+
+def _top_name(node):
+    """The name a top-level statement defines: a function or class name,
+    or the target of a module-level assignment."""
+    if isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+        targets = getattr(node, "targets", None) or [node.target]
+        return ", ".join(ast.unparse(t) for t in targets)
+    return getattr(node, "name", None)
+
+
+def _sites(tree, attr: str, text, args=None, scan_text: bool = True) -> set:
+    """Top-level names in ``tree`` holding either form of one construct:
+    a Column call ``.attr(...)`` (whose constant arguments are ``args``,
+    when given), or a string literal, f-string parts included, that
+    ``text`` matches."""
     hits = set()
-    for path in sorted(SBSE.rglob("*.py")):
-        tree = ast.parse(path.read_text(), filename=str(path))
-        for fn in tree.body:
-            for node in ast.walk(fn):
-                if not (isinstance(node, ast.Call)
-                        and isinstance(node.func, ast.Attribute)
-                        and node.func.attr == attr):
-                    continue
-                args = [a.value for a in node.args
-                        if isinstance(a, ast.Constant)]
-                if attr != "orderBy" or args == ["ts", "seq"]:
-                    hits.add((path.relative_to(SBSE).as_posix(),
-                              getattr(fn, "name", None)))
+    for top in tree.body:
+        for node in ast.walk(top):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == attr
+                    and (args is None or [a.value for a in node.args
+                                          if isinstance(a, ast.Constant)] == args)):
+                hits.add(_top_name(top))
+            if (scan_text and isinstance(node, ast.Constant)
+                    and isinstance(node.value, str) and text.search(node.value)):
+                hits.add(_top_name(top))
     return hits
+
+
+def _event_order_sites() -> tuple[set, set]:
+    """(file, top-level name) of every (ts, seq) window order and every
+    LOCF nullif in ``sbse/``, in either form."""
+    order, nullif = set(), set()
+    for path in sorted(SBSE.rglob("*.py")):
+        rel = path.relative_to(SBSE).as_posix()
+        tree = ast.parse(path.read_text(), filename=str(path))
+        text = rel != "oracle.py"
+        order |= {(rel, n) for n in _sites(tree, "orderBy", _TS_SEQ_ORDER,
+                                           ["ts", "seq"], text)}
+        nullif |= {(rel, n) for n in _sites(tree, "nullif", _NULLIF,
+                                            scan_text=text)}
+    return order, nullif
 
 
 def test_one_event_order_pass_per_family():
     """Each per-key event-order window family has one implementation that
     the plain and chunked routes share: the (ts, seq) order is built only
     in the session pass and the counter lag, and the LOCF ``nullif`` only
-    in the session pass."""
-    assert _calls("orderBy") == {("sessionize.py", "local_pass"),
-                                 ("rollup.py", "counter_lag")}
-    assert _calls("nullif") == {("sessionize.py", "local_pass")}
+    in the session pass — as SQL text or as a Column call."""
+    order, nullif = _event_order_sites()
+    assert order == {("sessionize.py", "local_pass"),
+                     ("rollup.py", "counter_lag")}
+    assert nullif == {("sessionize.py", "local_pass")}
+
+
+def test_event_order_guard_sees_both_forms():
+    """The guard above finds a second copy in either form: SQL text (plain
+    or f-string, any case and spacing, backticked) or a Column call."""
+    tree = ast.parse(
+        'def a(p):\n    return f"OVER (PARTITION BY {p} order by `ts`,  seq)"\n'
+        'def b(w):\n    return w.orderBy("ts", "seq")\n'
+        'def c(w):\n    return w.orderBy("ts")\n'
+        'X = "lag(v) OVER (ORDER BY ts ASC, seq)"\n'
+        'def d(F, c):\n    return F.nullif(c, F.lit(0))\n'
+        'def e():\n    return "last(NULLIF (x, 0), true)"\n')
+    assert _sites(tree, "orderBy", _TS_SEQ_ORDER, ["ts", "seq"]) == {"a", "b", "X"}
+    assert _sites(tree, "nullif", _NULLIF) == {"d", "e"}
 
 
 def _is_accumulate(node) -> bool:
