@@ -37,9 +37,9 @@ def t(label, fn, runs=2):
 def counter_chunked_variant(states, unit, chunk_ms, mode):
     from sbse.bigkey import KEY_COLS, _with_chunk
     from sbse.rollup import counter_tier
-    from sbse.sessionize import ord_col
+    from sbse.sessionize import ORD_SQL
 
-    e = _with_chunk(states, chunk_ms).withColumn("_ord", ord_col())
+    e = _with_chunk(states, chunk_ms).withColumn("_ord", F.expr(ORD_SQL))
     wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
     e = e.withColumn("_prev_loc", F.lag("n_tok").over(wc))
     e = e.localCheckpoint(eager=False)
@@ -136,7 +136,7 @@ def profile_q34(spark, sf_dir):
     session rollup) at sf_dir."""
     from sbse.bigkey import CHUNK_MS_DEFAULT, KEY_COLS, _with_chunk
     from sbse.queries import _decoded
-    from sbse.sessionize import _MERGE_FIELDS, ord_col, states_only
+    from sbse.sessionize import _MERGE_FIELDS, ORD_SQL, states_only
 
     gap_ms, chunk_ms = 30_000, 120_000
     rollup_reads = {"callsign", "lat", "lon", "altitude", "ground_speed"}
@@ -169,7 +169,7 @@ def profile_q34(spark, sf_dir):
             F.last(F.when(F.col("_lnew") == 1, F.col("ts")),
                    ignorenulls=True).over(wcr),
         )
-        e = e.withColumn("_ord", ord_col())
+        e = e.withColumn("_ord", F.expr(ORD_SQL))
         return e
 
     t("q34.window_ckpt", lambda: noop(build_e()))

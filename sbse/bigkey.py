@@ -50,7 +50,7 @@ from sbse import GAP_MS_NORTH
 from sbse.rollup import counter_lag, counter_tier
 from sbse.session import frame_sql
 from sbse.sessionize import (_MERGE_FIELDS, KEY_COLS, ORD_SQL, ROWS_TO_HERE,
-                             cols_sql, local_pass, ord_col, project,
+                             cols_sql, local_pass, project,
                              session_id_sql, session_rollup, sql_lit)
 
 # 1 hour of events per window partition by default: at the reference's
@@ -227,7 +227,7 @@ def counter_increase_chunked(states: DataFrame, unit: str = "hour",
     # no checkpoint: it resets outputPartitioning to Unknown (Spark 4.1),
     # so the join probe would re-exchange; as in locf_sessionize_chunked,
     # the summary and the join probe each run their own window exchange.
-    summ = e.select("*", ord_col().alias("_ord")).groupBy(
+    summ = e.select("*", F.expr(ORD_SQL).alias("_ord")).groupBy(
         *KEY_COLS, "_chunk").agg(F.expr("max_by(n_tok, _ord)").alias("_fin"))
     ws = Window.partitionBy(*KEY_COLS).orderBy("_chunk")
     carry = summ.select(

@@ -63,16 +63,16 @@ DATE_COLS = {
 }
 
 
-def partition_fingerprints(labeled: DataFrame, id_col: str = "doc_id") -> dict:
+def partition_fingerprints(labeled: DataFrame) -> dict:
     """Order-insensitive content fingerprints for EVERY ck_part in one scan:
-    {part: (row_count, bit_xor(xxhash64(id, n_tok, tokens)))}. bit_xor is
+    {part: (row_count, bit_xor(xxhash64(doc_id, n_tok, tokens)))}. bit_xor is
     commutative — identical no matter how the data is partitioned. Empty
     partitions are simply absent (callers treat missing as (0, 0))."""
     rows = (
         labeled.groupBy("ck_part")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.expr(f"bit_xor(xxhash64({id_col}, n_tok, tokens))").alias("h"),
+            F.expr("bit_xor(xxhash64(doc_id, n_tok, tokens))").alias("h"),
         )
         .collect()
     )

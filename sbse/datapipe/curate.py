@@ -203,9 +203,7 @@ def pack_sequences(docs: DataFrame, seq_len: int = 512,
     )
 
 
-def write_packed_corpus(docs: DataFrame, path: str, seq_len: int = 512,
-                        shard_nibbles: int = 1,
-                        files_per_shard_hint: int = 1) -> None:
+def write_packed_corpus(docs: DataFrame, path: str, seq_len: int = 512) -> None:
     """Physically write the packing manifest the way a training loader reads
     it: range-partitioned by (shard_id, start_offset) and sorted within
     every file, so each parquet file covers a contiguous slice of one
@@ -217,10 +215,10 @@ def write_packed_corpus(docs: DataFrame, path: str, seq_len: int = 512,
     physical strategy Spark's range-exchange machinery uses for a global
     sort, minus the merge step a loader never needs.
     """
-    m = pack_sequences(docs, seq_len=seq_len, shard_nibbles=shard_nibbles)
-    n_files = max(1, (16 ** shard_nibbles) * files_per_shard_hint)
+    m = pack_sequences(docs, seq_len=seq_len)
+    # one file per shard: pack_sequences' shard key is one hex digit
     (
-        m.repartitionByRange(n_files, "shard_id", "start_offset")
+        m.repartitionByRange(16, "shard_id", "start_offset")
         .sortWithinPartitions("shard_id", "start_offset")
         .write.mode("overwrite").parquet(path)
     )
@@ -265,30 +263,28 @@ def _rate_hex4(rate: float) -> str:
     return "zzzz" if v >= 65536 else format(v, "04x")
 
 
-def stratified_sample(
-    docs: DataFrame,
-    rates: dict[str, float] | None = None,
-    default_rate: float = DEFAULT_RATE,
-) -> DataFrame:
+def stratified_sample(docs: DataFrame,
+                      rates: dict[str, float] | None = None) -> DataFrame:
     """Deterministic per-stratum Bernoulli sample (stratum = lang).
 
     Keeps a document iff the first 4 hex digits of md5('samp|' || doc_id)
-    fall below the stratum's rate threshold — map-only, shuffle-free, no
-    per-stratum sort, so a billion-doc stratum costs the same per row as a
-    thousand-doc one. Deterministic: re-running selects the same rows, and
-    adding documents never flips existing decisions (hash-threshold sampling
-    is append-stable — the property training pipelines need for incremental
-    corpus refreshes).
+    fall below the stratum's rate threshold (``rates``, default
+    ``STRATA_RATES``; ``DEFAULT_RATE`` for other languages) — map-only,
+    shuffle-free, no per-stratum sort, so a billion-doc stratum costs the
+    same per row as a thousand-doc one. Deterministic: re-running selects
+    the same rows, and adding documents never flips existing decisions
+    (hash-threshold sampling is append-stable — the property training
+    pipelines need for incremental corpus refreshes).
 
     Returns (doc_id, lang, source, samp_hex, rate) for sampled rows only.
     """
-    return sample_filter(docs, rates, default_rate).select(
+    return sample_filter(docs, rates).select(
         "doc_id", "lang", "source", "samp_hex", "rate"
     )
 
 
-def sample_filter(docs: DataFrame, rates: dict[str, float] | None = None,
-                  default_rate: float = DEFAULT_RATE) -> DataFrame:
+def sample_filter(docs: DataFrame,
+                  rates: dict[str, float] | None = None) -> DataFrame:
     """The stratified-sample predicate applied in place: keeps every input
     column (plus samp_hex and rate) so pipeline stages can sample without a
     join back. stratified_sample is the narrow projection of this."""
@@ -296,8 +292,8 @@ def sample_filter(docs: DataFrame, rates: dict[str, float] | None = None,
     samp = F.substring(
         F.md5(F.concat(F.lit("samp|"), F.col("doc_id").cast("string"))), 1, 4
     )
-    rate = F.lit(float(default_rate))
-    thresh = F.lit(_rate_hex4(default_rate))
+    rate = F.lit(float(DEFAULT_RATE))
+    thresh = F.lit(_rate_hex4(DEFAULT_RATE))
     for lang, r in rates.items():
         rate = F.when(F.col("lang") == lang, F.lit(float(r))).otherwise(rate)
         thresh = F.when(F.col("lang") == lang, F.lit(_rate_hex4(r))).otherwise(thresh)
@@ -310,11 +306,7 @@ def sample_filter(docs: DataFrame, rates: dict[str, float] | None = None,
     )
 
 
-def curation_pipeline(docs: DataFrame, seq_len: int = 512,
-                      rates: dict[str, float] | None = None,
-                      default_rate: float = DEFAULT_RATE,
-                      flag_frac: float = 0.05,
-                      n: int = CONTAM_NGRAM) -> DataFrame:
+def curation_pipeline(docs: DataFrame, seq_len: int = 512) -> DataFrame:
     """The full release chain a training corpus goes through, composed from
     this module's operators: quality gate -> exact dedup (keep the lowest
     doc_id per md5(text)) -> benchmark-contamination drop (benchmark docs
@@ -345,9 +337,9 @@ def curation_pipeline(docs: DataFrame, seq_len: int = 512,
     # convention; Catalyst prunes its count aggregates here.
     keeper = exact_dedup(d).select(F.col("keeper_doc_id").alias("doc_id"))
     d = d.join(keeper, "doc_id", "left_semi")
-    flagged = (contamination_screen(d, n=n, flag_frac=flag_frac)
+    flagged = (contamination_screen(d)
                .where(F.col("contaminated")).select("doc_id"))
     d = (d.where(F.col("doc_id") % BENCH_STRIDE != 0)
          .join(flagged, "doc_id", "left_anti"))
-    d = sample_filter(d, rates, default_rate)
+    d = sample_filter(d)
     return pack_sequences(d.select("doc_id", "text"), seq_len=seq_len)

@@ -20,12 +20,29 @@
 * ``simhash_candidates_adaptive`` — the radius pair set through one of two
   routes chosen by doc count: the sweep up to ``SWEEP_MAX_DOCS``, the
   multi-block tables above it.
+
+Both Jaccard operators drop shingles in more than ``MAX_DF`` documents
+through ``cap_shingle_df`` and keep pairs through one tail, ``_jaccard``;
+the shingle length, the cap and the MinHash shape are module constants
+that the DuckDB oracle's literals match.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Word n-gram length of the Jaccard shingles.
+SHINGLE_N = 3
+# Document-frequency cap: shingles in more documents are dropped before any
+# shingle or band join (``cap_shingle_df``); the oracle applies it too.
+MAX_DF = 1000
+# Row-count buckets of ``hot_shingles``' pruning pass.
+HOT_BUCKETS = 1 << 17
+# MinHash signature length and LSH bands (k / bands rows per band); the
+# oracle's 8 seeds and 4 x 2 bands.
+MINHASH_K = 8
+MINHASH_BANDS = 4
 
 
 def raw_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
@@ -60,8 +77,7 @@ def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     return raw_shingles(docs, n).distinct()
 
 
-def hot_shingles(sh: DataFrame, max_df: int,
-                 n_buckets: int = 1 << 17) -> DataFrame:
+def hot_shingles(sh: DataFrame, max_df: int) -> DataFrame:
     """Shingles whose DISTINCT-document frequency exceeds ``max_df`` (the
     stop-shingle set), found EXACTLY with a bucket-pruned two-pass count.
 
@@ -70,7 +86,7 @@ def hot_shingles(sh: DataFrame, max_df: int,
     1M-doc bench), so the map-side partial agg reduces nothing and the
     exchange carries every distinct string — profiled at 77s of the 110s
     operator it used to anchor. Pass 1 instead counts ROWS by
-    ``xxhash64(shingle) % n_buckets``: fixed-width long keys with real
+    ``xxhash64(shingle) % HOT_BUCKETS``: fixed-width long keys with real
     map-side reduction, and a bucket whose total row count is <= max_df
     cannot contain a shingle with distinct-doc frequency > max_df, so it
     is pruned (row count >= distinct-doc count; duplicates and collisions
@@ -80,7 +96,7 @@ def hot_shingles(sh: DataFrame, max_df: int,
     duplicate shingles (raw_shingles) or not (shingles): the answer is
     identical."""
     b = sh.withColumn(
-        "_bkt", F.pmod(F.xxhash64("shingle"), F.lit(n_buckets)))
+        "_bkt", F.pmod(F.xxhash64("shingle"), F.lit(HOT_BUCKETS)))
     hot_bkts = (
         b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("bc"))
         .filter(F.col("bc") > max_df).select("_bkt")
@@ -94,12 +110,12 @@ def hot_shingles(sh: DataFrame, max_df: int,
     )
 
 
-def cap_shingle_df(sh: DataFrame, max_df: int | None) -> DataFrame:
+def cap_shingle_df(sh: DataFrame, max_df: int) -> DataFrame:
     """Drop shingles whose document frequency exceeds ``max_df``. A single
     stop-shingle with df=d makes the shingle self-join emit O(d²) rows for
     that group — at 100 TB one hot shingle is a quadratic blowup. Capping df
     bounds every group; Jaccard becomes 'Jaccard over informative shingles'
-    (the oracle applies the identical cap). None disables.
+    (the oracle applies the identical cap).
 
     Shape (round 5): the old version inner-joined ``sh`` against the KEPT
     shingle list — nearly every distinct shingle (~40M rows at the 1M-doc
@@ -110,8 +126,6 @@ def cap_shingle_df(sh: DataFrame, max_df: int | None) -> DataFrame:
     natural corpus. Same rows out. If a corpus ever overflows the broadcast
     (pathological: most mass in stop-shingles), drop the hint — AQE picks
     the strategy from runtime stats."""
-    if max_df is None:
-        return sh
     return sh.join(F.broadcast(hot_shingles(sh, max_df)), "shingle",
                    "left_anti")
 
@@ -124,23 +138,23 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def _jaccard_from_pairs(pairs: DataFrame, card: DataFrame, threshold: float) -> DataFrame:
-    ca = card.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a")
-    cb = card.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b")
-    j = (
-        pairs.join(ca, "doc_a").join(cb, "doc_b")
-        .withColumn(
+def _jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) of the ``pairs`` whose Jaccard similarity
+    inter / (n_a + n_b - inter) is at least ``threshold``; ``pairs`` holds
+    the intersection size ``inter`` and the set sizes ``n_a``, ``n_b``."""
+    return (
+        pairs.withColumn(
             "jaccard",
             F.col("inter").cast("double")
             / (F.col("n_a") + F.col("n_b") - F.col("inter")),
         )
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
     )
-    return j.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
 
 
-def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2, n: int = 3,
-                        max_df: int | None = 1000) -> DataFrame:
-    sh = cap_shingle_df(shingles(docs, n), max_df)
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2) -> DataFrame:
+    sh = cap_shingle_df(shingles(docs, SHINGLE_N), MAX_DF)
     card = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "lang", "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("lang").alias("lang_b"),
@@ -155,17 +169,16 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2, n: int = 3,
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return _jaccard_from_pairs(pairs, card, threshold)
+    ca = card.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a")
+    cb = card.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b")
+    return _jaccard(pairs.join(ca, "doc_a").join(cb, "doc_b"), threshold)
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame, threshold: float = 0.2, k: int = 8, bands: int = 4,
-    max_df: int | None = 1000,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.2) -> DataFrame:
     """MinHash + LSH banding; candidates verified with exact Jaccard.
 
     Hash = md5(seed|shingle), min taken lexicographically — deterministic
-    and portable (identical in the DuckDB oracle). Shingles over ``max_df``
+    and portable (identical in the DuckDB oracle). Shingles over ``MAX_DF``
     documents are dropped first (cap_shingle_df) so no band group and no
     verify-join group can go quadratic on a stop-shingle.
 
@@ -180,6 +193,7 @@ def minhash_lsh_pairs(
     size per doc is bounded by doc word count; the cardinalities for the
     Jaccard denominator come free as ``size()`` of the same arrays, which
     also removes the two card joins."""
+    k, bands = MINHASH_K, MINHASH_BANDS
     rows = k // bands
     # ONE full-width exchange for the whole operator (round 5, take 2):
     # grams stay in whole-stage codegen (raw_shingles, WITH within-doc
@@ -195,10 +209,7 @@ def minhash_lsh_pairs(
     # F.transform variant avoided the shuffles but ran the gram + md5
     # lambdas through the interpreted expression path — measured 17x
     # slower than this codegen shape on the same corpus.
-    sh = raw_shingles(docs, 3)
-    if max_df is not None:
-        sh = sh.join(F.broadcast(hot_shingles(sh, max_df)), "shingle",
-                     "left_anti")
+    sh = cap_shingle_df(raw_shingles(docs, SHINGLE_N), MAX_DF)
     # no localCheckpoint (round 6): in Spark 4.1 it resets
     # outputPartitioning to Unknown AND blocks ReuseExchange; the three
     # consumers (verify x2, bands) share the one heavy shingle exchange at
@@ -253,18 +264,10 @@ def minhash_lsh_pairs(
         # least one shingle; keep that contract (matters at threshold 0.0)
         .filter(F.col("inter") >= 1)
     )
-    return (
-        j.withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard(j, threshold)
 
 
-def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """64-bit SimHash. Word bits come from the first 16 hex digits of
     md5(word) (bit b = bit (b%4) of digit b//4), which is portable: the
     DuckDB oracle reproduces the exact same bits, so q23 is hash-checked.
@@ -278,7 +281,7 @@ def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
     whole-stage codegen and ran ~6x slower). NULL-text docs are dropped;
     ``doc_id`` keeps its input type."""
     id_type = docs.schema["doc_id"].dataType.simpleString()
-    docs = docs.filter(F.col(text_col).isNotNull())
+    docs = docs.filter(F.col("text").isNotNull())
 
     def batches(it):
         import hashlib
@@ -307,7 +310,7 @@ def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
             # of a 37s batch — the real cost was the (n_occurrences x 64)
             # int64 bit matrix the old reduceat vote materialized, ~1 GB
             # per 2M-word batch.)
-            split = [t.split(" ") for t in pdf[text_col]]
+            split = [t.split(" ") for t in pdf["text"]]
             counts = np.array([len(ws) for ws in split], dtype=np.int64)
             if counts.sum():
                 flat = np.concatenate([np.asarray(ws, dtype=object)
@@ -348,7 +351,7 @@ def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 {"doc_id": ids, "simhash": sims.view(np.int64)}
             )
 
-    return docs.select("doc_id", text_col).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         batches, schema=f"doc_id {id_type}, simhash bigint"
     )
 

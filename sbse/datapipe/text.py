@@ -86,9 +86,9 @@ def fp_powers(window: int = FP_WINDOW) -> list[int]:
     return [pow(FP_BASE, window - 1 - t, FP_MOD) for t in range(window)]
 
 
-def doc_fingerprint(docs: DataFrame, window: int = FP_WINDOW) -> DataFrame:
+def doc_fingerprint(docs: DataFrame) -> DataFrame:
     """Rolling polynomial hash fingerprint: winnowing-style min over all
-    length-``window`` byte-window hashes. Fully vectorized: each Arrow batch
+    length-``FP_WINDOW`` byte-window hashes. Fully vectorized: each Arrow batch
     concatenates ALL docs into one byte buffer (the decode.py gather trick),
     computes every window hash in W vectorized passes, masks the windows
     that cross doc boundaries with a scatter-built difference array, and
@@ -100,7 +100,7 @@ def doc_fingerprint(docs: DataFrame, window: int = FP_WINDOW) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        W = window
+        W = FP_WINDOW
         P = fp_powers(W)
         UMAX = np.uint64(0xFFFFFFFFFFFFFFFF)
 

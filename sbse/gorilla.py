@@ -1,13 +1,15 @@
 """Gorilla time-series compression (Facebook's Gorilla paper, VLDB 2015):
 delta-of-delta timestamps + XOR-encoded float values, packed into binary
-blobs per (source, key) series.
+blobs, one per calendar month of each (source, key) series (``CHUNK_UNIT``).
 
 The reference stores rollup points uncompressed in TimescaleDB; the north
 rule adds Gorilla-compressed point storage inside Arrow-backed binary
 columns. Encode is one streamed ``mapInPandas`` pass over series-sorted
 partitions and decode one ``mapInPandas`` pass over blobs: Python is
 entered once per Arrow batch, never per series or per row, and the
-bit-packing loop is per point inside a batch.
+bit-packing loop is per point inside a batch. Stored blob tiers are
+``log_date``-partitioned by chunk month, so retention drops whole months
+and a range read prunes to the months it overlaps.
 
 Layout per blob (big-endian bit stream):
   [n:32][t0:64 ms][first value:64 raw]
@@ -254,30 +256,32 @@ def _encode_series(batches, value_col: str):
         yield pd.DataFrame(out)
 
 
-def encode_tier(tier: DataFrame, value_col: str = "n_tok_sum",
-                chunk_unit: str = "month") -> DataFrame:
+# Every blob holds one calendar month of one (source, key) series.
+CHUNK_UNIT = "month"
+
+
+def encode_tier(tier: DataFrame, value_col: str = "n_tok_sum") -> DataFrame:
     """Compress a rollup tier into one Gorilla blob per
-    (source, key, chunk_start) where chunk_start = date_trunc(chunk_unit).
+    (source, key, chunk_start) where chunk_start = date_trunc(CHUNK_UNIT).
 
     One streamed ``mapInPandas`` pass: points are hash-partitioned on
     (source, key, chunk_start) and sorted by series and bucket within each
     partition, so a series is a contiguous run of rows that may straddle
-    Arrow batches. Time-chunking bounds every series (and every later
-    decode of a blob) to one chunk of one key — a hot key's multi-year
+    Arrow batches. Monthly chunks bound every series (and every later
+    decode of a blob) to one month of one key — a hot key's multi-year
     series never has to fit in a single executor's memory, and retention
-    can drop whole chunks. ``chunk_unit=None`` restores one blob per key.
+    can drop whole chunks.
 
     Output: source, key, chunk_start, n_points, t_min, t_max, blob (binary).
     Points are (bucket_start ms, value_col as double), sorted by bucket."""
-    chunk = (f"date_trunc('{chunk_unit}', bucket_start)" if chunk_unit
-             else "to_timestamp('1970-01-01 00:00:00')")
     keys = ", ".join(f"`{k}`" for k in _SERIES_KEYS)
     # the repartition and the within-partition sort as DISTRIBUTE BY and
     # SORT BY: the whole frame below the Python stage is one JVM call
     points = frame_sql(
-        f"SELECT source, `key`, bucket_start, `{value_col}`, {chunk} AS "
-        f"chunk_start FROM {{tier}} DISTRIBUTE BY {keys} "
-        f"SORT BY {keys}, bucket_start", tier=tier)
+        f"SELECT source, `key`, bucket_start, `{value_col}`, "
+        f"date_trunc('{CHUNK_UNIT}', bucket_start) AS chunk_start "
+        f"FROM {{tier}} DISTRIBUTE BY {keys} SORT BY {keys}, bucket_start",
+        tier=tier)
     return points.mapInPandas(
         functools.partial(_encode_series, value_col=value_col),
         schema="source string, key bigint, chunk_start timestamp, "
@@ -285,71 +289,43 @@ def encode_tier(tier: DataFrame, value_col: str = "n_tok_sum",
     )
 
 
-def write_blob_tier(tier: DataFrame, path: str, value_col: str = "n_tok_sum",
-                    chunk_unit: str = "month") -> dict:
+def write_blob_tier(tier: DataFrame, path: str,
+                    value_col: str = "n_tok_sum") -> dict:
     """Encode a rollup tier and store the blobs UNDER THE CATALOG LIFECYCLE:
-    ``log_date``-partitioned by ``chunk_start`` (one date dir per chunk
-    period), with a snapshot manifest. Retention then drops whole chunk
+    ``log_date``-partitioned by ``chunk_start`` (one date dir per month),
+    with a snapshot manifest. Retention then drops whole chunk
     partitions as O(1) directory removals — the reference's hypertable
     chunk-drop semantics (002_retention_policies.go:7-11) applied to the
     compressed store, not just the row tiers. Returns the snapshot."""
     from sbse import catalog
 
-    blobs = encode_tier(tier, value_col, chunk_unit=chunk_unit)
+    blobs = encode_tier(tier, value_col)
     return catalog.write_partitioned(blobs, path, date_col="chunk_start")
 
 
-def _chunk_floor(date_str: str, chunk_unit: str | None) -> str:
-    """Largest possible chunk-START date at-or-before ``date_str`` for a
-    chunk of ``chunk_unit`` — i.e. date_trunc(chunk_unit, date). Sub-day
-    units (hour/minute) never cross a date boundary, so day grain covers
-    them."""
+def _chunk_floor(date_str: str) -> str:
+    """The start date of the monthly chunk that holds ``date_str``."""
     import datetime as dt
 
-    d = dt.date.fromisoformat(date_str)
-    if chunk_unit == "month":
-        d = d.replace(day=1)
-    elif chunk_unit in ("year",):
-        d = d.replace(month=1, day=1)
-    elif chunk_unit == "quarter":
-        d = d.replace(month=((d.month - 1) // 3) * 3 + 1, day=1)
-    elif chunk_unit == "week":
-        d = d - dt.timedelta(days=d.weekday())
-    # day / hour / minute: sub-day chunks never cross a date boundary, so
-    # the date itself is the floor. chunk_unit=None (single unbounded chunk
-    # at 1970-01-01) is NOT handled here — read_blob_tier must disable
-    # partition pruning entirely for it (ADVICE r4: flooring the requested
-    # start to its own date pruned the lone 1970 chunk and silently read
-    # zero rows).
-    return d.isoformat()
+    return dt.date.fromisoformat(date_str).replace(day=1).isoformat()
 
 
 def read_blob_tier(spark, path: str, value_col: str = "n_tok_sum",
-                   start: str | None = None, end: str | None = None,
-                   chunk_unit: str | None = "month") -> DataFrame:
+                   start: str | None = None, end: str | None = None) -> DataFrame:
     """Partition-pruned read + decode of a stored blob tier, with the range
     semantics of the row-grain ``catalog.read_partitioned``: decoded points
     whose bucket day lies in [start, end] ('yyyy-MM-dd', inclusive).
 
     A chunk partition is labeled by its chunk START but covers a whole
-    ``chunk_unit`` period — pruning must be by range OVERLAP, not start
-    containment (a start of '2024-01-15' must still read the month chunk
-    labeled 2024-01-01; the reference's hypertable chunk exclusion is
+    month — pruning must be by range OVERLAP, not start containment (a
+    start of '2024-01-15' must still read the month chunk labeled
+    2024-01-01; the reference's hypertable chunk exclusion is
     overlap-based, 002_retention_policies.go:7-11). So the partition prune
     widens ``start`` down to its chunk boundary, and decoded points are then
-    row-filtered to the exact requested day range. Pass the same
-    ``chunk_unit`` the tier was written with.
-
-    ``chunk_unit=None`` tiers live in ONE chunk partition labeled
-    1970-01-01 covering all time, so partition pruning is disabled for
-    them (any start after 1970 would prune the lone chunk — ADVICE r4);
-    the row-level bucket_start filters below still apply."""
+    row-filtered to the exact requested day range."""
     from sbse import catalog
 
-    scan_start = (
-        _chunk_floor(start, chunk_unit)
-        if (start is not None and chunk_unit is not None) else None
-    )
+    scan_start = _chunk_floor(start) if start is not None else None
     blobs = catalog.read_partitioned(spark, path, start=scan_start, end=end)
     out = decode_tier(blobs.drop("log_date"), value_col)
     if start is not None:

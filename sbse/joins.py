@@ -3,14 +3,18 @@
 The reference has no relational joins — its lookups are key-value reads
 (J1/J2 at cmd/tracker/main.go:118-123,191-199). Re-expressed relationally:
 
-* ``attribute_events_to_sessions`` — J1's re-attribution form: an interval
-  join of events to session [started_at, ended_at] ranges with equi keys
-  (source, key). The equi keys make it a shuffled sort-merge join, not a
-  nested loop — scalable.
 * ``asof_join`` — the time-series classic (latest right row with
-  right_ts <= left_ts per key). Implemented as union + window LOCF, i.e.
+  right_ts <= left ts per key). Implemented as union + window LOCF, i.e.
   ONE shuffle on the key, no range-join blowup — the Spark-native scale
   path for 100 TB.
+* ``attribute_events_to_sessions`` — J1's re-attribution form: each event
+  matched to the session of its (source, key) whose
+  [started_at, ended_at] contains its ts. Gap sessions partition a key's
+  timeline, so the containing session is the latest one started at or
+  before the event: the as-of join plus the containment filter. Sessions
+  that overlap are refused with an error, not silently given to the
+  latest one; the generic interval join that would pair an event with
+  every containing session is the oracle in ``tests/test_joins.py``.
 """
 
 from __future__ import annotations
@@ -19,60 +23,50 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def attribute_events_to_sessions(events: DataFrame, sessions: DataFrame,
-                                 assume_disjoint: bool = False) -> DataFrame:
-    """Interval join: each event row matched to the session whose
-    [started_at, ended_at] contains its ts (same source/key).
-
-    ``assume_disjoint`` (round 6): when the caller KNOWS a key's sessions
-    never overlap — always true for gap sessionization, whose sessions
-    partition the key's timeline — the containing session is simply the
-    latest one with started_at <= ts, so the interval join collapses to an
-    as-of join (one shuffle + window LOCF) plus the ended_at containment
-    filter. The generic sort-merge interval join pairs every same-key
+def attribute_events_to_sessions(events: DataFrame,
+                                 sessions: DataFrame) -> DataFrame:
+    """Each event row matched to the session whose [started_at, ended_at]
+    contains its ts (same source/key): the as-of join on started_at (one
+    shuffle + window LOCF) and the ended_at containment filter. The
+    generic sort-merge interval join pairs every same-key
     (event, session) combination before filtering — measured ~110M pair
-    evaluations / 10.3s at sf1.0 vs ~1.7s for the as-of form (identical
-    output on disjoint sessions, which q15's oracle pins). Default False
-    keeps the general contract: overlapping sessions yield one row per
-    containing session."""
-    if assume_disjoint:
-        right = sessions.select(
-            "source", "key", F.col("started_at").alias("_sts"),
-            "session_id", "started_at", "ended_at",
-        )
-        j = asof_join(
-            events, right, keys=["source", "key"], right_ts="_sts",
-            value_cols=["session_id", "started_at", "ended_at"],
-        )
-        return j.filter(
-            F.col("session_id").isNotNull()
-            & F.col("ts").between(F.col("started_at"), F.col("ended_at"))
-        )
-    s = sessions.select(
-        "session_id",
-        F.col("source").alias("s_source"),
-        F.col("key").alias("s_key"),
-        "started_at",
-        "ended_at",
-    )
-    return events.join(
-        s,
-        (F.col("source") == F.col("s_source"))
-        & (F.col("key") == F.col("s_key"))
-        & F.col("ts").between(F.col("started_at"), F.col("ended_at")),
-    ).drop("s_source", "s_key")
+    evaluations / 10.3s at sf1.0 vs ~1.7s for this form.
+
+    Exact only when a key's sessions are disjoint, as gap sessions always
+    are. The as-of window checks it on the way: a session that starts at
+    or before the end of the key's previous session (a NULL ended_at is
+    open-ended) raises an error, where the as-of form would attribute the
+    shared events to the later session only."""
+    keys, vals = ["source", "key"], ["session_id", "started_at", "ended_at"]
+    right = sessions.select(*keys, F.col("started_at").alias("_sts"), *vals)
+    u = _union_fill(events, right, keys, "_sts", vals, end_col="ended_at")
+    # one CASE, not a conjunction: the optimizer infers IS NOT NULL filters
+    # from a conjunction's comparisons and puts them first, which would drop
+    # a session row (ts is NULL there) before its overlap check
+    overlap = (F.col("_is_left") == 0) & F.col("_prev").isNotNull() & (
+        F.col("_prev.e").isNull() | (F.col("_prev.e") >= F.col("_ats")))
+    keep = F.when(overlap, F.raise_error(F.concat(
+        F.lit("attribute_events_to_sessions: overlapping sessions (one starts "
+              "at "), F.col("_ats").cast("string"),
+        F.lit(" before the previous one of its key ends, key "),
+        F.concat_ws("|", *[F.col(k).cast("string") for k in keys]),
+        F.lit("); the as-of attribution needs disjoint sessions")),
+    )).otherwise(
+        (F.col("_is_left") == 1) & F.col("_f_session_id").isNotNull()
+        & F.col("ts").between(F.col("_f_started_at"), F.col("_f_ended_at")))
+    return u.filter(keep).select(
+        *events.columns, *[F.col(f"_f_{c}").alias(c) for c in vals])
 
 
 def asof_join(
     left: DataFrame,
     right: DataFrame,
     keys: list[str],
-    left_ts: str = "ts",
     right_ts: str = "ts",
     value_cols: list[str] | None = None,
 ) -> DataFrame:
     """As-of join: for every left row, the latest right row with
-    right_ts <= left_ts on the same keys.
+    right_ts <= left ``ts`` on the same keys.
 
     Union + ordered-window LOCF: right rows sort before left rows at equal
     timestamps (inclusive <=), values carry forward, left rows are emitted
@@ -82,6 +76,21 @@ def asof_join(
     value_cols = value_cols or [
         c for c in right.columns if c not in (*keys, right_ts)
     ]
+    return _union_fill(left, right, keys, right_ts, value_cols).filter(
+        F.col("_is_left") == 1
+    ).select(*left.columns, *[F.col(f"_f_{c}").alias(c) for c in value_cols])
+
+
+def _union_fill(left: DataFrame, right: DataFrame, keys: list[str],
+                right_ts: str, value_cols: list[str],
+                end_col: str | None = None) -> DataFrame:
+    """The as-of plan before its filter: both sides' rows in one frame,
+    ``_is_left`` 1 on left rows, each ``value_cols`` column carried forward
+    as ``_f_{c}`` over the key's (``_ats``, ``_is_left``) order. With
+    ``end_col``, also ``_ats`` and ``_prev``: on every row, a struct
+    holding the ``end_col`` value (field ``e``) of the key's latest right
+    row before it, NULL when there is none; it is one more function of the
+    same window spec, so it adds no Window operator."""
     l_cols = [c for c in left.columns]
     clash = [c for c in value_cols if c in l_cols and c not in keys]
     if clash:
@@ -92,7 +101,7 @@ def asof_join(
         )
     lu = left.select(
         *l_cols,
-        F.col(left_ts).alias("_ats"),
+        F.col("ts").alias("_ats"),
         F.lit(1).alias("_is_left"),
         *[F.lit(None).cast(right.schema[c].dataType).alias(f"_v_{c}")
           for c in value_cols],
@@ -106,19 +115,22 @@ def asof_join(
         *[F.col(c).alias(f"_v_{c}") for c in value_cols],
     )
     u = lu.unionByName(ru)
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("_ats", "_is_left")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = u.select(
+    w = Window.partitionBy(*keys).orderBy("_ats", "_is_left")
+    prev = []
+    if end_col is not None:
+        # a struct, so that a right row with a NULL end still counts
+        prev = ["_ats", F.last(
+            F.when(F.col("_is_left") == 0,
+                   F.struct(F.col(f"_v_{end_col}").alias("e"))),
+            ignorenulls=True,
+        ).over(w.rowsBetween(Window.unboundedPreceding, -1)).alias("_prev")]
+    fill = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return u.select(
         *l_cols,
         "_is_left",
         *[
-            F.last(f"_v_{c}", ignorenulls=True).over(w).alias(f"_f_{c}")
+            F.last(f"_v_{c}", ignorenulls=True).over(fill).alias(f"_f_{c}")
             for c in value_cols
         ],
-    )
-    return filled.filter(F.col("_is_left") == 1).select(
-        *l_cols, *[F.col(f"_f_{c}").alias(c) for c in value_cols]
+        *prev,
     )

@@ -4,7 +4,11 @@ and the system_stats hypertable (schema.sql:49-66).
 One row per run (or per checkpoint partition): monotone counters, distinct
 gauges, and the per-msg-type histogram as ``array<long>`` length 10
 (index = msg_type; out-of-range types silently dropped, stats.go:89-93).
-uint64->int64 clamp semantics preserved (db/client.go:131-139)."""
+uint64->int64 clamp semantics preserved (db/client.go:131-139):
+``clamp_u64``/``clamp_read`` are the one persist/read-back clamp (q17).
+
+A5, processing time (stats.go:128-132), is measured wall time and so not
+a column here: the checkpoint manifests record it as ``proc_time_ms``."""
 
 from __future__ import annotations
 
@@ -53,23 +57,11 @@ _SESSION_AGGS = [
     f"{_count_if('ended_at IS NOT NULL')} AS ended_sessions",
     f"{_count_if('is_open')} AS active_sessions",
 ]
-_DEC = "DECIMAL(38,0)"
-
-
-def run_metrics(decoded: DataFrame, sessions: DataFrame | None = None,
-                proc_ms: int | None = None) -> DataFrame:
+def run_metrics(decoded: DataFrame, sessions: DataFrame | None = None) -> DataFrame:
+    """One row of run counters over ``decoded``, with the session counters
+    over ``sessions`` beside them when it is given."""
     sql = f"SELECT {', '.join(_RUN_AGGS)} FROM {{decoded}}"
     frames = {"decoded": decoded}
-    if proc_ms is not None:
-        # A5 processing-time counter (stats.go:128-132; persisted via the
-        # same u64 clamp as every counter, db/client.go:131-139). Callers
-        # pass measured wall time — nondeterministic, so this column stays
-        # out of oracle-checked outputs (checkpoint manifests carry it too).
-        # A string literal cast to decimal: a uint64-scale literal
-        # overflows a BIGINT one. clamp_u64 in SQL text.
-        proc = f"CAST(CAST('{int(proc_ms)}' AS {_DEC}) AS {_DEC})"
-        sql = (f"SELECT *, CAST(least({proc}, CAST({I64_MAX} AS {_DEC})) "
-               f"AS BIGINT) AS proc_time_ms FROM ({sql})")
     if sessions is not None:
         sql = (f"SELECT * FROM ({sql}) CROSS JOIN "
                f"(SELECT {', '.join(_SESSION_AGGS)} FROM {{sessions}})")

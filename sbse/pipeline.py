@@ -28,9 +28,8 @@ from sbse.decode import decode
 from sbse.gorilla import encode_tier
 from sbse.metrics import run_metrics
 from sbse.rollup import bucket_rollup, cascade, gapfill_locf, tier_tables
-from sbse.session import frame_sql
-from sbse.sessionize import (_MERGE_FIELDS, cols_sql, locf_sessionize, project,
-                             session_rollup, states_only)
+from sbse.sessionize import (_MERGE_FIELDS, locf_sessionize, project,
+                             session_rollup, states_only, validation_gate)
 
 
 def run_pipeline(
@@ -49,11 +48,9 @@ def run_pipeline(
     ``decode_mode`` is passed to ``decode``, whose one implementation is
     ``"expr"``; any other value raises ``ValueError``.
 
-    ``validation``: optional (key, valid) dim, broadcast-joined as the
-    validation gate (tracker main.go:118-123). ``default_valid`` controls
-    the missing-key semantics divergence (real Redis client: missing=false,
-    redis/client.go:141-143; unit-test mock: missing=true,
-    main_test.go:126-135).
+    ``validation``: optional (key, valid) dim for
+    ``sessionize.validation_gate``; ``default_valid`` is its verdict on a
+    key the dim lacks.
 
     ``bigkey_chunk_ms``: when set, the window stage runs through the
     monster-key-safe fused chunked pass (``bigkey.locf_sessionize_chunked``,
@@ -67,14 +64,7 @@ def run_pipeline(
     decoded = decode(token_df, mode=decode_mode)
     states = states_only(decoded)
     if validation is not None:
-        # USING (key) puts key first; every other column but valid follows
-        cols = ["key", *[c for c in [*states.columns, *validation.columns]
-                         if c not in ("key", "valid")]]
-        states = frame_sql(
-            f"SELECT /*+ BROADCAST(_v) */ {cols_sql(cols)} FROM {{states}} "
-            f"LEFT JOIN {{validation}} _v USING (`key`) "
-            f"WHERE coalesce(valid, {str(default_valid).lower()})",
-            states=states, validation=validation)
+        states = validation_gate(states, validation, default_valid)
     merged_cols = [*states.columns, *[f"{c}_m" for c, _ in _MERGE_FIELDS]]
     if bigkey_chunk_ms is None:
         sess_events = locf_sessionize(states, gap_ms=gap_ms,

@@ -13,11 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sbse import GAP_MS_REFERENCE
 from sbse.decode import decode
 from sbse.metrics import run_metrics
 from sbse.rollup import bucket_rollup, cascade, gapfill_locf
-from sbse.sessionize import (locf_merge, locf_sessionize, ord_col, session_rollup,
-                             states_only)
+from sbse.sessionize import (ORD_SQL, locf_merge, locf_sessionize,
+                             session_rollup, states_only, validation_gate)
 from sbse.tokens import token_table_from_events
 from sbse.datapipe import dedup as dd
 from sbse.datapipe import similarity as sim
@@ -114,7 +115,7 @@ def q02_metrics(spark, sf_dir):
 
 
 def q03_state_final(spark, sf_dir):
-    m = _merged(spark, sf_dir).withColumn("ord", ord_col())
+    m = _merged(spark, sf_dir).withColumn("ord", F.expr(ORD_SQL))
     return m.groupBy("source", "key").agg(
         F.max("ts").alias("last_ts"),
         F.expr("max_by(callsign_m, ord)").alias("callsign"),
@@ -140,7 +141,7 @@ def q04_sessions_gap30(spark, sf_dir):
 
 
 def q05_sessions_gap300(spark, sf_dir):
-    return _sessions(spark, sf_dir, 300_000)
+    return _sessions(spark, sf_dir, GAP_MS_REFERENCE)
 
 
 def q06_rollup_1m(spark, sf_dir):
@@ -220,7 +221,8 @@ def q11_validation_gate(spark, sf_dir):
         st.select("key").distinct()
         .withColumn("valid", F.col("key") % 10 != 7)
     )
-    gated = st.join(F.broadcast(dim), "key", "left").filter(F.col("valid"))
+    # missing = invalid, as the real Redis client (redis/client.go:141-143)
+    gated = validation_gate(st, dim, default_valid=False)
     return gated.groupBy("source").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("n_tok").cast("bigint").alias("n_tok_sum"),
@@ -255,13 +257,8 @@ def q15_interval_join(spark, sf_dir):
 
     st = states_only(_decoded(spark, sf_dir))
     sessions = session_rollup(locf_sessionize(st, gap_ms=30_000))
-    # gap sessions are disjoint per key, so the as-of form is exact
-    # (round 6: the generic interval join paired every same-key
-    # event x session combination — ~110M filtered pairs at sf1.0)
     attributed = attribute_events_to_sessions(
-        st.select("source", "key", "ts", "seq"), sessions,
-        assume_disjoint=True,
-    )
+        st.select("source", "key", "ts", "seq"), sessions)
     return attributed.groupBy("session_id").agg(
         F.count(F.lit(1)).alias("n_attributed")
     )
@@ -360,8 +357,7 @@ def q19_gorilla_roundtrip(spark, sf_dir):
     r = _rollup(spark, sf_dir, "hour").select(
         "source", "key", "bucket_start", "n_tok_sum"
     )
-    return decode_tier(encode_tier(r, "n_tok_sum", chunk_unit="month"),
-                       "n_tok_sum")
+    return decode_tier(encode_tier(r, "n_tok_sum"), "n_tok_sum")
 
 
 # --- training-data pipeline queries (documents / embeddings) ---------------

@@ -17,11 +17,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def retain(tier: DataFrame, now_ts: str, horizon_days: int,
-           bucket_col: str = "bucket_start") -> DataFrame:
-    """Rows younger than the horizon. ``now_ts`` is an explicit timestamp
-    string — never wall clock (determinism)."""
+def retain(tier: DataFrame, now_ts: str, horizon_days: int) -> DataFrame:
+    """Rows whose ``bucket_start`` is younger than the horizon. ``now_ts``
+    is an explicit timestamp string — never wall clock (determinism)."""
     return tier.filter(
-        F.col(bucket_col)
+        F.col("bucket_start")
         >= F.to_timestamp(F.lit(now_ts)) - F.expr(f"interval {horizon_days} days")
     )

@@ -21,6 +21,9 @@ groupBy:
   partial-aggregatable groupBy on (source, key, sidx). It is the only
   session rollup: the plain chain, the chunked monster-key chain
   (``bigkey``) and q34 all end in it.
+* ``states_only`` and ``validation_gate`` — the rows that enter the
+  stage: parsed and keyed (the batch and the streaming skins share the
+  filter), then J2's broadcast validation gate (``run_pipeline`` and q11).
 
 Scale notes: the plain stage costs exactly ONE shuffle (hash partition by
 (source, key)); its windows share that partitioning and sort, and the
@@ -47,8 +50,7 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from sbse import GAP_MS_NORTH
 from sbse.session import frame_sql
@@ -88,15 +90,10 @@ def project(df: DataFrame, cols) -> DataFrame:
     return frame_sql(f"SELECT {cols_sql(cols)} FROM {{df}}", df=df)
 
 
-def ord_col() -> Column:
-    """Arrival-order key for engine-side min_by/max_by: a (ts, seq) struct
-    (lexicographic struct comparison); ``ORD_SQL`` in SQL text. The DuckDB
-    oracle uses the equivalent zero-padded string (dialect.ord_expr)
-    because DuckDB 1.0's max_by cannot order by a row value — the two
-    orderings are identical."""
-    return F.struct(F.col("ts"), F.col("seq"))
-
-
+# Arrival-order key for engine-side min_by/max_by: a (ts, seq) struct,
+# compared lexicographically. The DuckDB oracle uses the equivalent
+# zero-padded string (dialect.ord_expr) because DuckDB 1.0's max_by cannot
+# order by a row value — the two orderings are identical.
 ORD_SQL = "struct(ts, seq)"
 
 
@@ -110,6 +107,24 @@ def states_only(decoded: DataFrame) -> DataFrame:
     """Rows that produce aircraft-state analogs: parsed AND keyed
     (MSG types 1,2 carry no key — parser.go:103-110)."""
     return decoded.filter("ok AND `key` IS NOT NULL")
+
+
+def validation_gate(states: DataFrame, validation: DataFrame,
+                    default_valid: bool) -> DataFrame:
+    """J2, the validation gate (tracker main.go:118-123): the rows of
+    ``states`` whose key the (key, valid) dim ``validation`` marks valid,
+    the dim broadcast. ``default_valid`` is the verdict on a key the dim
+    lacks: the real Redis client says invalid (redis/client.go:141-143),
+    the unit-test mock valid (main_test.go:126-135). Returns ``key``, then
+    every other column of both inputs but ``valid``."""
+    # USING (key) puts key first; every other column but valid follows
+    cols = ["key", *[c for c in [*states.columns, *validation.columns]
+                     if c not in ("key", "valid")]]
+    return frame_sql(
+        f"SELECT /*+ BROADCAST(_v) */ {cols_sql(cols)} FROM {{states}} "
+        f"LEFT JOIN {{validation}} _v USING (`key`) "
+        f"WHERE coalesce(valid, {str(default_valid).lower()})",
+        states=states, validation=validation)
 
 
 def local_pass(columns, part_cols, gap_ms: int, src: str):
@@ -227,6 +242,6 @@ def session_rollup(sess_events: DataFrame) -> DataFrame:
     merge of partial aggregates). Over ``locf_sessionize``'s output the
     hash(source, key) exchange already satisfies the grouping (subset
     clustering): no second shuffle. first/last by arrival order are
-    min_by/max_by over ``ord_col()``; while that is a struct the aggregate
+    min_by/max_by over ``ORD_SQL``; while that is a struct the aggregate
     plans as SortAggregate, not HashAggregate (ROADMAP direction 3)."""
     return frame_sql(_ROLLUP_SQL, e=sess_events)

@@ -14,11 +14,11 @@ from pyspark.sql import functions as F
 
 
 def salted_repartition(df: DataFrame, num_partitions: int,
-                       salt_buckets: int = 64, id_col: str = "doc_id") -> DataFrame:
-    """Repartition on (source, salt) where salt = xxhash64(id) % buckets —
+                       salt_buckets: int = 64) -> DataFrame:
+    """Repartition on (source, salt) where salt = xxhash64(doc_id) % buckets —
     deterministic, spreads a hot source over ``salt_buckets`` tasks."""
     salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
+        "_salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(salt_buckets))
     )
     return salted.repartition(num_partitions, "source", "_salt").drop("_salt")
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from sbse import GAP_MS_NORTH
 from sbse.decode import decode
+from sbse.sessionize import states_only
 from sbse.tokens import TOKEN_SCHEMA_DDL
 
 
@@ -93,8 +94,7 @@ def read_token_stream_kafka(
 def streaming_sessions(token_stream: DataFrame, gap_ms: int = GAP_MS_NORTH,
                        watermark: str = "24 hours") -> DataFrame:
     """Session aggregates via native session_window + watermark."""
-    d = decode(token_stream)
-    st = d.filter(F.col("ok") & F.col("key").isNotNull()).withWatermark("ts", watermark)
+    st = states_only(decode(token_stream)).withWatermark("ts", watermark)
     gap = f"{gap_ms // 1000} seconds"
     return st.groupBy(
         "source", "key", F.session_window("ts", gap).alias("w")
@@ -110,8 +110,7 @@ def streaming_sessions(token_stream: DataFrame, gap_ms: int = GAP_MS_NORTH,
 
 def streaming_rollup_1m(token_stream: DataFrame,
                         watermark: str = "24 hours") -> DataFrame:
-    d = decode(token_stream)
-    st = d.filter(F.col("ok") & F.col("key").isNotNull()).withWatermark("ts", watermark)
+    st = states_only(decode(token_stream)).withWatermark("ts", watermark)
     return st.groupBy(
         "source", "key", F.window("ts", "1 minute").alias("w")
     ).agg(

@@ -249,6 +249,8 @@ def test_partition_writes_overlap(spark, tmp_path):
                            n_parts=1) == {0: "computed"}
     m = json.load(open(f"{wh}/_manifests/o/part-0.json"))
     assert m["outputs"]["a"]["rows"] == m["outputs"]["b"]["rows"] == 300
+    # A5 processing time, the partition's wall time in whole milliseconds
+    assert 0 < m["proc_time_ms"] <= m["duration_s"] * 1000 + 1
 
 
 def test_write_failure_leaves_no_manifest(spark, tmp_path):

@@ -4,7 +4,6 @@ round-trip, and a compression-ratio sanity check."""
 import math
 import struct
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -122,7 +121,7 @@ def test_hot_key_chunked_encode(spark):
         ).alias("bucket_start"),
         (F.col("id") % 7).cast("bigint").alias("n_tok_sum"),
     )
-    blobs = encode_tier(tier, "n_tok_sum", chunk_unit="month")
+    blobs = encode_tier(tier, "n_tok_sum")
     stats = blobs.agg(
         F.count(F.lit(1)).alias("n_blobs"),
         F.max("n_points").alias("max_pts"),
@@ -171,7 +170,7 @@ def test_blob_tier_catalog_lifecycle(spark, tmp_path):
         (F.col("id") % 11).cast("bigint").cast("double").alias("n_tok_sum"),
     )
     path = str(tmp_path / "blob_1h")
-    snap = write_blob_tier(tier, path, "n_tok_sum", chunk_unit="month")
+    snap = write_blob_tier(tier, path, "n_tok_sum")
     assert sorted(snap["partitions"]) == ["2024-01-01", "2024-02-01",
                                           "2024-03-01"]
 
@@ -198,7 +197,7 @@ def test_blob_tier_catalog_lifecycle(spark, tmp_path):
 
 def test_read_blob_tier_mid_period_range(spark, tmp_path):
     """ADVICE r3 (medium): a chunk is labeled by its START but covers the
-    whole chunk_unit period — a mid-period start must still read the chunk
+    whole month — a mid-period start must still read the chunk
     it falls inside (overlap pruning, not start containment), and a
     mid-period end must not return rows past the requested day range.
     Old behavior: start='2024-01-15' dropped ALL of Jan 15-31 (the Jan
@@ -216,10 +215,9 @@ def test_read_blob_tier_mid_period_range(spark, tmp_path):
         (F.col("id") % 11).cast("double").alias("n_tok_sum"),
     )
     path = str(tmp_path / "blob_mid")
-    write_blob_tier(tier, path, "n_tok_sum", chunk_unit="month")
+    write_blob_tier(tier, path, "n_tok_sum")
     back = read_blob_tier(spark, path, "n_tok_sum",
-                          start="2024-01-15", end="2024-02-10",
-                          chunk_unit="month")
+                          start="2024-01-15", end="2024-02-10")
     got = back.agg(
         F.count(F.lit(1)).alias("cnt"),
         F.min("bucket_start").cast("string").alias("lo"),
@@ -245,46 +243,15 @@ def test_truncated_blob_raises():
             decode_points(blob[:cut])
 
 
-def test_read_blob_tier_chunk_unit_none(spark, tmp_path):
-    """ADVICE r4 (low): chunk_unit=None tiers store ONE chunk labeled
-    1970-01-01 covering all time; partition pruning must be disabled for
-    them (the old _chunk_floor(start) pruned the lone chunk, silently
-    returning zero rows for any post-1970 start) while the row-level
-    bucket_start range still applies."""
-    from pyspark.sql import functions as F
-
-    from sbse.gorilla import read_blob_tier, write_blob_tier
-
-    tier = spark.range(24 * 40).select(
-        F.lit("s0").alias("source"),
-        F.lit(1).cast("bigint").alias("key"),
-        F.timestamp_millis(
-            F.lit(1704067200000) + F.col("id") * 3_600_000  # 2024-01-01 UTC
-        ).alias("bucket_start"),
-        (F.col("id") % 11).cast("double").alias("n_tok_sum"),
-    )
-    path = str(tmp_path / "blob_none")
-    write_blob_tier(tier, path, "n_tok_sum", chunk_unit=None)
-    back = read_blob_tier(spark, path, "n_tok_sum",
-                          start="2024-01-15", end="2024-01-20",
-                          chunk_unit=None)
-    got = back.agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.min("bucket_start").cast("string").alias("lo"),
-        F.max("bucket_start").cast("string").alias("hi"),
-    ).collect()[0]
-    assert got["cnt"] == 6 * 24
-    assert got["lo"] == "2024-01-15 00:00:00"
-    assert got["hi"] == "2024-01-20 23:00:00"
-
-
-@pytest.mark.parametrize("chunk_unit", ["hour", "month", None])
-def test_encode_tier_streams_across_batches(spark, chunk_unit):
+def test_encode_tier_streams_across_batches(spark):
     """encode_tier is one streamed pass whose open series continues into
-    the next Arrow batch. With 7-row batches nearly every series straddles
-    a batch boundary; each blob must still equal encode_points over its
-    series alone, byte for byte, and decode_tier must round-trip the tier.
-    The input holds a one-point series and series of uneven lengths."""
+    the next Arrow batch. The series span several months, so each key
+    holds several monthly chunks; with 7-row batches, chunks of 2-15
+    points open and close both inside a batch and across its boundary.
+    Each blob must still equal encode_points over its chunk alone, byte for
+    byte, and decode_tier must round-trip the tier. The input holds a
+    one-point series, a chunk of one point, and a series that crosses a
+    month boundary within hours."""
     import datetime as dt
 
     from pyspark.sql import functions as F
@@ -292,10 +259,16 @@ def test_encode_tier_streams_across_batches(spark, chunk_unit):
     from sbse.gorilla import decode_tier, encode_points, encode_tier
 
     t0 = 1704067200000  # 2024-01-01 UTC
+    day = 86_400_000
     pts = [
-        (f"s{key % 2}", key, t0 + i * step, float((i * 7919) % 13) / 3)
-        for key, n, step in ((1, 50, 600_000), (2, 1, 60_000),
-                             (3, 23, 2_700_000), (4, 40, 86_400_000))
+        (f"s{key % 2}", key, start + i * step, float((i * 7919) % 13) / 3)
+        for key, start, n, step in (
+            (1, t0, 50, 2 * day),               # ~100 days: Jan-Apr
+            (2, t0, 1, 60_000),                 # one point
+            (3, t0, 23, 9 * day),               # ~200 days: 2-4 per month
+            (4, t0 + 30 * day, 40, day),        # Jan 31 - Mar 10
+            (5, t0 + 31 * day - 5 * 1_800_000, 10, 1_800_000),  # Jan 31 -> Feb 1
+        )
         for i in range(n)
     ]
     tier = spark.createDataFrame(
@@ -305,16 +278,15 @@ def test_encode_tier_streams_across_batches(spark, chunk_unit):
 
     def chunk_of(ms):
         d = dt.datetime.fromtimestamp(ms / 1000, tz=dt.timezone.utc)
-        if chunk_unit is None:
-            return 0
-        d = d.replace(minute=0, second=0, microsecond=0)
-        if chunk_unit == "month":
-            d = d.replace(day=1, hour=0)
-        return int(d.timestamp() * 1000)
+        return int(d.replace(day=1, hour=0, minute=0, second=0,
+                             microsecond=0).timestamp() * 1000)
 
     series = {}
     for src, key, ms, v in pts:
         series.setdefault((src, key, chunk_of(ms)), []).append((ms, v))
+    assert sum(k[1] == 1 for k in series) == 4  # 50 points over 4 months
+    assert sum(k[1] == 3 for k in series) == 7  # 23 points over 7 months
+    assert sum(k[1] == 5 for k in series) == 2
     want = {}
     for k, sp in series.items():
         ts = [t for t, _ in sorted(sp)]
@@ -325,7 +297,7 @@ def test_encode_tier_streams_across_batches(spark, chunk_unit):
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "7")
     try:
-        blobs = encode_tier(tier, "n_tok_sum", chunk_unit=chunk_unit)
+        blobs = encode_tier(tier, "n_tok_sum")
         got = {
             (r.source, r.key, r.chunk_ms): (r.n_points, r.t_min, r.t_max,
                                             bytes(r.blob))
@@ -337,7 +309,7 @@ def test_encode_tier_streams_across_batches(spark, chunk_unit):
             "source", "key", F.unix_millis("bucket_start").alias("ms"),
             "n_tok_sum",
         ).collect()
-        empty = encode_tier(tier.limit(0), "n_tok_sum", chunk_unit=chunk_unit)
+        empty = encode_tier(tier.limit(0), "n_tok_sum")
         assert empty.count() == 0
         assert decode_tier(empty, "n_tok_sum").count() == 0
     finally:

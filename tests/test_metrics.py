@@ -67,21 +67,6 @@ def test_clamps(spark):
     assert got == [(-5, 0), (0, 0), (999999999, 999999999), (I64_MAX, I64_MAX)]
 
 
-def test_run_metrics_proc_time_clamped(spark):
-    """A5 processing-time counter, persisted through the u64 clamp
-    (stats.go:128-132 + db/client.go:131-139): a uint64-scale duration
-    clamps to 2^63-1; a sane one passes through."""
-    from sbse.decode import decode
-    from sbse.metrics import I64_MAX, run_metrics
-    from sbse.tokens import synth
-
-    d = decode(synth(spark, 200), "expr")
-    m = run_metrics(d, proc_ms=12345).collect()[0]
-    assert m.proc_time_ms == 12345
-    m2 = run_metrics(d, proc_ms=(1 << 64) - 1).collect()[0]
-    assert m2.proc_time_ms == I64_MAX
-
-
 def test_distinct_scale_twin_accuracy(spark):
     """q02's active_keys is an EXACT countDistinct (shuffles the distinct
     set). The 100 TB scale twin is approx_count_distinct (HyperLogLog++:
@@ -105,11 +90,9 @@ def test_distinct_scale_twin_accuracy(spark):
     assert abs(row.approx - row.exact) <= max(3, 0.05 * row.exact), row
 
 
-def _column_form_metrics(decoded, sessions, proc_ms=None):
+def _column_form_metrics(decoded, sessions):
     """The Column-API build of ``run_metrics`` (one py4j call per node),
     kept as the reference the SQL-text build must equal."""
-    from sbse.metrics import clamp_u64
-
     hist = F.array(*[
         F.sum(F.when(F.col("ok") & (F.col("msg_type") == i), 1).otherwise(0))
         .cast("bigint") for i in range(10)
@@ -125,9 +108,6 @@ def _column_form_metrics(decoded, sessions, proc_ms=None):
         )).alias("active_keys"),
         hist,
     )
-    if proc_ms is not None:
-        m = m.withColumn("proc_time_ms",
-                         clamp_u64(F.lit(str(proc_ms)).cast("decimal(38,0)")))
     s = sessions.agg(
         F.count(F.lit(1)).alias("created_sessions"),
         F.sum(F.when(F.col("ended_at").isNotNull(), 1).otherwise(0))
@@ -174,9 +154,3 @@ def test_sql_text_metrics_equal_column_form(spark):
                       r"(?<=\*\()\d+(?=\))", "", text)
 
     assert plan(got) == plan(want)
-    for proc_ms in (12345, (1 << 64) - 1):
-        got = run_metrics(decoded, sessions, proc_ms=proc_ms)
-        want = _column_form_metrics(decoded, sessions, proc_ms)
-        assert got.schema == want.schema
-        assert got.collect() == want.collect()
-        assert plan(got) == plan(want)
