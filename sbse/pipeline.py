@@ -2,16 +2,24 @@
 -> session rollups -> 1m/1h/1d tiers (+ gap-fill, Gorilla blobs) -> metrics.
 
 This is the batch re-expression of the reference's tracker lifecycle
-(SURVEY.md §3 E2). One lineage, two shuffles:
+(SURVEY.md §3 E2). One lineage, one scan and decode, one shuffle per
+grouping:
   1. hash partition by (source, key) for the window stage
-     (``locf_sessionize``: LOCF and sessionization in one window pass) —
-     the session rollup's groupBy on (source, key, sidx) reuses it,
-  2. regroup to (source, key, bucket) for the tier cascade — which reuses
-     partial aggregation and is tiny relative to raw.
+     (``locf_sessionize``: LOCF and sessionization in one window pass),
+  2. regroup to (source, key, sidx) for the session rollup, and to
+     (source, key, bucket) for the tier cascade — both partial-aggregated,
+     tiny relative to raw.
 ``bigkey_chunk_ms`` picks the window stage's route: the same window pass
 over (source, key), or over (source, key, chunk) plus the chunk stitch.
 Every sink downstream of it, the session rollup included, is the same for
 both routes.
+
+Every frame that more than one output reads is computed once, behind a
+lazy ``localCheckpoint`` barrier (``_barrier``): the decoded frame (read by
+the window stage and the metrics), the per-event window frame (read by the
+states, sessions and tier outputs) and, with ``cache_tiers``, the 1m and 1h
+tiers. Without the barriers each of the 8 outputs is its own Spark action
+and re-runs the scan, the decode and the window stage.
 
 Every stage is built as SQL text, one or two ``session.frame_sql``
 statements each (the stage modules' docstrings), and so are the column
@@ -32,6 +40,22 @@ from sbse.sessionize import (_MERGE_FIELDS, locf_sessionize, project,
                              session_rollup, states_only, validation_gate)
 
 
+def _barrier(df: DataFrame, stage: str) -> DataFrame:
+    """``df`` behind a lazy ``localCheckpoint``: every output that reads the
+    result reads one computation of ``df``, and Spark's ContextCleaner
+    releases the checkpointed blocks once the result is unreachable, so
+    there is nothing to unpersist. Under AQE, building the barrier runs
+    ``df``'s shuffle-map stages; those jobs carry the description
+    ``run_pipeline: <stage>``, and the caller's description is restored."""
+    sc = df.sparkSession.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"run_pipeline: {stage}")
+    try:
+        return df.localCheckpoint(eager=False)
+    finally:
+        sc.setJobDescription(caller)
+
+
 def run_pipeline(
     token_df: DataFrame,
     gap_ms: int = GAP_MS_NORTH,
@@ -45,6 +69,11 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Returns the pipeline's output tables as DataFrames (lazy).
 
+    The build puts the decoded frame and the per-event window frame behind
+    ``_barrier``, on both window routes, and so runs jobs under AQE: the
+    window stage's shuffle-map stages (and, with ``cache_tiers``, the 1m
+    and 1h tiers') run here, not in the first output's action.
+
     ``decode_mode`` is passed to ``decode``, whose one implementation is
     ``"expr"``; any other value raises ``ValueError``.
 
@@ -52,16 +81,19 @@ def run_pipeline(
     ``sessionize.validation_gate``; ``default_valid`` is its verdict on a
     key the dim lacks.
 
+    ``cache_tiers``: the 1m and 1h tiers, which the cascade, the gap-fill
+    and Gorilla re-read, are barriers too. Like the other barriers they
+    need no unpersist.
+
     ``bigkey_chunk_ms``: when set, the window stage runs through the
     monster-key-safe fused chunked pass (``bigkey.locf_sessionize_chunked``,
     the same pass q34 runs) — every window partition bounded to
     (source, key, chunk of this many ms; must exceed ``gap_ms``) — instead
-    of the plain ``locf_sessionize``. Its per-event frame is localCheckpointed
-    once and feeds the states, sessions, tier and metrics outputs. Outputs
-    are row-identical either way (asserted in test_bigkey); choose it when
-    one key's event count can exceed a single task's comfort zone.
+    of the plain ``locf_sessionize``. Outputs are row-identical either way
+    (asserted in test_bigkey); choose it when one key's event count can
+    exceed a single task's comfort zone.
     """
-    decoded = decode(token_df, mode=decode_mode)
+    decoded = _barrier(decode(token_df, mode=decode_mode), "decode")
     states = states_only(decoded)
     if validation is not None:
         states = validation_gate(states, validation, default_valid)
@@ -72,24 +104,20 @@ def run_pipeline(
     else:
         from sbse.bigkey import locf_sessionize_chunked
 
-        # every output reads the fused chunked frame: materialize it once,
-        # so the states, sessions and metrics sinks do not each re-run the
-        # window pass and the stitch join; only the columns they read, so
-        # no per-event session_id hash is computed or stored
-        sess_events = project(locf_sessionize_chunked(
+        sess_events = locf_sessionize_chunked(
             states, gap_ms=gap_ms, chunk_ms=bigkey_chunk_ms,
-            close_trailing=close_trailing,
-        ), [*merged_cols, "sidx", "is_trailing", "close_trailing"]
-        ).localCheckpoint(eager=False)
+            close_trailing=close_trailing)
+    # only the columns the states, sessions and tier outputs read, so no
+    # per-event session_id hash is computed or stored
+    sess_events = _barrier(project(sess_events, [
+        *merged_cols, "sidx", "is_trailing", "close_trailing"]), "window stage")
     merged = project(sess_events, merged_cols)
     sessions = session_rollup(sess_events)
     if cache_tiers:
-        # The cascade re-aggregates tiers (1m -> 1h -> 1d -> gapfill); the
-        # tier tables are ~1e3-1e5x smaller than raw, so caching them (NOT
-        # the wide per-event states — measured slower) collapses four
-        # actions into one scan of the raw data plus trivia.
-        r1m = bucket_rollup(merged, "minute").persist()
-        r1h = cascade(r1m, "hour").persist()
+        # the cascade, the gap-fill and Gorilla re-read the 1m and 1h tiers,
+        # which are ~1e3-1e5x smaller than raw
+        r1m = _barrier(bucket_rollup(merged, "minute"), "1m tier")
+        r1h = _barrier(cascade(r1m, "hour"), "1h tier")
         tiers = {"1m": r1m, "1h": r1h, "1d": cascade(r1h, "day")}
     else:
         tiers = tier_tables(merged)

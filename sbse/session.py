@@ -101,7 +101,7 @@ def frame_sql(template: str, **frames: DataFrame) -> DataFrame:
     PySpark's own formatter drops its views through ``Catalog.dropTempView``,
     which re-analyses the view's plan (~8 ms a view) and uncaches every
     cached plan with the view's result: a stage built over a persisted
-    frame (the pipeline's cached tiers) would unpersist its input. The
+    frame (a tier the caller persisted) would unpersist its input. The
     views here are private, never cached by name, so they are dropped from
     the session catalog directly."""
     spark = next(iter(frames.values())).sparkSession

@@ -241,7 +241,9 @@ def session_rollup(sess_events: DataFrame) -> DataFrame:
     per input partition instead of sorting in one window task (Disco's
     merge of partial aggregates). Over ``locf_sessionize``'s output the
     hash(source, key) exchange already satisfies the grouping (subset
-    clustering): no second shuffle. first/last by arrival order are
+    clustering): no second shuffle; ``run_pipeline`` reads that output
+    through a checkpoint, which does not carry the partitioning, so there
+    the rollup takes its own partial-aggregated exchange. first/last by arrival order are
     min_by/max_by over ``ORD_SQL``; while that is a struct the aggregate
     plans as SortAggregate, not HashAggregate (ROADMAP direction 3)."""
     return frame_sql(_ROLLUP_SQL, e=sess_events)

@@ -187,34 +187,6 @@ def test_pipeline_bigkey_mode_equals_plain(spark):
         assert _sym_diff(plain[table], big[table]) == 0, table
 
 
-def test_pipeline_bigkey_checkpoints_once(spark, monkeypatch):
-    """The pipeline's monster-key branch materializes the fused chunked
-    frame exactly once (every output reads it); q34's chain, whose rollup
-    is the frame's only consumer, materializes nothing."""
-    from sbse.bigkey import locf_sessionize_chunked
-    from sbse.pipeline import run_pipeline
-    from sbse.sessionize import session_rollup
-    from sbse.tokens import synth
-
-    tok = synth(spark, 2_000).localCheckpoint()
-    states = _states(spark)
-    seen = []
-    frame_cls = type(tok)
-    checkpoint = frame_cls.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        seen.append(self)
-        return checkpoint(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
-    run_pipeline(tok, decode_mode="expr", bigkey_chunk_ms=120_000)
-    assert len(seen) == 1
-    seen.clear()
-    session_rollup(locf_sessionize_chunked(states, gap_ms=30_000,
-                                           chunk_ms=120_000))
-    assert seen == []
-
-
 def test_counter_chunked_equals_plain_across_boundaries(spark):
     """Counter resets and increases that straddle chunk boundaries stitch
     exactly: the chunked twin equals rollup.counter_increase row-for-row,

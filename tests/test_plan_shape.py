@@ -101,8 +101,8 @@ def test_pipeline_build_round_trips(spark, monkeypatch, kw):
     not one per expression node: each stage is SQL text, one JVM call to
     analyse. The count covers every ``send_command`` while the outputs are
     built (proxy deletes from py4j's finalizer thread included), and the
-    chunked route's one ``localCheckpoint`` call but not the jobs it runs
-    inside the JVM. The Column-API build took ~4k (plain) and ~6k (bigkey)."""
+    barriers' ``localCheckpoint`` and job-description calls but not the
+    jobs they run inside the JVM. The Column-API build took ~4k (plain) and ~6k (bigkey)."""
     from sbse.pipeline import run_pipeline
     from sbse.tokens import synth
 
@@ -115,11 +115,8 @@ def test_pipeline_build_round_trips(spark, monkeypatch, kw):
         return send(*args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counted)
-    out = run_pipeline(tok, gap_ms=30_000, **kw)
+    run_pipeline(tok, gap_ms=30_000, **kw)
     monkeypatch.undo()
-    for df in out.values():
-        if df.is_cached:
-            df.unpersist()
     assert len(calls) <= 1_000, len(calls)
 
 

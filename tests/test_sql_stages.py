@@ -123,20 +123,18 @@ def test_tiers(states):
         assert_same(gapfill_locf(t, unit), cf.gapfill_locf(t, unit))
 
 
-def test_stage_over_cached_frame_keeps_it_cached(spark):
+def test_stage_over_cached_frame_keeps_it_cached(spark, states):
     """A stage's temporary view is dropped without uncaching: PySpark's
     ``spark.sql(..., name=df)`` drops it through ``Catalog.dropTempView``,
-    which also uncaches every cached plan with the view's result — the
-    pipeline's persisted tiers, as soon as a cascade or gap-fill was built
-    over them."""
-    from sbse.pipeline import run_pipeline
-    from sbse.tokens import synth
+    which also uncaches every cached plan with the view's result — a
+    persisted tier, as soon as a cascade or gap-fill was built over it."""
+    from sbse.rollup import bucket_rollup, cascade, gapfill_locf
 
     cache = spark._jsparkSession.sharedState().cacheManager()
-    out = run_pipeline(synth(spark, 500), gap_ms=GAP_MS, cache_tiers=True)
+    tier = bucket_rollup(states, "minute").persist()
     try:
-        for name in ("rollup_1m", "rollup_1h"):
-            assert cache.lookupCachedData(out[name]._jdf).isDefined(), name
+        cascade(tier, "hour")
+        gapfill_locf(tier, "minute")
+        assert cache.lookupCachedData(tier._jdf).isDefined()
     finally:
-        out["rollup_1m"].unpersist()
-        out["rollup_1h"].unpersist()
+        tier.unpersist()
